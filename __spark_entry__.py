@@ -1073,71 +1073,15 @@ def q_ngram_jaccard(spark, sf):
     [2, NGRAM_DF_MAX] (bounds the k² blowup of a hot shingle); the
     jaccard itself is verified EXACTLY on the full shingle arrays via
     array_intersect. The oracle SQL applies the identical cap."""
-    from rsyslog_spark.datapipe.dedup import (
-        _parallelism,
-        _shingles_of_words,
-        _words,
-    )
+    from rsyslog_spark.datapipe.dedup import ngram_jaccard_pairs
 
-    d = _docs(spark, sf)
-    npart = _parallelism(d)
-    sh = (
-        # split words BEFORE the spread exchange: the interpreted
-        # shingle lambda then reads a plain attribute per element
-        # (dedup._shingles_of_words rationale)
-        d.select(F.col("doc_id").alias("id"),
-                 _words(F.col("text")).alias("_w"))
-        .repartition(npart, "id")  # spread docs before heavy shingling
-        .select(
-            "id", _shingles_of_words(F.col("_w"), 3).alias("shingles")
-        )
-        .repartition(npart, "id")
-        .withColumn("n_sh", F.size("shingles"))
+    pairs = ngram_jaccard_pairs(
+        _docs(spark, sf), shingle_k=3, threshold=0.5, df_max=NGRAM_DF_MAX
     )
-    ex = sh.select("id", F.explode("shingles").alias("s"))
-    rare = (
-        ex.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("_df"))
-        .filter((F.col("_df") >= 2) & (F.col("_df") <= NGRAM_DF_MAX))
-        .select("s")
-    )
-    rare_ex = ex.join(rare, "s")
-    a, b = rare_ex.alias("a"), rare_ex.alias("b")
-    cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    pairs = (
-        cand.join(
-            sh.select(F.col("id").alias("id_a"),
-                      F.col("shingles").alias("_sa"),
-                      F.col("n_sh").alias("na")),
-            "id_a",
-        )
-        .join(
-            sh.select(F.col("id").alias("id_b"),
-                      F.col("shingles").alias("_sb"),
-                      F.col("n_sh").alias("nb")),
-            "id_b",
-        )
-        .withColumn("n_inter", F.size(F.array_intersect("_sa", "_sb")))
-    )
-    # barrier: keep the array_intersect out of the pushed filter and
-    # the keep-expression's double reference (dedup._project_barrier)
-    from rsyslog_spark.datapipe.dedup import _project_barrier
-
-    pairs = _project_barrier(
-        pairs.select("id_a", "id_b", "n_inter", "na", "nb")
-    )
-    keep = F.col("n_inter") * 2 >= (F.col("na") + F.col("nb") - F.col("n_inter"))
-    return pairs.filter(keep).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        F.col("n_inter").cast("long").alias("n_inter"),
-        F.col("na").cast("long").alias("na"),
-        F.col("nb").cast("long").alias("nb"),
-    )
+    return pairs.select(*[
+        F.col(c).cast("long").alias(c)
+        for c in ("id_a", "id_b", "n_inter", "na", "nb")
+    ])
 
 
 def q_legacy_conf(spark, sf):

@@ -23,8 +23,8 @@ Reference semantics carried over:
   section).
 
 Spark-first shape: messages are rendered/encoded executor-side per
-partition (mapInPandas, like omkafka/omrabbitmq); only the delivery
-socket is a per-partition resource.
+partition; the delivery link is a per-partition resource opened and
+closed by :func:`rsyslog_spark.net.partition_sender`.
 """
 
 from __future__ import annotations
@@ -32,6 +32,8 @@ from __future__ import annotations
 import socket
 import struct
 from typing import Any
+
+from rsyslog_spark.net import send_partitions
 
 # §1.6 primitive format codes
 _NULL, _TRUE, _FALSE, _BOOL = 0x40, 0x41, 0x42, 0x56
@@ -513,46 +515,40 @@ def omamqp1_deliver(
     container_id: str = "rsyslog-spark",
 ):
     """omamqp1's doAction/commitTransaction: one AMQP 1.0 link per
-    partition; in batch mode (omamqp1.c beginTransaction:251-256)
-    every ``batch_size`` rendered lines travel as ONE message whose
-    body is the amqp-value LIST, settled by the broker's accepting
-    disposition before the next send; ``batch_size=None`` sends
-    1-element lists (the non-batch form). Returns a DataFrame of
-    per-partition delivery counts."""
-    import pandas as pd
+    partition (:func:`rsyslog_spark.net.partition_sender`); in batch
+    mode (omamqp1.c beginTransaction:251-256) every ``batch_size``
+    rendered lines travel as ONE message whose body is the amqp-value
+    LIST, settled by the broker's accepting disposition before the
+    next send; ``batch_size=None`` sends 1-element lists (the
+    non-batch form). Returns a DataFrame of per-partition delivery
+    counts."""
 
-    def send(batches):
-        sender = None
-        n_msgs, n_lines = 0, 0
-        pending: list[str] = []
-
-        def flush():
-            nonlocal n_msgs, n_lines, sender
-            if not pending:
-                return
-            if sender is None:
-                sender = Amqp1Sender(
-                    host, port, container_id=container_id, target=target
-                )
-            sender.send_message(omamqp1_message(pending))
-            n_msgs += 1
-            n_lines += len(pending)
-            pending.clear()
-
-        try:
-            for pdf in batches:
-                for v in pdf[value_col].tolist():
-                    pending.append(str(v))
-                    if batch_size is None or len(pending) >= (
-                        batch_size or 1
-                    ):
-                        flush()
-            flush()
-        finally:
-            if sender is not None:
-                sender.close()
-        yield pd.DataFrame(
-            {"n_messages": [n_msgs], "n_lines": [n_lines]}
+    def open_conn() -> Amqp1Sender:
+        sender = Amqp1Sender(
+            host, port, container_id=container_id, target=target
         )
+        sender.pending = []  # lines of the open batch message
+        return sender
 
-    return df.mapInPandas(send, "n_messages long, n_lines long")
+    def flush(sender: Amqp1Sender) -> tuple[int, int]:
+        if not sender.pending:
+            return 0, 0
+        sender.send_message(omamqp1_message(sender.pending))
+        n_lines = len(sender.pending)
+        sender.pending = []
+        return 1, n_lines
+
+    def send(sender: Amqp1Sender, pdf) -> tuple[int, int]:
+        n_msgs = n_lines = 0
+        for v in pdf[value_col].tolist():
+            sender.pending.append(str(v))
+            if batch_size is None or len(sender.pending) >= (
+                batch_size or 1
+            ):
+                m, k = flush(sender)
+                n_msgs, n_lines = n_msgs + m, n_lines + k
+        return n_msgs, n_lines
+
+    return send_partitions(
+        df, open_conn, send, "n_messages long, n_lines long", finish=flush
+    )

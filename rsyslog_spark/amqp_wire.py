@@ -17,9 +17,10 @@ from __future__ import annotations
 
 import socket
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+
+from rsyslog_spark.net import send_partitions
 
 FRAME_METHOD, FRAME_HEADER, FRAME_BODY, FRAME_HEARTBEAT = 1, 2, 3, 8
 FRAME_END = 0xCE
@@ -283,55 +284,47 @@ def omrabbitmq_deliver(
     ts_col: str | None = None,
     exchange_declare: tuple[str, str] | None = None,
 ) -> DataFrame:
-    """omrabbitmq's doAction: one AMQP connection per partition,
-    Basic.Publish per message with fixed or per-row routing key;
-    populate_properties maps the syslog TAG to app_id and the
-    message time to the timestamp property (omrabbitmq.c:879-913)."""
+    """omrabbitmq's doAction: one AMQP connection per partition
+    (:func:`rsyslog_spark.net.partition_sender`), Basic.Publish per
+    message with fixed or per-row routing key; populate_properties
+    maps the syslog TAG to app_id and the message time to the
+    timestamp property (omrabbitmq.c:879-913)."""
     import pandas as pd
 
-    def send(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        pub = None
-        n = 0
-        try:
-            for pdf in batches:
-                if len(pdf) and pub is None:
-                    pub = AmqpPublisher(
-                        host, port, user=user, password=password,
-                        vhost=vhost, exchange_declare=exchange_declare,
-                    )
-                rks = (
-                    pdf[routing_key_col].tolist()
-                    if routing_key_col else [routing_key] * len(pdf)
-                )
-                tags = (
-                    pdf[tag_col].tolist()
-                    if populate_properties and tag_col in pdf.columns
-                    else [None] * len(pdf)
-                )
-                tss = (
-                    pdf[ts_col].tolist()
-                    if populate_properties and ts_col else [None] * len(pdf)
-                )
-                for v, rk, tag, ts in zip(
-                    pdf[value_col].tolist(), rks, tags, tss
-                ):
-                    pub.publish(
-                        v, exchange=exchange, routing_key=rk or "",
-                        content_type=content_type,
-                        delivery_mode=(
-                            delivery_mode if populate_properties
-                            or content_type else None
-                        ),
-                        timestamp=(
-                            int(pd.Timestamp(ts).timestamp())
-                            if ts is not None else None
-                        ),
-                        app_id=tag if tag is not None else None,
-                    )
-                    n += 1
-        finally:
-            if pub is not None:
-                pub.close()
-        yield pd.DataFrame({"n_sent": [n]})
+    def open_conn() -> AmqpPublisher:
+        return AmqpPublisher(
+            host, port, user=user, password=password,
+            vhost=vhost, exchange_declare=exchange_declare,
+        )
 
-    return df.mapInPandas(send, "n_sent long")
+    def send(pub: AmqpPublisher, pdf: pd.DataFrame) -> tuple[int]:
+        rks = (
+            pdf[routing_key_col].tolist()
+            if routing_key_col else [routing_key] * len(pdf)
+        )
+        tags = (
+            pdf[tag_col].tolist()
+            if populate_properties and tag_col in pdf.columns
+            else [None] * len(pdf)
+        )
+        tss = (
+            pdf[ts_col].tolist()
+            if populate_properties and ts_col else [None] * len(pdf)
+        )
+        for v, rk, tag, ts in zip(pdf[value_col].tolist(), rks, tags, tss):
+            pub.publish(
+                v, exchange=exchange, routing_key=rk or "",
+                content_type=content_type,
+                delivery_mode=(
+                    delivery_mode if populate_properties
+                    or content_type else None
+                ),
+                timestamp=(
+                    int(pd.Timestamp(ts).timestamp())
+                    if ts is not None else None
+                ),
+                app_id=tag if tag is not None else None,
+            )
+        return (len(pdf),)
+
+    return send_partitions(df, open_conn, send, "n_sent long")

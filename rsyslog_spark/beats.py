@@ -42,6 +42,8 @@ import zlib
 
 from pyspark.sql import Column, functions as F
 
+from rsyslog_spark.net import _TcpListener
+
 _V2 = ord("2")
 _W, _J, _C, _A = ord("W"), ord("J"), ord("C"), ord("A")
 
@@ -257,106 +259,49 @@ class LumberjackParser:
 # ---------------------------------------------------------------------------
 
 
-class BeatsListener:
+class BeatsListener(_TcpListener):
     """Accept Beats connections, ACK each window only after its batch
     is durably spooled (write-then-ack — the reference submits into
-    the main queue before preparing the ACK). Spool lines are NDJSON
+    the main queue before preparing the ACK). Accept, session threads
+    and the per-session spool come from
+    :class:`rsyslog_spark.net._TcpListener`. Spool lines are NDJSON
     ``{"event": ..., "metadata": {...}}`` with the reference's
     $!metadata!imbeats fields (protocol, sequence, peer_ip,
     peer_port)."""
 
+    spool_prefix = "beats"
+
     def __init__(self, spool_dir: str, host: str = "127.0.0.1",
                  port: int = 0, rotate_every: int = 10_000,
                  **parser_opts) -> None:
-        import os
-        import socket as socketlib
-        import threading
-
-        os.makedirs(spool_dir, exist_ok=True)
-        self.spool_dir = spool_dir
-        self.rotate_every = rotate_every
         self.parser_opts = parser_opts
-        self._srv = socketlib.socket(
-            socketlib.AF_INET, socketlib.SOCK_STREAM
-        )
-        self._srv.setsockopt(
-            socketlib.SOL_SOCKET, socketlib.SO_REUSEADDR, 1
-        )
-        self._srv.bind((host, port))
-        self._srv.listen(16)
-        self.port = self._srv.getsockname()[1]
         self.n_events = 0
         self.n_batches = 0
-        self._n_sessions = 0
-        self._lock = threading.Lock()
-        self._thread = threading.Thread(target=self._serve, daemon=True)
-        self._thread.start()
+        super().__init__(spool_dir, host, port, rotate_every)
 
-    def _serve(self) -> None:
-        import threading
-
-        while True:
-            try:
-                conn, peer = self._srv.accept()
-            except OSError:
-                return
-            with self._lock:
-                self._n_sessions += 1
-                sid = self._n_sessions
-            threading.Thread(
-                target=self._session, args=(conn, peer, sid), daemon=True
-            ).start()
-
-    def _session(self, conn, peer, sid: int) -> None:
-        import os
-
+    def _session(self, conn, peer, spool) -> None:
         parser = LumberjackParser(**self.parser_opts)
-        n_file, n_in_file, f = 0, 0, None
-        try:
-            with conn:
-                while True:
-                    try:
-                        data = conn.recv(65536)
-                    except OSError:
-                        return
-                    if not data:
-                        return
-                    try:
-                        done = parser.feed(data)
-                    except LumberjackError:
-                        return  # the reference aborts the session
-                    for batch, ack in done:
-                        if f is None:
-                            f = open(os.path.join(
-                                self.spool_dir,
-                                f"beats-{sid:04d}-{n_file:06d}.ndjson",
-                            ), "ab")
-                        for ev in batch:
-                            f.write(json.dumps({
-                                "event": ev["event"],
-                                "metadata": {
-                                    "protocol": "lumberjack-v2",
-                                    "sequence": ev["seq"],
-                                    "peer_ip": peer[0],
-                                    "peer_port": str(peer[1]),
-                                },
-                            }, separators=(",", ":")).encode() + b"\n")
-                            n_in_file += 1
-                        f.flush()
-                        os.fsync(f.fileno())
-                        conn.sendall(ack)  # ack AFTER the durable write
-                        with self._lock:
-                            self.n_events += len(batch)
-                            self.n_batches += 1
-                        if n_in_file >= self.rotate_every:
-                            f.close()
-                            f, n_file, n_in_file = None, n_file + 1, 0
-        finally:
-            if f is not None:
-                f.close()
-
-    def close(self) -> None:
-        self._srv.close()
+        for data in self._chunks(conn):
+            try:
+                done = parser.feed(data)
+            except LumberjackError:
+                return  # the reference aborts the session
+            for batch, ack in done:
+                for ev in batch:
+                    spool.write(json.dumps({
+                        "event": ev["event"],
+                        "metadata": {
+                            "protocol": "lumberjack-v2",
+                            "sequence": ev["seq"],
+                            "peer_ip": peer[0],
+                            "peer_port": str(peer[1]),
+                        },
+                    }, separators=(",", ":")).encode())
+                spool.sync()
+                conn.sendall(ack)  # ack AFTER the durable write
+                with self._lock:
+                    self.n_events += len(batch)
+                    self.n_batches += 1
 
 
 def beats_spool_columns(line: Column) -> list[Column]:

@@ -25,7 +25,8 @@ imbeats); the parse stage downstream is the ordinary pipeline."""
 from __future__ import annotations
 
 import socket
-import threading
+
+from rsyslog_spark.net import _TcpListener
 
 RAW_PROFILE_URI = "http://iana.org/beep/SYSLOG/RAW"
 _BEEP_CT = b"Content-Type: application/beep+xml\r\n\r\n"
@@ -100,119 +101,74 @@ class BeepParser:
             out.append(fr)
 
 
-class Im3195Listener:
+class Im3195Listener(_TcpListener):
     """RFC 3195 RAW collector: greeting → channel start (RAW profile)
     → collector MSG → device ANS stream (one syslog message per
-    frame, spooled write-first) → NUL completes the exchange."""
+    frame, spooled write-first) → NUL completes the exchange. Accept,
+    session threads and the per-session spool come from
+    :class:`rsyslog_spark.net._TcpListener`."""
+
+    spool_prefix = "beep"
 
     def __init__(self, spool_dir: str, host: str = "127.0.0.1",
                  port: int = 0) -> None:
-        import os
-
-        os.makedirs(spool_dir, exist_ok=True)
-        self.spool_dir = spool_dir
-        self._srv = socket.socket()
-        self._srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._srv.bind((host, port))
-        self._srv.listen(8)
-        self.port = self._srv.getsockname()[1]
         self.n_messages = 0
-        self._n_sessions = 0
-        self._lock = threading.Lock()
-        threading.Thread(target=self._serve, daemon=True).start()
+        super().__init__(spool_dir, host, port, rotate_every=10_000)
 
-    def _serve(self) -> None:
-        while True:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return
-            with self._lock:
-                self._n_sessions += 1
-                sid = self._n_sessions
-            threading.Thread(
-                target=self._session, args=(conn, sid), daemon=True
-            ).start()
-
-    def _session(self, conn: socket.socket, sid: int) -> None:
-        import os
-
+    def _session(self, conn: socket.socket, peer, spool) -> None:
         parser = BeepParser()
-        seq0 = 0  # our next seqno on channel 0
-        f = None
-        try:
-            with conn:
-                greeting = _BEEP_CT + (
-                    f'<greeting><profile uri="{RAW_PROFILE_URI}"/>'
-                    "</greeting>"
-                ).encode()
-                conn.sendall(beep_frame("RPY", 0, 0, seq0, greeting))
-                seq0 += len(greeting)
-                raw_channel = None
-                seq_raw = 0
-                while True:
+        greeting = _BEEP_CT + (
+            f'<greeting><profile uri="{RAW_PROFILE_URI}"/>'
+            "</greeting>"
+        ).encode()
+        conn.sendall(beep_frame("RPY", 0, 0, 0, greeting))
+        seq0 = len(greeting)  # our next seqno on channel 0
+        raw_channel = None
+        seq_raw = 0
+        for data in self._chunks(conn):
+            for fr in parser.feed(data):
+                if fr["kind"] == "SEQ":
+                    continue
+                if fr["kind"] == "MSG" and fr["channel"] == 0:
+                    body = fr["payload"]
+                    if (b"<start" not in body
+                            or RAW_PROFILE_URI.encode() not in body):
+                        err = _BEEP_CT + b'<error code="550"/>'
+                        conn.sendall(beep_frame(
+                            "ERR", 0, fr["msgno"], seq0, err))
+                        seq0 += len(err)
+                        continue
+                    num = body.split(b'number="', 1)[1]
+                    raw_channel = int(num.split(b'"', 1)[0])
+                    ok = _BEEP_CT + (
+                        f'<profile uri="{RAW_PROFILE_URI}"/>'
+                    ).encode()
+                    conn.sendall(beep_frame(
+                        "RPY", 0, fr["msgno"], seq0, ok))
+                    seq0 += len(ok)
+                    # RAW §3.3: the collector opens with MSG 0
+                    hello = b"collector ready"
+                    conn.sendall(beep_frame(
+                        "MSG", raw_channel, 0, seq_raw, hello))
+                    seq_raw += len(hello)
+                elif (fr["kind"] == "ANS"
+                        and fr["channel"] == raw_channel):
+                    # one syslog message per ANS payload
+                    spool.write(fr["payload"])
+                    with self._lock:
+                        self.n_messages += 1
                     try:
-                        data = conn.recv(65536)
+                        # window update is advisory — the peer may
+                        # already have sent NUL and closed
+                        conn.sendall(seq_frame(
+                            raw_channel,
+                            fr["seqno"] + len(fr["payload"]),
+                        ))
                     except OSError:
-                        return
-                    if not data:
-                        return
-                    for fr in parser.feed(data):
-                        if fr["kind"] == "SEQ":
-                            continue
-                        if fr["kind"] == "MSG" and fr["channel"] == 0:
-                            body = fr["payload"]
-                            if (b"<start" not in body
-                                    or RAW_PROFILE_URI.encode()
-                                    not in body):
-                                err = _BEEP_CT + b'<error code="550"/>'
-                                conn.sendall(beep_frame(
-                                    "ERR", 0, fr["msgno"], seq0, err))
-                                seq0 += len(err)
-                                continue
-                            num = body.split(b'number="', 1)[1]
-                            raw_channel = int(num.split(b'"', 1)[0])
-                            ok = _BEEP_CT + (
-                                f'<profile uri="{RAW_PROFILE_URI}"/>'
-                            ).encode()
-                            conn.sendall(beep_frame(
-                                "RPY", 0, fr["msgno"], seq0, ok))
-                            seq0 += len(ok)
-                            # RAW §3.3: the collector opens with MSG 0
-                            hello = b"collector ready"
-                            conn.sendall(beep_frame(
-                                "MSG", raw_channel, 0, seq_raw, hello))
-                            seq_raw += len(hello)
-                        elif (fr["kind"] == "ANS"
-                                and fr["channel"] == raw_channel):
-                            if f is None:
-                                f = open(os.path.join(
-                                    self.spool_dir,
-                                    f"beep-{sid:04d}.log"), "ab")
-                            # one syslog message per ANS payload
-                            f.write(fr["payload"]
-                                    .replace(b"\n", b" ") + b"\n")
-                            f.flush()
-                            with self._lock:
-                                self.n_messages += 1
-                            try:
-                                # window update is advisory — the peer
-                                # may already have sent NUL and closed
-                                conn.sendall(seq_frame(
-                                    raw_channel,
-                                    fr["seqno"] + len(fr["payload"]),
-                                ))
-                            except OSError:
-                                pass
-                        elif (fr["kind"] == "NUL"
-                                and fr["channel"] == raw_channel):
-                            return  # exchange complete
-        finally:
-            if f is not None:
-                f.close()
-
-    def close(self) -> None:
-        self._srv.close()
+                        pass
+                elif (fr["kind"] == "NUL"
+                        and fr["channel"] == raw_channel):
+                    return  # exchange complete
 
 
 def send_3195_raw(host: str, port: int, msgs: list[bytes],

@@ -94,13 +94,6 @@ def _shingles_of_words(words: Column, k: int) -> Column:
     return F.array_distinct(sh)
 
 
-def _shingles(col: Column, k: int) -> Column:
-    """Word k-shingles of normalized text (distinct). See
-    :func:`_shingles_of_words` for the per-element re-evaluation trap
-    when ``col`` is an expression rather than a materialized column."""
-    return _shingles_of_words(_words(col), k)
-
-
 _M31 = (1 << 31) - 1
 
 
@@ -158,87 +151,6 @@ def minhash_signature(
     )
 
 
-def _sig_arrow_impl_factory(num_hashes: int):
-    """Vectorized minhash signatures (guide §4.2): same affine family
-    as :func:`minhash_signature`, computed with numpy over the Arrow
-    batch's FLAT values buffer — one (v*a+b) % p pass plus one
-    segmented min (``np.minimum.reduceat``) per family member,
-    instead of num_hashes × n_grams interpreted lambda evaluations
-    (the Column form is ~557M interpreted ops for 100k log docs ×
-    87 grams × 64 members — measured ~17 s of token_minhash's 20 s
-    at sf0.1; this path does the same math at numpy speed)."""
-    consts = _mix_consts(num_hashes)
-
-    def impl(lst):
-        import numpy as np
-        import pyarrow as pa
-
-        if isinstance(lst, pa.ChunkedArray):
-            lst = lst.combine_chunks()
-        n = len(lst)
-        out_type = pa.list_(pa.int64())
-        if n == 0:
-            return pa.array([], type=out_type)
-        offs = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        if lst.offset != 0 or lst.null_count or (
-            lst.values.null_count if len(lst.values) else 0
-        ):
-            # exotic layout (sliced/nulls): exact per-row fallback
-            rows = lst.to_pylist()
-            return pa.array(
-                [
-                    None if r is None else [
-                        min(((h * a + b) % _M31) for h in r) if r else None
-                        for a, b in consts
-                    ]
-                    for r in rows
-                ],
-                type=out_type,
-            )
-        v = lst.values.to_numpy(zero_copy_only=False).astype(np.int64)
-        starts = offs[:-1]
-        empty = offs[:-1] == offs[1:]
-        sigs = np.empty((n, len(consts)), dtype=np.int64)
-        for j, (a, b) in enumerate(consts):
-            m = (v * a + b) % _M31  # v < 2^31, a < 2^31 → no overflow
-            if len(m):
-                # reduceat misbehaves on empty segments; mask below
-                red = np.minimum.reduceat(m, np.minimum(starts, len(m) - 1))
-            else:
-                red = np.zeros(len(starts), dtype=np.int64)
-            sigs[:, j] = red
-        flat = sigs.ravel()
-        if empty.any():
-            # rows with zero grams: sig elements are NULL (array_min of
-            # an empty transform), mirroring the Column form
-            mask = np.repeat(~empty, len(consts))
-            return pa.ListArray.from_arrays(
-                pa.array(np.arange(n + 1, dtype=np.int32) * len(consts)),
-                pa.array(flat, mask=~mask),
-            )
-        return pa.ListArray.from_arrays(
-            pa.array(np.arange(n + 1, dtype=np.int32) * len(consts)),
-            pa.array(flat),
-        )
-
-    return impl
-
-
-def minhash_signature_arrow(
-    hashes_col: Column, num_hashes: int = 64
-) -> Column:
-    """Arrow-vectorized :func:`minhash_signature` (identical values —
-    asserted equal by unit test): use where the gram count × family
-    size is large (the token-native path)."""
-    from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    fn = arrow_udf(
-        _sig_arrow_impl_factory(num_hashes), ArrayType(LongType())
-    )
-    return fn(hashes_col)
-
-
 def _mix64_np(h, t):
     """One vectorized murmur-style mix step (numpy uint64): absorb
     token ``t`` into running hash ``h``. Full avalanche per step."""
@@ -255,8 +167,9 @@ def _token_sig_impl_factory(gram_k: int, num_hashes: int):
     """Fused token-gram hashing + minhash signatures in one numpy pass
     (guide §4.2): gram hashes via a vectorized murmur-style mix chain
     over the batch's FLAT token buffer (k shifted reads, no per-gram
-    slice objects), folded to 31 bits, then the same affine family /
-    segmented-min as :func:`_sig_arrow_impl_factory`. The gram hash
+    slice objects), folded to 31 bits, then the affine family of
+    :func:`minhash_signature` as one segmented min per member
+    (``np.minimum.reduceat``) over the flat hash buffer. The gram hash
     value itself is not contract-pinned (it only buckets candidates;
     the oracle-checked output is the planted-duplicate pair set, which
     any deterministic hash reproduces) — swapping the interpreted
@@ -976,7 +889,10 @@ def ngram_jaccard_pairs(
     df_max is missed — such pairs share only near-ubiquitous n-grams
     and sit far below any useful threshold; route true near-dup
     discovery through minhash_lsh_pairs and use this as the exact
-    verifier."""
+    verifier.
+
+    Returns (id_a, id_b, n_inter, na, nb, jaccard): the shared and
+    per-document shingle counts next to the exact jaccard."""
     npart = _parallelism(df)
     sh = (
         df.select(
@@ -1037,7 +953,7 @@ def ngram_jaccard_pairs(
     jac = (
         F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
     ).alias("jaccard")
-    return pairs.select("id_a", "id_b", jac).filter(
+    return pairs.select("id_a", "id_b", "n_inter", "na", "nb", jac).filter(
         F.col("jaccard") >= threshold
     )
 

@@ -32,18 +32,8 @@ class LineageTracker:
     def instrument(self, routed: DataFrame) -> DataFrame:
         """Attach counters to the routed DataFrame (call before the
         action). Adds zero extra jobs."""
-        metrics = [F.count(F.lit(1)).alias("rows_in")]
-        metrics.append(
-            F.sum(
-                F.when(~F.col("parse_success"), 1).otherwise(0)
-            ).alias("parse_failures")
-        )
-        for s in self.sinks:
-            metrics.append(
-                F.sum(F.col(f"route_{s}").cast("long")).alias(f"routed_{s}")
-            )
         self._t0 = time.time()
-        return routed.observe(self.obs, *metrics)
+        return routed.observe(self.obs, *_counters(self.sinks))
 
     def snapshot(self) -> dict:
         """Metrics after the action has run."""
@@ -62,12 +52,10 @@ class LineageTracker:
         return snap
 
 
-def per_partition_lineage(routed: DataFrame, sinks: list[str]) -> DataFrame:
-    """Per-input-partition counters (north_star: per-partition lineage):
-    one row per physical partition with rows_in, parse_failures, and
-    routed counts per sink — the statsobj-per-component analog, keyed
-    by partition instead of component."""
-    aggs = [
+def _counters(sinks: list[str]) -> list:
+    """The lineage counters: rows_in, parse_failures and one
+    routed_<sink> message count per sink."""
+    return [
         F.count(F.lit(1)).alias("rows_in"),
         F.sum(F.when(~F.col("parse_success"), 1).otherwise(0)).alias(
             "parse_failures"
@@ -76,34 +64,36 @@ def per_partition_lineage(routed: DataFrame, sinks: list[str]) -> DataFrame:
         F.sum(F.col(f"route_{s}").cast("long")).alias(f"routed_{s}")
         for s in sinks
     ]
+
+
+def per_partition_lineage(routed: DataFrame, sinks: list[str]) -> DataFrame:
+    """Per-input-partition counters (north_star: per-partition lineage):
+    one row per physical partition with rows_in, parse_failures, and
+    routed counts per sink — the statsobj-per-component analog, keyed
+    by partition instead of component."""
     return routed.groupBy(
         F.spark_partition_id().alias("partition_id")
-    ).agg(*aggs)
+    ).agg(*_counters(sinks))
 
 
 def run_with_lineage(
     router, parsed: DataFrame, base_path: str, lineage_path: str | None = None
 ) -> dict:
-    """Route + write all sinks + append run-level and per-partition
-    _lineage rows. Returns the run-level snapshot (rows_in,
-    parse_failures, routed_<sink>, wall_ms)."""
+    """Route + write all sinks (through the router's own
+    :meth:`~rsyslog_spark.rules.router.Router.write_routed`, so
+    ``foreach`` actions explode exactly as in ``write_sinks``) + append
+    run-level and per-partition _lineage rows. Returns the run-level
+    snapshot (rows_in, parse_failures, routed_<sink>, wall_ms)."""
     sinks = [a.sink for a in router.actions]
     tracker = LineageTracker(sinks)
     routed = tracker.instrument(router.apply(parsed))
     routed.persist()
     try:
-        for a in router.actions:
-            (
-                routed.filter(F.col(f"route_{a.sink}"))
-                .drop(*[f"route_{x.sink}" for x in router.actions])
-                .write.mode("overwrite")
-                .parquet(f"{base_path}/{a.sink}")
-            )
-        spark = parsed.sparkSession
+        router.write_routed(routed, base_path)
         lp = lineage_path or f"{base_path}/_lineage"
         per_partition_lineage(routed, sinks).withColumn(
             "run_id", F.lit(tracker.run_id)
         ).write.mode("append").parquet(f"{lp}_partitions")
-        return tracker.write(spark, lp)
+        return tracker.write(parsed.sparkSession, lp)
     finally:
         routed.unpersist()

@@ -15,19 +15,20 @@ Reference: plugins/ommail/ommail.c —
   request", :703) — mirrored faithfully; alerts are rare, the
   per-message dialog is the reference's own cost model.
 
-Spark shape: ``ommail_send`` runs the dialog inside ``mapInPandas``
-(one Python worker per partition, one connection per message like the
-reference). Mail sinks gate on a routed predicate, so the input is the
-already-filtered alert stream — tiny by construction. The sendmail
+Spark shape: ``ommail_send`` runs the dialog inside the shared
+per-partition sender (:func:`rsyslog_spark.net.partition_sender`), one
+connection per message like the reference. Mail sinks gate on a routed
+predicate, so the input is the already-filtered alert stream — tiny by
+construction. The sendmail
 fork path (:978) maps to ``sinks.omprog``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from rsyslog_spark.net import send_partitions, total_sent
 
 _DAYS = ["Mon", "Tue", "Wed", "Thu", "Fri", "Sat", "Sun"]
 _MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
@@ -130,6 +131,9 @@ class _SmtpDialog:
             s.sendall(b"QUIT\r\n")
             self._expect(f, 221)
 
+    def close(self) -> None:
+        """Nothing held open: each message closed its own connection."""
+
 
 def ommail_send(
     df: DataFrame,
@@ -157,22 +161,18 @@ def ommail_send(
         [ts_col] if ts_col else []
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dialog = _SmtpDialog(host, port, helo)
-        n = 0
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                subject = (
-                    str(row[subject_col]) if subject_col else subject_text
-                )
-                epoch = int(row[ts_col]) if ts_col else int(_t.time())
-                msg = mail_message(
-                    from_addr, rcpts, subject, str(row[body_col]),
-                    epoch, enable_body=enable_body,
-                )
-                dialog.send(from_addr, rcpts, msg)
-                n += 1
-        yield pd.DataFrame({"n_sent": [n]})
+    def send(dialog: _SmtpDialog, pdf: pd.DataFrame) -> tuple[int]:
+        for _, row in pdf.iterrows():
+            subject = str(row[subject_col]) if subject_col else subject_text
+            epoch = int(row[ts_col]) if ts_col else int(_t.time())
+            msg = mail_message(
+                from_addr, rcpts, subject, str(row[body_col]),
+                epoch, enable_body=enable_body,
+            )
+            dialog.send(from_addr, rcpts, msg)
+        return (len(pdf),)
 
-    sent = df.select(*cols).mapInPandas(run, "n_sent long").collect()
-    return int(sum(r["n_sent"] for r in sent))
+    return total_sent(send_partitions(
+        df.select(*cols), lambda: _SmtpDialog(host, port, helo), send,
+        "n_sent long",
+    ))

@@ -23,8 +23,9 @@ Reference semantics (plugins/ommongodb/ommongodb.c):
 - one insert per batch via the ``insert`` command (the modern
   equivalent of the deprecated mongoc_collection_insert call path).
 
-Spark-first shape: documents are encoded executor-side per partition
-(mapInPandas); the socket is a per-partition resource.
+Spark-first shape: documents are encoded executor-side per partition;
+the socket is a per-partition resource opened and closed by
+:func:`rsyslog_spark.net.partition_sender`.
 """
 
 from __future__ import annotations
@@ -33,6 +34,8 @@ import datetime as _dt
 import socket
 import struct
 from typing import Any
+
+from rsyslog_spark.net import send_partitions
 
 OP_MSG = 2013
 
@@ -354,8 +357,9 @@ def ommongodb_deliver(
     ts_col: str | None = None,
 ):
     """ommongodb doAction over the default document: render each row
-    with :func:`default_doc`, insert in batches. ``oid_fn(key)``
-    supplies ObjectIds — ``key`` is globally unique per row
+    with :func:`default_doc`, insert in batches over one connection
+    per partition (:func:`rsyslog_spark.net.partition_sender`).
+    ``oid_fn(key)`` supplies ObjectIds — ``key`` is globally unique per row
     (partition_id << 40 | running row counter; the pandas index would
     restart per Arrow batch and collide). Default: random 12 bytes
     per message, like bson_oid_init."""
@@ -363,43 +367,40 @@ def ommongodb_deliver(
 
     import pandas as pd
 
-    def send(batches):
+    def open_conn() -> MongoInserter:
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        row_no = 0
-        ins = None
-        n = 0
-        try:
-            for pdf in batches:
-                if len(pdf) and ins is None:
-                    ins = MongoInserter(host, port, db, collection)
-                docs = []
-                for _, row in pdf.iterrows():
-                    key = (pid << 40) | row_no
-                    row_no += 1
-                    oid = (
-                        ObjectId(oid_fn(key)) if oid_fn
-                        else ObjectId(os.urandom(12))
-                    )
-                    ts = (
-                        int(pd.Timestamp(row[ts_col]).timestamp() * 1000)
-                        if ts_col else 0
-                    )
-                    docs.append(default_doc(
-                        oid, str(row[host_col]), ts, ts,
-                        str(row[msg_col]), int(row[fac_col]),
-                        int(row[sev_col]), str(row[tag_col]),
-                        str(row[prog_col]), str(row[procid_col]),
-                    ))
-                    if len(docs) >= batch_size:
-                        n += ins.insert(docs)
-                        docs = []
-                if docs:
-                    n += ins.insert(docs)
-        finally:
-            if ins is not None:
-                ins.close()
-        yield pd.DataFrame({"n_inserted": [n]})
+        ins = MongoInserter(host, port, db, collection)
+        ctx = TaskContext.get()
+        ins.key_base = (ctx.partitionId() if ctx else 0) << 40
+        ins.row_no = 0
+        return ins
 
-    return df.mapInPandas(send, "n_inserted long")
+    def send(ins: MongoInserter, pdf: pd.DataFrame) -> tuple[int]:
+        n = 0
+        docs = []
+        for _, row in pdf.iterrows():
+            key = ins.key_base | ins.row_no
+            ins.row_no += 1
+            oid = (
+                ObjectId(oid_fn(key)) if oid_fn
+                else ObjectId(os.urandom(12))
+            )
+            ts = (
+                int(pd.Timestamp(row[ts_col]).timestamp() * 1000)
+                if ts_col else 0
+            )
+            docs.append(default_doc(
+                oid, str(row[host_col]), ts, ts,
+                str(row[msg_col]), int(row[fac_col]),
+                int(row[sev_col]), str(row[tag_col]),
+                str(row[prog_col]), str(row[procid_col]),
+            ))
+            if len(docs) >= batch_size:
+                n += ins.insert(docs)
+                docs = []
+        if docs:
+            n += ins.insert(docs)
+        return (n,)
+
+    return send_partitions(df, open_conn, send, "n_inserted long")

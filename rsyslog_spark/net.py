@@ -9,12 +9,22 @@ anything else is octet stuffing (LF-terminated, the traditional
 syslog/TCP framing). Both can interleave on one connection.
 
 :class:`SyslogTcpListener` / :class:`SyslogUdpListener` are the
-imtcp/imudp sockets with the same spool-then-stream bridge as
-:class:`rsyslog_spark.relp.RelpListener` (Structured Streaming
-sources must be replayable; a raw socket is not — the spool file is
-the replay log). :func:`omfwd_send` is omfwd's doAction made real:
-per-partition persistent TCP connection (or UDP datagrams) writing
-:func:`rsyslog_spark.sinks.omfwd_frame` bytes.
+imtcp/imudp sockets with the spool-then-stream bridge (Structured
+Streaming sources must be replayable; a raw socket is not — the spool
+file is the replay log). :func:`omfwd_send` is omfwd's doAction made
+real: per-partition persistent TCP connection (or UDP datagrams)
+writing :func:`rsyslog_spark.sinks.omfwd_frame` bytes.
+
+This module also holds the connection lifecycle the wire modules
+share, so each protocol module only encodes:
+
+- :class:`_SpoolWriter` — the thread-safe, rotating spool every input
+  writes through;
+- :class:`_TcpListener` — bind, accept thread, per-session threads and
+  spools for imtcp, imrelp, imbeats and im3195;
+- :func:`partition_sender` — the executor-side open / send / finish /
+  close loop behind omfwd, omuxsock, omsnmp, omczmq, omrabbitmq,
+  omamqp1, ommongodb, omhiredis and ommail.
 
 Both TCP ends take a :class:`rsyslog_spark.tls.TlsConfig` to run the
 reference's stream-driver TLS layer (StreamDriver.Mode=1 with
@@ -144,14 +154,23 @@ def uncompress_message(
 
 
 class _SpoolWriter:
+    """Newline-delimited spool files ``<prefix>-<n>.log``, rotated
+    every ``rotate_every`` lines — the replay log behind every
+    socket→spool→stream input. Thread-safe: one writer may serve many
+    sessions (imhttp's request threads). A file is fsynced as it
+    rotates out, so :meth:`sync` makes every line written so far
+    durable (RELP and Beats call it before each ack)."""
+
     def __init__(self, spool_dir: str, prefix: str,
                  rotate_every: int) -> None:
         import os
+        import threading
 
         os.makedirs(spool_dir, exist_ok=True)
         self.dir = spool_dir
         self.prefix = prefix
         self.rotate = rotate_every
+        self._lock = threading.Lock()
         self._f = None
         self._n_file = 0
         self._n = 0
@@ -159,29 +178,114 @@ class _SpoolWriter:
     def write(self, msg: bytes) -> None:
         import os
 
-        if self._f is None:
-            self._f = open(
-                os.path.join(
-                    self.dir, f"{self.prefix}-{self._n_file:06d}.log"
-                ),
-                "ab",
-            )
-        self._f.write(msg.replace(b"\n", b" ") + b"\n")
-        self._f.flush()
-        self._n += 1
-        if self._n >= self.rotate:
-            self._f.close()
-            self._f, self._n_file, self._n = None, self._n_file + 1, 0
+        with self._lock:
+            if self._f is None:
+                self._f = open(
+                    os.path.join(
+                        self.dir, f"{self.prefix}-{self._n_file:06d}.log"
+                    ),
+                    "ab",
+                )
+            self._f.write(msg.replace(b"\n", b" ") + b"\n")
+            self._f.flush()
+            self._n += 1
+            if self._n >= self.rotate:
+                os.fsync(self._f.fileno())
+                self._f.close()
+                self._f, self._n_file, self._n = None, self._n_file + 1, 0
+
+    def sync(self) -> None:
+        """flush + fsync: everything written is durable on return."""
+        import os
+
+        with self._lock:
+            if self._f is not None:
+                self._f.flush()
+                os.fsync(self._f.fileno())
 
     def close(self) -> None:
-        if self._f is not None:
-            self._f.close()
+        with self._lock:
+            if self._f is not None:
+                self._f.close()
 
 
-class SyslogTcpListener:
+class _TcpListener:
+    """The TCP input core shared by imtcp, imrelp, imbeats and im3195
+    (the reference's tcpsrv.c + runtime/tcps_sess.c): bind, listen,
+    one accept thread, one thread per session numbered by ``sid``, and
+    :meth:`close`. Each session spools through its own
+    :class:`_SpoolWriter` ``<spool_prefix>-<sid>``; a subclass sets
+    ``spool_prefix`` and implements only
+    ``_session(conn, peer, spool)``, reading with :meth:`_chunks`."""
+
+    spool_prefix = "tcp"
+
+    def __init__(self, spool_dir: str, host: str, port: int,
+                 rotate_every: int) -> None:
+        import os
+        import socket as socketlib
+        import threading
+
+        os.makedirs(spool_dir, exist_ok=True)
+        self.spool_dir = spool_dir
+        self.rotate_every = rotate_every
+        self._lock = threading.Lock()  # counters; sessions are threads
+        self._n_sessions = 0
+        self._srv = socketlib.create_server((host, port), backlog=16)
+        self.port = self._srv.getsockname()[1]
+        threading.Thread(target=self._serve, daemon=True).start()
+
+    def _serve(self) -> None:
+        import threading
+
+        while True:
+            try:
+                conn, peer = self._srv.accept()
+            except OSError:
+                return
+            with self._lock:
+                self._n_sessions += 1
+                sid = self._n_sessions
+            threading.Thread(
+                target=self._run_session, args=(conn, peer, sid),
+                daemon=True,
+            ).start()
+
+    def _run_session(self, conn, peer, sid: int) -> None:
+        spool = _SpoolWriter(
+            self.spool_dir, f"{self.spool_prefix}-{sid:04d}",
+            self.rotate_every,
+        )
+        try:
+            with conn:
+                self._session(conn, peer, spool)
+        finally:
+            spool.close()
+
+    def _session(self, conn, peer, spool: _SpoolWriter) -> None:
+        raise NotImplementedError
+
+    @staticmethod
+    def _chunks(conn) -> Iterator[bytes]:
+        """Received bytes until the peer closes or the socket fails."""
+        while True:
+            try:
+                data = conn.recv(65536)
+            except OSError:
+                return
+            if not data:
+                return
+            yield data
+
+    def close(self) -> None:
+        self._srv.close()
+
+
+class SyslogTcpListener(_TcpListener):
     """imtcp: accept TCP connections, extract frames with the
     per-frame auto-detecting parser, spool newline-delimited messages
-    for the streaming reader.
+    for the streaming reader (accept and session threads live in
+    :class:`_TcpListener`).
 
     ``tls`` enables the stream-driver TLS layer (imtcp
     StreamDriver.Mode=1): the handshake runs per session, and with
@@ -194,11 +298,6 @@ class SyslogTcpListener:
                  port: int = 0, rotate_every: int = 10_000,
                  support_compression: bool = True,
                  tls=None) -> None:
-        import socket as socketlib
-        import threading
-
-        self.spool_dir = spool_dir
-        self.rotate_every = rotate_every
         self.support_compression = support_compression
         self.n_received = 0
         self.framing_errors: list[str] = []
@@ -209,35 +308,9 @@ class SyslogTcpListener:
             from rsyslog_spark.tls import make_server_context
 
             self._tls_ctx = make_server_context(tls)
-        self._lock = threading.Lock()
-        self._n_sessions = 0
-        self._srv = socketlib.socket(
-            socketlib.AF_INET, socketlib.SOCK_STREAM
-        )
-        self._srv.setsockopt(
-            socketlib.SOL_SOCKET, socketlib.SO_REUSEADDR, 1
-        )
-        self._srv.bind((host, port))
-        self._srv.listen(16)
-        self.port = self._srv.getsockname()[1]
-        threading.Thread(target=self._serve, daemon=True).start()
+        super().__init__(spool_dir, host, port, rotate_every)
 
-    def _serve(self) -> None:
-        import threading
-
-        while True:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return
-            with self._lock:
-                self._n_sessions += 1
-                sid = self._n_sessions
-            threading.Thread(
-                target=self._session, args=(conn, sid), daemon=True
-            ).start()
-
-    def _session(self, conn, sid: int) -> None:
+    def _session(self, conn, peer, spool: _SpoolWriter) -> None:
         if self._tls_ctx is not None:
             import ssl as ssllib
 
@@ -259,41 +332,28 @@ class SyslogTcpListener:
                 conn.close()
                 return
         parser = SyslogFrameParser()
-        spool = _SpoolWriter(
-            self.spool_dir, f"tcp-{sid:04d}", self.rotate_every
-        )
-        try:
-            with conn:
-                while True:
-                    try:
-                        data = conn.recv(65536)
-                    except OSError:
-                        return
-                    if not data:
-                        tail = parser.flush()
-                        if tail is not None:
-                            spool.write(tail)
-                            with self._lock:
-                                self.n_received += 1
-                        return
-                    for msg, _framing, err in parser.feed(data):
-                        if err:
-                            with self._lock:
-                                self.framing_errors.append(err)
-                        if msg and self.support_compression:
-                            msg, zerr = uncompress_message(msg)
-                            if zerr:
-                                with self._lock:
-                                    self.framing_errors.append(zerr)
-                        if msg:
-                            spool.write(msg)
-                            with self._lock:
-                                self.n_received += 1
-        finally:
-            spool.close()
 
-    def close(self) -> None:
-        self._srv.close()
+        def deliver(msg: bytes) -> None:
+            spool.write(msg)
+            with self._lock:
+                self.n_received += 1
+
+        with conn:  # a TLS wrap owns the fd the core's socket gave up
+            for data in self._chunks(conn):
+                for msg, _framing, err in parser.feed(data):
+                    if err:
+                        with self._lock:
+                            self.framing_errors.append(err)
+                    if msg and self.support_compression:
+                        msg, zerr = uncompress_message(msg)
+                        if zerr:
+                            with self._lock:
+                                self.framing_errors.append(zerr)
+                    if msg:
+                        deliver(msg)
+            tail = parser.flush()
+            if tail is not None:
+                deliver(tail)
 
 
 class SyslogUdpListener:
@@ -329,6 +389,65 @@ class SyslogUdpListener:
         self._sock.close()
 
 
+def partition_sender(open_conn, send, report: str, finish=None):
+    """The executor-side delivery loop every connection-per-partition
+    sender shares (the reference's action worker: beginTx / doAction /
+    commitTx in runtime/action.c), as a ``mapInPandas`` function.
+
+    ``open_conn()`` runs on the partition's first non-empty batch and
+    returns the connection plus any per-partition state;
+    ``send(conn, pdf)`` delivers one batch and returns one count per
+    ``report`` column (a DDL string such as ``"n_sent long"``);
+    ``finish(conn)``, when given, runs after the last batch (reply
+    drains, pending flushes) and returns counts too. The connection's
+    ``close()`` always runs, and an error from open, send or finish
+    fails the partition — Spark then retries it. Yields one report row
+    of per-partition sums."""
+    cols = [c.split()[0] for c in report.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        conn = None
+        totals = [0] * len(cols)
+
+        def add(counts) -> None:
+            for i, c in enumerate(counts):
+                totals[i] += c
+
+        try:
+            for pdf in batches:
+                if pdf.empty:
+                    continue
+                if conn is None:
+                    conn = open_conn()
+                add(send(conn, pdf))
+            if conn is not None and finish is not None:
+                add(finish(conn))
+        finally:
+            if conn is not None:
+                conn.close()
+        yield pd.DataFrame({c: [t] for c, t in zip(cols, totals)})
+
+    return run
+
+
+def send_partitions(df: DataFrame, open_conn, send, report: str,
+                    finish=None) -> DataFrame:
+    """``df.mapInPandas`` over :func:`partition_sender`: one report
+    row per partition."""
+    return df.mapInPandas(
+        partition_sender(open_conn, send, report, finish), report
+    )
+
+
+def total_sent(report: DataFrame) -> int:
+    """Sum of a report's ``n_sent`` column over all partitions."""
+    return int(report.agg({"n_sent": "sum"}).first()[0] or 0)
+
+
+def _wire_bytes(v) -> bytes:
+    return v.encode("utf-8") if isinstance(v, str) else v
+
+
 def omfwd_send(
     df: DataFrame,
     host: str,
@@ -340,77 +459,54 @@ def omfwd_send(
     """omfwd's doAction made real (tools/omfwd.c TCPSend/UDPSend):
     ship pre-framed wire bytes (see sinks.omfwd_frame) over one
     persistent TCP connection per partition, or as one UDP datagram
-    per message. Driver-visible return: messages sent. A TCP transport
-    error fails the partition → Spark retries (the reference suspends
-    the action and replays from the queue).
+    per message (the loop is :func:`partition_sender`). Returns
+    messages sent. A TCP transport error fails the partition →
+    Spark retries (the reference suspends the action and replays from
+    the queue).
 
     ``tls`` (a :class:`rsyslog_spark.tls.TlsConfig`) enables the
     omfwd StreamDriver TLS mode: the client also AUTHENTICATES the
     server per auth_mode/permitted_peers (the reference checks both
     directions — nsd_ossl.c osslChkPeerAuth runs in the client
     handshake too); an unauthorized server fails the partition."""
-    import pyspark.sql.types as T
-
     if protocol not in ("tcp", "udp"):
         raise ValueError("protocol must be tcp|udp")
     if tls is not None and protocol != "tcp":
         raise ValueError("tls requires protocol='tcp'")
 
-    def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def open_conn():
         import socket as socketlib
 
-        sock = None
-        n = 0
-        try:
-            for pdf in batches:
-                vals = pdf[value_col].tolist()
-                if vals and sock is None:
-                    if protocol == "tcp":
-                        sock = socketlib.create_connection(
-                            (host, port), timeout=10.0
-                        )
-                        if tls is not None:
-                            from rsyslog_spark.tls import (
-                                check_peer,
-                                make_client_context,
-                            )
+        if protocol == "udp":
+            return socketlib.socket(socketlib.AF_INET, socketlib.SOCK_DGRAM)
+        sock = socketlib.create_connection((host, port), timeout=10.0)
+        if tls is not None:
+            from rsyslog_spark.tls import check_peer, make_client_context
 
-                            ctx = make_client_context(tls)
-                            sock = ctx.wrap_socket(
-                                sock, server_hostname=host
-                            )
-                            ok, detail = check_peer(
-                                sock.getpeercert(binary_form=True),
-                                sock.getpeercert(),
-                                tls,
-                            )
-                            if not ok:
-                                raise RuntimeError(
-                                    "TLS session terminated with "
-                                    f"remote syslog server: {detail}"
-                                )
-                    else:
-                        sock = socketlib.socket(
-                            socketlib.AF_INET, socketlib.SOCK_DGRAM
-                        )
-                for v in vals:
-                    b = v.encode("utf-8") if isinstance(v, str) else v
-                    if protocol == "tcp":
-                        sock.sendall(b)
-                    else:
-                        sock.sendto(b, (host, port))
-                    n += 1
-            yield pd.DataFrame({"n_sent": [n]})
-        finally:
-            if sock is not None:
+            sock = make_client_context(tls).wrap_socket(
+                sock, server_hostname=host
+            )
+            ok, detail = check_peer(
+                sock.getpeercert(binary_form=True), sock.getpeercert(), tls
+            )
+            if not ok:
                 sock.close()
+                raise RuntimeError(
+                    "TLS session terminated with "
+                    f"remote syslog server: {detail}"
+                )
+        return sock
 
-    out = df.mapInPandas(
-        send, T.StructType([T.StructField("n_sent", T.LongType())])
-    )
-    return int(
-        out.agg({"n_sent": "sum"}).first()[0] or 0
-    )
+    def send(sock, pdf: pd.DataFrame) -> tuple[int]:
+        vals = pdf[value_col].tolist()
+        for v in vals:
+            if protocol == "tcp":
+                sock.sendall(_wire_bytes(v))
+            else:
+                sock.sendto(_wire_bytes(v), (host, port))
+        return (len(vals),)
+
+    return total_sent(send_partitions(df, open_conn, send, "n_sent long"))
 
 
 def omuxsock_send(
@@ -425,43 +521,31 @@ def omuxsock_send(
     message, SOCK_DGRAM default :178; dgram=False uses a connected
     SOCK_STREAM like the module's STREAM option). ``abstract=True``
     maps the Linux abstract-namespace form (leading NUL, :389).
-    One socket per partition; returns messages sent."""
-    import pyspark.sql.types as T
-
+    One socket per partition (:func:`partition_sender`); returns
+    messages sent."""
     addr = ("\0" + path) if abstract else path
 
-    def send(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def open_conn():
         import socket as socketlib
 
-        sock = None
-        n = 0
-        try:
-            for pdf in batches:
-                vals = pdf[value_col].tolist()
-                if vals and sock is None:
-                    kind = (
-                        socketlib.SOCK_DGRAM if dgram
-                        else socketlib.SOCK_STREAM
-                    )
-                    sock = socketlib.socket(socketlib.AF_UNIX, kind)
-                    if not dgram:
-                        sock.connect(addr)
-                for v in vals:
-                    b = v.encode("utf-8") if isinstance(v, str) else v
-                    if dgram:
-                        sock.sendto(b, addr)
-                    else:
-                        sock.sendall(b)
-                    n += 1
-            yield pd.DataFrame({"n_sent": [n]})
-        finally:
-            if sock is not None:
-                sock.close()
+        kind = socketlib.SOCK_DGRAM if dgram else socketlib.SOCK_STREAM
+        sock = socketlib.socket(socketlib.AF_UNIX, kind)
+        if not dgram:
+            sock.connect(addr)
+        return sock
 
-    out = df.select(value_col).mapInPandas(
-        send, T.StructType([T.StructField("n_sent", T.LongType())])
-    )
-    return int(out.agg({"n_sent": "sum"}).first()[0] or 0)
+    def send(sock, pdf: pd.DataFrame) -> tuple[int]:
+        vals = pdf[value_col].tolist()
+        for v in vals:
+            if dgram:
+                sock.sendto(_wire_bytes(v), addr)
+            else:
+                sock.sendall(_wire_bytes(v))
+        return (len(vals),)
+
+    return total_sent(send_partitions(
+        df.select(value_col), open_conn, send, "n_sent long"
+    ))
 
 
 def _trusted_props(pid: int) -> dict[str, str]:

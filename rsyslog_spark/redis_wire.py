@@ -14,9 +14,10 @@ Reference semantics:
 from __future__ import annotations
 
 import socket
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+
+from rsyslog_spark.net import send_partitions
 
 # ---------------------------------------------------------------------------
 # RESP2 codec
@@ -125,6 +126,32 @@ def omhiredis_command(
     raise ValueError(f"omhiredis mode {mode!r} invalid")
 
 
+class _RespPipeline:
+    """One partition's RESP connection with its unanswered-command
+    count: replies are drained ``size`` commands at a time."""
+
+    def __init__(self, host: str, port: int, size: int) -> None:
+        self.sock = socket.create_connection((host, port), timeout=10.0)
+        self.buf = bytearray()
+        self.size = size
+        self.pending = 0
+
+    def drain(self) -> tuple[int, int]:
+        """Read every pending reply → (n_ok, n_errors)."""
+        n_ok = n_err = 0
+        while self.pending:
+            v = _read_reply(self.sock, self.buf)
+            self.pending -= 1
+            if isinstance(v, RespError):
+                n_err += 1
+            else:
+                n_ok += 1
+        return n_ok, n_err
+
+    def close(self) -> None:
+        self.sock.close()
+
+
 def omhiredis_deliver(
     df: DataFrame,
     host: str,
@@ -135,52 +162,27 @@ def omhiredis_deliver(
     pipeline_size: int = 64,
     **cmd_kwargs,
 ) -> DataFrame:
-    """Executor-side delivery: one RESP connection per partition,
-    commands pipelined ``pipeline_size`` at a time (the reference
-    pipelines via redisAppendCommand and drains replies in
-    tryHiredisAgain). Returns a per-partition report
-    (n_sent, n_errors)."""
-    import pandas as pd
+    """Executor-side delivery: one RESP connection per partition
+    (:func:`rsyslog_spark.net.partition_sender`), commands pipelined
+    ``pipeline_size`` at a time (the reference pipelines via
+    redisAppendCommand and drains replies in tryHiredisAgain). Returns
+    a per-partition report (n_sent, n_errors)."""
 
-    def send(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        sock = None
-        buf = bytearray()
-        n_sent = n_err = 0
-        pending = 0
+    def send(pipe: _RespPipeline, pdf) -> tuple[int, int]:
+        n_ok = n_err = 0
+        for v in pdf[value_col].tolist():
+            argv = omhiredis_command(v, mode=mode, key=key, **cmd_kwargs)
+            pipe.sock.sendall(resp_encode_command(*argv))
+            pipe.pending += 1
+            if pipe.pending >= pipe.size:
+                ok, err = pipe.drain()
+                n_ok, n_err = n_ok + ok, n_err + err
+        return n_ok, n_err
 
-        def drain():
-            nonlocal pending, n_sent, n_err
-            while pending:
-                v = _read_reply(sock, buf)
-                pending -= 1
-                if isinstance(v, RespError):
-                    n_err += 1
-                else:
-                    n_sent += 1
-
-        try:
-            for pdf in batches:
-                vals = pdf[value_col].tolist()
-                if vals and sock is None:
-                    sock = socket.create_connection(
-                        (host, port), timeout=10.0
-                    )
-                for v in vals:
-                    argv = omhiredis_command(
-                        v, mode=mode, key=key, **cmd_kwargs
-                    )
-                    sock.sendall(resp_encode_command(*argv))
-                    pending += 1
-                    if pending >= pipeline_size:
-                        drain()
-            if sock is not None:
-                drain()
-        finally:
-            if sock is not None:
-                sock.close()
-        yield pd.DataFrame({"n_sent": [n_sent], "n_errors": [n_err]})
-
-    return df.mapInPandas(send, "n_sent long, n_errors long")
+    return send_partitions(
+        df, lambda: _RespPipeline(host, port, pipeline_size), send,
+        "n_sent long, n_errors long", finish=_RespPipeline.drain,
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -30,6 +30,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from rsyslog_spark.net import _TcpListener
+
 RELP_VERSION = 0
 MAX_TXNR = 999_999_999
 SOFTWARE = "rsyslog_spark,1.0,https://spark.apache.org"
@@ -239,123 +241,51 @@ def omrelp(
     return df.mapInPandas(run, out_schema)
 
 
-class RelpListener:
+class RelpListener(_TcpListener):
     """imrelp (plugins/imrelp — librelp's relpSrv): accept RELP
     sessions, negotiate open, ACK each syslog frame ONLY AFTER its
     message is durably spooled — the write-then-ack ordering is what
     makes RELP lossless end to end (the sender retries anything
-    unacked). Messages append to newline-delimited spool files under
-    ``spool_dir`` (one per session, rotated at ``rotate_every``
-    messages); pair with ``spark.readStream.text(spool_dir)`` (or the
-    imfile source) for the streaming pipeline — the standard
-    socket→spool→stream bridge, since Structured Streaming sources
-    must be replayable and a raw socket is not."""
+    unacked). Accept, session threads and the per-session spool
+    (newline-delimited, rotated at ``rotate_every`` messages) come
+    from :class:`rsyslog_spark.net._TcpListener`; pair the spool with
+    ``spark.readStream.text(spool_dir)`` (or the imfile source) for
+    the streaming pipeline — the standard socket→spool→stream bridge,
+    since Structured Streaming sources must be replayable and a raw
+    socket is not."""
+
+    spool_prefix = "relp"
 
     def __init__(self, spool_dir: str, host: str = "127.0.0.1",
                  port: int = 0, rotate_every: int = 10_000) -> None:
-        import os
-        import socket as socketlib
-        import threading
-
-        os.makedirs(spool_dir, exist_ok=True)
-        self.spool_dir = spool_dir
-        self.rotate_every = rotate_every
-        self._srv = socketlib.socket(
-            socketlib.AF_INET, socketlib.SOCK_STREAM
-        )
-        self._srv.setsockopt(
-            socketlib.SOL_SOCKET, socketlib.SO_REUSEADDR, 1
-        )
-        self._srv.bind((host, port))
-        self._srv.listen(16)
-        self.port = self._srv.getsockname()[1]
         self.n_received = 0
-        self._n_sessions = 0
-        self._lock = threading.Lock()
-        self._thread = threading.Thread(target=self._serve, daemon=True)
-        self._thread.start()
+        super().__init__(spool_dir, host, port, rotate_every)
 
-    def _serve(self) -> None:
-        import threading
-
-        while True:
-            try:
-                conn, _ = self._srv.accept()
-            except OSError:
-                return
-            with self._lock:
-                self._n_sessions += 1
-                sid = self._n_sessions
-            threading.Thread(
-                target=self._session, args=(conn, sid), daemon=True
-            ).start()
-
-    def _session(self, conn, sid: int) -> None:
-        import os
-
+    def _session(self, conn, peer, spool) -> None:
         parser = RelpParser()
-        n_file, n_in_file, f = 0, 0, None
-
-        def spool_path() -> str:
-            return os.path.join(
-                self.spool_dir, f"relp-{sid:04d}-{n_file:06d}.log"
-            )
-
-        try:
-            with conn:
-                while True:
-                    try:
-                        data = conn.recv(65536)
-                    except OSError:
+        for data in self._chunks(conn):
+            for txnr, command, payload in parser.feed(data):
+                if command == "open":
+                    if b"commands=syslog" not in payload:
+                        conn.sendall(relp_frame(
+                            txnr, "rsp", b"500 no syslog command offered",
+                        ))
                         return
-                    if not data:
-                        return
-                    for txnr, command, payload in parser.feed(data):
-                        if command == "open":
-                            if b"commands=syslog" not in payload:
-                                conn.sendall(relp_frame(
-                                    txnr, "rsp",
-                                    b"500 no syslog command offered",
-                                ))
-                                return
-                            conn.sendall(relp_frame(
-                                txnr, "rsp",
-                                b"200 OK\nrelp_version=0\n"
-                                b"commands=syslog",
-                            ))
-                        elif command == "syslog":
-                            if f is None:
-                                f = open(spool_path(), "ab")
-                            f.write(
-                                payload.replace(b"\n", b" ") + b"\n"
-                            )
-                            # durably spooled BEFORE the ack
-                            f.flush()
-                            os.fsync(f.fileno())
-                            with self._lock:  # sessions are threads
-                                self.n_received += 1
-                            n_in_file += 1
-                            if n_in_file >= self.rotate_every:
-                                f.close()
-                                f, n_file, n_in_file = None, n_file + 1, 0
-                            conn.sendall(
-                                relp_frame(txnr, "rsp", b"200 OK")
-                            )
-                        elif command == "close":
-                            conn.sendall(
-                                relp_frame(txnr, "rsp", b"200 OK")
-                            )
-                            conn.sendall(
-                                relp_frame(0, "serverclose", b"0")
-                            )
-                            return
-                        else:
-                            conn.sendall(relp_frame(
-                                txnr, "rsp", b"500 unknown command"
-                            ))
-        finally:
-            if f is not None:
-                f.close()
-
-    def close(self) -> None:
-        self._srv.close()
+                    conn.sendall(relp_frame(
+                        txnr, "rsp",
+                        b"200 OK\nrelp_version=0\ncommands=syslog",
+                    ))
+                elif command == "syslog":
+                    spool.write(payload)
+                    spool.sync()  # durably spooled BEFORE the ack
+                    with self._lock:
+                        self.n_received += 1
+                    conn.sendall(relp_frame(txnr, "rsp", b"200 OK"))
+                elif command == "close":
+                    conn.sendall(relp_frame(txnr, "rsp", b"200 OK"))
+                    conn.sendall(relp_frame(0, "serverclose", b"0"))
+                    return
+                else:
+                    conn.sendall(relp_frame(
+                        txnr, "rsp", b"500 unknown command"
+                    ))

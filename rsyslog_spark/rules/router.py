@@ -713,29 +713,42 @@ class Router:
         routed = self.apply(df)
         routed.persist()
         try:
-            out = {}
-            for a in self.actions:
-                path = f"{base_path}/{a.sink}"
-                w = routed.filter(F.col(f"route_{a.sink}")).drop(
-                    *[f"route_{x.sink}" for x in self.actions]
-                )
-                if a.foreach_arr is not None:
-                    # one output row per matching element
-                    w = w.withColumn(
-                        "item",
-                        F.explode(
-                            F.filter(a.foreach_arr, lambda e: a.elem_pred(e))
-                        ),
-                    )
-                pb = (partition_by or {}).get(a.sink)
-                writer = w.write.mode("overwrite")
-                if pb:
-                    writer = writer.partitionBy(*pb)
-                writer.format(fmt).save(path)
-                out[a.sink] = path
-            return out
+            return self.write_routed(routed, base_path, fmt, partition_by)
         finally:
             routed.unpersist()
+
+    def write_routed(
+        self,
+        routed: DataFrame,
+        base_path: str,
+        fmt: str = "parquet",
+        partition_by: dict[str, list[str]] | None = None,
+    ) -> dict[str, str]:
+        """Write each sink's slice of an already-routed (and, for a
+        single scan, persisted) frame: filter on its route flag, drop
+        the flags, explode ``foreach`` actions to one row per matching
+        element (``item``). Returns sink → path."""
+        out = {}
+        for a in self.actions:
+            path = f"{base_path}/{a.sink}"
+            w = routed.filter(F.col(f"route_{a.sink}")).drop(
+                *[f"route_{x.sink}" for x in self.actions]
+            )
+            if a.foreach_arr is not None:
+                # one output row per matching element
+                w = w.withColumn(
+                    "item",
+                    F.explode(
+                        F.filter(a.foreach_arr, lambda e: a.elem_pred(e))
+                    ),
+                )
+            pb = (partition_by or {}).get(a.sink)
+            writer = w.write.mode("overwrite")
+            if pb:
+                writer = writer.partitionBy(*pb)
+            writer.format(fmt).save(path)
+            out[a.sink] = path
+        return out
 
 
 class BoundRouter(Router):

@@ -13,9 +13,10 @@ decode are implemented and round-tripped in tests.
 from __future__ import annotations
 
 import socket
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+
+from rsyslog_spark.net import send_partitions, total_sent
 
 # BER tags
 _INT, _OCTSTR, _NULL, _OID, _SEQ = 0x02, 0x04, 0x05, 0x06, 0x30
@@ -232,40 +233,27 @@ def omsnmp_send(
     **trap_kwargs,
 ) -> int:
     """omsnmp's doAction: one UDP trap datagram per message,
-    executor-side (mapInPandas, one socket per partition). Returns
-    traps sent."""
-    import pandas as pd
-
+    executor-side (one socket per partition, through
+    :func:`rsyslog_spark.net.partition_sender`). Returns traps sent."""
     if version not in (1, 2):
         raise ValueError("omsnmp supports version 1 or 2 (2c)")
 
-    def send(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
-        n = 0
-        try:
-            for pdf in batches:
-                srcs = (
-                    pdf[source_col].tolist()
-                    if source_col is not None else [None] * len(pdf)
+    def send(sock: socket.socket, pdf) -> tuple[int]:
+        srcs = (
+            pdf[source_col].tolist()
+            if source_col is not None else [None] * len(pdf)
+        )
+        for v, s in zip(pdf[value_col].tolist(), srcs):
+            if version == 1:
+                b = snmpv1_trap(
+                    v, source=s, community=community, **trap_kwargs
                 )
-                for v, s in zip(pdf[value_col].tolist(), srcs):
-                    if version == 1:
-                        b = snmpv1_trap(
-                            v, source=s, community=community,
-                            **trap_kwargs,
-                        )
-                    else:
-                        b = snmpv2c_trap(
-                            v, community=community, **trap_kwargs
-                        )
-                    sock.sendto(b, (host, port))
-                    n += 1
-        finally:
-            sock.close()
-        yield pd.DataFrame({"n_sent": [n]})
+            else:
+                b = snmpv2c_trap(v, community=community, **trap_kwargs)
+            sock.sendto(b, (host, port))
+        return (len(pdf),)
 
-    return int(
-        df.mapInPandas(send, "n_sent long")
-        .agg({"n_sent": "sum"})
-        .collect()[0][0]
-    )
+    return total_sent(send_partitions(
+        df, lambda: socket.socket(socket.AF_INET, socket.SOCK_DGRAM),
+        send, "n_sent long",
+    ))

@@ -16,9 +16,10 @@ from __future__ import annotations
 
 import socket
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+
+from rsyslog_spark.net import send_partitions
 
 FLAG_MORE, FLAG_LONG, FLAG_COMMAND = 0x01, 0x02, 0x04
 
@@ -197,39 +198,25 @@ def omczmq_deliver(
     topic_col: str | None = None,
     topic_frame: bool = True,
 ) -> DataFrame:
-    """Executor-side delivery: one ZMTP connection per partition,
-    multipart sends shaped per omczmq. dynaTopic maps to
-    ``topic_col`` (per-row template result, omczmq.c:251)."""
-    import pandas as pd
+    """Executor-side delivery: one ZMTP connection per partition
+    (:func:`rsyslog_spark.net.partition_sender`), multipart sends
+    shaped per omczmq. dynaTopic maps to ``topic_col`` (per-row
+    template result, omczmq.c:251)."""
 
-    def send(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        z = None
-        n = 0
-        try:
-            for pdf in batches:
-                if len(pdf) and z is None:
-                    z = ZmtpSocket(
-                        socket.create_connection((host, port), timeout=10),
-                        socket_type,
-                    )
-                topics = (
-                    pdf[topic_col].tolist()
-                    if topic_col else [topic] * len(pdf)
-                )
-                for v, t in zip(pdf[value_col].tolist(), topics):
-                    z.send_multipart(
-                        omczmq_parts(
-                            v, socket_type=socket_type, topic=t,
-                            topic_frame=topic_frame,
-                        )
-                    )
-                    n += 1
-        finally:
-            if z is not None:
-                z.close()
-        yield pd.DataFrame({"n_sent": [n]})
+    def open_conn() -> ZmtpSocket:
+        return ZmtpSocket(
+            socket.create_connection((host, port), timeout=10), socket_type
+        )
 
-    return df.mapInPandas(send, "n_sent long")
+    def send(z: ZmtpSocket, pdf) -> tuple[int]:
+        topics = pdf[topic_col].tolist() if topic_col else [topic] * len(pdf)
+        for v, t in zip(pdf[value_col].tolist(), topics):
+            z.send_multipart(omczmq_parts(
+                v, socket_type=socket_type, topic=t, topic_frame=topic_frame,
+            ))
+        return (len(pdf),)
+
+    return send_partitions(df, open_conn, send, "n_sent long")
 
 
 def imczmq_pull(

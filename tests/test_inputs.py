@@ -79,6 +79,42 @@ def test_imhttp_framing_metadata_and_read(spark, tmp_path):
         lst.close()
 
 
+def test_imhttp_concurrent_posts_survive_spool_rotation(tmp_path):
+    """Request threads share one spool writer: with a file rotation on
+    every line, concurrent POSTs must all be answered 200, and every
+    acknowledged message must be in the spool exactly once."""
+    import glob
+    from concurrent.futures import ThreadPoolExecutor
+
+    spool = str(tmp_path / "rot")
+    lst = ImHttpListener(spool, endpoint="/ingest", rotate_every=1)
+    n_threads, per_thread = 8, 150
+    url = f"http://127.0.0.1:{lst.port}/ingest"
+
+    def worker(t: int) -> list[int]:
+        codes = []
+        for i in range(per_thread):
+            try:
+                codes.append(_post(url, f"t{t} m{i}\n".encode()))
+            except Exception:
+                codes.append(-1)  # dropped with no response
+        return codes
+
+    try:
+        with ThreadPoolExecutor(n_threads) as ex:
+            codes = [c for cs in ex.map(worker, range(n_threads)) for c in cs]
+        sent = n_threads * per_thread
+        assert codes.count(200) == sent, sorted(set(codes))
+        lines = []
+        for fp in glob.glob(spool + "/*.log"):
+            with open(fp, "rb") as f:
+                lines += f.read().splitlines()
+        assert len(lines) == lst.n_received == sent
+        assert len(set(lines)) == sent
+    finally:
+        lst.close()
+
+
 def test_imhttp_auth_modes(tmp_path):
     """Basic auth and API-key auth (Authorization: ApiKey … or
     X-API-Key) gate the endpoint with 401."""

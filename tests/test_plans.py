@@ -135,6 +135,27 @@ def test_ngram_jaccard_no_unbounded_hot_join(spark):
     assert "count(1)" in p and "array_intersect" in p, p
 
 
+def test_ngram_jaccard_intersect_once_below_barrier(spark, sf_dir):
+    """The ngram_jaccard entry evaluates array_intersect once per
+    candidate pair, in the projection that dedup._project_barrier (an
+    explode Generate) keeps under it; the jaccard threshold filter
+    sits above the Generate and reads n_inter as an attribute. Without
+    the barrier, filter pushdown and the jaccard projection inline the
+    intersect three times."""
+    import __spark_entry__ as entry
+
+    q = entry.q_ngram_jaccard(spark, sf_dir)
+    lines = q._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    hits = [i for i, line in enumerate(lines) if "array_intersect(" in line]
+    assert len(hits) == 1 and lines[hits[0]].count("array_intersect(") == 1
+    # the tree string prints a parent above its children
+    gen = next(i for i, line in enumerate(lines)
+               if "Generate explode(array(struct(" in line)
+    filt = next(i for i, line in enumerate(lines)
+                if "Filter" in line and ">= 0.5" in line)
+    assert filt < gen < hits[0], "\n".join(lines[: hits[0] + 1])
+
+
 def test_upsert_reads_only_touched_partitions(spark, tmp_path):
     """The merge scan must partition-prune to the touched buckets."""
     from rsyslog_spark.sinks import upsert_aggregate

@@ -1,40 +1,11 @@
 """r6 optimization round: vectorized Arrow paths must match their
 Column-form specs exactly (decode LUT, buffer-reuse encode, numpy
-minhash signatures)."""
+token minhash signatures)."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
-
-
-def test_minhash_signature_arrow_equals_column_form(spark):
-    """The numpy affine-family path must produce bit-identical
-    signatures to the Column form for the same input hash arrays."""
-    from rsyslog_spark.datapipe.dedup import (
-        _M31,
-        minhash_signature,
-        minhash_signature_arrow,
-    )
-
-    rows = [
-        (0, [5, 17, 123456, _M31 - 1]),
-        (1, [0]),
-        (2, list(range(1000, 1100))),
-        (3, [99] * 7),
-    ]
-    df = spark.createDataFrame(rows, "id long, h array<long>")
-    got = (
-        df.select(
-            "id",
-            minhash_signature(F.col("h"), 16).alias("a"),
-            minhash_signature_arrow(F.col("h"), 16).alias("b"),
-        )
-        .orderBy("id")
-        .collect()
-    )
-    for r in got:
-        assert list(r.a) == list(r.b), r.id
 
 
 def test_token_signature_fused_properties(spark):

@@ -43,6 +43,33 @@ def test_lineage_run(spark, sf_dir, tmp_path):
     assert pp.select("partition_id").distinct().count() == pp.count()
 
 
+def test_lineage_run_explodes_foreach_like_write_sinks(spark, tmp_path):
+    """run_with_lineage writes each sink exactly as write_sinks does: a
+    foreach action explodes to one row per matching element (with its
+    ``item``), while routed_<sink> keeps counting messages."""
+    from rsyslog_spark.rules import Router
+
+    script = """
+foreach ($.w in split($msg, " ")) do {
+    if $.w contains "=" then { action(name="kv") }
+}
+"""
+    df = spark.createDataFrame(
+        [("a=1 b=2 plain", True), ("nothing here", True)],
+        "msg string, parse_success boolean",
+    )
+    router = Router(script)
+    plain = router.write_sinks(df, str(tmp_path / "plain"))
+    snap = run_with_lineage(router, df, str(tmp_path / "lin"))
+    want = sorted(
+        (r.msg, r.item) for r in spark.read.parquet(plain["kv"]).collect()
+    )
+    assert want == [("a=1 b=2 plain", "a=1"), ("a=1 b=2 plain", "b=2")]
+    got = spark.read.parquet(str(tmp_path / "lin" / "kv"))
+    assert sorted((r.msg, r.item) for r in got.collect()) == want
+    assert snap["rows_in"] == 2 and snap["routed_kv"] == 1
+
+
 def test_stream_parse_route_resume(spark, sf_dir, tmp_path):
     """File-stream the tokens, parse+route in streaming mode, then
     verify checkpoint resume processes nothing new."""
