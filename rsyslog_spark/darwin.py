@@ -24,11 +24,13 @@ Wire format (contrib/mmdarwin/protocol.h):
   quotes (memcpy, no JSON escaping) — mirrored faithfully, quotes in
   field values corrupt the frame exactly like the reference.
 
-Spark mapping (100 TB shape): ``mapInPandas`` — each partition opens
-ONE persistent connection (wrkrInstanceData socket reuse) and streams
-its rows through it; ``socket_max_use`` rotates the connection after
-N packets (mmdarwin.c:767-775). No driver round-trips, no shuffle;
-the output schema is input + certitude + uuid columns.
+Spark mapping (100 TB shape): each partition opens ONE persistent
+connection (wrkrInstanceData socket reuse) and streams its rows
+through it; ``socket_max_use`` rotates the connection after N packets
+(mmdarwin.c:767-775). The open / send / close loop is the shared
+per-row sender (:func:`rsyslog_spark.net.send_rows`); this module only
+frames packets. No driver round-trips, no shuffle; the output schema
+is input + certitude + uuid columns.
 
 Divergences (documented):
 
@@ -43,11 +45,11 @@ from __future__ import annotations
 
 import struct
 import uuid
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import LongType, StringType, StructField
+
+from rsyslog_spark.net import _recv_exact, send_rows
 
 DARWIN_PACKET_OTHER = 0
 DARWIN_PACKET_FILTER = 1
@@ -89,24 +91,46 @@ def darwin_body(values: list[str]) -> bytes:
     return ("[[" + inner + "]]").encode("utf-8", "surrogateescape") + b"\0"
 
 
-def _recv_exact(sock, n: int) -> bytes:
-    chunks = []
-    got = 0
-    while got < n:
-        b = sock.recv(n - got)
-        if not b:
-            raise ConnectionError(
-                f"darwin filter closed mid-response ({got}/{n} bytes)"
-            )
-        chunks.append(b)
-        got += len(b)
-    return b"".join(chunks)
-
-
 def _det_uuid(body: bytes, ordinal: int) -> uuid.UUID:
     """Deterministic evt_id (divergence note above): UUIDv5 over the
     frame body + partition ordinal in a fixed app namespace."""
     return uuid.uuid5(uuid.NAMESPACE_OID, f"{ordinal}:" + body.hex())
+
+
+class _DarwinConn:
+    """One partition's filter connection (wrkrInstanceData socket
+    reuse): connects on the first packet sent, reconnects after
+    ``max_use`` packets (socket_max_use, mmdarwin.c:767-775), and
+    numbers the partition's rows for the deterministic evt_id."""
+
+    def __init__(self, path: str, max_use: int) -> None:
+        self.path = path
+        self.max_use = max_use
+        self.ordinal = 0
+        self._sock = None
+        self._n_sent = 0
+
+    def socket(self):
+        if self._sock is None:
+            import socket as socketlib
+
+            self._sock = socketlib.socket(
+                socketlib.AF_UNIX, socketlib.SOCK_STREAM
+            )
+            self._sock.connect(self.path)
+            self._n_sent = 0
+        return self._sock
+
+    def sent(self) -> None:
+        """One packet went out (and its reply, if any, was read)."""
+        self._n_sent += 1
+        if self.max_use and self._n_sent >= self.max_use:
+            self.close()
+
+    def close(self) -> None:
+        if self._sock is not None:
+            self._sock.close()
+            self._sock = None
 
 
 def mmdarwin(
@@ -136,8 +160,6 @@ def mmdarwin(
 
     Returns the input plus ``key`` (long, null when skipped/no-reply)
     and ``uuid_key`` (string) columns."""
-    import pyspark.sql.types as T
-
     if response not in RESPONSE_TYPES:
         raise ValueError(
             f"response must be one of {sorted(RESPONSE_TYPES)}"
@@ -148,95 +170,54 @@ def mmdarwin(
         int(filtercode, 16)
         if isinstance(filtercode, str) else int(filtercode)
     )
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            StructField(key, LongType()),
-            StructField(uuid_key, StringType()),
-        ]
+
+    def send(conn: _DarwinConn, pdf: pd.DataFrame) -> dict:
+        certs: list = []
+        uuids: list = []
+        field_cols = [pdf[f].tolist() for f in fields]
+        uuid_vals = pdf[uuid_col].tolist() if uuid_col is not None else None
+        for r in range(len(pdf)):
+            ordinal = conn.ordinal
+            conn.ordinal += 1
+            vals = []
+            missing = False
+            for fc in field_cols:
+                v = fc[r]
+                if v is None or (isinstance(v, float) and pd.isna(v)):
+                    missing = True
+                    continue
+                vals.append(str(v))
+            if not vals or (missing and not send_partial):
+                certs.append(None)
+                uuids.append(None)
+                continue
+            body = darwin_body(vals)
+            if uuid_vals is not None:
+                evt = uuid.UUID(str(uuid_vals[r]))
+            else:
+                evt = _det_uuid(body, ordinal)
+            sock = conn.socket()
+            sock.sendall(
+                pack_packet(resp_code, fcode, len(body), evt.bytes) + body
+            )
+            if wants_reply:
+                rp = unpack_packet(_recv_exact(sock, PACKET_SIZE))
+                # protocol.h declares certitude_list as a flexible
+                # array; a filter replying with certitude_size > 1
+                # ships extra 4-byte certitudes BEYOND the fixed struct
+                # — drain them so the persistent connection stays
+                # frame-aligned (the reference would desync here)
+                extra = max(0, rp["certitude_size"] - 1)
+                if extra:
+                    _recv_exact(sock, 4 * extra)
+                certs.append(rp["certitude"])
+            else:
+                certs.append(None)
+            uuids.append(str(evt))
+            conn.sent()
+        return {key: pd.array(certs, dtype="Int64"), uuid_key: uuids}
+
+    return send_rows(
+        df, lambda: _DarwinConn(socketpath, socket_max_use), send,
+        f"`{key}` long, `{uuid_key}` string",
     )
-    cols = list(df.columns)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import socket as socketlib
-
-        sock = None
-        sent_on_sock = 0
-        ordinal = 0
-
-        def connect():
-            s = socketlib.socket(socketlib.AF_UNIX, socketlib.SOCK_STREAM)
-            s.connect(socketpath)
-            return s
-
-        try:
-            for pdf in batches:
-                certs: list = []
-                uuids: list = []
-                field_cols = [pdf[f].tolist() for f in fields]
-                uuid_vals = (
-                    pdf[uuid_col].tolist() if uuid_col is not None else None
-                )
-                for r in range(len(pdf)):
-                    vals = []
-                    missing = False
-                    for fc in field_cols:
-                        v = fc[r]
-                        if v is None or (
-                            isinstance(v, float) and pd.isna(v)
-                        ):
-                            missing = True
-                            continue
-                        vals.append(str(v))
-                    if not vals or (missing and not send_partial):
-                        certs.append(None)
-                        uuids.append(None)
-                        ordinal += 1
-                        continue
-                    body = darwin_body(vals)
-                    if uuid_vals is not None:
-                        evt = uuid.UUID(str(uuid_vals[r]))
-                    else:
-                        evt = _det_uuid(body, ordinal)
-                    if sock is None:
-                        sock = connect()
-                        sent_on_sock = 0
-                    sock.sendall(
-                        pack_packet(
-                            resp_code, fcode, len(body), evt.bytes
-                        )
-                        + body
-                    )
-                    sent_on_sock += 1
-                    if wants_reply:
-                        rp = unpack_packet(
-                            _recv_exact(sock, PACKET_SIZE)
-                        )
-                        # protocol.h declares certitude_list as a
-                        # flexible array; a filter replying with
-                        # certitude_size > 1 ships extra 4-byte
-                        # certitudes BEYOND the fixed struct — drain
-                        # them so the persistent connection stays
-                        # frame-aligned (the reference would desync
-                        # here; code-review r5)
-                        extra = max(0, rp["certitude_size"] - 1)
-                        if extra:
-                            _recv_exact(sock, 4 * extra)
-                        certs.append(rp["certitude"])
-                    else:
-                        certs.append(None)
-                    uuids.append(str(evt))
-                    ordinal += 1
-                    # socket_max_use rotation (mmdarwin.c:767-775)
-                    if socket_max_use and sent_on_sock >= socket_max_use:
-                        sock.close()
-                        sock = None
-                out = pdf.copy()
-                out[key] = pd.array(certs, dtype="Int64")
-                out[uuid_key] = uuids
-                yield out
-        finally:
-            if sock is not None:
-                sock.close()
-
-    return df.mapInPandas(score, out_schema)

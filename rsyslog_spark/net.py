@@ -22,9 +22,14 @@ share, so each protocol module only encodes:
   writes through;
 - :class:`_TcpListener` — bind, accept thread, per-session threads and
   spools for imtcp, imrelp, imbeats and im3195;
-- :func:`partition_sender` — the executor-side open / send / finish /
-  close loop behind omfwd, omuxsock, omsnmp, omczmq, omrabbitmq,
-  omamqp1, ommongodb, omhiredis and ommail.
+- :func:`_deliver` — the executor-side open / send / finish / close
+  loop, with two report shapes: :func:`partition_sender` (one summed
+  row per partition) behind omfwd, omuxsock, omsnmp, omczmq,
+  omrabbitmq, omamqp1, ommongodb, omhiredis, ommail and omhttpfs, and
+  :func:`row_sender` (columns appended to each row) behind omrelp,
+  omprog, mmdarwin, omhttp and omelasticsearch;
+- :func:`_recv_exact` — the exact-length socket read of the Darwin and
+  ZMTP clients.
 
 Both TCP ends take a :class:`rsyslog_spark.tls.TlsConfig` to run the
 reference's stream-driver TLS layer (StreamDriver.Mode=1 with
@@ -389,43 +394,49 @@ class SyslogUdpListener:
         self._sock.close()
 
 
-def partition_sender(open_conn, send, report: str, finish=None):
-    """The executor-side delivery loop every connection-per-partition
+def _deliver(batches: Iterator[pd.DataFrame], open_conn, send,
+             finish=None):
+    """The executor-side lifecycle core every connection-per-partition
     sender shares (the reference's action worker: beginTx / doAction /
-    commitTx in runtime/action.c), as a ``mapInPandas`` function.
-
-    ``open_conn()`` runs on the partition's first non-empty batch and
-    returns the connection plus any per-partition state;
-    ``send(conn, pdf)`` delivers one batch and returns one count per
-    ``report`` column (a DDL string such as ``"n_sent long"``);
-    ``finish(conn)``, when given, runs after the last batch (reply
-    drains, pending flushes) and returns counts too. The connection's
+    commitTx in runtime/action.c). ``open_conn()`` runs on the
+    partition's first non-empty batch; each non-empty batch yields
+    ``(pdf, send(conn, pdf))``; ``finish(conn)``, when given, runs after
+    the last batch and yields ``(None, finish(conn))``. The connection's
     ``close()`` always runs, and an error from open, send or finish
-    fails the partition — Spark then retries it. Yields one report row
-    of per-partition sums."""
-    cols = [c.split()[0] for c in report.split(",")]
+    fails the partition — Spark then retries it."""
+    conn = None
+    try:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            if conn is None:
+                conn = open_conn()
+            yield pdf, send(conn, pdf)
+        if conn is not None and finish is not None:
+            yield None, finish(conn)
+    finally:
+        if conn is not None:
+            conn.close()
+
+
+def partition_sender(open_conn, send, report: str, finish=None):
+    """The summed report shape of :func:`_deliver`, as a
+    ``mapInPandas`` function: ``send(conn, pdf)`` delivers one batch
+    and returns one count per ``report`` column (a DDL string such as
+    ``"n_sent long"``); ``finish(conn)`` (reply drains, pending
+    flushes) returns counts too. Yields one report row of
+    per-partition sums; a ``boolean`` column is their OR."""
+    cols = [c.split() for c in report.split(",")]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        conn = None
         totals = [0] * len(cols)
-
-        def add(counts) -> None:
+        for _pdf, counts in _deliver(batches, open_conn, send, finish):
             for i, c in enumerate(counts):
                 totals[i] += c
-
-        try:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                if conn is None:
-                    conn = open_conn()
-                add(send(conn, pdf))
-            if conn is not None and finish is not None:
-                add(finish(conn))
-        finally:
-            if conn is not None:
-                conn.close()
-        yield pd.DataFrame({c: [t] for c, t in zip(cols, totals)})
+        yield pd.DataFrame({
+            name: [bool(t) if typ == "boolean" else t]
+            for (name, typ), t in zip(cols, totals)
+        })
 
     return run
 
@@ -439,6 +450,39 @@ def send_partitions(df: DataFrame, open_conn, send, report: str,
     )
 
 
+def row_sender(open_conn, send):
+    """The per-row report shape of :func:`_deliver`, as a
+    ``mapInPandas`` function: ``send(conn, pdf)`` returns a dict of new
+    columns (lists or arrays, one value per row), appended to that
+    batch in row order."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf, cols in _deliver(batches, open_conn, send):
+            yield pdf.assign(**cols)
+
+    return run
+
+
+def send_rows(df: DataFrame, open_conn, send, report: str) -> DataFrame:
+    """``df.mapInPandas`` over :func:`row_sender`: ``df``'s columns plus
+    the ``report`` columns (a DDL string)."""
+    from pyspark.sql.types import StructType
+
+    schema = StructType(
+        df.schema.fields + StructType.fromDDL(report).fields
+    )
+
+    return df.mapInPandas(row_sender(open_conn, send), schema)
+
+
+class _NoConn:
+    """``open_conn`` of a sender whose transport opens per request
+    (urllib): nothing to open or close."""
+
+    def close(self) -> None:
+        pass
+
+
 def total_sent(report: DataFrame) -> int:
     """Sum of a report's ``n_sent`` column over all partitions."""
     return int(report.agg({"n_sent": "sum"}).first()[0] or 0)
@@ -446,6 +490,20 @@ def total_sent(report: DataFrame) -> int:
 
 def _wire_bytes(v) -> bytes:
     return v.encode("utf-8") if isinstance(v, str) else v
+
+
+def _recv_exact(sock, n: int) -> bytes:
+    """Exactly ``n`` bytes from a stream socket; a peer that closes
+    first raises ``ConnectionError``."""
+    buf = bytearray()
+    while len(buf) < n:
+        chunk = sock.recv(n - len(buf))
+        if not chunk:
+            raise ConnectionError(
+                f"peer closed mid-read ({len(buf)}/{n} bytes)"
+            )
+        buf += chunk
+    return bytes(buf)
 
 
 def omfwd_send(

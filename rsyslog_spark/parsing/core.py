@@ -91,43 +91,6 @@ def decode_tokens(tokens: Column | str, backend: str = "jvm") -> Column:
     )
 
 
-def _decode_pandas_impl(tokens):
-    """Pandas-Series token decode (the parse_full UDF's entry: its
-    mega-regex pipeline is pandas end to end): decode the whole batch
-    through ONE flat byte buffer — concatenate all token arrays, one
-    bytes()+latin-1 decode, then per-row string slicing by offsets (a
-    C memcpy each). Batches with any non-latin-1 code point (rare)
-    fall back to per-row chr join."""
-    import numpy as np
-    import pandas as pd
-
-    n = len(tokens)
-    if n == 0:
-        return pd.Series([], dtype=object)
-    arrs = [np.asarray(a) for a in tokens]
-    lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=n)
-    total = int(lens.sum())
-    if total == 0:
-        return pd.Series([""] * n, dtype=object)
-    # preallocate + fill: np.concatenate pays ~20µs of per-array setup
-    # (measured 3.9s for a 200k-row batch); slice-assign into one
-    # buffer is ~10× cheaper
-    flat = np.empty(total, dtype=arrs[0].dtype)
-    pos = 0
-    for a in arrs:
-        k = a.size
-        flat[pos:pos + k] = a
-        pos += k
-    if 0 <= int(flat.min()) and int(flat.max()) < 256:
-        s = bytes(flat.astype(np.uint8)).decode("latin-1")
-        ends = np.cumsum(lens).tolist()
-        starts = [0] + ends[:-1]
-        out = [s[a:b] for a, b in zip(starts, ends)]
-    else:  # wide code points somewhere in the batch: exact per-row path
-        out = ["".join(map(chr, a)) for a in arrs]
-    return pd.Series(out, dtype=object)
-
-
 def _decode_arrow_impl(lst):
     """r6: decode one Arrow batch by REUSING the list array's buffers
     (guide §4.2 — a list<int32> column is one contiguous values buffer

@@ -17,20 +17,20 @@ with matching TXNR — THAT ack is the reliability RELP adds over plain
 TCP syslog: a message is known-delivered, not just known-sent.
 
 Spark mapping: :func:`omrelp` ships each partition through ONE
-persistent RELP session (mapInPandas, window-pipelined sends) and
-returns per-row ack status — the engine-side image of omrelp's
-action-suspension/resume on NACK. No TLS (the sandbox test peers over
-loopback; librelp's TLS wraps the same framing).
+persistent RELP session (window-pipelined sends) and returns per-row
+ack status — the engine-side image of omrelp's action-suspension/resume
+on NACK. The open / send / close loop is the shared per-row sender
+(:func:`rsyslog_spark.net.send_rows`); this module only speaks RELP.
+No TLS (the tests peer over loopback; librelp's TLS wraps the same
+framing).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from rsyslog_spark.net import _TcpListener
+from rsyslog_spark.net import _TcpListener, send_rows
 
 RELP_VERSION = 0
 MAX_TXNR = 999_999_999
@@ -200,45 +200,24 @@ def omrelp(
     ``relp_code`` (the rsp status; 200 = acknowledged-delivered) and
     ``relp_ok``. A transport failure fails the partition → Spark
     retries it (the reference suspends and retries the action)."""
-    import pyspark.sql.types as T
 
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("relp_code", T.LongType()),
-            T.StructField("relp_ok", T.BooleanType()),
-        ]
+    def send(client: RelpClient, pdf: pd.DataFrame) -> dict:
+        client.results = results = {}
+        msgs = pdf[msg_col].tolist()
+        for i, m in enumerate(msgs):
+            if m is not None:
+                client.send_syslog(m.encode("utf-8", "surrogateescape"), i)
+        client.drain()
+        codes = [results.get(i, -1) for i in range(len(msgs))]
+        return {
+            "relp_code": pd.array(codes, dtype="Int64"),
+            "relp_ok": [c == 200 for c in codes],
+        }
+
+    return send_rows(
+        df, lambda: RelpClient(host, port, window=window), send,
+        "relp_code long, relp_ok boolean",
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = None
-        try:
-            for pdf in batches:
-                msgs = pdf[msg_col].tolist()
-                if client is None and msgs:
-                    client = RelpClient(host, port, window=window)
-                    client.results = {}
-                results: dict[int, int] = {}
-                if client is not None:
-                    client.results = results
-                    for i, m in enumerate(msgs):
-                        if m is None:
-                            results[i] = -1
-                            continue
-                        client.send_syslog(
-                            m.encode("utf-8", "surrogateescape"), i
-                        )
-                    client.drain()
-                codes = [results.get(i, -1) for i in range(len(msgs))]
-                out = pdf.copy()
-                out["relp_code"] = pd.array(codes, dtype="Int64")
-                out["relp_ok"] = [c == 200 for c in codes]
-                yield out
-        finally:
-            if client is not None:
-                client.close()
-
-    return df.mapInPandas(run, out_schema)
 
 
 class RelpListener(_TcpListener):

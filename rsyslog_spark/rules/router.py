@@ -595,12 +595,18 @@ def compile_routes(
         env.tree_written = False
         env.last_action_pred = None
     state = _run_pass(collect=False)
-    # a sink reached from several inlined call sites (call_indirect
-    # fan-out, repeated call) would otherwise emit duplicate
-    # route_<sink> columns — OR-merge them, the same "two rulesets
-    # appending to one file" convention BoundRouter uses
+    return _merge_actions(state.actions), env
+
+
+def _merge_actions(actions: list[Action]) -> list[Action]:
+    """One action per sink name. A sink reached twice (call_indirect
+    fan-out, a repeated call, two bound rulesets) with the same params
+    becomes one column with OR-merged predicates — "two rulesets
+    appending to one file". Differing params must not silently adopt
+    the first action's config, and ``foreach`` actions iterate distinct
+    arrays: those keep their own disambiguated sink ``<sink>_<n>``."""
     merged: dict[str, Action] = {}
-    for a in state.actions:
+    for a in actions:
         prev = merged.get(a.sink)
         if prev is None:
             merged[a.sink] = a
@@ -609,17 +615,10 @@ def compile_routes(
             and a.foreach_arr is None
             and prev.params == a.params
         ):
-            # identical sink + params from two call sites: one column,
-            # OR-merged predicates ("two rulesets appending to one
-            # file"). DIFFERING params must not silently adopt the
-            # first action's config (code-review r5) — fall through to
-            # the disambiguated-name branch instead.
             merged[a.sink] = Action(
                 a.sink, prev.predicate | a.predicate, prev.params
             )
         else:
-            # foreach actions iterate distinct arrays — not mergeable;
-            # keep both under a disambiguated sink name
             i = 2
             while f"{a.sink}_{i}" in merged:
                 i += 1
@@ -627,9 +626,7 @@ def compile_routes(
                 f"{a.sink}_{i}", a.predicate, a.params,
                 a.foreach_arr, a.elem_pred,
             )
-    return list(merged.values()), env
-
-
+    return list(merged.values())
 
 
 class Router:
@@ -724,31 +721,33 @@ class Router:
         fmt: str = "parquet",
         partition_by: dict[str, list[str]] | None = None,
     ) -> dict[str, str]:
-        """Write each sink's slice of an already-routed (and, for a
-        single scan, persisted) frame: filter on its route flag, drop
-        the flags, explode ``foreach`` actions to one row per matching
-        element (``item``). Returns sink → path."""
+        """Write each sink's :meth:`sink_slice` of an already-routed
+        (and, for a single scan, persisted) frame. Returns sink →
+        path."""
         out = {}
         for a in self.actions:
             path = f"{base_path}/{a.sink}"
-            w = routed.filter(F.col(f"route_{a.sink}")).drop(
-                *[f"route_{x.sink}" for x in self.actions]
-            )
-            if a.foreach_arr is not None:
-                # one output row per matching element
-                w = w.withColumn(
-                    "item",
-                    F.explode(
-                        F.filter(a.foreach_arr, lambda e: a.elem_pred(e))
-                    ),
-                )
             pb = (partition_by or {}).get(a.sink)
-            writer = w.write.mode("overwrite")
+            writer = self.sink_slice(routed, a).write.mode("overwrite")
             if pb:
                 writer = writer.partitionBy(*pb)
             writer.format(fmt).save(path)
             out[a.sink] = path
         return out
+
+    def sink_slice(self, routed: DataFrame, a: Action) -> DataFrame:
+        """One sink's rows of a routed frame: filter on its route flag,
+        drop the flags, and explode a ``foreach`` action to one row per
+        matching element (``item``)."""
+        w = routed.filter(F.col(f"route_{a.sink}")).drop(
+            *[f"route_{x.sink}" for x in self.actions]
+        )
+        if a.foreach_arr is None:
+            return w
+        return w.withColumn(
+            "item",
+            F.explode(F.filter(a.foreach_arr, lambda e: a.elem_pred(e))),
+        )
 
 
 class BoundRouter(Router):
@@ -759,8 +758,10 @@ class BoundRouter(Router):
     script; unbound sources run ``default`` (or the bare "main"
     program). Each ruleset's actions are compiled independently and
     gated on `source == value`; actions landing in the same sink from
-    different rulesets are merged with OR — matching the reference,
-    where two rulesets writing the same file append to it.
+    different rulesets merge like repeated calls in one ruleset
+    (:func:`_merge_actions`): same params OR-merge — matching the
+    reference, where two rulesets writing the same file append to it —
+    and differing params or ``foreach`` actions keep their own sink.
     """
 
     def __init__(
@@ -775,40 +776,24 @@ class BoundRouter(Router):
 
         stmts = _ps(script)
         base_env = env or Env()
-        merged: dict[str, Action] = {}
-
-        def add(actions: list[Action], gate: Column):
-            for a in actions:
-                pred = a.predicate & gate
-                if a.sink in merged:
-                    prev = merged[a.sink]
-                    merged[a.sink] = Action(
-                        a.sink, prev.predicate | pred, prev.params,
-                        prev.foreach_arr, prev.elem_pred,
-                    )
-                else:
-                    merged[a.sink] = Action(
-                        a.sink, pred, a.params, a.foreach_arr, a.elem_pred
-                    )
-
-        for src_value, rs_name in bindings.items():
+        runs = [(rs, F.col(source_col) == v) for v, rs in bindings.items()]
+        if default is not None:
+            unbound = ~F.col(source_col).isin(list(bindings)) | F.col(
+                source_col
+            ).isNull()
+            runs.append((default, unbound))
+        gated: list[Action] = []
+        for rs_name, gate in runs:
             sub_env = Env()
             sub_env.props.update(base_env.props)
             sub_env.lookups = base_env.lookups
             sub_env.templates = base_env.templates
             actions, _ = compile_routes(stmts, sub_env, entry=rs_name)
-            add(actions, F.col(source_col) == src_value)
-
-        unbound = ~F.col(source_col).isin(list(bindings)) | F.col(
-            source_col
-        ).isNull()
-        if default is not None:
-            sub_env = Env()
-            sub_env.props.update(base_env.props)
-            sub_env.lookups = base_env.lookups
-            sub_env.templates = base_env.templates
-            actions, _ = compile_routes(stmts, sub_env, entry=default)
-            add(actions, unbound)
+            gated += [
+                Action(a.sink, a.predicate & gate, a.params,
+                       a.foreach_arr, a.elem_pred)
+                for a in actions
+            ]
 
         self.env = base_env
-        self.actions = list(merged.values())
+        self.actions = _merge_actions(gated)

@@ -75,6 +75,30 @@ def omkafka_frame(
     return df.select(*cols)
 
 
+class _Child:
+    """omprog's one long-lived child per partition; ``close()`` ends
+    its stdin and waits, killing a child that ignores EOF."""
+
+    def __init__(self, binary: list[str], confirm: bool) -> None:
+        import subprocess
+
+        self.proc = subprocess.Popen(
+            binary, stdin=subprocess.PIPE,
+            stdout=subprocess.PIPE if confirm else subprocess.DEVNULL,
+            text=True, bufsize=1,
+        )
+
+    def close(self) -> None:
+        import subprocess
+
+        self.proc.stdin.close()
+        try:
+            self.proc.wait(timeout=10)
+        except subprocess.TimeoutExpired:
+            self.proc.kill()  # child ignored EOF; don't fail the task
+            self.proc.wait()
+
+
 def omprog(
     df: DataFrame,
     binary: list[str],
@@ -88,54 +112,30 @@ def omprog(
     else is recorded as the failure reason, the reportFailures shape).
     Returns (value, delivered, reply) for lineage/retry accounting —
     an ACTION, so the caller decides what to do with failures."""
-    import subprocess
-
-    from pyspark.sql.types import BooleanType as _B
-    from pyspark.sql.types import StringType as _S
-    from pyspark.sql.types import StructField as _SF
-    from pyspark.sql.types import StructType as _ST
+    from rsyslog_spark.net import send_rows
 
     env = Env()
     rendered = df.select(compile_template(template, env).alias("value"))
-    out_schema = _ST([
-        _SF("value", _S()), _SF("delivered", _B()), _SF("reply", _S()),
-    ])
 
-    def run(batches):
-        import pandas as _pd
+    def send(child: _Child, pdf) -> dict:
+        proc = child.proc
+        delivered, replies = [], []
+        for v in pdf["value"]:
+            proc.stdin.write(str(v or "").replace("\n", " ") + "\n")
+            proc.stdin.flush()
+            if confirm_messages:
+                reply = proc.stdout.readline().rstrip("\n")
+                delivered.append(reply == "OK")
+                replies.append(reply)
+            else:
+                delivered.append(True)
+                replies.append(None)
+        return {"delivered": delivered, "reply": replies}
 
-        proc = subprocess.Popen(
-            binary, stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE if confirm_messages else subprocess.DEVNULL,
-            text=True, bufsize=1,
-        )
-        try:
-            for pdf in batches:
-                delivered, replies = [], []
-                for v in pdf["value"]:
-                    line = str(v or "").replace("\n", " ")
-                    proc.stdin.write(line + "\n")
-                    proc.stdin.flush()
-                    if confirm_messages:
-                        reply = proc.stdout.readline().rstrip("\n")
-                        delivered.append(reply == "OK")
-                        replies.append(reply)
-                    else:
-                        delivered.append(True)
-                        replies.append(None)
-                yield _pd.DataFrame(
-                    {"value": pdf["value"], "delivered": delivered,
-                     "reply": replies}
-                )
-        finally:
-            proc.stdin.close()
-            try:
-                proc.wait(timeout=10)
-            except subprocess.TimeoutExpired:
-                proc.kill()  # child ignored EOF; don't fail the task
-                proc.wait()
-
-    return rendered.mapInPandas(run, out_schema)
+    return send_rows(
+        rendered, lambda: _Child(binary, confirm_messages), send,
+        "delivered boolean, reply string",
+    )
 
 
 def omfwd_frame(
@@ -787,8 +787,9 @@ def omhttp_post(
     retry-ruleset feed (route them to a failover chain or requeue,
     the reference's retry.ruleset seam).
 
-    Executor-side POSTs via mapInPandas (one Arrow batch of bodies per
-    partition, connections amortized per batch); at-least-once
+    Executor-side POSTs through :func:`http_post_bodies` (one Arrow
+    batch of bodies at a time, one urllib connection per request —
+    nothing is kept alive between requests); at-least-once
     semantics — pair with ``order_by`` for deterministic bodies so a
     retried task re-sends byte-identical requests (idempotent
     receivers can dedup), and with foreachBatch for epoch-transaction
@@ -944,6 +945,28 @@ def omotel_post(
     )
 
 
+def _http_call(url: str, data: bytes, headers: dict[str, str],
+               timeout_secs: float, method: str = "POST"
+               ) -> tuple[int, bytes]:
+    """One HTTP request → ``(status, reply bytes)``. An HTTP error
+    status comes back as its code with an empty reply; a
+    connection-level failure (refused, reset, timeout) as -1 with the
+    error text. urllib opens one connection per request."""
+    import urllib.error
+    import urllib.request
+
+    req = urllib.request.Request(
+        url, data=data, headers=headers, method=method
+    )
+    try:
+        with urllib.request.urlopen(req, timeout=timeout_secs) as resp:
+            return resp.status, resp.read()
+    except urllib.error.HTTPError as e:
+        return e.code, b""
+    except (urllib.error.URLError, OSError) as e:
+        return -1, str(e).encode("utf-8")
+
+
 def http_post_bodies(
     bodies: DataFrame,
     url: str,
@@ -957,63 +980,45 @@ def http_post_bodies(
     retry — the shared delivery engine of :func:`omhttp_post` and the
     omelasticsearch `_bulk` path (POST an
     :func:`omelasticsearch_frame`-built NDJSON body to ``<es>/_bulk``).
-    Executor-side via mapInPandas; returns the input's non-body
-    columns plus (status, attempts, ok)."""
+    Executor-side (:func:`rsyslog_spark.net.send_rows`); returns the
+    input's non-body columns plus (status, attempts, ok)."""
+    from rsyslog_spark.net import _NoConn, send_rows
+
     hdrs = dict(headers or {})
-    meta = [c for c in bodies.columns if c != body_col]
-    ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in bodies.select(*meta).schema.fields
-    )
 
-    def post(it):
+    def post(body: str) -> tuple[int, int]:
+        """(status, attempts) of one body, retried on ``retry_codes``
+        and connection failures with exponential backoff."""
         import time as _time
-        import urllib.error
-        import urllib.request
 
-        for pdf in it:
-            statuses, attempts_l, oks = [], [], []
-            for body in pdf[body_col]:
-                if body is None:
-                    # a null body is a caller-data failure, not a task
-                    # failure — report it, don't crash the partition
-                    statuses.append(-1)
-                    attempts_l.append(0)
-                    oks.append(False)
-                    continue
-                status, attempts = 0, 0
-                for attempt in range(retries + 1):
-                    attempts = attempt + 1
-                    try:
-                        req = urllib.request.Request(
-                            url, data=body.encode("utf-8"),
-                            headers=hdrs, method="POST",
-                        )
-                        with urllib.request.urlopen(
-                            req, timeout=timeout_secs
-                        ) as resp:
-                            status = resp.status
-                    except urllib.error.HTTPError as e:
-                        status = e.code
-                    except (urllib.error.URLError, OSError):
-                        status = -1  # connection-level failure
-                    if 200 <= status < 300 or (
-                        status not in retry_codes and status > 0
-                    ):
-                        break
-                    if attempt < retries:
-                        _time.sleep(0.05 * (2 ** attempt))
-                statuses.append(status)
-                attempts_l.append(attempts)
-                oks.append(200 <= status < 300)
-            out = pdf[meta].copy()
-            out["status"] = statuses
-            out["attempts"] = attempts_l
-            out["ok"] = oks
-            yield out
+        for attempt in range(retries + 1):
+            status, _ = _http_call(
+                url, body.encode("utf-8"), hdrs, timeout_secs
+            )
+            if 200 <= status < 300 or (
+                status not in retry_codes and status > 0
+            ):
+                break
+            if attempt < retries:
+                _time.sleep(0.05 * (2 ** attempt))
+        return status, attempt + 1
 
-    report = "status int, attempts int, ok boolean"
-    return bodies.mapInPandas(post, f"{ddl}, {report}" if ddl else report)
+    def send(_conn, pdf) -> dict:
+        # a null body is a caller-data failure, not a task failure —
+        # report it, don't crash the partition
+        got = [
+            (-1, 0) if body is None else post(body)
+            for body in pdf[body_col]
+        ]
+        return {
+            "status": [st for st, _ in got],
+            "attempts": [n for _, n in got],
+            "ok": [200 <= st < 300 for st, _ in got],
+        }
+
+    return send_rows(
+        bodies, _NoConn, send, "status int, attempts int, ok boolean"
+    ).drop(body_col)
 
 
 # --- omsql: transactional SQL sink (ommysql / ompgsql family) ---------------
@@ -1206,85 +1211,67 @@ def omelasticsearch_deliver(
 
     Scale shape: partition-local batches, one POST per ``batch_size``
     rows, no shuffle; the reply parse is O(batch)."""
-    import pyspark.sql.types as T
+    import json as _json
+
+    import pandas as pd
+
+    from rsyslog_spark.net import _NoConn, send_rows
 
     hdrs = {"Content-Type": "application/x-ndjson", **(headers or {})}
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("es_status", T.LongType()),
-            T.StructField("es_ok", T.BooleanType()),
-            T.StructField("es_error", T.StringType()),
+
+    def post(entries: list[str]):
+        """POST one bulk; returns per-entry (status, error)."""
+        body = ("\n".join(entries) + "\n").encode("utf-8")
+        status, reply = _http_call(es_url, body, hdrs, timeout_secs)
+        if status == -1:
+            return [(-1, reply.decode("utf-8", "replace"))] * len(entries)
+        if not 200 <= status < 300:
+            return [(status, f"http {status}")] * len(entries)
+        try:
+            items = _json.loads(reply.decode("utf-8")).get("items", [])
+        except ValueError as e:
+            return [(-1, str(e))] * len(entries)
+        out = []
+        for i in range(len(entries)):
+            if i >= len(items):  # malformed reply tail
+                out.append((-1, "missing bulk reply item"))
+                continue
+            res = next(iter(items[i].values()), {})
+            st = int(res.get("status", -1))
+            err = res.get("error")
+            out.append((st, _json.dumps(err) if err is not None else None))
+        return out
+
+    def run_batch(entries: list[str]):
+        results = post(entries)
+        for _ in range(max_retries):
+            retry_idx = [
+                i for i, (st, _e) in enumerate(results)
+                if st in retry_statuses
+            ]
+            if not retry_idx:
+                break
+            sub = post([entries[i] for i in retry_idx])
+            for j, i in enumerate(retry_idx):
+                results[i] = sub[j]
+        return results
+
+    def send(_conn, pdf) -> dict:
+        entries = pdf[entry_col].tolist()
+        got = [
+            r for off in range(0, len(entries), batch_size)
+            for r in run_batch(entries[off : off + batch_size])
         ]
+        return {
+            "es_status": pd.array([st for st, _ in got], dtype="Int64"),
+            "es_ok": [200 <= st < 300 for st, _ in got],
+            "es_error": [err for _, err in got],
+        }
+
+    return send_rows(
+        df, _NoConn, send,
+        "es_status long, es_ok boolean, es_error string",
     )
-
-    def deliver(batches):
-        import json as _json
-        import urllib.error
-        import urllib.request
-
-        import pandas as pd
-
-        def post(entries: list[str]):
-            """POST one bulk; returns per-entry (status, error)."""
-            body = ("\n".join(entries) + "\n").encode("utf-8")
-            try:
-                req = urllib.request.Request(
-                    es_url, data=body, headers=hdrs, method="POST"
-                )
-                with urllib.request.urlopen(
-                    req, timeout=timeout_secs
-                ) as resp:
-                    reply = _json.loads(resp.read().decode("utf-8"))
-            except urllib.error.HTTPError as e:
-                return [(e.code, f"http {e.code}")] * len(entries)
-            except (urllib.error.URLError, OSError, ValueError) as e:
-                return [(-1, str(e))] * len(entries)
-            items = reply.get("items", [])
-            out = []
-            for i in range(len(entries)):
-                if i >= len(items):  # malformed reply tail
-                    out.append((-1, "missing bulk reply item"))
-                    continue
-                res = next(iter(items[i].values()), {})
-                st = int(res.get("status", -1))
-                err = res.get("error")
-                out.append(
-                    (st, _json.dumps(err) if err is not None else None)
-                )
-            return out
-
-        def run_batch(entries: list[str]):
-            results = post(entries)
-            for _ in range(max_retries):
-                retry_idx = [
-                    i for i, (st, _e) in enumerate(results)
-                    if st in retry_statuses
-                ]
-                if not retry_idx:
-                    break
-                sub = post([entries[i] for i in retry_idx])
-                for j, i in enumerate(retry_idx):
-                    results[i] = sub[j]
-            return results
-
-        for pdf in batches:
-            entries_all = pdf[entry_col].tolist()
-            statuses: list = []
-            errors: list = []
-            for off in range(0, len(entries_all), batch_size):
-                for st, err in run_batch(
-                    entries_all[off : off + batch_size]
-                ):
-                    statuses.append(st)
-                    errors.append(err)
-            out = pdf.copy()
-            out["es_status"] = pd.array(statuses, dtype="Int64")
-            out["es_ok"] = [200 <= s < 300 for s in statuses]
-            out["es_error"] = errors
-            yield out
-
-    return df.mapInPandas(deliver, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1303,58 +1290,35 @@ def omhttpfs_deliver(
     the HttpFS REST API — POST ``?op=append&data=true`` first, and on
     404 (file does not exist yet) create it with PUT
     ``?op=create&overwrite=false&data=true`` (omhttpfs.c:444-546).
-    One connection per partition; bodies are newline-joined per Arrow
-    batch. Cross-partition append order is unspecified — exactly like
-    N reference instances appending to one file."""
-    import pandas as pd
+    One request per Arrow batch, its lines newline-joined (urllib
+    opens one connection per request). Cross-partition append order
+    is unspecified — exactly like N reference instances appending to
+    one file."""
+    from rsyslog_spark.net import _NoConn, send_partitions
 
     url = (
         f"{base_url.rstrip('/')}/webhdfs/v1{file}?user.name={user}"
     )
+    hdrs = {"Content-Type": "application/octet-stream"}
 
-    def send(batches):
-        import urllib.request
-
-        n_batches = n_msgs = 0
-        created = False
-
-        def do(method: str, op: str, data: bytes) -> int:
-            req = urllib.request.Request(
-                url + op, data=data, method=method,
-                headers={"Content-Type": "application/octet-stream"},
-            )
-            try:
-                with urllib.request.urlopen(
-                    req, timeout=timeout_secs
-                ) as resp:
-                    return resp.status
-            except urllib.error.HTTPError as e:
-                return e.code
-
-        for pdf in batches:
-            vals = pdf[value_col].tolist()
-            if not vals:
-                continue
-            body = ("\n".join(vals) + "\n").encode("utf-8")
-            status = do("POST", "&op=append&data=true", body)
-            if status == 404:
-                status = do(
-                    "PUT", "&op=create&overwrite=false&data=true", body
-                )
-                created = True
-            if status >= 300:
-                raise IOError(
-                    f"omhttpfs: HTTP {status} appending to {file}"
-                )
-            n_batches += 1
-            n_msgs += len(vals)
-        yield pd.DataFrame(
-            {"n_batches": [n_batches], "n_messages": [n_msgs],
-             "created": [created]}
+    def send(_conn, pdf) -> tuple[int, int, bool]:
+        vals = pdf[value_col].tolist()
+        body = ("\n".join(vals) + "\n").encode("utf-8")
+        status, _ = _http_call(
+            url + "&op=append&data=true", body, hdrs, timeout_secs
         )
+        created = status == 404
+        if created:
+            status, _ = _http_call(
+                url + "&op=create&overwrite=false&data=true", body, hdrs,
+                timeout_secs, method="PUT",
+            )
+        if not 200 <= status < 300:
+            raise IOError(f"omhttpfs: HTTP {status} appending to {file}")
+        return 1, len(vals), created
 
-    return df.mapInPandas(
-        send, "n_batches long, n_messages long, created boolean"
+    return send_partitions(
+        df, _NoConn, send, "n_batches long, n_messages long, created boolean"
     )
 
 
@@ -1558,7 +1522,6 @@ def azure_oauth_token(
     at deploy; tests point at a local server."""
     import json as jsonlib
     import urllib.parse
-    import urllib.request
 
     body = urllib.parse.urlencode({
         "client_id": client_id,
@@ -1566,13 +1529,17 @@ def azure_oauth_token(
         "client_secret": client_secret,
         "grant_type": "client_credentials",
     }).encode()
-    req = urllib.request.Request(
-        token_url, data=body, method="POST",
-        headers={"Content-Type": "application/x-www-form-urlencoded"},
+    status, reply = _http_call(
+        token_url, body,
+        {"Content-Type": "application/x-www-form-urlencoded"},
+        timeout_secs,
     )
-    with urllib.request.urlopen(req, timeout=timeout_secs) as resp:
-        reply = jsonlib.loads(resp.read().decode("utf-8"))
-    token = reply.get("access_token")
+    if not 200 <= status < 300:
+        raise ConnectionError(
+            f"omazuredce: token request failed ({status}) "
+            + reply.decode("utf-8", "replace")
+        )
+    token = jsonlib.loads(reply.decode("utf-8")).get("access_token")
     if not token:
         raise ValueError("omazuredce: token reply without access_token")
     return str(token)

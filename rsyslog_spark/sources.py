@@ -18,11 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def encode_tokens(line_col) -> "F.Column":
-    return F.transform(
-        F.split(line_col, ""), lambda c: F.ascii(c).cast("int")
-    )
+from rsyslog_spark.corpus import encode_line
 
 
 def read_raw_lines(
@@ -76,14 +72,14 @@ def read_raw_lines(
             )
         )
 
-    out = df.select(
+    out = encode_line(df.select(
         F.concat(
             F.lit("doc-"), F.col("_file"), F.lit("-"),
             F.lpad(F.col("_lineno").cast("string"), 9, "0"),
         ).alias("doc_id"),
-        encode_tokens(F.col("line")).alias("tokens"),
+        "line",
         F.lit(source).alias("source"),
-    ).withColumn("n_tok", F.size("tokens"))
+    ))
     return out.select("doc_id", "tokens", "n_tok", "source")
 
 

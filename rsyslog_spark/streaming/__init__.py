@@ -541,6 +541,7 @@ def run_routed_stream(
     routing) still removes the crashed attempt's ghost partition."""
     import shutil
 
+    from rsyslog_spark.lineage import _counters
     from rsyslog_spark.parsing import parse as default_parse
 
     parse_fn = parse_fn or default_parse
@@ -559,24 +560,15 @@ def run_routed_stream(
         routed.persist()
         try:
             for a in router.actions:
-                part = routed.filter(FF.col(f"route_{a.sink}")).drop(
-                    *[f"route_{x.sink}" for x in router.actions]
-                )
                 (
-                    part.write.mode("overwrite")
+                    router.sink_slice(routed, a).write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("epoch_id")
                     .parquet(f"{base_path}/{a.sink}")
                 )
-            agg = routed.agg(
-                FF.count(FF.lit(1)).alias("rows_in"),
-                *[
-                    FF.sum(FF.col(f"route_{s}").cast("long")).alias(
-                        f"routed_{s}"
-                    )
-                    for s in sinks
-                ],
-            ).withColumn("epoch_id", FF.lit(epoch_id))
+            agg = routed.agg(*_counters(sinks)).withColumn(
+                "epoch_id", FF.lit(epoch_id)
+            )
             (
                 agg.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")

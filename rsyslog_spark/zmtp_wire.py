@@ -19,7 +19,7 @@ import struct
 
 from pyspark.sql import DataFrame
 
-from rsyslog_spark.net import send_partitions
+from rsyslog_spark.net import _recv_exact, send_partitions
 
 FLAG_MORE, FLAG_LONG, FLAG_COMMAND = 0x01, 0x02, 0x04
 
@@ -37,16 +37,6 @@ def greeting(as_server: bool = False) -> bytes:
         + bytes([1 if as_server else 0])
         + b"\x00" * 31                        # filler
     )
-
-
-def _recv_exact(sock: socket.socket, n: int) -> bytes:
-    out = b""
-    while len(out) < n:
-        chunk = sock.recv(n - len(out))
-        if not chunk:
-            raise ConnectionError("zmtp peer closed mid-greeting")
-        out += chunk
-    return out
 
 
 def send_frame(

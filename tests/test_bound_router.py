@@ -54,3 +54,50 @@ ruleset(name="b") { action(name="common") }
     r = BoundRouter(script, bindings={"s1": "a", "s2": "b"})
     counts = dict(r.route_counts(df).collect())
     assert counts["common"] == 2  # s1 via a, s2 via b, s3 unbound
+
+
+def test_bound_router_keeps_foreach_actions_apart(spark, tmp_path):
+    """Two bound rulesets iterating different arrays into one sink
+    name keep their own arrays: per-element counts add up, and each
+    written item comes from its own split (not the first ruleset's)."""
+    script = """
+ruleset(name="a") {
+    foreach ($.w in split($msg, " ")) do {
+        if $.w contains "=" then { action(name="kv") }
+    }
+}
+ruleset(name="b") {
+    foreach ($.w in split($msg, ",")) do {
+        if $.w contains "=" then { action(name="kv") }
+    }
+}
+"""
+    df = spark.createDataFrame(
+        [("s1", "a=1 b=2"), ("s2", "x=1,y=2,z=3")],
+        "source string, msg string",
+    )
+    r = BoundRouter(script, bindings={"s1": "a", "s2": "b"})
+    counts = dict(r.route_counts(df).collect())
+    assert sorted(counts) == ["kv", "kv_2"]
+    assert counts["kv"] + counts["kv_2"] == 5  # 2 via a, 3 via b
+    out = r.write_sinks(df, str(tmp_path))
+    items = sorted(
+        row.item for path in out.values()
+        for row in spark.read.parquet(path).collect()
+    )
+    assert items == ["a=1", "b=2", "x=1", "y=2", "z=3"]
+
+
+def test_bound_router_differing_params_keep_own_sink(spark):
+    script = """
+ruleset(name="a") { action(name="f" file="/a") }
+ruleset(name="b") { action(name="f" file="/b") }
+"""
+    df = spark.createDataFrame(
+        [("s1",), ("s2",), ("s2",)], "source string"
+    )
+    r = BoundRouter(script, bindings={"s1": "a", "s2": "b"})
+    files = {a.sink: a.params["file"] for a in r.actions}
+    assert files == {"f": "/a", "f_2": "/b"}
+    counts = dict(r.route_counts(df).collect())
+    assert counts == {"f": 1, "f_2": 2}

@@ -294,36 +294,11 @@ def test_parse_frame_differential_fuzz():
                 )
 
 
-def test_decode_pandas_flat_paths():
-    """r5 flat-buffer decode (parse_full's pandas entry): latin-1 fast
-    path, wide-codepoint fallback, empty rows/batches."""
-    import numpy as np
-    import pandas as pd
-
-    from rsyslog_spark.parsing.core import _decode_pandas_impl
-
-    tok_sets = [
-        [], [104, 105], list(range(1, 128)), [255, 128],
-    ]
-    got = list(_decode_pandas_impl(
-        pd.Series([np.array(t, dtype=np.int64) for t in tok_sets])
-    ))
-    assert got == ["".join(map(chr, t)) for t in tok_sets]
-    wide = tok_sets + [[0x263A, 65]]
-    got2 = list(_decode_pandas_impl(
-        pd.Series([np.array(t, dtype=np.int64) for t in wide])
-    ))
-    assert got2 == ["".join(map(chr, t)) for t in wide]
-    assert list(_decode_pandas_impl(pd.Series([], dtype=object))) == []
-    assert list(_decode_pandas_impl(
-        pd.Series([np.array([], dtype=np.int64)] * 2)
-    )) == ["", ""]
-
-
 def test_decode_arrow_buffer_reuse_paths():
-    """r6 buffer-reuse decode (the Column backend's arrow_udf entry):
-    ASCII zero-copy path, wide-codepoint fallback, nulls, empty rows,
-    sliced arrays, empty batches — all must equal the chr-join spec."""
+    """r6 buffer-reuse decode (the entry of the Column backend's
+    arrow_udf and of parse_full): ASCII zero-copy path, latin-1 and
+    wide-codepoint fallback, nulls, empty rows, sliced arrays, empty
+    batches — all must equal the chr-join spec."""
     import pyarrow as pa
 
     from rsyslog_spark.parsing.core import _decode_arrow_impl
@@ -341,9 +316,16 @@ def test_decode_arrow_buffer_reuse_paths():
     wide = ascii_sets + [[0x263A, 65], [255, 128]]
     arr2 = pa.array(wide, type=pa.list_(pa.int32()))
     assert _decode_arrow_impl(arr2).to_pylist() == spec(wide)
+    # code points 128-255 alone (no wider one in the batch)
+    latin = [[104, 105], [255, 128], [233, 0xA0, 65]]
+    arr3 = pa.array(latin, type=pa.list_(pa.int32()))
+    assert _decode_arrow_impl(arr3).to_pylist() == spec(latin)
     assert _decode_arrow_impl(
         pa.array([], type=pa.list_(pa.int32()))
     ).to_pylist() == []
+    assert _decode_arrow_impl(
+        pa.array([[], []], type=pa.list_(pa.int32()))
+    ).to_pylist() == ["", ""]
     assert _decode_arrow_impl(
         pa.chunked_array([arr, arr2])
     ).to_pylist() == spec(ascii_sets + wide)

@@ -74,3 +74,47 @@ def test_routed_stream_epoch_replay_idempotent(spark, sf_dir, tmp_path):
     assert spark.read.parquet(f"{out}/urgent").count() == first
     lin = spark.read.parquet(f"{out}/_lineage")
     assert lin.agg(F.sum("routed_urgent").alias("u")).first().u == first
+
+
+def test_routed_stream_explodes_foreach_like_batch(spark, tmp_path):
+    """The stream writes each sink slice exactly as run_with_lineage
+    does: a foreach sink explodes to one row per matching element, and
+    the per-epoch _lineage row carries the run-level counters
+    (rows_in, parse_failures, routed_<sink> counting messages)."""
+    from rsyslog_spark.lineage import run_with_lineage
+    from rsyslog_spark.parsing import parse
+
+    script = """
+foreach ($.w in split($msg, " ")) do {
+    if $.w contains "=" then { action(name="kv") }
+}
+"""
+    lines = spark.createDataFrame(
+        [("<13>Oct 11 22:14:15 host app: a=1 b=2",),
+         ("<13>Oct 11 22:14:15 host app: nothing here",)],
+        "line string",
+    )
+    tokens_path = str(tmp_path / "tok")
+    corpus.encode_line(lines).select("tokens").write.parquet(tokens_path)
+    router = Router(script)
+    out = str(tmp_path / "sinks")
+    run_routed_stream(
+        stream_logtokens(spark, tokens_path), router, out,
+        str(tmp_path / "ckpt"),
+    )
+    batch = str(tmp_path / "batch")
+    run_with_lineage(
+        router, parse(spark.read.parquet(tokens_path)), batch
+    )
+    got = sorted(r.item for r in spark.read.parquet(f"{out}/kv").collect())
+    want = sorted(
+        r.item for r in spark.read.parquet(f"{batch}/kv").collect()
+    )
+    assert got == want == ["a=1", "b=2"]
+    lin = spark.read.parquet(f"{out}/_lineage")
+    assert {"rows_in", "parse_failures", "routed_kv"} <= set(lin.columns)
+    tot = lin.agg(
+        F.sum("rows_in").alias("r"), F.sum("parse_failures").alias("f"),
+        F.sum("routed_kv").alias("kv"),
+    ).first()
+    assert (tot.r, tot.f, tot.kv) == (2, 0, 1)
