@@ -3,9 +3,15 @@ frozen — guide §1: measure first, isolate with the noop sink, capture
 plans).
 
 Usage:
-    python bench_extra.py plans  [out_dir] [label]   # explain("formatted") per query
+    python bench_extra.py plans  [out_dir] [label] [names]  # explain("formatted")
     python bench_extra.py time   [names...]          # noop-sink timings, min of 3
     python bench_extra.py decode                     # decode backend microbench
+
+``plans`` writes the 14 timed queries by default. ``names`` is a
+comma-separated list of ``__spark_entry__`` registry entries (e.g.
+``simsearch_topk,ivf_topk``), run over ``SPARK_GRAFT_SF_DIR`` without
+building the token corpus. Expression ids (``#123``) and ``plan_id=``
+tags are stripped, so plans written by two checkouts diff byte for byte.
 
 Timing methodology mirrors bench.py (warm-up + min of 3) but writes
 results through the noop sink so every column of every row is computed
@@ -16,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -98,17 +105,24 @@ def _jobs(spark):
     return jobs
 
 
-def cmd_plans(out_dir: str, label: str) -> None:
+def cmd_plans(out_dir: str, label: str, names: list[str]) -> None:
     spark = _spark()
-    jobs = _jobs(spark)
+    if names:
+        import __spark_entry__ as entrymod
+
+        qs = entrymod.queries()
+        jobs = {n: (lambda n=n: qs[n](spark, SF_DIR)) for n in names}
+    else:
+        jobs, names = _jobs(spark), TIMED
     os.makedirs(out_dir, exist_ok=True)
-    for name in TIMED:
+    for name in names:
         df = jobs[name]()
+        text = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
         p = os.path.join(out_dir, f"{name}_{label}.txt")
         with open(p, "w") as fh:
-            fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            ))
+            fh.write(re.sub(r"#\d+|plan_id=\d+", "", text))
         print(p)
     spark.stop()
 
@@ -172,7 +186,8 @@ if __name__ == "__main__":
     if cmd == "plans":
         out_dir = sys.argv[2] if len(sys.argv) > 2 else "plans/r06"
         label = sys.argv[3] if len(sys.argv) > 3 else "before"
-        cmd_plans(out_dir, label)
+        names = sys.argv[4].split(",") if len(sys.argv) > 4 else []
+        cmd_plans(out_dir, label, names)
     elif cmd == "decode":
         cmd_decode()
     else:

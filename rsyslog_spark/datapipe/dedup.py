@@ -711,6 +711,23 @@ def duplicate_span_stats(
     ).where(F.col("sh").isNotNull())
     if hashed:
         ex = ex.select("id", "pos", F.xxhash64("sh").alias("sh"))
+    joined, cleaned = _first_occurrence_mask(base, ex, "w", k)
+    return joined.select(
+        F.col("id").alias(id_col),
+        F.size("w").cast("long").alias("n_words"),
+        (F.size("w") - F.size(cleaned)).cast("long").alias("n_removed"),
+        F.md5(F.array_join(cleaned, " ")).alias("cleaned_fp"),
+    )
+
+
+def _first_occurrence_mask(
+    base: DataFrame, ex: DataFrame, arr: str, k: int
+) -> tuple[DataFrame, Column]:
+    """The first-occurrence span mask of :func:`duplicate_span_stats`
+    (see its scale shape) over ``base`` (id, ``arr``) and one ``ex``
+    (id, pos, sh) row per k-gram start. Returns ``base`` joined with
+    each doc's sorted duplicate ``starts``, and the ``arr`` elements
+    no such span covers."""
     firsts = (
         ex.groupBy("sh")
         .agg(
@@ -730,21 +747,16 @@ def duplicate_span_stats(
         .agg(F.sort_array(F.collect_list("pos")).alias("starts"))
     )
     joined = base.join(dup_starts, "id", "left").select(
-        "id", "w",
+        "id", arr,
         F.coalesce("starts", F.array().cast("array<int>")).alias("starts"),
     )
     cleaned = F.filter(
-        F.col("w"),
-        lambda _w, i: ~F.exists(
+        F.col(arr),
+        lambda _e, i: ~F.exists(
             F.col("starts"), lambda s: (s <= i) & (i < s + k)
         ),
     )
-    return joined.select(
-        F.col("id").alias(id_col),
-        F.size("w").cast("long").alias("n_words"),
-        (F.size("w") - F.size(cleaned)).cast("long").alias("n_removed"),
-        F.md5(F.array_join(cleaned, " ")).alias("cleaned_fp"),
-    )
+    return joined, cleaned
 
 
 def word_hashes(col: Column) -> Column:
@@ -1001,34 +1013,7 @@ def token_dup_spans(
             )
         ).alias("pos", "sh"),
     ).where(F.col("sh").isNotNull())
-    firsts = (
-        ex.groupBy("sh")
-        .agg(
-            F.min(F.struct("id", "pos")).alias("first"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-        .where(F.col("cnt") > 1)
-        .select("sh", "first")
-    )
-    dup_starts = (
-        ex.join(firsts, "sh")
-        .where(
-            (F.col("id") != F.col("first.id"))
-            | (F.col("pos") != F.col("first.pos"))
-        )
-        .groupBy("id")
-        .agg(F.sort_array(F.collect_list("pos")).alias("starts"))
-    )
-    joined = base.join(dup_starts, "id", "left").select(
-        "id", "t",
-        F.coalesce("starts", F.array().cast("array<int>")).alias("starts"),
-    )
-    cleaned = F.filter(
-        F.col("t"),
-        lambda _x, i: ~F.exists(
-            F.col("starts"), lambda s: (s <= i) & (i < s + k)
-        ),
-    )
+    joined, cleaned = _first_occurrence_mask(base, ex, "t", k)
     return joined.select(
         F.col("id").alias(id_col),
         F.size("t").cast("long").alias("n_toks"),

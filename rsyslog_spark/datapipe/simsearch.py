@@ -3,8 +3,8 @@
 - brute_force_topk: exact cosine top-k. The query set is broadcast;
   the corpus is scanned once with a JVM-side dot product
   (F.zip_with + F.aggregate) — embarrassingly parallel, zero corpus
-  shuffle; top-k via a window over (query, score) with AQE handling
-  the final small sort.
+  shuffle; a per-partition partial top-k, then one small per-query
+  merge (_topk_merge, shared with quantized_topk and pq_topk).
 - cosine_lsh_topk: random-hyperplane LSH buckets prune the corpus
   before exact scoring (the IVF-ish scale path).
 - embedding_dedup_pairs: near-duplicate vectors by cosine ≥ threshold
@@ -52,18 +52,25 @@ def brute_force_topk(
     """Exact top-k by cosine for each query vector.
 
     broadcast(queries) × corpus — the corpus side never shuffles for
-    the scoring; only (n_queries × k) rows reach the final window."""
+    the scoring; only (n_partitions × k) rows per query reach the
+    merge."""
     j = corpus.crossJoin(broadcast(queries))
     scored = j.select(
         F.col(q_id_col),
         F.col(id_col),
         cosine(F.col(vec_col), F.col(q_vec_col)).alias("score"),
     )
-    # two-phase top-k: a per-input-partition partial top-k first, so the
-    # shuffle carries only (n_partitions × k) rows per query instead of
-    # the full corpus×queries score set (the difference between a 100 TB
-    # shuffle and a few MB). Sorting by (-score, id) matches the
-    # deterministic (score desc, id asc) tiebreak.
+    return _topk_merge(scored, k, q_id_col, id_col)
+
+
+def _topk_merge(
+    scored: DataFrame, k: int, q_id_col: str, id_col: str
+) -> DataFrame:
+    """Two-phase top-k over ``scored(q_id_col, id_col, score)``: a
+    per-input-partition partial top-k, so the shuffle carries only
+    (n_partitions × k) rows per query, not the corpus×queries scores;
+    then a per-query merge and rank. Sorting by (-score, id) is the
+    deterministic (score desc, id asc) tiebreak."""
     entry = F.struct(
         (-F.col("score")).alias("ns"),
         F.col(id_col).alias("id"),
@@ -71,9 +78,7 @@ def brute_force_topk(
     )
     partial = (
         scored.groupBy(q_id_col, F.spark_partition_id().alias("_p"))
-        .agg(
-            F.slice(F.sort_array(F.collect_list(entry)), 1, k).alias("top")
-        )
+        .agg(F.slice(F.sort_array(F.collect_list(entry)), 1, k).alias("top"))
         .drop("_p")
     )
     merged = (
@@ -88,6 +93,19 @@ def brute_force_topk(
         F.col("t.id").alias(id_col),
         F.col("t.score").alias("score"),
         (F.col("_pos") + 1).alias("rank"),
+    )
+
+
+def _rank_probed(
+    scored: DataFrame, k: int, q_id_col: str, id_col: str
+) -> DataFrame:
+    """Top-k of multi-probe candidates: a vector reached by several
+    probes is deduplicated, then ranked (score desc, id asc)."""
+    w = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.col(id_col))
+    return (
+        scored.dropDuplicates([q_id_col, id_col])
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -146,11 +164,8 @@ def cosine_lsh_topk(
         F.col(q_id_col),
         F.col(id_col),
         cosine(F.col(vec_col), F.col(q_vec_col)).alias("score"),
-    ).dropDuplicates([q_id_col, id_col])
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
     )
+    return _rank_probed(scored, k, q_id_col, id_col)
 
 
 def embedding_dedup_pairs(
@@ -296,29 +311,7 @@ def quantized_topk(
     scored = j.select(
         F.col(q_id_col), F.col(id_col), idot.alias("score")
     )
-    entry = F.struct(
-        (-F.col("score")).alias("ns"),
-        F.col(id_col).alias("id"),
-        F.col("score").alias("score"),
-    )
-    partial = (
-        scored.groupBy(q_id_col, F.spark_partition_id().alias("_p"))
-        .agg(F.slice(F.sort_array(F.collect_list(entry)), 1, k).alias("top"))
-        .drop("_p")
-    )
-    merged = (
-        partial.select(q_id_col, F.explode("top").alias("t"))
-        .groupBy(q_id_col)
-        .agg(F.slice(F.sort_array(F.collect_list("t")), 1, k).alias("top"))
-    )
-    return merged.select(
-        q_id_col, F.posexplode("top").alias("_pos", "t")
-    ).select(
-        q_id_col,
-        F.col("t.id").alias(id_col),
-        F.col("t.score").alias("score"),
-        (F.col("_pos") + 1).alias("rank"),
-    )
+    return _topk_merge(scored, k, q_id_col, id_col)
 
 
 def semdedup(
@@ -573,29 +566,7 @@ def pq_topk(
     scored = j.select(
         F.col(q_id_col), F.col(id_col), score.alias("score")
     )
-    entry = F.struct(
-        (-F.col("score")).alias("ns"),
-        F.col(id_col).alias("id"),
-        F.col("score").alias("score"),
-    )
-    partial = (
-        scored.groupBy(q_id_col, F.spark_partition_id().alias("_p"))
-        .agg(F.slice(F.sort_array(F.collect_list(entry)), 1, k).alias("top"))
-        .drop("_p")
-    )
-    merged = (
-        partial.select(q_id_col, F.explode("top").alias("t"))
-        .groupBy(q_id_col)
-        .agg(F.slice(F.sort_array(F.collect_list("t")), 1, k).alias("top"))
-    )
-    return merged.select(
-        q_id_col, F.posexplode("top").alias("_pos", "t")
-    ).select(
-        q_id_col,
-        F.col("t.id").alias(id_col),
-        F.col("t.score").alias("score"),
-        (F.col("_pos") + 1).alias("rank"),
-    )
+    return _topk_merge(scored, k, q_id_col, id_col)
 
 
 # --- IVF (inverted-file) ANN --------------------------------------------------
@@ -738,8 +709,5 @@ def ivf_topk(
         F.col(q_id_col),
         F.col(id_col),
         cosine(F.col(vec_col), F.col(q_vec_col)).alias("score"),
-    ).dropDuplicates([q_id_col, id_col])
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("score"), F.col(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
     )
+    return _rank_probed(scored, k, q_id_col, id_col)

@@ -15,6 +15,7 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -45,8 +46,19 @@ class LineageTracker:
     def write(self, spark, lineage_path: str, extra: dict | None = None) -> dict:
         snap = self.snapshot()
         snap.update(extra or {})
-        row = {k: (int(v) if isinstance(v, bool) else v) for k, v in snap.items()}
-        df = spark.createDataFrame([row])
+        # an Arrow table becomes a JVM-side relation, with no Python
+        # task per parallelism slot; sorted keys give the column order
+        # existing _lineage tables have, so an append keeps one schema
+        row = {
+            k: (int(v) if isinstance(v, bool) else v)
+            for k, v in sorted(snap.items())
+        }
+        schema = pa.schema([
+            (k, pa.string() if isinstance(v, str)
+             else pa.float64() if isinstance(v, float) else pa.int64())
+            for k, v in row.items()
+        ])
+        df = spark.createDataFrame(pa.Table.from_pylist([row], schema))
         df = df.withColumn("ts", F.current_timestamp())
         df.write.mode("append").parquet(lineage_path)
         return snap
@@ -54,16 +66,12 @@ class LineageTracker:
 
 def _counters(sinks: list[str]) -> list:
     """The lineage counters: rows_in, parse_failures and one
-    routed_<sink> message count per sink."""
+    routed_<sink> message count per sink. Counts, not sums, so an empty
+    input gives 0 rather than null."""
     return [
         F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.when(~F.col("parse_success"), 1).otherwise(0)).alias(
-            "parse_failures"
-        ),
-    ] + [
-        F.sum(F.col(f"route_{s}").cast("long")).alias(f"routed_{s}")
-        for s in sinks
-    ]
+        F.count_if(~F.col("parse_success")).alias("parse_failures"),
+    ] + [F.count_if(F.col(f"route_{s}")).alias(f"routed_{s}") for s in sinks]
 
 
 def per_partition_lineage(routed: DataFrame, sinks: list[str]) -> DataFrame:

@@ -174,12 +174,15 @@ def parse_sql(
     codegen'd (decode optionally via the Arrow backend); Catalyst
     prunes unused columns.
 
-    Perf: each header variant costs ONE regex pass per row — the
-    pattern rewrites all groups into a control-char-separated string
-    (regexp_replace), which is then split. The naive per-field
-    regexp_extract alternative costs one full regex match per field
-    (13×); measured ~2.5× slower at 20M rows. PRI is plain string
-    arithmetic, no regex.
+    Perf: each row costs ONE regex pass — the pattern of its header
+    variant (RFC 5424 when the text after PRI starts with ``1 ``,
+    else RFC 3164) rewrites all groups into a control-char-separated
+    string (regexp_replace), kept as its own column so the match test
+    and the split both read it (generated code: one regexp_replace
+    eval site per variant). The naive per-field regexp_extract
+    alternative costs one full regex match per field (13×); measured
+    ~2.5× slower at 20M rows. PRI is plain string arithmetic, no
+    regex.
     """
     raw = decode_tokens(tokens_col, backend=decode_backend)
     df = df.withColumn("rawmsg", raw)
@@ -210,14 +213,16 @@ def parse_sql(
         "protocol_version", F.when(is5424, F.lit(1)).otherwise(F.lit(0))
     )
 
-    # one regex pass per variant: rewrite groups → split
-    rew3164 = F.regexp_replace("_after_pri", _RE_3164, _REPL_3164)
-    rew5424 = F.regexp_replace("_after_pri", _RE_5424, _REPL_5424)
+    # one regex pass per row: the variant's rewrite (groups → _SEP-
+    # joined string) is its own column, so the match test and the split
+    # below read it instead of re-running the regex
+    df = df.withColumn("_rew", F.when(
+        is5424, F.regexp_replace("_after_pri", _RE_5424, _REPL_5424)
+    ).otherwise(F.regexp_replace("_after_pri", _RE_3164, _REPL_3164)))
     # regexp_replace returns the input unchanged on no-match; _SEP can't
     # occur in sanitized input, so its presence IS the match flag
-    a3164 = F.when(rew3164.contains(_SEP), F.split(rew3164, _SEP, -1))
-    a5424 = F.when(rew5424.contains(_SEP), F.split(rew5424, _SEP, -1))
-    df = df.withColumn("_g", F.when(is5424, a5424).otherwise(a3164))
+    rew = F.col("_rew")
+    df = df.withColumn("_g", F.when(rew.contains(_SEP), F.split(rew, _SEP, -1)))
 
     g = lambda i: F.try_element_at("_g", F.lit(i))  # noqa: E731
     dash_null = lambda c: F.when(c != "-", c)  # noqa: E731
@@ -238,6 +243,6 @@ def parse_sql(
             "programname",
             F.regexp_extract("syslogtag", r"^([^:\[ ]*)", 1),
         )
-        .drop("_after_pri", "_g")
+        .drop("_after_pri", "_rew", "_g")
     )
     return df

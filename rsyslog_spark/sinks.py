@@ -1031,6 +1031,43 @@ def _default_connect(dsn: str):
     return con
 
 
+def _sql_batch(con, batch_id, journal_table: str, statements) -> int:
+    """One transaction on ``con``: BEGIN, the ``batch_id`` journal
+    check and insert (an already-journaled batch rolls back and
+    returns 0), one ``cur.execute(*args)`` per ``args`` that
+    ``statements(cur)`` yields, COMMIT; returns the count executed.
+    Any error rolls the whole batch back (ommysql.c:345-351: nothing
+    partial lands) and re-raises; ``con`` is closed either way."""
+    try:
+        cur = con.cursor()
+        cur.execute("BEGIN")
+        if batch_id is not None:
+            cur.execute(
+                f"CREATE TABLE IF NOT EXISTS {journal_table} "
+                "(batch_id TEXT PRIMARY KEY)"
+            )
+            if cur.execute(
+                f"SELECT 1 FROM {journal_table} WHERE batch_id = ?",
+                (str(batch_id),),
+            ).fetchone():
+                con.rollback()
+                return 0
+            cur.execute(
+                f"INSERT INTO {journal_table} VALUES (?)", (str(batch_id),)
+            )
+        n = 0
+        for args in statements(cur):
+            cur.execute(*args)
+            n += 1
+        con.commit()
+        return n
+    except Exception:
+        con.rollback()
+        raise
+    finally:
+        con.close()
+
+
 def omsql_statements(
     df: "DataFrame",
     dsn: str,
@@ -1062,39 +1099,11 @@ def omsql_statements(
     reference's one-channel sink (parallel SQL ingestion belongs to
     a JDBC-partitioned writer at deploy). Returns statements executed
     (0 when the batch had already committed)."""
-    connect = connect_fn or _default_connect
-    con = connect(dsn)
-    try:
-        cur = con.cursor()
-        cur.execute("BEGIN")
-        if batch_id is not None:
-            cur.execute(
-                f"CREATE TABLE IF NOT EXISTS {journal_table} "
-                "(batch_id TEXT PRIMARY KEY)"
-            )
-            already = cur.execute(
-                f"SELECT 1 FROM {journal_table} WHERE batch_id = ?",
-                (str(batch_id),),
-            ).fetchone()
-            if already:
-                con.rollback()
-                return 0
-            cur.execute(
-                f"INSERT INTO {journal_table} VALUES (?)",
-                (str(batch_id),),
-            )
-        n = 0
-        try:
-            for row in df.select(stmt_col).toLocalIterator():
-                cur.execute(row[0])
-                n += 1
-        except Exception:
-            con.rollback()  # nothing partial lands (ommysql.c:345-351)
-            raise
-        con.commit()
-        return n
-    finally:
-        con.close()
+    def statements(cur):
+        return (tuple(r) for r in df.select(stmt_col).toLocalIterator())
+
+    con = (connect_fn or _default_connect)(dsn)
+    return _sql_batch(con, batch_id, journal_table, statements)
 
 
 def omsql_rows(
@@ -1111,9 +1120,10 @@ def omsql_rows(
     one-transaction + journal semantics as :func:`omsql_statements`.
     ``create=True`` issues a CREATE TABLE IF NOT EXISTS derived from
     the schema (TEXT/INTEGER/REAL affinity)."""
-    connect = connect_fn or _default_connect
-    cols = df.columns
-    ph = ", ".join(["?"] * len(cols))
+    insert = (
+        f"INSERT INTO {table} ({', '.join(df.columns)}) "
+        f"VALUES ({', '.join(['?'] * len(df.columns))})"
+    )
 
     def sqltype(dt: str) -> str:
         if dt in ("bigint", "int", "smallint", "tinyint", "boolean"):
@@ -1122,47 +1132,18 @@ def omsql_rows(
             return "REAL"
         return "TEXT"
 
-    con = connect(dsn)
-    try:
-        cur = con.cursor()
-        cur.execute("BEGIN")
-        if create:
+    def statements(cur):
+        if create:  # inside the batch's transaction, not counted
             ddl = ", ".join(
                 f"{f.name} {sqltype(f.dataType.simpleString())}"
                 for f in df.schema.fields
             )
             cur.execute(f"CREATE TABLE IF NOT EXISTS {table} ({ddl})")
-        if batch_id is not None:
-            cur.execute(
-                f"CREATE TABLE IF NOT EXISTS {journal_table} "
-                "(batch_id TEXT PRIMARY KEY)"
-            )
-            if cur.execute(
-                f"SELECT 1 FROM {journal_table} WHERE batch_id = ?",
-                (str(batch_id),),
-            ).fetchone():
-                con.rollback()
-                return 0
-            cur.execute(
-                f"INSERT INTO {journal_table} VALUES (?)",
-                (str(batch_id),),
-            )
-        n = 0
-        try:
-            for row in df.toLocalIterator():
-                cur.execute(
-                    f"INSERT INTO {table} ({', '.join(cols)}) "
-                    f"VALUES ({ph})",
-                    tuple(row),
-                )
-                n += 1
-        except Exception:
-            con.rollback()
-            raise
-        con.commit()
-        return n
-    finally:
-        con.close()
+        for row in df.toLocalIterator():
+            yield insert, tuple(row)
+
+    con = (connect_fn or _default_connect)(dsn)
+    return _sql_batch(con, batch_id, journal_table, statements)
 
 
 def omsql_stream_writer(

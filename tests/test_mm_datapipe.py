@@ -518,6 +518,46 @@ def test_brute_force_topk(spark):
     assert all(out[i].score >= out[i + 1].score for i in range(4))
 
 
+def test_brute_force_topk_ties_across_partitions(spark):
+    """Equal scores spread over several input partitions, with k
+    cutting through the tie: the two-phase merge keeps the smallest
+    ids in ascending order, exactly a global row_number window over
+    every score (score desc, id asc)."""
+    from pyspark.sql import Window
+
+    from rsyslog_spark.datapipe.simsearch import cosine
+
+    rows = [(i, [1.0, 0.0] if i % 3 == 0 else [0.6, 0.8]) for i in range(40)]
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).repartition(4)
+    tied = corpus.where(F.col("vec_id") % 3 == 0)
+    assert tied.select(F.spark_partition_id()).distinct().count() >= 3
+    queries = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "q_id long, q_vec array<float>"
+    )
+    got = [
+        (r.q_id, r.vec_id, r.rank)
+        for r in brute_force_topk(corpus, queries, k=5).collect()
+    ]
+    w = Window.partitionBy("q_id").orderBy(F.desc("score"), "vec_id")
+    want = [
+        (r.q_id, r.vec_id, r.rank)
+        for r in corpus.crossJoin(queries)
+        .select(
+            "q_id", "vec_id",
+            cosine(F.col("embedding"), F.col("q_vec")).alias("score"),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 5)
+        .collect()
+    ]
+    assert sorted(got) == sorted(want)
+    assert sorted(got) == [(0, i, i // 3 + 1) for i in (0, 3, 6, 9, 12)] + [
+        (1, i, n + 1) for n, i in enumerate((1, 2, 4, 5, 7))
+    ]
+
+
 def test_cosine_lsh_topk_approximates(spark):
     corpus = _vectors(spark)
     queries = spark.createDataFrame(

@@ -319,6 +319,18 @@ def test_device_parsers_single_regex_pass(spark):
         ) or fixup is pmaixforwardedfrom  # programname re-derivation
 
 
+def test_parse_sql_single_regex_pass(spark):
+    """The header parse runs one regexp_replace per row: the chosen
+    variant's rewrite is a column read by both the match test and the
+    split, so the generated code has one eval site per variant
+    (RFC 3164, RFC 5424), not one for each of the two reads."""
+    from rsyslog_spark.parsing.core import parse_sql
+
+    df = spark.createDataFrame([([60, 49, 51, 62, 120],)], "tokens array<int>")
+    code = codegen_of(flagship.make_router().apply(parse_sql(df)))
+    assert code.count("invalidRegexpReplaceError") == 2
+
+
 def test_c4_line_filter_pure_codegen(spark, sf_dir):
     """c4_filter's cleaning is Column array algebra — no Python eval
     node and no exchange (per-row map work at 100 TB)."""

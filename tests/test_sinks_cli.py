@@ -742,6 +742,36 @@ def test_omsql_rows_and_stream_writer(spark, tmp_path):
     con.close()
 
 
+def test_omsql_rows_rollback_does_not_journal(spark, tmp_path):
+    """One failing row rolls the whole omsql_rows batch back and leaves
+    its batch_id unjournaled, so a fixed retry of the same batch lands."""
+    import sqlite3
+
+    import pytest
+
+    from rsyslog_spark.sinks import omsql_rows
+
+    db = str(tmp_path / "rows.db")
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE t (id INTEGER, s TEXT NOT NULL)")
+    con.commit()
+    ddl = "id long, s string"
+    first = spark.createDataFrame([(0, "z")], ddl)
+    assert omsql_rows(first, db, "t", batch_id="b0") == 1
+    bad = spark.createDataFrame([(1, "a"), (2, None), (3, "c")], ddl)
+    with pytest.raises(Exception):
+        omsql_rows(bad, db, "t", batch_id="b1")
+    assert con.execute("SELECT count(*) FROM t").fetchone()[0] == 1
+    assert con.execute(
+        "SELECT batch_id FROM rsyslog_batches").fetchall() == [("b0",)]
+    good = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ddl)
+    assert omsql_rows(good, db, "t", batch_id="b1") == 3
+    assert con.execute("SELECT id, s FROM t ORDER BY id").fetchall() == [
+        (0, "z"), (1, "a"), (2, "b"), (3, "c")]
+    assert omsql_rows(good, db, "t", batch_id="b1") == 0
+    con.close()
+
+
 def test_omelasticsearch_bulk_reply_handling(spark):
     """checkResultBulkmode against a REAL local _bulk endpoint: per-
     item statuses map back to rows positionally, 429 bulk rejections

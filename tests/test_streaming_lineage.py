@@ -70,6 +70,30 @@ foreach ($.w in split($msg, " ")) do {
     assert snap["rows_in"] == 2 and snap["routed_kv"] == 1
 
 
+def test_lineage_run_on_empty_input_writes_zeros(spark, tmp_path):
+    """An empty input still writes one _lineage row, with every counter
+    0 (the sums are coalesced), in the table's existing column order
+    and types."""
+    from rsyslog_spark.rules import Router
+
+    script = """
+if $msg contains "x" then { action(name="b") }
+if $msg contains "y" then { action(name="a") }
+"""
+    df = spark.createDataFrame([], "msg string, parse_success boolean")
+    snap = run_with_lineage(Router(script), df, str(tmp_path / "lin"))
+    assert (snap["rows_in"], snap["parse_failures"]) == (0, 0)
+    assert (snap["routed_a"], snap["routed_b"]) == (0, 0)
+    lin = spark.read.parquet(str(tmp_path / "lin" / "_lineage"))
+    assert lin.schema.simpleString() == (
+        "struct<parse_failures:bigint,routed_a:bigint,routed_b:bigint,"
+        "rows_in:bigint,run_id:string,wall_ms:bigint,ts:timestamp>"
+    )
+    row = lin.first()
+    assert (row.rows_in, row.parse_failures, row.routed_a,
+            row.routed_b) == (0, 0, 0, 0)
+
+
 def test_stream_parse_route_resume(spark, sf_dir, tmp_path):
     """File-stream the tokens, parse+route in streaming mode, then
     verify checkpoint resume processes nothing new."""
