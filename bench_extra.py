@@ -7,11 +7,13 @@ Usage:
     python bench_extra.py time   [names...]          # noop-sink timings, min of 3
     python bench_extra.py decode                     # decode backend microbench
 
-``plans`` writes the 14 timed queries by default. ``names`` is a
-comma-separated list of ``__spark_entry__`` registry entries (e.g.
-``simsearch_topk,ivf_topk``), run over ``SPARK_GRAFT_SF_DIR`` without
-building the token corpus. Expression ids (``#123``) and ``plan_id=``
-tags are stripped, so plans written by two checkouts diff byte for byte.
+Both default to ``bench.suite``, bench.py's table of timed queries;
+``time`` also takes the ``decode_only`` and ``parse_only`` layer cuts.
+For ``plans``, ``names`` is a comma-separated list of ``__spark_entry__``
+registry entries (e.g. ``simsearch_topk,ivf_topk``), run over
+``SPARK_GRAFT_SF_DIR`` without building the token corpus. Expression
+ids (``#123``) and ``plan_id=`` tags are stripped, so plans written by
+two checkouts diff byte for byte.
 
 Timing methodology mirrors bench.py (warm-up + min of 3) but writes
 results through the noop sink so every column of every row is computed
@@ -26,83 +28,41 @@ import re
 import sys
 import time
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-MULT = int(os.environ.get("SPARK_GRAFT_BENCH_MULT", "50"))
-
-BENCH_CONF = {
-    "spark.sql.files.maxPartitionBytes": str(4 * 1024 * 1024),
-    "spark.sql.files.openCostInBytes": "0",
-}
-
-# the queries bench.py times (same names), all driven through
-# __spark_entry__.queries() so the measured plan is the declared one
-TIMED = [
-    "parse_route",
-    "agg_fac_sev_source",
-    "template_render",
-    "dedup_exact_docs",
-    "minhash_pairs",
-    "simsearch_topk",
-    "ratelimit",
-    "doc_token_stats",
-    "mmnormalize",
-    "line_dedup",
-    "seq_pack",
-    "bpe_tokens",
-    "dup_spans",
-    "dsir_select",
-]
+import bench
+from bench import BENCH_CONF, MULT, SF_DIR
 
 
 def _spark():
     from rsyslog_spark.session import get_spark
 
-    return get_spark(
-        "bench-extra", master=f"local[{CPUS}]",
-        shuffle_partitions=max(8, CPUS), extra_conf=BENCH_CONF,
-    )
+    return get_spark("bench-extra", extra_conf=BENCH_CONF)
 
 
-def _jobs(spark):
-    """name -> thunk returning a DataFrame (bench.py's suite, but as
-    DataFrames so we can noop-sink and explain them)."""
-    import __spark_entry__ as entrymod
+def _jobs(spark) -> tuple[dict, dict]:
+    """(bench.py's suite table, the flagship layer cuts): name → thunk
+    returning a DataFrame, so it can be noop-sunk and explained."""
     from pyspark.sql import functions as F
 
-    import bench
-    from rsyslog_spark import aggregates as agg, flagship
     from rsyslog_spark.parsing import parse
-    from rsyslog_spark.templates import compile_template
+    from rsyslog_spark.parsing.core import decode_tokens
 
-    tokens_path = bench._materialize_tokens(spark, MULT)
-    lt = spark.read.parquet(tokens_path)
-    qs = entrymod.queries()
-
-    jobs = {
-        "parse_route": lambda: flagship.make_router().route_counts(parse(lt)),
-        "agg_fac_sev_source": lambda: agg.salted_counts(
-            parse(lt), ["facility", "severity", "source"]
-        ),
-        "template_render": lambda: parse(lt).select(
-            compile_template("RSYSLOG_TraditionalFileFormat").alias("l")
-        ).agg(F.sum(F.length("l"))),
+    lt = spark.read.parquet(bench._materialize_tokens(spark, MULT))
+    cuts = {
         "decode_only": lambda: lt.select(
-            F.length(
-                __import__(
-                    "rsyslog_spark.parsing.core", fromlist=["decode_tokens"]
-                ).decode_tokens("tokens")
-            ).alias("n")
+            F.length(decode_tokens("tokens")).alias("n")
         ).agg(F.sum("n")),
         "parse_only": lambda: parse(lt).select(
             F.sum(F.length("msg")).alias("s")
         ),
     }
-    for name in TIMED:
-        if name in jobs:
-            continue
-        jobs[name] = lambda n=name: qs[n](spark, SF_DIR)
-    return jobs
+    return bench.suite(spark, lt), cuts
+
+
+def _plan_text(df) -> str:
+    text = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    return re.sub(r"#\d+|plan_id=\d+", "", text)
 
 
 def cmd_plans(out_dir: str, label: str, names: list[str]) -> None:
@@ -113,26 +73,22 @@ def cmd_plans(out_dir: str, label: str, names: list[str]) -> None:
         qs = entrymod.queries()
         jobs = {n: (lambda n=n: qs[n](spark, SF_DIR)) for n in names}
     else:
-        jobs, names = _jobs(spark), TIMED
+        jobs = _jobs(spark)[0]
     os.makedirs(out_dir, exist_ok=True)
-    for name in names:
-        df = jobs[name]()
-        text = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+    for name, mk in jobs.items():
         p = os.path.join(out_dir, f"{name}_{label}.txt")
         with open(p, "w") as fh:
-            fh.write(re.sub(r"#\d+|plan_id=\d+", "", text))
+            fh.write(_plan_text(mk()))
         print(p)
     spark.stop()
 
 
 def cmd_time(names: list[str]) -> None:
     spark = _spark()
-    jobs = _jobs(spark)
-    names = names or TIMED
+    suite, cuts = _jobs(spark)
+    jobs = {**suite, **cuts}
     out = {}
-    for name in names:
+    for name in names or suite:
         fn = jobs[name]
 
         def run():
@@ -155,7 +111,6 @@ def cmd_decode() -> None:
     """Compare decode backends over the bench tokens corpus."""
     from pyspark.sql import functions as F
 
-    import bench
     from rsyslog_spark.parsing.core import decode_tokens
 
     spark = _spark()

@@ -3,7 +3,7 @@
 Defaults mirror what we'd ship for a 1000-executor cluster reading
 100 TB: AQE on (runtime coalescing + skew-join splitting), Arrow for
 every Python<->JVM hop, and shuffle-partition counts that AQE can
-shrink. Local test sessions just downsize memory/parallelism.
+shrink. Local sessions take their cores and memory from the host.
 """
 
 from __future__ import annotations
@@ -37,6 +37,16 @@ SCALE_CONF: dict[str, str] = {
 }
 
 
+def host_nproc() -> int:
+    """CPUs this process may run on (its affinity mask, not the box)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_mem_mb() -> int:
+    """Physical memory (``MemTotal``), in MiB."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+
+
 def get_spark(
     app_name: str = "rsyslog_spark",
     master: str | None = None,
@@ -45,29 +55,28 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    for sandbox runs; on a cluster, leave unset and let spark-submit
-    provide it.
+    Unset ``master`` means ``local[$SPARK_GRAFT_CPUS]``, else one slot
+    per CPU of :func:`host_nproc`. The driver gets ``$SPARK_DRIVER_MEM``,
+    else half the host's memory, at most 24g.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or host_nproc()
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        # one shuffle partition per core locally; AQE coalesces further
-        n = master.split("[")[-1].rstrip("]") if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
-
+        # one shuffle partition per core (local[*] and non-local masters:
+        # per host CPU); AQE coalesces further
+        n = master.partition("[")[2].rstrip("]")
+        shuffle_partitions = max(8, int(n) if n.isdigit() else host_nproc())
+    conf = {
+        **SCALE_CONF,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM")
+        or f"{min(24 * 1024, host_mem_mb() // 2)}m",
+        **(extra_conf or {}),
+    }
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in SCALE_CONF.items():
-        builder = builder.config(k, v)
-    builder = builder.config(
-        "spark.sql.shuffle.partitions", str(shuffle_partitions)
-    )
-    builder = builder.config("spark.ui.enabled", "false")
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g")
-    )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -22,7 +22,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -325,8 +325,8 @@ class DynStatsStream:
     than max_cardinality rows cross to the driver — and (b) per-key
     last-seen refreshes for admitted keys (≤ max_cardinality rows).
     The admitted set itself is bounded by max_cardinality (a config
-    constant, exactly like the reference's counter table) and is
-    re-broadcast each batch.
+    constant, exactly like the reference's counter table) and rides
+    each batch's plan as an ``isin`` literal list.
 
     RESTART SAFETY: pass ``state_path`` to journal the admitted set +
     counters after every batch (atomic tmp+rename, ≤ max_cardinality
@@ -414,6 +414,14 @@ class DynStatsStream:
             del self.admitted[k]
         self.metrics_purged += len(dead)
 
+    def _is_admitted(self) -> Column:
+        """Null-safe membership of ``key`` in the admitted set: false
+        for a null key. The set holds at most max_cardinality keys, so
+        it rides the plan as literals instead of a per-batch frame."""
+        return F.coalesce(
+            F.col("key").isin(list(self.admitted)), F.lit(False)
+        )
+
     def process_batch(self, batch_df: DataFrame, batch_id=None) -> DataFrame:
         """One micro-batch of dyn_inc calls → per-admitted-key counts
         (key, n) plus one overflow row. Returns the batch snapshot.
@@ -428,7 +436,6 @@ class DynStatsStream:
         admitted after that batch originally ran; per-batch admitted
         snapshots would be needed for bit-identical arbitrary replay,
         which the journal deliberately does not store."""
-        spark = batch_df.sparkSession
         frozen = (
             self.state_path is not None
             and batch_id is not None
@@ -458,23 +465,17 @@ class DynStatsStream:
                 self._evict(int(row.m))
 
         if not frozen:
-            admitted_keys = list(self.admitted)
-            remaining = self.max_cardinality - len(admitted_keys)
-            if admitted_keys:
-                adm_df = spark.createDataFrame(
-                    [(k,) for k in admitted_keys], "key string"
-                )
-                new_cand = counts.join(
-                    F.broadcast(adm_df), "key", "left_anti"
-                )
-            else:
-                new_cand = counts
+            remaining = self.max_cardinality - len(self.admitted)
             if remaining > 0:
                 # arrival order = first timestamp (deterministic
                 # tiebreak on key); TakeOrderedAndProject — at most
-                # `remaining` rows move
+                # `remaining` rows move. A null key never takes a slot:
+                # its rows stay overflow.
                 newly = (
-                    new_cand.orderBy("first_ts", "key")
+                    counts.filter(
+                        F.col("key").isNotNull() & ~self._is_admitted()
+                    )
+                    .orderBy("first_ts", "key")
                     .limit(remaining)
                     .collect()
                 )
@@ -483,17 +484,14 @@ class DynStatsStream:
             for r in newly:
                 self.admitted[r.key] = [int(r.first_ts), int(r.last_ts), 0]
 
-        adm_now = spark.createDataFrame(
-            [(k,) for k in self.admitted], "key string"
-        )
-        kept = counts.join(F.broadcast(adm_now), "key")
+        kept = counts.filter(self._is_admitted())
         if not frozen:
             # refresh last-seen + totals (≤ max_cardinality rows)
             for r in kept.collect():
                 st = self.admitted[r.key]
                 st[1] = max(st[1], int(r.last_ts))
                 st[2] += int(r.n)
-        over = counts.join(F.broadcast(adm_now), "key", "left_anti").agg(
+        over = counts.filter(~self._is_admitted()).agg(
             F.coalesce(F.sum("n"), F.lit(0)).alias("n")
         )
         if not frozen:

@@ -1,0 +1,135 @@
+"""Sessions and bench levels are sized from the host they run on.
+
+Spark-free: the session builder is stubbed, so no JVM starts.
+"""
+
+from __future__ import annotations
+
+import os
+import subprocess
+from types import SimpleNamespace
+
+import pytest
+
+import bench
+import bench_extra
+from rsyslog_spark import session
+
+
+class _Builder:
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+        self.master_url = None
+
+    def appName(self, _name):
+        return self
+
+    def master(self, url):
+        self.master_url = url
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(setLogLevel=lambda _lvl: None)
+        )
+
+
+def _mem_total_mb() -> int:
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise AssertionError("MemTotal missing")
+
+
+@pytest.fixture
+def builder(monkeypatch):
+    b = _Builder()
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=b))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    return b
+
+
+def test_default_session_is_sized_from_the_host(builder):
+    session.get_spark("t")
+    nproc = len(os.sched_getaffinity(0))
+    assert builder.master_url == f"local[{nproc}]"
+    assert builder.conf["spark.sql.shuffle.partitions"] == str(max(8, nproc))
+    mem = builder.conf["spark.driver.memory"]
+    assert mem.endswith("m")
+    assert 0 < int(mem[:-1]) <= min(_mem_total_mb(), 24 * 1024)
+
+
+def test_local_star_and_overrides(builder, monkeypatch):
+    session.get_spark("t", master="local[*]")
+    nproc = len(os.sched_getaffinity(0))
+    assert builder.conf["spark.sql.shuffle.partitions"] == str(max(8, nproc))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
+    session.get_spark("t")
+    assert builder.master_url == "local[3]"
+    assert builder.conf["spark.driver.memory"] == "2g"
+
+
+@pytest.mark.parametrize("nproc", [1, 2, 4, 6, 32])
+def test_scaling_pair_fits_the_host(nproc):
+    pair = bench.scaling_pair(nproc)
+    if nproc < 4:
+        assert pair is None
+    else:
+        lo, hi = pair
+        assert 1 <= lo and hi == 4 * lo <= nproc
+        assert lo == nproc // 4
+
+
+def test_level_above_nproc_refused_before_any_process(monkeypatch):
+    def no_process(*_a, **_k):
+        raise AssertionError("subprocess.run reached")
+
+    monkeypatch.setattr(subprocess, "run", no_process)
+    monkeypatch.setattr(bench, "host_nproc", lambda: 4)
+    with pytest.raises(ValueError, match="local\\[8\\]"):
+        bench._throughput_subprocess(8, "unused")
+
+
+def test_bench_extra_defaults_are_the_bench_suite(monkeypatch, tmp_path):
+    names = list(bench.suite(None, None))
+    assert len(names) == 14
+    ran: list[str] = []
+
+    class FakeDF:
+        def __init__(self, name):
+            self.name = name
+            self.write = self
+
+        def format(self, _fmt):
+            return self
+
+        def mode(self, _mode):
+            return self
+
+        def save(self):
+            ran.append(self.name)
+
+    real_suite = bench.suite
+    monkeypatch.setattr(bench, "suite", lambda spark, lt: {
+        n: (lambda n=n: FakeDF(n)) for n in real_suite(spark, lt)
+    })
+    monkeypatch.setattr(bench, "_materialize_tokens", lambda _s, _m: "t")
+    fake = SimpleNamespace(
+        read=SimpleNamespace(parquet=lambda _p: None),
+        sparkContext=SimpleNamespace(setJobDescription=lambda _d: None),
+        stop=lambda: None,
+    )
+    monkeypatch.setattr(bench_extra, "_spark", lambda: fake)
+    monkeypatch.setattr(bench_extra, "_plan_text", lambda df: df.name)
+
+    bench_extra.cmd_plans(str(tmp_path), "x", [])
+    assert sorted(os.listdir(tmp_path)) == sorted(f"{n}_x.txt" for n in names)
+    bench_extra.cmd_time([])
+    assert list(dict.fromkeys(ran)) == names

@@ -264,6 +264,29 @@ def test_dynstats_kill_and_resume(spark, tmp_path):
     assert ds3.snapshot()["ops_overflow"] == snap_before["ops_overflow"] + 1
 
 
+def test_dynstats_null_key_never_takes_a_slot(spark, tmp_path):
+    """A null key is never admitted (it would hold a slot it can never
+    count into, and journal as the string "null"); its rows still
+    count as overflow."""
+    import json
+
+    from rsyslog_spark.streaming import DynStatsStream
+
+    path = str(tmp_path / "dynstats_state.json")
+    ds = DynStatsStream("prog", "ts", max_cardinality=2, state_path=path)
+    b = spark.createDataFrame(
+        [(k, f"2024-01-01 00:0{m}:00")
+         for m, k in enumerate([None, None, "a", "b", "c"])],
+        "prog string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    out = {r.key: r.n for r in ds.process_batch(b, batch_id=0).collect()}
+    assert out == {"a": 1, "b": 1, "_overflow_": 3}
+    assert ds.snapshot()["metrics"] == {"a": 1, "b": 1}
+    assert ds.snapshot()["ops_overflow"] == 3
+    with open(path) as fh:
+        assert set(json.load(fh)["admitted"]) == {"a", "b"}
+
+
 def test_sessionize_stream_state_spans_batches(spark, tmp_path):
     """applyInPandasWithState gap sessions: the open session carries
     across micro-batches (maxFilesPerTrigger=1 forces two batches),
