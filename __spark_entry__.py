@@ -102,7 +102,7 @@ action(name="all")
 
 def q_agg_fac_sev_source(spark, sf):
     p = flagship.build_parsed(spark, sf)
-    return agg.salted_counts(p, ["facility", "severity", "source"]).select(
+    return agg.dyn_stats(p, ["facility", "severity", "source"]).select(
         F.col("facility").cast("long").alias("facility"),
         F.col("severity").cast("long").alias("severity"),
         "source",

@@ -98,8 +98,16 @@ def _now() -> str:
 
 
 def _tokens_cache(mult: int) -> str:
+    """Where the materialized corpus lives: keyed on the full SF path
+    and the source of ``corpus.py``, so another checkout or an edited
+    generator never reads a corpus written by a different one."""
+    from rsyslog_spark import corpus
+
+    key = hashlib.sha256(os.path.abspath(SF_DIR).encode())
+    with open(corpus.__file__, "rb") as fh:
+        key.update(fh.read())
     base = os.path.basename(SF_DIR.rstrip("/"))
-    return f"/tmp/sparkgraft_tokens_{base}_x{mult}"
+    return f"/tmp/sparkgraft_tokens_{base}_x{mult}_{key.hexdigest()[:12]}"
 
 
 def _materialize_tokens(spark, mult: int) -> str:
@@ -147,7 +155,7 @@ def suite(spark, lt) -> dict:
     qs = entrymod.queries()
     jobs = {
         "parse_route": lambda: _parse_route(lt),
-        "agg_fac_sev_source": lambda: agg.salted_counts(
+        "agg_fac_sev_source": lambda: agg.dyn_stats(
             parse(lt), ["facility", "severity", "source"]
         ),
         "template_render": lambda: parse(lt).select(

@@ -12,8 +12,9 @@ Both default to ``bench.suite``, bench.py's table of timed queries;
 For ``plans``, ``names`` is a comma-separated list of ``__spark_entry__``
 registry entries (e.g. ``simsearch_topk,ivf_topk``), run over
 ``SPARK_GRAFT_SF_DIR`` without building the token corpus. Expression
-ids (``#123``) and ``plan_id=`` tags are stripped, so plans written by
-two checkouts diff byte for byte.
+ids (``#123``), ``plan_id=`` tags and RDD ids (``MapPartitionsRDD[44]``,
+which count every RDD the session made before) are stripped, so plans
+written by two checkouts diff byte for byte.
 
 Timing methodology mirrors bench.py (warm-up + min of 3) but writes
 results through the noop sink so every column of every row is computed
@@ -62,7 +63,7 @@ def _plan_text(df) -> str:
     text = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    return re.sub(r"#\d+|plan_id=\d+", "", text)
+    return re.sub(r"#\d+|plan_id=\d+|(?<=RDD)\[\d+\]", "", text)
 
 
 def cmd_plans(out_dir: str, label: str, names: list[str]) -> None:

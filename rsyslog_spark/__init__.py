@@ -4,8 +4,8 @@ A from-scratch reimplementation of the query / data-processing
 capabilities of rsyslog (reference: rgerhards/rsyslog, surveyed in
 /root/repo/SURVEY.md) expressed as idiomatic PySpark: DataFrame plans,
 Catalyst-optimizable Column expressions, broadcast-join enrichment,
-salted aggregations, and Arrow-vectorized pandas UDFs only where SQL
-cannot express the semantics.
+partial-aggregated group-bys, and Arrow-vectorized pandas UDFs only
+where SQL cannot express the semantics.
 
 Input data model (BASELINE.json input_hint): an Iceberg/parquet table of
 pre-tokenized training sequences
@@ -24,7 +24,7 @@ Layout:
     functions   RainerScript built-in function library -> Columns
     templates   template compiler (projection operator) -> Columns
     lookup      4 lookup-table flavors as broadcast joins
-    aggregates  dynstats / salted aggs / percentile windows / ratelimit
+    aggregates  dynstats / percentile windows / ratelimit / counters
     datapipe    training-data ops: dedup, simsearch, text quality
     streaming   Structured Streaming equivalents
     lineage     per-partition metrics via observe()

@@ -1,11 +1,10 @@
 """Aggregation operators (SURVEY.md §2.7/§2.8).
 
 rsyslog's stateful counters/windows re-expressed as Spark aggregations
-and window functions. The scale-critical piece is the salted two-phase
-group-by: the corpus ``source`` key is zipf-skewed (one source can be
-half the data), so a naive ``groupBy(source)`` sends half of 100 TB to
-one reducer. Salting splits each hot key across S partial groups, then
-re-aggregates the S partials — the classic map-side-combine defuse.
+and window functions. A keyed count is one ``groupBy(keys).count()``:
+Spark's partial HashAggregate reduces each map task to one row per key
+before the shuffle, so even a zipf-skewed ``source`` key (one source
+can be half the data) ships at most one row per key per task.
 """
 
 from __future__ import annotations
@@ -70,36 +69,8 @@ def dyn_stats_capped(
     return kept.unionByName(over)
 
 
-def _salt(buckets: int) -> Column:
-    # deterministic per-row salt from a cheap monotonic id; avoids
-    # rand() (non-reproducible across retries — a correctness bug at
-    # scale, since task retry would re-salt differently)
-    return F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(buckets))
-
-
-def salted_counts(
-    df: DataFrame, keys: list[str], salt_buckets: int = 32, out: str = "n"
-) -> DataFrame:
-    """Skew-proof groupBy(keys).count() (north_star: facility×severity×
-    source per-sink counts over a zipf source)."""
-    p1 = (
-        df.withColumn("_salt", _salt(salt_buckets))
-        .groupBy(*keys, "_salt")
-        .agg(F.count(F.lit(1)).alias("_pn"))
-    )
-    return p1.groupBy(*keys).agg(F.sum("_pn").alias(out))
-
-
-def salted_sum(
-    df: DataFrame, keys: list[str], value: str, salt_buckets: int = 32,
-    out: str = "s",
-) -> DataFrame:
-    p1 = (
-        df.withColumn("_salt", _salt(salt_buckets))
-        .groupBy(*keys, "_salt")
-        .agg(F.sum(value).alias("_ps"))
-    )
-    return p1.groupBy(*keys).agg(F.sum("_ps").alias(out))
+# perfbench (frozen with the benchmark) still calls the old name
+salted_counts = dyn_stats
 
 
 # --- percentile stats (runtime/perctile_stats.h, ring buffer) ----------------
@@ -255,19 +226,6 @@ def exec_every_nth(df: DataFrame, key_cols: list[str], order_by: list[str], n: i
     ).drop("_rn")
 
 
-def exec_once_per_interval(
-    df: DataFrame, key_cols: list[str], ts_col: str, interval_seconds: int
-) -> DataFrame:
-    """action.execOnceEveryInterval (action.c:535-546): first row per
-    (key, interval window)."""
-    w = Window.partitionBy(
-        *key_cols, F.window(ts_col, f"{interval_seconds} seconds")
-    ).orderBy(ts_col)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") == 1
-    ).drop("_rn")
-
-
 def sender_stats(
     df: DataFrame, sender_col: str, ts_col: str
 ) -> DataFrame:
@@ -297,8 +255,7 @@ def sessionize(
     running sum over the lag flag and a partial-aggregated groupBy on
     (key, session_id) that reuses the same partitioning — Catalyst
     collapses it to a single Exchange. Skewed keys inherit the window's
-    skew; at 100 TB pre-filter or salt monster keys first (same caveat
-    as any per-entity ordered scan)."""
+    skew (same caveat as any per-entity ordered scan)."""
     from pyspark.sql.window import Window
 
     ep = F.unix_timestamp(F.col(ts_col))

@@ -787,11 +787,6 @@ def load_rulebase(text: str) -> list[NormalizeRule]:
     return rules
 
 
-def load_rulebase_file(path: str) -> list[NormalizeRule]:
-    with open(path, encoding="utf-8") as fh:
-        return load_rulebase(fh.read())
-
-
 # group-separator for single-pass extraction: a control char that can
 # never appear in SanitizeMsg-sanitized input (parser.c:330-535 escapes
 # all control chars) — same trick as the header parser (parsing/core.py)
@@ -1004,11 +999,6 @@ def load_grok_patterns(text: str) -> dict[str, str]:
             raise ValueError(f"bad grok pattern name {name!r}")
         out[name] = rx.strip()
     return out
-
-
-def load_grok_patterns_file(path: str) -> dict[str, str]:
-    with open(path, encoding="utf-8") as fh:
-        return load_grok_patterns(fh.read())
 
 
 class GrokRule:

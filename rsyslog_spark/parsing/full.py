@@ -266,10 +266,6 @@ _MEGA = re.compile(
 )
 
 
-def _escape_ctrl(s: str) -> str:
-    return _CTRL.sub(lambda m: "#%03o" % ord(m.group(0)), s)
-
-
 # \d{1,3} domain including zero-padded forms ('013' parses as 13)
 _PRI_CACHE = {
     f: float(i)

@@ -11,8 +11,6 @@ foreachBatch epoch.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -202,27 +200,6 @@ def omelasticsearch_frame(
     doc = compile_template(template, env)
     return df.select(
         F.concat(action, F.lit("\n"), doc).alias("value")
-    )
-
-
-def om_foreach_batch(
-    stream_df: DataFrame,
-    writer: Callable[[DataFrame, int], None],
-    checkpoint: str,
-):
-    """Generic sink adapter (ommysql/omelasticsearch/omhttp family):
-    foreachBatch hands `writer` each micro-batch with its epoch id —
-    the analog of the action TX interface (action.c:462). Delivery is
-    AT-LEAST-ONCE: a crashed epoch is replayed, so `writer` must be
-    idempotent on (data, epoch_id) — key an upsert on the epoch
-    (sinks.upsert_aggregate(batch_id=epoch_id)) or overwrite an
-    epoch-named partition (see streaming.run_routed_stream) to get
-    effective exactly-once."""
-    return (
-        stream_df.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

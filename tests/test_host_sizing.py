@@ -133,3 +133,34 @@ def test_bench_extra_defaults_are_the_bench_suite(monkeypatch, tmp_path):
     assert sorted(os.listdir(tmp_path)) == sorted(f"{n}_x.txt" for n in names)
     bench_extra.cmd_time([])
     assert list(dict.fromkeys(ran)) == names
+
+
+def test_tokens_cache_keys_on_sf_path_and_corpus_source(monkeypatch, tmp_path):
+    from rsyslog_spark import corpus
+
+    paths = []
+    for sf in (tmp_path / "a" / "sf0.01", tmp_path / "b" / "sf0.01"):
+        monkeypatch.setattr(bench, "SF_DIR", str(sf))
+        paths.append(bench._tokens_cache(1))
+    assert paths[0] != paths[1]
+    assert bench._tokens_cache(1) == paths[1]
+
+    edited = tmp_path / "corpus.py"
+    edited.write_bytes(open(corpus.__file__, "rb").read() + b"\n# edited\n")
+    monkeypatch.setattr(corpus, "__file__", str(edited))
+    assert bench._tokens_cache(1) != paths[1]
+
+
+def test_plan_text_strips_session_ids():
+    def stub_df(text):
+        utils = SimpleNamespace(explainString=lambda _qe, _mode: text)
+        return SimpleNamespace(
+            _sc=SimpleNamespace(_jvm=SimpleNamespace(PythonSQLUtils=utils)),
+            _jdf=SimpleNamespace(queryExecution=lambda: None),
+        )
+
+    cold = "(3) Scan [id#12] MapPartitionsRDD[44] at x, plan_id=7"
+    warm = "(3) Scan [id#31] MapPartitionsRDD[32] at x, plan_id=2"
+    assert bench_extra._plan_text(stub_df(cold)) == bench_extra._plan_text(
+        stub_df(warm)
+    ) == "(3) Scan [id] MapPartitionsRDD at x, "

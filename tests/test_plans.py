@@ -1,14 +1,14 @@
 """Physical-plan assertions: the 100 TB sanity checks.
 
-The judge's questions made executable: does column pruning reach the
-scan through the parse projection? Do dimension joins broadcast? Does
-the salted agg have exactly its two designed exchanges? Does top-k
-avoid shuffling the scored corpus?"""
+Does column pruning reach the scan through the parse projection? Do
+dimension joins broadcast? Does a keyed count shuffle once, after its
+partial aggregate? Does top-k avoid shuffling the scored corpus?"""
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pyspark.sql.functions as F
 
@@ -48,15 +48,22 @@ def test_lookup_join_broadcasts(spark, sf_dir):
     assert "SortMergeJoin" not in p
 
 
-def test_salted_agg_two_exchanges(spark, sf_dir):
+def test_keyed_count_one_exchange_after_partial_agg(spark, sf_dir):
+    """A keyed count over the zipf ``source`` key shuffles once, and
+    what it shuffles is already reduced: the node feeding the one
+    Exchange is the partial (map-side) HashAggregate."""
     parsed = flagship.build_parsed(spark, sf_dir)
-    p = plan_of(agg.salted_counts(parsed, ["facility", "severity", "source"]))
-    n_exchange = sum(
-        1 for l in p.splitlines()
-        if l.strip().startswith("(") and "Exchange" in l and "Reused" not in l
-    )
-    # phase-1 shuffle on (keys, salt) + phase-2 shuffle on keys
-    assert n_exchange == 2, p
+    p = plan_of(agg.dyn_stats(parsed, ["facility", "severity", "source"]))
+    # the numbered node sections, in plan order (children first); a
+    # ReusedExchange section does not match
+    nodes = re.split(r"\n(?=\(\d+\) )", p)
+    exchanges = [
+        i for i, n in enumerate(nodes) if re.match(r"\(\d+\) Exchange", n)
+    ]
+    assert len(exchanges) == 1, p
+    below = nodes[exchanges[0] - 1]
+    assert re.match(r"\(\d+\) HashAggregate", below), p
+    assert "partial_count" in below, p
 
 
 def test_route_counts_single_shuffle(spark, sf_dir):
