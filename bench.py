@@ -29,6 +29,7 @@ root (committed) and referenced from the stdout line.
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -46,6 +47,8 @@ MULT = int(os.environ.get("SPARK_GRAFT_BENCH_MULT", "50"))
 # (~1.5s of scheduling + final-stage collect) doesn't mask the
 # parallelism ratio
 SCALE_MULT = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "100"))
+# where the materialized token corpora live
+TOKENS_ROOT = "/tmp"
 
 
 def scaling_pair(nproc: int) -> tuple[int, int] | None:
@@ -107,7 +110,25 @@ def _tokens_cache(mult: int) -> str:
     with open(corpus.__file__, "rb") as fh:
         key.update(fh.read())
     base = os.path.basename(SF_DIR.rstrip("/"))
-    return f"/tmp/sparkgraft_tokens_{base}_x{mult}_{key.hexdigest()[:12]}"
+    return os.path.join(
+        TOKENS_ROOT,
+        f"sparkgraft_tokens_{base}_x{mult}_{key.hexdigest()[:12]}",
+    )
+
+
+def _prune_tokens_caches(cache: str) -> None:
+    """Before ``cache`` is written, remove what else its ``<sf>_x<mult>``
+    left behind: the unkeyed dir of older checkouts, ``.tmp`` dirs of
+    interrupted writes, and every keyed cache but the most recently
+    modified one, so a parent/change A/B keeps both sides."""
+    stem = cache.rsplit("_", 1)[0]
+    pat = glob.escape(stem)
+    keyed = sorted(
+        glob.glob(pat + "_" + "[0-9a-f]" * 12), key=os.path.getmtime
+    )
+    for d in [stem, *glob.glob(pat + ".tmp"), *glob.glob(pat + "_*.tmp"),
+              *keyed[:-1]]:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _materialize_tokens(spark, mult: int) -> str:
@@ -119,8 +140,8 @@ def _materialize_tokens(spark, mult: int) -> str:
 
     cache = _tokens_cache(mult)
     if not os.path.isdir(cache):
+        _prune_tokens_caches(cache)
         tmp = cache + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
         lt = corpus.logtokens(spark, SF_DIR)
         if mult > 1:
             lt = lt.withColumn(

@@ -2,7 +2,7 @@
 
 A from-scratch reimplementation of the query / data-processing
 capabilities of rsyslog (reference: rgerhards/rsyslog, surveyed in
-/root/repo/SURVEY.md) expressed as idiomatic PySpark: DataFrame plans,
+SURVEY.md) expressed as idiomatic PySpark: DataFrame plans,
 Catalyst-optimizable Column expressions, broadcast-join enrichment,
 partial-aggregated group-bys, and Arrow-vectorized pandas UDFs only
 where SQL cannot express the semantics.

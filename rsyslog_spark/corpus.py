@@ -36,7 +36,7 @@ Line grammar (all integer arithmetic; duckdb equivalents in
       <pri>MMM _d HH:mm:ss host prog[pid]: body
       (_d = space-padded day-of-month; msg keeps the leading space,
        matching reference semantics: tools/pmrfc3164.c keeps everything
-       after the TAG's ':' — see /root/reference/tools/pmrfc3164.c:470-516)
+       after the TAG's ':' — see tools/pmrfc3164.c:470-516)
 
 Tokenization: token = Unicode code point of each character (the corpus
 is pure ASCII, so the JVM-side ``char()`` decode fast path is exact).

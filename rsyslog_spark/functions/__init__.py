@@ -1,7 +1,7 @@
 """RainerScript built-in function library as Column functions.
 
 Each function mirrors a reference script function
-(/root/reference/grammar/rainerscript.c:4467-4510 registration table;
+(grammar/rainerscript.c:4467-4510 registration table;
 per-function impl cites below) expressed as built-in pyspark Column
 expressions — JVM-side, whole-stage-codegen, no Python in the hot path.
 

@@ -2,7 +2,9 @@
 (external-program source), immark (heartbeat marks) — real runtime
 listeners over stdlib servers/processes, spooling to the same
 replayable file bridge as :mod:`rsyslog_spark.net` /
-:mod:`rsyslog_spark.relp`.
+:mod:`rsyslog_spark.relp`. Each listener is a
+:class:`rsyslog_spark.net._SpooledSource` that keeps only its protocol
+code; spool, counter, pump thread and ``close()`` live there.
 
 imhttp (contrib/imhttp/imhttp.c): POST bodies to a configured
 endpoint become messages — the body runs through the SAME RFC 6587
@@ -33,20 +35,21 @@ MarkMessagePeriod seconds (default 1200, :55) at LOG_SYSLOG|LOG_INFO
 from __future__ import annotations
 
 import json
-import threading
 
 from pyspark.sql import DataFrame
 
-from rsyslog_spark.net import SyslogFrameParser, _SpoolWriter
+from rsyslog_spark.net import SyslogFrameParser, _SpooledSource
 
 MAX_REQUEST_BODY = 64 * 1024 * 1024
 
 
-class ImHttpListener:
+class ImHttpListener(_SpooledSource):
     """HTTP push-ingest endpoint. ``basic_auth`` is a set of
     ``user:password`` strings (the htpasswd-file analog);
     ``api_keys`` a set of accepted keys. ``health_path`` answers 200
     unauthenticated (healthCheckPath)."""
+
+    spool_prefix = "http"
 
     def __init__(self, spool_dir: str, endpoint: str = "/ingest",
                  host: str = "127.0.0.1", port: int = 0,
@@ -58,41 +61,47 @@ class ImHttpListener:
                  rotate_every: int = 10_000) -> None:
         import http.server
 
-        self.n_received = 0
         self.n_failed = 0
-        self._lock = threading.Lock()
-        spool = _SpoolWriter(spool_dir, "http", rotate_every)
         outer = self
 
         class Handler(http.server.BaseHTTPRequestHandler):
+            timeout = 30.0  # so an idle client cannot hold close()
+
             def log_message(self, *a):  # quiet
                 pass
 
             def _reply(self, code: int) -> None:
                 self.send_response(code)
+                if code == 401 and basic_auth:
+                    self.send_header(
+                        "WWW-Authenticate", 'Basic realm="imhttp"'
+                    )
                 self.send_header("Content-Length", "0")
                 if code != 200:
                     self.send_header("Connection", "close")
                 self.end_headers()
 
+            def _fail(self, code: int) -> None:
+                with outer._lock:
+                    outer.n_failed += 1
+                self._reply(code)
+
             def _authorized(self) -> bool:
                 if not basic_auth and not api_keys:
                     return True
-                if basic_auth:
+                h = self.headers.get("Authorization", "")
+                if basic_auth and h.startswith("Basic "):
                     import base64
 
-                    h = self.headers.get("Authorization", "")
-                    if h.startswith("Basic "):
-                        try:
-                            tok = base64.b64decode(
-                                h[6:].strip()
-                            ).decode("utf-8", "replace")
-                        except Exception:
-                            tok = ""
-                        if tok in basic_auth:
-                            return True
+                    try:
+                        tok = base64.b64decode(
+                            h[6:].strip()
+                        ).decode("utf-8", "replace")
+                    except Exception:
+                        tok = ""
+                    if tok in basic_auth:
+                        return True
                 if api_keys:
-                    h = self.headers.get("Authorization", "")
                     if h.startswith("ApiKey ") and h[7:].strip() in api_keys:
                         return True
                     if self.headers.get("X-API-Key", "").strip() in api_keys:
@@ -100,33 +109,21 @@ class ImHttpListener:
                 return False
 
             def do_GET(self):
-                if self.path == health_path:
-                    self._reply(200)
-                else:
-                    self._reply(405)
+                self._reply(200 if self.path == health_path else 405)
 
             def do_POST(self):
                 if self.path.split("?", 1)[0] != endpoint:
                     self._reply(404)
                     return
                 if not self._authorized():
-                    self.send_response(401)
-                    if basic_auth:
-                        self.send_header(
-                            "WWW-Authenticate", 'Basic realm="imhttp"'
-                        )
-                    self.send_header("Content-Length", "0")
-                    self.send_header("Connection", "close")
-                    self.end_headers()
+                    self._reply(401)
                     return
                 try:
                     n = int(self.headers.get("Content-Length", "0"))
                 except ValueError:
                     n = 0
                 if n > max_body:
-                    with outer._lock:
-                        outer.n_failed += 1
-                    self._reply(413)
+                    self._fail(413)
                     return
                 body = self.rfile.read(n)
                 if self.headers.get(
@@ -137,9 +134,7 @@ class ImHttpListener:
                     try:
                         body = gzip.decompress(body)
                     except OSError:
-                        with outer._lock:
-                            outer.n_failed += 1
-                        self._reply(400)
+                        self._fail(400)
                         return
                 headers = {
                     k.lower(): v for k, v in self.headers.items()
@@ -154,7 +149,6 @@ class ImHttpListener:
                         if kv:
                             k, _, v = kv.partition("=")
                             query[k] = v
-                msgs: list[bytes] = []
                 if support_octet_counted:
                     p = SyslogFrameParser()
                     msgs = [m for m, _f, _e in p.feed(body) if m]
@@ -162,9 +156,7 @@ class ImHttpListener:
                     if tail:
                         msgs.append(tail)
                 else:
-                    msgs = [
-                        ln for ln in body.split(b"\n") if ln
-                    ]
+                    msgs = [ln for ln in body.split(b"\n") if ln]
                 for m in msgs:
                     rec = {
                         "msg": m.decode("utf-8", "replace"),
@@ -172,26 +164,22 @@ class ImHttpListener:
                         "query": query,
                         "remote": self.client_address[0],
                     }
-                    spool.write(
-                        json.dumps(rec, sort_keys=True).encode()
-                    )
-                    with outer._lock:
-                        outer.n_received += 1
+                    outer._emit(json.dumps(rec, sort_keys=True).encode())
                 self._reply(200)
 
         self._srv = http.server.ThreadingHTTPServer(
             (host, port), Handler
         )
+        self._srv.daemon_threads = False  # so server_close() joins them
         self.port = self._srv.server_address[1]
-        self._spool = spool
-        threading.Thread(
-            target=self._srv.serve_forever, daemon=True
-        ).start()
+        super().__init__(spool_dir, rotate_every)
 
-    def close(self) -> None:
+    def _pump(self) -> None:
+        self._srv.serve_forever()
+
+    def _stop(self) -> None:
         self._srv.shutdown()
         self._srv.server_close()
-        self._spool.close()
 
 
 def imhttp_read(spark, spool_dir: str, stream: bool = False) -> DataFrame:
@@ -217,12 +205,15 @@ def imhttp_read(spark, spool_dir: str, stream: bool = False) -> DataFrame:
     )
 
 
-class ImProgListener:
+class ImProgListener(_SpooledSource):
     """Run ``argv`` and turn each stdout line into one message.
     ``confirm_messages=True`` writes ``ACK\\n`` to the child's stdin
     after every consumed line (improg.c:394-396). ``close()`` closes
     stdin, waits ``close_timeout`` seconds, then kills when
-    ``kill_unresponsive`` (improg.c:297 semantics)."""
+    ``kill_unresponsive`` (improg.c:297 semantics), and reads what the
+    child wrote for up to ``close_timeout`` more seconds."""
+
+    spool_prefix = "prog"
 
     def __init__(self, spool_dir: str, argv: list[str],
                  confirm_messages: bool = False,
@@ -231,38 +222,31 @@ class ImProgListener:
                  rotate_every: int = 10_000) -> None:
         import subprocess
 
-        self.n_received = 0
-        self._lock = threading.Lock()
         self.confirm = confirm_messages
         self.close_timeout = close_timeout
         self.kill_unresponsive = kill_unresponsive
-        self._spool = _SpoolWriter(spool_dir, "prog", rotate_every)
         self._proc = subprocess.Popen(
             argv,
             stdin=subprocess.PIPE,
             stdout=subprocess.PIPE,
             stderr=subprocess.DEVNULL,
         )
-        self._thread = threading.Thread(target=self._pump, daemon=True)
-        self._thread.start()
+        super().__init__(spool_dir, rotate_every)
 
     def _pump(self) -> None:
-        for line in self._proc.stdout:
-            msg = line.rstrip(b"\n")
-            if not msg:
-                continue
-            self._spool.write(msg)
-            with self._lock:
-                self.n_received += 1
-            if self.confirm:
-                try:
-                    self._proc.stdin.write(b"ACK\n")
-                    self._proc.stdin.flush()
-                except (BrokenPipeError, ValueError):
-                    pass
-        self._spool.close()
+        with self._proc.stdout as out:
+            for msg in self._lines(out.fileno()):
+                if not msg:
+                    continue
+                self._emit(msg)
+                if self.confirm:
+                    try:
+                        self._proc.stdin.write(b"ACK\n")
+                        self._proc.stdin.flush()
+                    except (BrokenPipeError, ValueError):
+                        pass
 
-    def close(self) -> None:
+    def _stop(self) -> None:
         import subprocess
 
         try:
@@ -275,30 +259,26 @@ class ImProgListener:
             if self.kill_unresponsive:
                 self._proc.kill()
                 self._proc.wait()
-        self._thread.join(timeout=5.0)
+        self._thread.join(timeout=self.close_timeout)  # drain to EOF
 
 
-class MarkEmitter:
+class MarkEmitter(_SpooledSource):
     """immark: write ``<46>-- MARK --`` (LOG_SYSLOG|LOG_INFO) to the
     spool every ``period`` seconds until closed."""
+
+    spool_prefix = "mark"
 
     def __init__(self, spool_dir: str, period: float = 1200.0,
                  mark_text: str = "-- MARK --",
                  rotate_every: int = 10_000) -> None:
-        self.n_emitted = 0
-        self._stop = threading.Event()
-        self._spool = _SpoolWriter(spool_dir, "mark", rotate_every)
         self._period = period
         self._line = f"<46>{mark_text}".encode()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._thread.start()
+        super().__init__(spool_dir, rotate_every)
 
-    def _run(self) -> None:
-        while not self._stop.wait(self._period):
-            self._spool.write(self._line)
-            self.n_emitted += 1
-        self._spool.close()
+    @property
+    def n_emitted(self) -> int:
+        return self.n_received
 
-    def close(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=5.0)
+    def _pump(self) -> None:
+        while not self._stopping.wait(self._period):
+            self._emit(self._line)

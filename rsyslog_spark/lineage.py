@@ -1,7 +1,7 @@
 """Lineage & metrics: the impstats/statsobj analog (SURVEY.md §3.3).
 
 rsyslog snapshots every component's counters on an interval
-(/root/reference/plugins/impstats/impstats.c:113-141,470-501;
+(plugins/impstats/impstats.c:113-141,470-501;
 runtime/statsobj.h:68-81) and injects them as messages. Here the
 equivalent is a ``_lineage`` table: one row per (run, sink) with input
 counts, per-sink routed counts, parse-failure counts, and wall time —

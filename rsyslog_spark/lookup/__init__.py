@@ -1,6 +1,6 @@
 """Lookup tables: rsyslog's 4 enrichment flavors as Spark primitives.
 
-Reference: /root/reference/runtime/lookup.c — JSON-loaded tables with a
+Reference: runtime/lookup.c — JSON-loaded tables with a
 ``nomatch`` default (lookup.c:392-398), reloadable on HUP
 (lookup.c:910-1050; here: rebuild the object per batch/epoch).
 

@@ -22,6 +22,9 @@ share, so each protocol module only encodes:
   writes through;
 - :class:`_TcpListener` — bind, accept thread, per-session threads and
   spools for imtcp, imrelp, imbeats and im3195;
+- :class:`_SpooledSource` — one spool, one counter, one pump thread
+  and an idempotent close for imudp, imuxsock, imhttp, improg, immark
+  and imfifo;
 - :func:`_deliver` — the executor-side open / send / finish / close
   loop, with two report shapes: :func:`partition_sender` (one summed
   row per partition) behind omfwd, omuxsock, omsnmp, omczmq,
@@ -286,6 +289,80 @@ class _TcpListener:
         self._srv.close()
 
 
+class _SpooledSource:
+    """The input core shared by imudp, imuxsock, imhttp, improg, immark
+    and imfifo (runInput on its own thread, ended by thrdTerminate and
+    afterRun — runtime/threads.c): one :class:`_SpoolWriter`, a locked
+    ``n_received`` bumped by :meth:`_emit`, one daemon thread running
+    the subclass's ``_pump()``, and :meth:`close`. A subclass sets up
+    and validates its own state, then calls this ``__init__``."""
+
+    spool_prefix = ""
+
+    def __init__(self, spool_dir: str, rotate_every: int) -> None:
+        import threading
+
+        self.n_received = 0
+        self._lock = threading.Lock()
+        self._closed = False
+        self._stopping = threading.Event()
+        self._spool = _SpoolWriter(spool_dir, self.spool_prefix, rotate_every)
+        self._thread = threading.Thread(target=self._pump, daemon=True)
+        self._thread.start()
+
+    def _emit(self, msg: bytes) -> None:
+        self._spool.write(msg)
+        with self._lock:
+            self.n_received += 1
+
+    def _ready(self, fd) -> Iterator[None]:
+        """Yield each time ``fd`` is readable, until :meth:`close` sets
+        ``_stopping`` (seen within 0.1 s)."""
+        import select
+
+        while not self._stopping.is_set():
+            if select.select([fd], [], [], 0.1)[0]:
+                yield
+
+    def _lines(self, fd: int, max_line: int | None = None
+               ) -> Iterator[bytes]:
+        """Lines read from ``fd`` while :meth:`_ready`; bytes past
+        ``max_line`` are dropped, not split (imfifo readFIFO:283-289).
+        At EOF an unterminated last line counts too."""
+        import os
+
+        carry = b""  # current (possibly truncated) partial line
+        for _ in self._ready(fd):
+            try:
+                data = os.read(fd, 4096)
+            except BlockingIOError:
+                continue
+            except OSError:
+                return
+            if not data:
+                if carry:
+                    yield carry
+                return
+            *lines, carry = (carry + data).split(b"\n")
+            for line in lines:
+                yield line[:max_line]
+            carry = carry[:max_line]
+
+    def _stop(self) -> None:
+        """Ends a pump that does not watch ``_stopping``."""
+
+    def close(self) -> None:
+        """Stop and join the pump, then close the spool. Idempotent."""
+        with self._lock:
+            if self._closed:
+                return
+            self._closed = True
+        self._stop()
+        self._stopping.set()
+        self._thread.join()
+        self._spool.close()
+
+
 class SyslogTcpListener(_TcpListener):
     """imtcp: accept TCP connections, extract frames with the
     per-frame auto-detecting parser, spool newline-delimited messages
@@ -361,37 +438,30 @@ class SyslogTcpListener(_TcpListener):
                 deliver(tail)
 
 
-class SyslogUdpListener:
+class SyslogUdpListener(_SpooledSource):
     """imudp: one datagram = one message (no framing)."""
+
+    spool_prefix = "udp"
 
     def __init__(self, spool_dir: str, host: str = "127.0.0.1",
                  port: int = 0, rotate_every: int = 10_000) -> None:
         import socket as socketlib
-        import threading
 
-        self.n_received = 0
-        self._lock = threading.Lock()
         self._sock = socketlib.socket(
             socketlib.AF_INET, socketlib.SOCK_DGRAM
         )
         self._sock.bind((host, port))
         self.port = self._sock.getsockname()[1]
-        self._spool = _SpoolWriter(spool_dir, "udp", rotate_every)
-        threading.Thread(target=self._serve, daemon=True).start()
+        super().__init__(spool_dir, rotate_every)
 
-    def _serve(self) -> None:
-        while True:
-            try:
-                data, _ = self._sock.recvfrom(65536)
-            except OSError:
-                self._spool.close()
-                return
-            self._spool.write(data.rstrip(b"\n"))
-            with self._lock:
-                self.n_received += 1
-
-    def close(self) -> None:
-        self._sock.close()
+    def _pump(self) -> None:
+        with self._sock:
+            for _ in self._ready(self._sock):
+                try:
+                    data, _ = self._sock.recvfrom(65536)
+                except OSError:
+                    return
+                self._emit(data.rstrip(b"\n"))
 
 
 def _deliver(batches: Iterator[pd.DataFrame], open_conn, send,
@@ -618,7 +688,8 @@ def _trusted_props(pid: int) -> dict[str, str]:
     out: dict[str, str] = {}
     for prop in ("comm", "cmdline"):
         try:
-            raw = open(f"/proc/{pid}/{prop}", "rb").read(1023)
+            with open(f"/proc/{pid}/{prop}", "rb") as fh:
+                raw = fh.read(1023)
         except OSError:
             continue
         buf = []
@@ -659,7 +730,7 @@ def annotate_trusted(msg: bytes, pid: int, uid: int, gid: int) -> bytes:
     return msg + (" @[" + " ".join(parts) + "]").encode()
 
 
-class SyslogUnixListener:
+class SyslogUnixListener(_SpooledSource):
     """imuxsock (plugins/imuxsock/imuxsock.c): the classic Linux
     /dev/log source — AF_UNIX SOCK_DGRAM with SO_PASSCRED, one
     datagram per message, SCM_CREDENTIALS giving the sender's REAL
@@ -674,21 +745,18 @@ class SyslogUnixListener:
     ``discard_own=True`` drops datagrams from this process's own pid
     (bDiscardOwnMsgs, imuxsock.c:1009)."""
 
+    spool_prefix = "uxsock"
+
     def __init__(self, spool_dir: str, path: str,
                  rotate_every: int = 10_000, annotate: bool = True,
                  discard_own: bool = False) -> None:
         import os
         import socket as socketlib
-        import struct
-        import threading
 
-        self.n_received = 0
         self.path = path
-        self._lock = threading.Lock()
         self._own_pid = os.getpid()
         self._annotate = annotate
         self._discard_own = discard_own
-        self._struct = struct
         self._sock = socketlib.socket(
             socketlib.AF_UNIX, socketlib.SOCK_DGRAM
         )
@@ -696,41 +764,35 @@ class SyslogUnixListener:
         self._sock.setsockopt(
             socketlib.SOL_SOCKET, socketlib.SO_PASSCRED, 1
         )
-        self._spool = _SpoolWriter(spool_dir, "uxsock", rotate_every)
-        threading.Thread(target=self._serve, daemon=True).start()
+        super().__init__(spool_dir, rotate_every)
 
-    def _serve(self) -> None:
-        import socket as socketlib
-
-        while True:
-            try:
-                data, ancdata, _flags, _addr = self._sock.recvmsg(
-                    65536, socketlib.CMSG_SPACE(12)
-                )
-            except OSError:
-                self._spool.close()
-                return
-            cred = None
-            for level, ctype, cdata in ancdata:
-                if (
-                    level == socketlib.SOL_SOCKET
-                    and ctype == socketlib.SCM_CREDENTIALS
-                ):
-                    cred = self._struct.unpack("iII", cdata[:12])
-            msg = data.rstrip(b"\n").rstrip(b"\x00")
-            if cred is not None:
-                if self._discard_own and cred[0] == self._own_pid:
-                    continue
-                if self._annotate:
-                    msg = annotate_trusted(msg, *cred)
-            self._spool.write(msg)
-            with self._lock:
-                self.n_received += 1
-
-    def close(self) -> None:
+    def _pump(self) -> None:
         import os
+        import socket as socketlib
+        import struct
 
-        self._sock.close()
+        with self._sock:
+            for _ in self._ready(self._sock):
+                try:
+                    data, ancdata, _flags, _addr = self._sock.recvmsg(
+                        65536, socketlib.CMSG_SPACE(12)
+                    )
+                except OSError:
+                    break
+                cred = None
+                for level, ctype, cdata in ancdata:
+                    if (
+                        level == socketlib.SOL_SOCKET
+                        and ctype == socketlib.SCM_CREDENTIALS
+                    ):
+                        cred = struct.unpack("iII", cdata[:12])
+                msg = data.rstrip(b"\n").rstrip(b"\x00")
+                if cred is not None:
+                    if self._discard_own and cred[0] == self._own_pid:
+                        continue
+                    if self._annotate:
+                        msg = annotate_trusted(msg, *cred)
+                self._emit(msg)
         try:
             os.unlink(self.path)
         except OSError:

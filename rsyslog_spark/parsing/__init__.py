@@ -8,7 +8,7 @@ Two implementations, same output schema:
 - ``mode="full"``: Arrow-vectorized pandas UDF implementing the
   reference's heuristic corner cases (sanitization, HP-ProCurve leading
   space, year-after-timestamp, headerless defaults, RFC5424 SD escape
-  rules). Reference: /root/reference/tools/pmrfc3164.c:295-516,
+  rules). Reference: tools/pmrfc3164.c:295-516,
   tools/pmrfc5424.c:75-185, runtime/parser.c:330-605.
 
 Output columns appended to the input DataFrame (tokens pass through

@@ -4,14 +4,14 @@ Semantics mirrored from the reference (cited per step):
 
 - PRI parse: ``<0..191>`` → facility = pri>>3, severity = pri&7;
   missing PRI → default 13; malformed → invalid.
-  (/root/reference/runtime/parser.c:543-605)
+  (runtime/parser.c:543-605)
 - RFC3164 heuristic header: TIMESTAMP SP HOSTNAME SP TAG MSG, where TAG
   runs until ':' (kept in tag) or SP (left in msg).
-  (/root/reference/tools/pmrfc3164.c:295-516)
+  (tools/pmrfc3164.c:295-516)
 - RFC5424: ``<PRI>1 TS HOST APP PROCID MSGID SD MSG``.
-  (/root/reference/tools/pmrfc5424.c:75-185)
+  (tools/pmrfc5424.c:75-185)
 - PROGNAME = TAG up to first ':' / '[' / SP
-  (/root/reference/runtime/msg.c getProgramName, msg.h:279)
+  (runtime/msg.c getProgramName, msg.h:279)
 
 The decode fast path (``char()`` join) is exact for token values
 < 128 (ASCII); the corpus generator guarantees this. Non-ASCII code

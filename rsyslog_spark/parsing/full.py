@@ -3,15 +3,15 @@
 Covers the corner cases the SQL fast path does not attempt:
 
 - message sanitization: strip trailing NUL/LF/CR, escape control chars
-  as ``#ooo`` octal (/root/reference/runtime/parser.c:330-535)
+  as ``#ooo`` octal (runtime/parser.c:330-535)
 - PRI default (13) and 3-digit-invalid handling (parser.c:543-605)
-- RFC3164 heuristics (/root/reference/tools/pmrfc3164.c:295-516):
+- RFC3164 heuristics (tools/pmrfc3164.c:295-516):
   HP-ProCurve leading space, RFC3339 timestamp inside legacy frame,
   optional year after the timestamp, hostname charset validation
   (alnum ``. _ -`` plus ``[] @ /``; invalid → token is the TAG),
   headerless messages (no timestamp → no hostname, TAG from start)
 - RFC5424 structured data with ``\\]`` escapes
-  (/root/reference/tools/pmrfc5424.c:75-185)
+  (tools/pmrfc5424.c:75-185)
 - non-ASCII token code points (decode happens in Python here)
 
 This is an Arrow-batched pandas UDF (no per-row Python at the Spark

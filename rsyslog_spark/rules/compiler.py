@@ -1,6 +1,6 @@
 """AST → Column compiler with RainerScript coercion semantics.
 
-Coercion rules mirrored from /root/reference/grammar/rainerscript.c:
+Coercion rules mirrored from grammar/rainerscript.c:
 - ``==``/``!=`` (3878-4041): number vs number → numeric; if one side is
   a string and the other numeric, try numeric conversion of the string
   side first, else compare as strings (3909-3916); RHS array literal →
@@ -33,7 +33,7 @@ from rsyslog_spark.rules.selectors import prifilt
 NUMERIC_SPARK = {"int", "bigint", "long", "smallint", "tinyint", "double", "float"}
 
 # default property → (column name, type tag); matches the parse() output
-# schema plus corpus columns. (PROP ids: /root/reference/runtime/typedefs.h:194-248)
+# schema plus corpus columns. (PROP ids: runtime/typedefs.h:194-248)
 DEFAULT_PROPS: dict[str, tuple[str, str]] = {
     "$msg": ("msg", "S"),
     "$rawmsg": ("rawmsg", "S"),

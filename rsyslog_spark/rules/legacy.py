@@ -1,6 +1,6 @@
 """Legacy (sysklogd-style) rsyslog.conf translator.
 
-The classic line formats (/root/reference/runtime/conf.c cfline*,
+The classic line formats (runtime/conf.c cfline*,
 runtime/cfsysline.c):
 
     mail.info;mail.!=debug     /var/log/mail        PRI selector line

@@ -1,7 +1,7 @@
 """Route compiler: statement list → per-sink predicate Columns.
 
 rsyslog executes statements sequentially per message with mutable
-state (`scriptExec`, /root/reference/runtime/ruleset.c:536-593):
+state (`scriptExec`, runtime/ruleset.c:536-593):
 ``set`` mutates variables, ``stop`` halts processing, actions fire for
 whatever reaches them. We compile this imperative program to pure
 dataflow by symbolic execution over Column expressions:
@@ -16,7 +16,7 @@ dataflow by symbolic execution over Column expressions:
   RULESET_CALL_DEPTH_MAX=1024, ruleset.c:64)
 - ``action(...)`` records (sink, pc & live, params); omdiscard is
   rewritten to stop, mirroring cnfstmtOptimize
-  (/root/reference/grammar/rainerscript.c:5889-5898)
+  (grammar/rainerscript.c:5889-5898)
 
 The result is a single-pass plan: every predicate is evaluated once
 over one scan, then either summed (`route_counts`) or fanned out to

@@ -2,7 +2,7 @@
 
 A from-scratch recursive-descent / Pratt parser for the RainerScript
 surface needed by the routing engine. Grammar reference:
-/root/reference/grammar/grammar.y (tokens at :100-110, statements at
+grammar/grammar.y (tokens at :100-110, statements at
 :205-230) and lexer.l. This is NOT a port of the yacc grammar — just a
 small parser for the same language subset:
 

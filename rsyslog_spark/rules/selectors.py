@@ -3,8 +3,8 @@
 Reference semantics: a selector list like ``mail.info;*.=err;kern.none``
 builds a per-facility bitmask of severities (pmask[25]); a message
 matches iff ``pmask[facility] & (1 << severity)``.
-Eval: /root/reference/runtime/ruleset.c:403-420; mask construction:
-/root/reference/grammar/rainerscript.c:450-520 (DecodePRIFilter).
+Eval: runtime/ruleset.c:403-420; mask construction:
+grammar/rainerscript.c:450-520 (DecodePRIFilter).
 
 Priority grammar per facility group:
     name          this severity and all more-important (numerically <=)

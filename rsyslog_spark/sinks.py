@@ -1,9 +1,9 @@
 """Output modules (om*) as Spark writers (SURVEY.md §2.10).
 
 The deep analogy: an omfile *dynafile* names its output file with a
-template (/root/reference/tools/omfile.c:133-145) — which is exactly a
+template (tools/omfile.c:133-145) — which is exactly a
 partition-by expression. An omkafka *dynatopic/dynakey*
-(/root/reference/plugins/omkafka/omkafka.c:227-292) is a key/topic
+(plugins/omkafka/omkafka.c:227-292) is a key/topic
 column pair. Action transactionality (beginTx/commitTx,
 runtime/action.c:462) maps to the atomicity of a Spark file-commit /
 foreachBatch epoch.

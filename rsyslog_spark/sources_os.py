@@ -20,6 +20,8 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rsyslog_spark.net import _SpooledSource
+
 
 # ---------------------------------------------------------------------------
 # imkmsg — /dev/kmsg structured records
@@ -578,7 +580,7 @@ def klog_parse(
 # --- imfifo: named-pipe line source ------------------------------------------
 
 
-class FifoSource:
+class FifoSource(_SpooledSource):
     """plugins/imfifo (imfifo.c): read newline-delimited messages from
     a named pipe. The FIFO is opened O_RDWR so the open never blocks
     and a writer disconnect never yields EOF (imfifo.c:312 comment);
@@ -586,62 +588,25 @@ class FifoSource:
     Messages spool to text files under ``spool_dir`` — the standard
     socket→spool→stream bridge (a pipe is not replayable)."""
 
-    def __init__(self, path: str, spool_dir: str, tag: str = "fifo:",
-                 max_line: int = 8192, rotate_every: int = 10_000) -> None:
-        import threading
+    spool_prefix = "fifo"
 
-        st = os.stat(path)
+    def __init__(self, path: str, spool_dir: str, max_line: int = 8192,
+                 rotate_every: int = 10_000) -> None:
         import stat as statmod
 
-        if not statmod.S_ISFIFO(st.st_mode):
+        if not statmod.S_ISFIFO(os.stat(path).st_mode):
             raise ValueError(f"imfifo: {path!r} is not a named pipe")
-        os.makedirs(spool_dir, exist_ok=True)
-        self.path, self.spool_dir, self.tag = path, spool_dir, tag
-        self.max_line, self.rotate_every = max_line, rotate_every
-        self.fd = os.open(path, os.O_RDWR | os.O_NONBLOCK)
-        self.n_messages = 0
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-        self._thread.start()
+        self.path, self.max_line = path, max_line
+        self._fd = os.open(path, os.O_RDWR | os.O_NONBLOCK)
+        super().__init__(spool_dir, rotate_every)
 
-    def _run(self) -> None:
-        import select
+    @property
+    def n_messages(self) -> int:
+        return self.n_received
 
-        carry = b""  # current (possibly truncated) partial line
-        n_file, n_in_file, f = 0, 0, None
-        while not self._stop.is_set():
-            r, _, _ = select.select([self.fd], [], [], 0.1)
-            if not r:
-                continue
-            try:
-                data = os.read(self.fd, 4096)
-            except BlockingIOError:
-                continue
-            except OSError:
-                break
-            # linear chunk processing (a per-byte append is O(line²));
-            # bytes past max_line are dropped, not split — readFIFO
-            segs = data.split(b"\n")
-            segs[0] = (carry + segs[0])[: self.max_line] \
-                if len(carry) < self.max_line else carry
-            for line in segs[:-1]:
-                if f is None:
-                    f = open(os.path.join(
-                        self.spool_dir,
-                        f"fifo-{n_file:06d}.log"), "ab")
-                f.write(line[: self.max_line] + b"\n")
-                f.flush()
-                self.n_messages += 1
-                n_in_file += 1
-                if n_in_file >= self.rotate_every:
-                    f.close()
-                    f, n_file, n_in_file = None, n_file + 1, 0
-            carry = segs[-1][: self.max_line] if len(segs) > 1 \
-                else segs[0]
-        if f is not None:
-            f.close()
-
-    def close(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=2)
-        os.close(self.fd)
+    def _pump(self) -> None:
+        try:
+            for line in self._lines(self._fd, self.max_line):
+                self._emit(line)
+        finally:
+            os.close(self._fd)

@@ -6,14 +6,14 @@ true streaming twins:
 - :func:`stream_logtokens`  file-stream source over the tokens table
   (the imfile analog: new files = new data, exactly-once via
   checkpointLocation, which replaces rsyslog's .qi queue checkpoints —
-  /root/reference/runtime/queue.c:90-187)
+  runtime/queue.c:90-187)
 - :func:`windowed_dynstats`  dyn_inc over event-time tumbling windows
   with a watermark (dynstats unusedMetricLife TTL analog: state for
   closed windows is evicted by the watermark —
-  /root/reference/runtime/dynstats.c:117-126)
+  runtime/dynstats.c:117-126)
 - :func:`stateful_ratelimit`  per-key token bucket with
   applyInPandasWithState (interval+burst semantics of
-  /root/reference/runtime/ratelimit.c:2500-2620, but with real
+  runtime/ratelimit.c:2500-2620, but with real
   cross-batch state)
 """
 
@@ -313,7 +313,7 @@ def sessionize_stream(
 class DynStatsStream:
     """Streaming dynstats with FIRST-SEEN cardinality admission and
     TTL eviction — the arrival-order semantics of
-    /root/reference/runtime/dynstats.c:117-126 (dyn_inc admits a new
+    runtime/dynstats.c:117-126 (dyn_inc admits a new
     metric only while metricCount < maxCardinality, else bumps
     ops_overflow; metrics idle past unusedMetricLife are purged,
     dynstats.c:45,551-552).

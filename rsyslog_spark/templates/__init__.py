@@ -1,6 +1,6 @@
 """Template system: rsyslog templates compiled to one concat Column.
 
-The reference's projection operator (/root/reference/runtime/template.c,
+The reference's projection operator (runtime/template.c,
 structs template.h:40-182): a template is a list of CONSTANT|FIELD
 entries; each field is ``%prop:from:to:options%`` with substring /
 field-extract (``F,<delimchar>``) / regex (``R,<ere>``) modes, date

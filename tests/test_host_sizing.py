@@ -151,6 +151,41 @@ def test_tokens_cache_keys_on_sf_path_and_corpus_source(monkeypatch, tmp_path):
     assert bench._tokens_cache(1) != paths[1]
 
 
+def test_materialize_tokens_prunes_stale_caches(monkeypatch, tmp_path):
+    from rsyslog_spark import corpus
+
+    class FakeDF:
+        def __getattr__(self, _name):
+            return lambda *_a: self
+
+        @property
+        def write(self):
+            return self
+
+        def parquet(self, path):
+            os.makedirs(path)
+
+    monkeypatch.setattr(bench, "TOKENS_ROOT", str(tmp_path))
+    monkeypatch.setattr(bench, "SF_DIR", "/data/sf0.01")
+    monkeypatch.setattr(corpus, "logtokens", lambda _s, _sf: FakeDF())
+    stale = ["sparkgraft_tokens_sf0.01_x1",
+             "sparkgraft_tokens_sf0.01_x1_aaaaaaaaaaaa",
+             "sparkgraft_tokens_sf0.01_x1_aaaaaaaaaaaa.tmp"]
+    kept = ["sparkgraft_tokens_sf0.01_x1_bbbbbbbbbbbb",  # newest other
+            "sparkgraft_tokens_sf0.01_x10_cccccccccccc",
+            "sparkgraft_tokens_sf0.1_x1_dddddddddddd"]
+    for age, name in enumerate(reversed(stale + kept)):
+        (tmp_path / name).mkdir()
+        os.utime(tmp_path / name, (1e9 - age, 1e9 - age))
+    os.utime(tmp_path / kept[0], (2e9, 2e9))
+
+    cache = bench._materialize_tokens(None, 1)
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        kept + [os.path.basename(cache)]
+    )
+    assert bench._materialize_tokens(None, 1) == cache  # reused as is
+
+
 def test_plan_text_strips_session_ids():
     def stub_df(text):
         utils = SimpleNamespace(explainString=lambda _qe, _mode: text)
