@@ -12,8 +12,10 @@ Both default to ``bench.suite``, bench.py's table of timed queries;
 For ``plans``, ``names`` is a comma-separated list of ``__spark_entry__``
 registry entries (e.g. ``simsearch_topk,ivf_topk``), run over
 ``SPARK_GRAFT_SF_DIR`` without building the token corpus. Expression
-ids (``#123``), ``plan_id=`` tags and RDD ids (``MapPartitionsRDD[44]``,
-which count every RDD the session made before) are stripped, so plans
+ids (``#123``), ``plan_id=`` tags, RDD ids (``MapPartitionsRDD[44]``,
+which count every RDD the session made before) and lambda-variable
+counters (``x_12``, numbered session-wide, so an earlier entry that
+builds one more lambda renames every later one) are stripped, so plans
 written by two checkouts diff byte for byte.
 
 Timing methodology mirrors bench.py (warm-up + min of 3) but writes
@@ -63,7 +65,9 @@ def _plan_text(df) -> str:
     text = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    return re.sub(r"#\d+|plan_id=\d+|(?<=RDD)\[\d+\]", "", text)
+    return re.sub(
+        r"#\d+|plan_id=\d+|(?<=RDD)\[\d+\]|(?<=\b[xyz]_)\d+\b", "", text
+    )
 
 
 def cmd_plans(out_dir: str, label: str, names: list[str]) -> None:

@@ -25,11 +25,14 @@ imbeats); the parse stage downstream is the ordinary pipeline."""
 from __future__ import annotations
 
 import socket
+import time
 
 from rsyslog_spark.net import _TcpListener
 
 RAW_PROFILE_URI = "http://iana.org/beep/SYSLOG/RAW"
 _BEEP_CT = b"Content-Type: application/beep+xml\r\n\r\n"
+# how long the sender waits, after NUL, for the collector to close
+_DRAIN_S = 5.0
 
 
 def beep_frame(
@@ -176,7 +179,10 @@ def send_3195_raw(host: str, port: int, msgs: list[bytes],
     """Device/relay side of the RAW dialog (the liblogging sender
     analog, for tests and loopback delivery): greeting exchange,
     channel start, then one ANS per message answering the collector's
-    MSG, closed with NUL. Returns the number of messages sent."""
+    MSG, closed with NUL, then half-closes and reads the collector's
+    SEQ frames until it closes (at most ``_DRAIN_S``): a close with
+    them unread makes the kernel reset the connection and drop the
+    frames not yet sent. Returns the number of messages sent."""
     parser = BeepParser()
     with socket.create_connection((host, port)) as s:
         seq0 = 0
@@ -215,4 +221,13 @@ def send_3195_raw(host: str, port: int, msgs: list[bytes],
             seq += len(m)
         s.sendall(beep_frame(
             "NUL", channel, collector_msg["msgno"], seq, b""))
+        s.shutdown(socket.SHUT_WR)
+        deadline = time.monotonic() + _DRAIN_S
+        try:
+            while (left := deadline - time.monotonic()) > 0:
+                s.settimeout(left)
+                if not s.recv(65536):
+                    break
+        except OSError:
+            pass  # timed out or reset: nothing left to wait for
     return len(msgs)

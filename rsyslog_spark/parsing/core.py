@@ -201,24 +201,24 @@ def parse_sql(
         has_pri, F.col("rawmsg").substr(gt + 1, F.length("rawmsg"))
     ).otherwise(F.col("rawmsg"))
 
-    df = (
-        df.withColumn("pri", F.when(pri_valid, pri_num))
-        .withColumn("_after_pri", after_pri)
-        .withColumn("facility", (F.col("pri") / 8).cast("int"))
-        .withColumn("severity", F.col("pri") % 8)
+    # one withColumns per projection the optimizer keeps: each layer
+    # reads only columns the layers below it made
+    df = df.withColumns(
+        {"pri": F.when(pri_valid, pri_num), "_after_pri": after_pri}
     )
 
     is5424 = F.col("_after_pri").startswith("1 ")
-    df = df.withColumn(
-        "protocol_version", F.when(is5424, F.lit(1)).otherwise(F.lit(0))
-    )
-
     # one regex pass per row: the variant's rewrite (groups → _SEP-
     # joined string) is its own column, so the match test and the split
     # below read it instead of re-running the regex
-    df = df.withColumn("_rew", F.when(
-        is5424, F.regexp_replace("_after_pri", _RE_5424, _REPL_5424)
-    ).otherwise(F.regexp_replace("_after_pri", _RE_3164, _REPL_3164)))
+    df = df.withColumns({
+        "facility": (F.col("pri") / 8).cast("int"),
+        "severity": F.col("pri") % 8,
+        "protocol_version": F.when(is5424, F.lit(1)).otherwise(F.lit(0)),
+        "_rew": F.when(
+            is5424, F.regexp_replace("_after_pri", _RE_5424, _REPL_5424)
+        ).otherwise(F.regexp_replace("_after_pri", _RE_3164, _REPL_3164)),
+    })
     # regexp_replace returns the input unchanged on no-match; _SEP can't
     # occur in sanitized input, so its presence IS the match flag
     rew = F.col("_rew")
@@ -227,22 +227,16 @@ def parse_sql(
     g = lambda i: F.try_element_at("_g", F.lit(i))  # noqa: E731
     dash_null = lambda c: F.when(c != "-", c)  # noqa: E731
 
-    df = (
-        df.withColumn("timereported_str", g(1))
-        .withColumn("hostname", g(2))
-        .withColumn("syslogtag", g(3))
-        .withColumn("procid", F.when(is5424, dash_null(g(4))))
-        .withColumn("msgid", F.when(is5424, dash_null(g(5))))
-        .withColumn("structured_data", F.when(is5424, g(6)))
-        .withColumn(
-            "msg",
-            F.when(is5424, F.coalesce(g(7), F.lit(""))).otherwise(g(4)),
-        )
-        .withColumn("parse_success", F.col("_g").isNotNull() & pri_valid)
-        .withColumn(
-            "programname",
-            F.regexp_extract("syslogtag", r"^([^:\[ ]*)", 1),
-        )
-        .drop("_after_pri", "_rew", "_g")
-    )
-    return df
+    df = df.withColumns({
+        "timereported_str": g(1),
+        "hostname": g(2),
+        "syslogtag": g(3),
+        "procid": F.when(is5424, dash_null(g(4))),
+        "msgid": F.when(is5424, dash_null(g(5))),
+        "structured_data": F.when(is5424, g(6)),
+        "msg": F.when(is5424, F.coalesce(g(7), F.lit(""))).otherwise(g(4)),
+        "parse_success": F.col("_g").isNotNull() & pri_valid,
+    })
+    return df.withColumn(
+        "programname", F.regexp_extract("syslogtag", r"^([^:\[ ]*)", 1)
+    ).drop("_after_pri", "_rew", "_g")

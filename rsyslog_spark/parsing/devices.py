@@ -4,8 +4,10 @@ The reference runs these as alternative parsers in a ruleset's parser
 chain (first non-COULD_NOT_PARSE wins, runtime/parser.c:613-686). Here
 they are post-parse fixups: each detects its device dialect on the
 already-decoded line and overrides the header columns for matching
-rows — a `when(matches, fixed).otherwise(original)` projection, so the
-chain stays one narrow stage.
+rows. :func:`_header_fixup` is the one fixup projection: a single
+``withColumns`` of ``when(hit, fixed).otherwise(original)`` per column
+plus ``parse_success``, so each fixup keeps only its detection and a
+``{column: value}`` map and the chain stays one narrow stage.
 """
 
 from __future__ import annotations
@@ -17,6 +19,17 @@ from pyspark.sql import functions as F
 # SanitizeMsg-sanitized input (same trick as mm.mmnormalize and the
 # header parser, parsing/core.py)
 _SEP = "\x01"
+
+
+def _strip_pri(raw_col: str) -> Column:
+    """The line after its ``<PRI>`` prefix — where every device
+    dialect's detection starts."""
+    return F.regexp_replace(F.col(raw_col), r"^<\d{1,3}>", "")
+
+
+def _nullif(c: Column) -> Column:
+    """Empty string → null."""
+    return F.when(c != "", c)
 
 
 def _rewrite_groups(df: DataFrame, src: Column, rx: str, n_groups: int,
@@ -47,6 +60,20 @@ def _rewrite_groups(df: DataFrame, src: Column, rx: str, n_groups: int,
 
     return df, F.col(f"{prefix}_hit"), g
 
+
+def _header_fixup(df: DataFrame, hit: Column, fields: dict[str, Column],
+                  drop: tuple[str, ...] = ()) -> DataFrame:
+    """The parser-chain decision for one dialect, as one projection:
+    rows where `hit` holds take `fields` (column → value) and count as
+    parsed; every other row keeps its columns (COULD_NOT_PARSE → next
+    parser). Every value reads the input frame. `drop` names the
+    dialect's helper columns."""
+    fields = {**fields, "parse_success": F.lit(True)}
+    return df.withColumns(
+        {c: F.when(hit, v).otherwise(F.col(c)) for c, v in fields.items()}
+    ).drop(*drop)
+
+
 # Cisco IOS: <PRI>SEQ: [host: ]*TS: %FAC-SEV-MNEMONIC: text
 # (plugins/pmciscoios/pmciscoios.c)
 _CISCO_RE = (
@@ -62,37 +89,16 @@ def pmciscoios(df: DataFrame, raw_col: str = "rawmsg") -> DataFrame:
     sequence number → cisco_seq, %FAC-SEV-MNEM → syslogtag/programname,
     device timestamp → timereported_str. Single regex pass per row
     (group-rewrite, see _rewrite_groups)."""
-    after = F.regexp_replace(F.col(raw_col), r"^<\d{1,3}>", "")
-    df, hit, g = _rewrite_groups(df, after, _CISCO_RE, 5, "_cisco")
-    nullif = lambda c: F.when(c != "", c)  # noqa: E731
-    return (
-        df.withColumn("cisco_seq", F.when(hit, g(1).cast("long")))
-        .withColumn(
-            "hostname",
-            F.when(hit, F.coalesce(nullif(g(2)), F.col("hostname")))
-            .otherwise(F.col("hostname")),
-        )
-        .withColumn(
-            "timereported_str",
-            F.when(hit, g(3)).otherwise(F.col("timereported_str")),
-        )
-        .withColumn(
-            "syslogtag",
-            F.when(hit, F.concat(g(4), F.lit(":"))).otherwise(
-                F.col("syslogtag")
-            ),
-        )
-        .withColumn(
-            "programname",
-            F.when(hit, g(4)).otherwise(F.col("programname")),
-        )
-        .withColumn("msg", F.when(hit, g(5)).otherwise(F.col("msg")))
-        .withColumn(
-            "parse_success",
-            F.when(hit, F.lit(True)).otherwise(F.col("parse_success")),
-        )
-        .drop("_cisco_hit", "_cisco_arr")
-    )
+    df, hit, g = _rewrite_groups(df, _strip_pri(raw_col), _CISCO_RE, 5,
+                                 "_cisco")
+    df = df.withColumn("cisco_seq", F.when(hit, g(1).cast("long")))
+    return _header_fixup(df, hit, {
+        "hostname": F.coalesce(_nullif(g(2)), F.col("hostname")),
+        "timereported_str": g(3),
+        "syslogtag": F.concat(g(4), F.lit(":")),
+        "programname": g(4),
+        "msg": g(5),
+    }, drop=("_cisco_hit", "_cisco_arr"))
 
 
 _LASTMSG = "last message repeated"
@@ -101,43 +107,32 @@ _LASTMSG = "last message repeated"
 def pmlastmsg(df: DataFrame, raw_col: str = "rawmsg") -> DataFrame:
     """'last message repeated n times' lines (plugins/pmlastmsg): the
     whole remainder is MSG, no tag; repeat count extracted."""
-    after = F.regexp_replace(F.col(raw_col), r"^<\d{1,3}>", "")
+    after = _strip_pri(raw_col)
     # header (ts + host) may precede the phrase
     phrase_at = F.instr(after, _LASTMSG)
     hit = phrase_at > 0
     n = F.regexp_extract(
         after, r"last message repeated (\d+) times", 1
     )
-    return (
-        df.withColumn(
-            "repeat_count", F.when(hit & (n != ""), n.cast("long"))
-        )
-        .withColumn(
-            "msg",
-            F.when(hit, after.substr(phrase_at, F.length(after))).otherwise(
-                F.col("msg")
-            ),
-        )
-        .withColumn(
-            "syslogtag", F.when(~hit, F.col("syslogtag"))
-        )
-        .withColumn(
-            "parse_success",
-            F.when(hit, F.lit(True)).otherwise(F.col("parse_success")),
-        )
+    df = df.withColumn(
+        "repeat_count", F.when(hit & (n != ""), n.cast("long"))
     )
+    return _header_fixup(df, hit, {
+        "msg": after.substr(phrase_at, F.length(after)),
+        "syslogtag": F.lit(None).cast("string"),
+    })
 
 
 def pmnull(df: DataFrame, raw_col: str = "rawmsg") -> DataFrame:
     """plugins/pmnull: take everything after PRI as MSG, no header."""
-    after = F.regexp_replace(F.col(raw_col), r"^<\d{1,3}>", "")
-    return (
-        df.withColumn("msg", after)
-        .withColumn("hostname", F.lit(None).cast("string"))
-        .withColumn("syslogtag", F.lit(None).cast("string"))
-        .withColumn("timereported_str", F.lit(None).cast("string"))
-        .withColumn("parse_success", F.lit(True))
-    )
+    none = F.lit(None).cast("string")
+    return df.withColumns({
+        "msg": _strip_pri(raw_col),
+        "hostname": none,
+        "syslogtag": none,
+        "timereported_str": none,
+        "parse_success": F.lit(True),
+    })
 
 
 def parser_chain(df: DataFrame, fixups: list) -> DataFrame:
@@ -173,53 +168,29 @@ def pmnormalize(
     )
     matched = F.col("_pmn_rule") >= 0
     got = lambda k: F.try_element_at("_pmn", F.lit(k))  # noqa: E731
-
-    def promote(col_name: str, key: str, cast: str | None = None):
-        nonlocal out
-        if col_name not in out.columns:
-            out = out.withColumn(col_name, F.lit(None).cast(cast or "string"))
-        val = got(key)
-        if cast:
-            val = val.try_cast(cast)
-        out = out.withColumn(
-            col_name,
-            F.when(matched & val.isNotNull(), val).otherwise(
-                F.col(col_name)
-            ),
-        )
-
-    promote("msg", "msg")
-    promote("hostname", "hostname")
-    promote("syslogtag", "syslogtag")
-    promote("procid", "procid")
-    promote("msgid", "msgid")
-    promote("pri", "pri", "int")
-    pri_val = got("pri").try_cast("int")
-    has_pri = matched & pri_val.isNotNull()
-    for name, expr in (
-        ("facility", (pri_val / 8).cast("int")),
-        ("severity", pri_val % 8),
-    ):
-        if name not in out.columns:
-            out = out.withColumn(name, F.lit(None).cast("int"))
-        out = out.withColumn(
-            name, F.when(has_pri, expr).otherwise(F.col(name))
-        )
+    pri = got("pri").try_cast("int")
     tag = got("syslogtag")
-    has_tag = matched & tag.isNotNull()
-    if "programname" not in out.columns:
-        out = out.withColumn("programname", F.lit(None).cast("string"))
-    out = out.withColumn(
-        "programname",
-        F.when(has_tag, F.regexp_extract(tag, r"^([^:\[ ]*)", 1)).otherwise(
-            F.col("programname")
-        ),
-    )
-    return (
-        out.withColumn("pmn_matched", matched)
-        .withColumn("norm", F.col("_pmn"))
-        .drop("_pmn", "_pmn_rule")
-    )
+    # column → (type, promoted value); a null value keeps the column
+    promoted = {
+        "msg": ("string", got("msg")),
+        "hostname": ("string", got("hostname")),
+        "syslogtag": ("string", tag),
+        "procid": ("string", got("procid")),
+        "msgid": ("string", got("msgid")),
+        "pri": ("int", pri),
+        "facility": ("int", (pri / 8).cast("int")),
+        "severity": ("int", pri % 8),
+        "programname": ("string", F.regexp_extract(tag, r"^([^:\[ ]*)", 1)),
+    }
+    cols = {
+        c: F.when(matched & v.isNotNull(), v).otherwise(
+            F.col(c) if c in out.columns else F.lit(None).cast(t)
+        )
+        for c, (t, v) in promoted.items()
+    }
+    return out.withColumns(
+        {**cols, "pmn_matched": matched, "norm": F.col("_pmn")}
+    ).drop("_pmn", "_pmn_rule")
 
 
 # --- round-3 contrib tail (VERDICT r2 next #6) -------------------------------
@@ -242,47 +213,24 @@ def pmsnare(df: DataFrame, raw_col: str = "rawmsg") -> DataFrame:
     header columns directly: tag → syslogtag/programname, the
     still-tab-separated payload → msg (mmsnareparse's input), and a
     ``snare`` flag."""
-    after = F.regexp_replace(F.col(raw_col), r"^<\d{1,3}>", "")
+    after = _strip_pri(raw_col)
     # headerless: hostname<TAB>TAG<TAB>payload  (pmsnare.c:320-345)
     rx_hdrless = rf"^([^ \t]+){_SNARE_TAB}{_SNARE_TAGS}{_SNARE_TAB}(.*)$"
     # syslog-framed: TS host TAG<TAB>payload    (pmsnare.c:363-396)
     rx_syslog = rf"^{_TS3164} (\S+) {_SNARE_TAGS}{_SNARE_TAB}(.*)$"
-    df, hit_h0, g_h = _rewrite_groups(df, after, rx_hdrless, 3, "_snh")
-    df, hit_s0, g_s = _rewrite_groups(df, after, rx_syslog, 4, "_sns")
-    hit_h = hit_h0
-    hit_s = (~hit_h0) & hit_s0
+    df, hit_h, g_h = _rewrite_groups(df, after, rx_hdrless, 3, "_snh")
+    df, hit_s, g_s = _rewrite_groups(df, after, rx_syslog, 4, "_sns")
     hit = hit_h | hit_s
-    tag = F.when(hit_h, g_h(2)).otherwise(g_s(3))
-    return (
-        df.withColumn("snare", hit)
-        .withColumn(
-            "hostname",
-            F.when(hit_h, g_h(1)).when(hit_s, g_s(2)).otherwise(
-                F.col("hostname")
-            ),
-        )
-        .withColumn(
-            "timereported_str",
-            F.when(hit_s, g_s(1))
-            .when(hit_h, F.lit(None))
-            .otherwise(F.col("timereported_str")),
-        )
-        .withColumn(
-            "syslogtag", F.when(hit, tag).otherwise(F.col("syslogtag"))
-        )
-        .withColumn(
-            "programname", F.when(hit, tag).otherwise(F.col("programname"))
-        )
-        .withColumn(
-            "msg",
-            F.when(hit_h, g_h(3)).when(hit_s, g_s(4)).otherwise(F.col("msg")),
-        )
-        .withColumn(
-            "parse_success",
-            F.when(hit, F.lit(True)).otherwise(F.col("parse_success")),
-        )
-        .drop("_snh_hit", "_snh_arr", "_sns_hit", "_sns_arr")
-    )
+    # a headerless match wins over a syslog-framed one
+    pick = lambda h, s: F.when(hit_h, h).otherwise(s)  # noqa: E731
+    tag = pick(g_h(2), g_s(3))
+    return _header_fixup(df.withColumn("snare", hit), hit, {
+        "hostname": pick(g_h(1), g_s(2)),
+        "timereported_str": pick(F.lit(None), g_s(1)),
+        "syslogtag": tag,
+        "programname": tag,
+        "msg": pick(g_h(3), g_s(4)),
+    }, drop=("_snh_hit", "_snh_arr", "_sns_hit", "_sns_arr"))
 
 
 def pmaixforwardedfrom(df: DataFrame, raw_col: str = "rawmsg") -> DataFrame:
@@ -292,38 +240,19 @@ def pmaixforwardedfrom(df: DataFrame, raw_col: str = "rawmsg") -> DataFrame:
     preamble and the extra colon so `host` parses as HOSTNAME
     (pmaixforwardedfrom.c:69-137). Fixup: hostname/tag/msg re-derived
     for matching rows."""
-    after = F.regexp_replace(F.col(raw_col), r"^<\d{1,3}>", "")
     rx = (
         rf"^{_TS3164} (?:[Mm]essage forwarded from |[Ff]rom )"
         r"([^: ]+): (?:([^ :\[]+(?:\[\d+\])?:) )?(.*)$"
     )
-    df, hit, g = _rewrite_groups(df, after, rx, 4, "_aix")
-    nullif = lambda c: F.when(c != "", c)  # noqa: E731
-    return (
-        df.withColumn(
-            "hostname", F.when(hit, g(2)).otherwise(F.col("hostname"))
-        )
-        .withColumn(
-            "timereported_str",
-            F.when(hit, g(1)).otherwise(F.col("timereported_str")),
-        )
-        .withColumn(
-            "syslogtag",
-            F.when(hit, nullif(g(3))).otherwise(F.col("syslogtag")),
-        )
-        .withColumn(
-            "programname",
-            F.when(
-                hit, F.regexp_extract(nullif(g(3)), r"^([^:\[ ]*)", 1)
-            ).otherwise(F.col("programname")),
-        )
-        .withColumn("msg", F.when(hit, g(4)).otherwise(F.col("msg")))
-        .withColumn(
-            "parse_success",
-            F.when(hit, F.lit(True)).otherwise(F.col("parse_success")),
-        )
-        .drop("_aix_hit", "_aix_arr")
-    )
+    df, hit, g = _rewrite_groups(df, _strip_pri(raw_col), rx, 4, "_aix")
+    tag = _nullif(g(3))
+    return _header_fixup(df, hit, {
+        "hostname": g(2),
+        "timereported_str": g(1),
+        "syslogtag": tag,
+        "programname": F.regexp_extract(tag, r"^([^:\[ ]*)", 1),
+        "msg": g(4),
+    }, drop=("_aix_hit", "_aix_arr"))
 
 
 # db2diag level word → syslog severity (pmdb2diag.c:104-138)
@@ -347,7 +276,7 @@ def pmdb2diag(
     digits after the first ':' past the level (pmdb2diag.c:176-188),
     programname = pid start + shift up to space/backslash
     (pmdb2diag.c:190-207), timereported_str from timepos."""
-    after = F.regexp_replace(F.col(raw_col), r"^<\d{1,3}>", "")
+    after = _strip_pri(raw_col)
     lvl_zone = F.substr(after, F.lit(levelpos + 1))
     # fixed-length word compare like the reference (pmdb2diag.c reads
     # lvl_len chars, no word boundary — the next section may abut)
@@ -370,29 +299,12 @@ def pmdb2diag(
     pid_start = F.instr(past_level, ":") + 2
     prog_zone = F.substr(past_level, pid_start + F.lit(pid_to_prog_shift))
     prog = F.regexp_extract(prog_zone, r"^([^ \\]+)", 1)
-    nullif = lambda c: F.when(c != "", c)  # noqa: E731
-    return (
-        df.withColumn(
-            "severity", F.when(hit, sev).otherwise(F.col("severity"))
-        )
-        .withColumn(
-            "procid", F.when(hit, nullif(pid)).otherwise(F.col("procid"))
-        )
-        .withColumn(
-            "programname",
-            F.when(hit, nullif(prog)).otherwise(F.col("programname")),
-        )
-        .withColumn(
-            "timereported_str",
-            F.when(hit & (ts != ""), ts).otherwise(
-                F.col("timereported_str")
-            ),
-        )
-        .withColumn(
-            "parse_success",
-            F.when(hit, F.lit(True)).otherwise(F.col("parse_success")),
-        )
-    )
+    return _header_fixup(df, hit, {
+        "severity": sev,
+        "procid": _nullif(pid),
+        "programname": _nullif(prog),
+        "timereported_str": F.coalesce(_nullif(ts), F.col("timereported_str")),
+    })
 
 
 _PAN_TYPES = (
@@ -444,10 +356,8 @@ def pmpanngfw(df: DataFrame, msg_col: str = "msg") -> DataFrame:
         "",
     )
     out = F.when(hit, tsv)
-    return (
-        df.withColumn("pan", hit)
-        .withColumn("pan_tsv", out)
-        .withColumn(msg_col, F.coalesce(out, msg))
+    return df.withColumns(
+        {"pan": hit, "pan_tsv": out, msg_col: F.coalesce(out, msg)}
     )
 
 
@@ -496,10 +406,11 @@ def mmleefparse(
         seg(4).alias("product_version"),
         seg(5).alias("event_id"),
     )
-    return df.withColumn(
-        out_col, F.when(hit, F.struct(header.alias("header"),
-                                      fields.alias("fields")))
-    ).withColumn("leef_success", hit)
+    return df.withColumns({
+        out_col: F.when(hit, F.struct(header.alias("header"),
+                                      fields.alias("fields"))),
+        "leef_success": hit,
+    })
 
 
 def _na(c: Column) -> Column:
@@ -538,17 +449,14 @@ def mmsnareparse(
         F.when(is5424, t(3).try_cast("long")).alias("RecordNumber"),
         _na(desc).alias("Description"),
     )
-    return (
-        df.withColumn(out_col, F.when(hit, struct))
-        .withColumn("win_success", hit)
+    return df.withColumns({
+        out_col: F.when(hit, struct),
+        "win_success": hit,
         # the description's per-section key/values, 'Section.Key'-
         # flattened (the reference's nested JSON shape is one
         # mm.mmjsontransform(mode='unflatten') away)
-        .withColumn(
-            "win_fields",
-            F.when(hit, snare_description_fields(desc)),
-        )
-    )
+        "win_fields": F.when(hit, snare_description_fields(desc)),
+    })
 
 
 def pmcisconames(df: DataFrame, raw_col: str = "rawmsg") -> DataFrame:
@@ -558,37 +466,20 @@ def pmcisconames(df: DataFrame, raw_col: str = "rawmsg") -> DataFrame:
     the 3164 parser sees ``TS host %FAC-SEV-MNEM: msg``; this fixup
     assigns those parse results directly. Both the 16-char and the
     21-char (year) timestamps are accepted (pmcisconames.c:48-76)."""
-    after = F.regexp_replace(F.col(raw_col), r"^<\d{1,3}>", "")
     rx = (
         r"^((?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec)"
         r" (?: \d|\d\d)(?: \d{4})? \d{2}:\d{2}:\d{2}) (\S+) : "
         r"(%[A-Z0-9_-]+-\d-[A-Z0-9_]+):\s?(.*)$"
     )
-    df, hit, g = _rewrite_groups(df, F.ltrim(after), rx, 4, "_cnam")
-    return (
-        df.withColumn(
-            "timereported_str",
-            F.when(hit, g(1)).otherwise(F.col("timereported_str")),
-        )
-        .withColumn(
-            "hostname", F.when(hit, g(2)).otherwise(F.col("hostname"))
-        )
-        .withColumn(
-            "syslogtag",
-            F.when(hit, F.concat(g(3), F.lit(":"))).otherwise(
-                F.col("syslogtag")
-            ),
-        )
-        .withColumn(
-            "programname", F.when(hit, g(3)).otherwise(F.col("programname"))
-        )
-        .withColumn("msg", F.when(hit, g(4)).otherwise(F.col("msg")))
-        .withColumn(
-            "parse_success",
-            F.when(hit, F.lit(True)).otherwise(F.col("parse_success")),
-        )
-        .drop("_cnam_hit", "_cnam_arr")
-    )
+    df, hit, g = _rewrite_groups(df, F.ltrim(_strip_pri(raw_col)), rx, 4,
+                                 "_cnam")
+    return _header_fixup(df, hit, {
+        "timereported_str": g(1),
+        "hostname": g(2),
+        "syslogtag": F.concat(g(3), F.lit(":")),
+        "programname": g(3),
+        "msg": g(4),
+    }, drop=("_cnam_hit", "_cnam_arr"))
 
 
 def mmsnmptrapd(
@@ -619,22 +510,15 @@ def mmsnmptrapd(
         sev_code = F.when(sev_str == name.lower(), F.lit(code)).otherwise(
             sev_code
         )
-    # the tag rewrite must come LAST: F.col(tag_col) inside hit/host
-    # resolves against the frame each withColumn sees, so rewriting the
-    # tag first would make every later condition read the NEW tag
-    return (
-        df.withColumn(
-            "hostname",
-            F.when(hit & (host != ""), host).otherwise(F.col("hostname")),
-        )
-        .withColumn(
-            "severity",
-            F.when(hit & sev_code.isNotNull(), sev_code).otherwise(
-                F.col("severity")
-            ),
-        )
-        .withColumn(tag_col, F.when(hit, F.lit(tag_name)).otherwise(tag))
-    )
+    return df.withColumns({
+        "hostname": F.when(hit & (host != ""), host).otherwise(
+            F.col("hostname")
+        ),
+        "severity": F.when(hit & sev_code.isNotNull(), sev_code).otherwise(
+            F.col("severity")
+        ),
+        tag_col: F.when(hit, F.lit(tag_name)).otherwise(tag),
+    })
 
 
 # mmaitag default label set (doc/source/configuration/modules/mmaitag.rst)
@@ -1209,16 +1093,16 @@ def snare_event_metadata(
     win_valid = F.when(
         ev.isin(4624, 4625), F.coalesce(required_ok, F.lit(False))
     ).otherwise(F.lit(True))
-    return (
-        df.withColumn("win_event", win_event)
-        .withColumn("win_logon", win_logon)
-        .withColumn("win_process", win_process)
-        .withColumn("win_privileges", win_privileges)
-        .withColumn("win_kerberos", win_kerberos)
-        .withColumn("win_rcg", win_rcg)
-        .withColumn("win_laps", win_laps)
-        .withColumn("win_tls", win_tls)
-        .withColumn("win_wdac", win_wdac)
-        .withColumn("win_wufb", win_wufb)
-        .withColumn("win_valid", win_valid)
-    )
+    return df.withColumns({
+        "win_event": win_event,
+        "win_logon": win_logon,
+        "win_process": win_process,
+        "win_privileges": win_privileges,
+        "win_kerberos": win_kerberos,
+        "win_rcg": win_rcg,
+        "win_laps": win_laps,
+        "win_tls": win_tls,
+        "win_wdac": win_wdac,
+        "win_wufb": win_wufb,
+        "win_valid": win_valid,
+    })

@@ -402,14 +402,11 @@ def parse_full(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     12µs/row). parse_line remains the executable spec, enforced equal
     by the fuzz differential test."""
     parsed = df.withColumn("_p", _parse_tokens_udf(F.col(tokens_col)))
-    for f in PARSE_SCHEMA.fields:
-        parsed = parsed.withColumn(f.name, F.col(f"_p.{f.name}"))
-    parsed = parsed.drop("_p")
-    parsed = (
-        parsed.withColumn("facility", (F.col("pri") / 8).cast("int"))
-        .withColumn("severity", F.col("pri") % 8)
-        .withColumn(
-            "programname", F.regexp_extract("syslogtag", r"^([^:\[ ]*)", 1)
-        )
-    )
-    return parsed
+    parsed = parsed.withColumns(
+        {f.name: F.col(f"_p.{f.name}") for f in PARSE_SCHEMA.fields}
+    ).drop("_p")
+    return parsed.withColumns({
+        "facility": (F.col("pri") / 8).cast("int"),
+        "severity": F.col("pri") % 8,
+        "programname": F.regexp_extract("syslogtag", r"^([^:\[ ]*)", 1),
+    })

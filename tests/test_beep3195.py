@@ -1,7 +1,10 @@
 """im3195 / BEEP RAW profile: frame codec, channel-0 dialog, and the
 device→collector message stream over a real socket."""
 
+import os
 import socket
+import subprocess
+import sys
 import time
 
 import pytest
@@ -86,3 +89,31 @@ def test_raw_profile_rejects_unknown_profile(tmp_path):
             assert b'code="550"' in got[0]["payload"]
     finally:
         lst.close()
+
+
+def test_raw_sessions_lose_nothing_under_cpu_contention(tmp_path):
+    """The sender half-closes after NUL and reads the collector's
+    pending SEQ frames until EOF: closing with them unread makes the
+    kernel reset the connection and drop the frames still unsent, which
+    shows as lost messages once the CPUs are busy."""
+    nproc = len(os.sched_getaffinity(0))
+    busy = [
+        subprocess.Popen([sys.executable, "-c", "while True: pass"])
+        for _ in range(min(nproc + 2, 2 * nproc))
+    ]
+    lst = Im3195Listener(str(tmp_path / "s"))
+    try:
+        for i in range(100):
+            send_3195_raw("127.0.0.1", lst.port, [
+                f"<13>session {i} message {j}".encode() for j in range(3)
+            ])
+        deadline = time.time() + 10
+        while lst.n_messages < 300 and time.time() < deadline:
+            time.sleep(0.05)
+        assert lst.n_messages == 300
+    finally:
+        lst.close()
+        for p in busy:
+            p.kill()
+        for p in busy:
+            p.wait()

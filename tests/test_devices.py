@@ -84,6 +84,33 @@ def test_pmnormalize_promotes_fields(spark):
     assert not rows[1].pmn_matched and rows[1].hostname is None
 
 
+def test_pmnormalize_keeps_parsed_header_of_unmatched_rows(spark):
+    """Over a parse()d frame the promoted columns already exist: a
+    matched row takes the rulebase's fields, an unmatched row keeps
+    every header column the RFC parser gave it."""
+    from rsyslog_spark import mm
+    from rsyslog_spark.parsing.devices import pmnormalize
+
+    rules = mm.load_rulebase(
+        r"rule=:<%pri:number%> %hostname:word% %syslogtag:char-to:\x3a%: "
+        r"is no longer listening on %peer:ipv4% %msg:rest%"
+    )
+    lines = [
+        "<38> server1 sshd[42]: is no longer listening on 10.0.0.7 port 22",
+        "<165>Apr  4 03:06:12 gate cron[7]: job done",
+    ]
+    rows = {r.line: r for r in pmnormalize(
+        parse(_tok(spark, lines)), rules
+    ).collect()}
+    hit, miss = rows[lines[0]], rows[lines[1]]
+    assert hit.pmn_matched and hit.hostname == "server1"
+    assert hit.facility == 4 and hit.programname == "sshd"
+    assert not miss.pmn_matched and miss.norm is None
+    assert miss.hostname == "gate" and miss.facility == 20
+    assert miss.severity == 5 and miss.syslogtag == "cron[7]:"
+    assert miss.programname == "cron" and miss.msg == " job done"
+
+
 def _parsed(spark, lines):
     df = spark.createDataFrame([(s,) for s in lines], "line string")
     from pyspark.sql import functions as F

@@ -199,3 +199,10 @@ def test_plan_text_strips_session_ids():
     assert bench_extra._plan_text(stub_df(cold)) == bench_extra._plan_text(
         stub_df(warm)
     ) == "(3) Scan [id] MapPartitionsRDD at x, "
+    # lambda variables are numbered session-wide too; a column that only
+    # ends in a digit run keeps it
+    cold = "transform(a#3, lambdafunction(x_12#40 + y_13, x_12#40)) AS max_1"
+    warm = "transform(a#9, lambdafunction(x_2#17 + y_3, x_2#17)) AS max_1"
+    assert bench_extra._plan_text(stub_df(cold)) == bench_extra._plan_text(
+        stub_df(warm)
+    ) == "transform(a, lambdafunction(x_ + y_, x_)) AS max_1"

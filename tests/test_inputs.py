@@ -201,5 +201,6 @@ def test_immark_heartbeat(tmp_path):
         m.close()
     lines = []
     for fp in glob.glob(spool + "/*.log"):
-        lines += open(fp, "rb").read().splitlines()
+        with open(fp, "rb") as fh:
+            lines += fh.read().splitlines()
     assert lines and set(lines) == {b"<46>-- MARK --"}
