@@ -33,7 +33,7 @@ import socket
 import struct
 from typing import Any
 
-from rsyslog_spark.net import send_partitions
+from rsyslog_spark.net import _close_drained, send_partitions
 
 # §1.6 primitive format codes
 _NULL, _TRUE, _FALSE, _BOOL = 0x40, 0x41, 0x42, 0x56
@@ -502,7 +502,7 @@ class Amqp1Sender:
             self.sock.sendall(frame(0, Described(P_CLOSE, [])))
         except OSError:
             pass
-        self.sock.close()
+        _close_drained(self.sock)  # its close and flow frames sit unread
 
 
 def omamqp1_deliver(

@@ -275,9 +275,10 @@ class BeatsListener(_TcpListener):
                  port: int = 0, rotate_every: int = 10_000,
                  **parser_opts) -> None:
         self.parser_opts = parser_opts
-        self.n_events = 0
         self.n_batches = 0
         super().__init__(spool_dir, host, port, rotate_every)
+
+    n_events = property(lambda self: self.n_received)
 
     def _session(self, conn, peer, spool) -> None:
         parser = LumberjackParser(**self.parser_opts)
@@ -300,8 +301,8 @@ class BeatsListener(_TcpListener):
                 spool.sync()
                 conn.sendall(ack)  # ack AFTER the durable write
                 with self._lock:
-                    self.n_events += len(batch)
                     self.n_batches += 1
+                self._count(len(batch))
 
 
 def beats_spool_columns(line: Column) -> list[Column]:

@@ -25,14 +25,11 @@ imbeats); the parse stage downstream is the ordinary pipeline."""
 from __future__ import annotations
 
 import socket
-import time
 
-from rsyslog_spark.net import _TcpListener
+from rsyslog_spark.net import _close_drained, _TcpListener
 
 RAW_PROFILE_URI = "http://iana.org/beep/SYSLOG/RAW"
 _BEEP_CT = b"Content-Type: application/beep+xml\r\n\r\n"
-# how long the sender waits, after NUL, for the collector to close
-_DRAIN_S = 5.0
 
 
 def beep_frame(
@@ -107,16 +104,19 @@ class BeepParser:
 class Im3195Listener(_TcpListener):
     """RFC 3195 RAW collector: greeting → channel start (RAW profile)
     → collector MSG → device ANS stream (one syslog message per
-    frame, spooled write-first) → NUL completes the exchange. Accept,
-    session threads and the per-session spool come from
-    :class:`rsyslog_spark.net._TcpListener`."""
+    frame, spooled write-first) → NUL completes the exchange;
+    ``n_incomplete`` counts sessions that end before it (EOF, reset or
+    ``close()``), so a lost tail shows. Accept, session threads and the
+    per-session spool come from :class:`rsyslog_spark.net._TcpListener`."""
 
     spool_prefix = "beep"
 
     def __init__(self, spool_dir: str, host: str = "127.0.0.1",
                  port: int = 0) -> None:
-        self.n_messages = 0
+        self.n_incomplete = 0
         super().__init__(spool_dir, host, port, rotate_every=10_000)
+
+    n_messages = property(lambda self: self.n_received)
 
     def _session(self, conn: socket.socket, peer, spool) -> None:
         parser = BeepParser()
@@ -158,8 +158,7 @@ class Im3195Listener(_TcpListener):
                         and fr["channel"] == raw_channel):
                     # one syslog message per ANS payload
                     spool.write(fr["payload"])
-                    with self._lock:
-                        self.n_messages += 1
+                    self._count()
                     try:
                         # window update is advisory — the peer may
                         # already have sent NUL and closed
@@ -172,6 +171,8 @@ class Im3195Listener(_TcpListener):
                 elif (fr["kind"] == "NUL"
                         and fr["channel"] == raw_channel):
                     return  # exchange complete
+        with self._lock:  # EOF, reset or close() before NUL
+            self.n_incomplete += 1
 
 
 def send_3195_raw(host: str, port: int, msgs: list[bytes],
@@ -179,10 +180,10 @@ def send_3195_raw(host: str, port: int, msgs: list[bytes],
     """Device/relay side of the RAW dialog (the liblogging sender
     analog, for tests and loopback delivery): greeting exchange,
     channel start, then one ANS per message answering the collector's
-    MSG, closed with NUL, then half-closes and reads the collector's
-    SEQ frames until it closes (at most ``_DRAIN_S``): a close with
-    them unread makes the kernel reset the connection and drop the
-    frames not yet sent. Returns the number of messages sent."""
+    MSG, closed with NUL, then a drained close
+    (:func:`rsyslog_spark.net._close_drained`), since the collector's
+    SEQ frames are still unread. Returns the number of messages
+    sent."""
     parser = BeepParser()
     with socket.create_connection((host, port)) as s:
         seq0 = 0
@@ -221,13 +222,5 @@ def send_3195_raw(host: str, port: int, msgs: list[bytes],
             seq += len(m)
         s.sendall(beep_frame(
             "NUL", channel, collector_msg["msgno"], seq, b""))
-        s.shutdown(socket.SHUT_WR)
-        deadline = time.monotonic() + _DRAIN_S
-        try:
-            while (left := deadline - time.monotonic()) > 0:
-                s.settimeout(left)
-                if not s.recv(65536):
-                    break
-        except OSError:
-            pass  # timed out or reset: nothing left to wait for
+        _close_drained(s)
     return len(msgs)

@@ -20,11 +20,11 @@ share, so each protocol module only encodes:
 
 - :class:`_SpoolWriter` — the thread-safe, rotating spool every input
   writes through;
-- :class:`_TcpListener` — bind, accept thread, per-session threads and
-  spools for imtcp, imrelp, imbeats and im3195;
-- :class:`_SpooledSource` — one spool, one counter, one pump thread
-  and an idempotent close for imudp, imuxsock, imhttp, improg, immark
-  and imfifo;
+- :class:`_SpooledSource` — the one input lifecycle: a spool, a
+  counter, a pump thread and an idempotent close, for imudp, imuxsock,
+  imhttp, improg, immark and imfifo, and through :class:`_TcpListener`
+  (whose pump accepts and runs one thread and spool per session) for
+  imtcp, imrelp, imbeats and im3195;
 - :func:`_deliver` — the executor-side open / send / finish / close
   loop, with two report shapes: :func:`partition_sender` (one summed
   row per partition) behind omfwd, omuxsock, omsnmp, omczmq,
@@ -32,7 +32,10 @@ share, so each protocol module only encodes:
   :func:`row_sender` (columns appended to each row) behind omrelp,
   omprog, mmdarwin, omhttp and omelasticsearch;
 - :func:`_recv_exact` — the exact-length socket read of the Darwin and
-  ZMTP clients.
+  ZMTP clients;
+- :func:`_close_drained` — half-close, bounded drain, close: for a
+  client whose peer writes replies it does not read (im3195's sender,
+  omamqp1, omfwd over TLS).
 
 Both TCP ends take a :class:`rsyslog_spark.tls.TlsConfig` to run the
 reference's stream-driver TLS layer (StreamDriver.Mode=1 with
@@ -217,85 +220,13 @@ class _SpoolWriter:
                 self._f.close()
 
 
-class _TcpListener:
-    """The TCP input core shared by imtcp, imrelp, imbeats and im3195
-    (the reference's tcpsrv.c + runtime/tcps_sess.c): bind, listen,
-    one accept thread, one thread per session numbered by ``sid``, and
-    :meth:`close`. Each session spools through its own
-    :class:`_SpoolWriter` ``<spool_prefix>-<sid>``; a subclass sets
-    ``spool_prefix`` and implements only
-    ``_session(conn, peer, spool)``, reading with :meth:`_chunks`."""
-
-    spool_prefix = "tcp"
-
-    def __init__(self, spool_dir: str, host: str, port: int,
-                 rotate_every: int) -> None:
-        import os
-        import socket as socketlib
-        import threading
-
-        os.makedirs(spool_dir, exist_ok=True)
-        self.spool_dir = spool_dir
-        self.rotate_every = rotate_every
-        self._lock = threading.Lock()  # counters; sessions are threads
-        self._n_sessions = 0
-        self._srv = socketlib.create_server((host, port), backlog=16)
-        self.port = self._srv.getsockname()[1]
-        threading.Thread(target=self._serve, daemon=True).start()
-
-    def _serve(self) -> None:
-        import threading
-
-        while True:
-            try:
-                conn, peer = self._srv.accept()
-            except OSError:
-                return
-            with self._lock:
-                self._n_sessions += 1
-                sid = self._n_sessions
-            threading.Thread(
-                target=self._run_session, args=(conn, peer, sid),
-                daemon=True,
-            ).start()
-
-    def _run_session(self, conn, peer, sid: int) -> None:
-        spool = _SpoolWriter(
-            self.spool_dir, f"{self.spool_prefix}-{sid:04d}",
-            self.rotate_every,
-        )
-        try:
-            with conn:
-                self._session(conn, peer, spool)
-        finally:
-            spool.close()
-
-    def _session(self, conn, peer, spool: _SpoolWriter) -> None:
-        raise NotImplementedError
-
-    @staticmethod
-    def _chunks(conn) -> Iterator[bytes]:
-        """Received bytes until the peer closes or the socket fails."""
-        while True:
-            try:
-                data = conn.recv(65536)
-            except OSError:
-                return
-            if not data:
-                return
-            yield data
-
-    def close(self) -> None:
-        self._srv.close()
-
-
 class _SpooledSource:
-    """The input core shared by imudp, imuxsock, imhttp, improg, immark
-    and imfifo (runInput on its own thread, ended by thrdTerminate and
-    afterRun — runtime/threads.c): one :class:`_SpoolWriter`, a locked
-    ``n_received`` bumped by :meth:`_emit`, one daemon thread running
-    the subclass's ``_pump()``, and :meth:`close`. A subclass sets up
-    and validates its own state, then calls this ``__init__``."""
+    """The one input core (runInput on its own thread, ended by
+    thrdTerminate and afterRun — runtime/threads.c): one
+    :class:`_SpoolWriter`, a locked ``n_received`` bumped by
+    :meth:`_count`, one daemon thread running the subclass's
+    ``_pump()``, and :meth:`close`. A subclass sets up and validates
+    its own state, then calls this ``__init__``."""
 
     spool_prefix = ""
 
@@ -310,10 +241,13 @@ class _SpooledSource:
         self._thread = threading.Thread(target=self._pump, daemon=True)
         self._thread.start()
 
+    def _count(self, n: int = 1) -> None:
+        with self._lock:
+            self.n_received += n
+
     def _emit(self, msg: bytes) -> None:
         self._spool.write(msg)
-        with self._lock:
-            self.n_received += 1
+        self._count()
 
     def _ready(self, fd) -> Iterator[None]:
         """Yield each time ``fd`` is readable, until :meth:`close` sets
@@ -363,6 +297,75 @@ class _SpooledSource:
         self._spool.close()
 
 
+class _TcpListener(_SpooledSource):
+    """The TCP pump of imtcp, imrelp, imbeats and im3195 (the
+    reference's tcpsrv.c + runtime/tcps_sess.c): accept, and run each
+    session on its own thread with its own spool
+    ``<spool_prefix>-<sid>``. Once
+    :meth:`close` begins it stops accepting and joins the sessions,
+    which see the stop within their sockets' 0.1 s timeout and close
+    their spools. A subclass implements only
+    ``_session(conn, peer, spool)``, waiting through :meth:`_polled`."""
+
+    spool_prefix = "tcp"
+
+    def __init__(self, spool_dir: str, host: str = "127.0.0.1",
+                 port: int = 0, rotate_every: int = 10_000) -> None:
+        import socket as socketlib
+
+        self._srv = socketlib.create_server((host, port), backlog=16)
+        self.port = self._srv.getsockname()[1]
+        super().__init__(spool_dir, rotate_every)
+
+    def _pump(self) -> None:
+        import threading
+
+        sessions: list[threading.Thread] = []
+        with self._srv:
+            for sid, _ in enumerate(self._ready(self._srv), 1):
+                try:
+                    conn, peer = self._srv.accept()
+                except OSError:
+                    break
+                t = threading.Thread(target=self._run_session,
+                                     args=(conn, peer, sid), daemon=True)
+                t.start()
+                sessions = [s for s in sessions if s.is_alive()] + [t]
+        for t in sessions:
+            t.join()
+
+    def _run_session(self, conn, peer, sid: int) -> None:
+        spool = _SpoolWriter(
+            self._spool.dir, f"{self.spool_prefix}-{sid:04d}",
+            self._spool.rotate,
+        )
+        conn.settimeout(0.1)
+        try:
+            with conn:
+                self._session(conn, peer, spool)
+        finally:
+            spool.close()
+
+    def _polled(self, op, *args):
+        """``op(*args)`` on a session socket, called again while it
+        times out; once :meth:`close` begins the timeout is raised."""
+        while True:
+            try:
+                return op(*args)
+            except TimeoutError:
+                if self._stopping.is_set():
+                    raise
+
+    def _chunks(self, conn) -> Iterator[bytes]:
+        """Received bytes until the peer closes, the socket fails or
+        :meth:`close` begins."""
+        try:
+            while data := self._polled(conn.recv, 65536):
+                yield data
+        except OSError:
+            return
+
+
 class SyslogTcpListener(_TcpListener):
     """imtcp: accept TCP connections, extract frames with the
     per-frame auto-detecting parser, spool newline-delimited messages
@@ -381,7 +384,6 @@ class SyslogTcpListener(_TcpListener):
                  support_compression: bool = True,
                  tls=None) -> None:
         self.support_compression = support_compression
-        self.n_received = 0
         self.framing_errors: list[str] = []
         self.auth_errors: list[str] = []
         self.tls = tls
@@ -394,33 +396,13 @@ class SyslogTcpListener(_TcpListener):
 
     def _session(self, conn, peer, spool: _SpoolWriter) -> None:
         if self._tls_ctx is not None:
-            import ssl as ssllib
-
-            from rsyslog_spark.tls import check_peer
-
-            try:
-                conn = self._tls_ctx.wrap_socket(conn, server_side=True)
-            except (ssllib.SSLError, OSError) as e:
-                with self._lock:
-                    self.auth_errors.append(f"TLS handshake failed: {e}")
-                return
-            der = conn.getpeercert(binary_form=True)
-            ok, detail = check_peer(der, conn.getpeercert(), self.tls)
-            if not ok:
-                with self._lock:
-                    self.auth_errors.append(
-                        f"TLS session terminated: {detail}"
-                    )
-                conn.close()
-                return
+            conn = self._tls_ctx.wrap_socket(
+                conn, server_side=True, do_handshake_on_connect=False
+            )
         parser = SyslogFrameParser()
-
-        def deliver(msg: bytes) -> None:
-            spool.write(msg)
-            with self._lock:
-                self.n_received += 1
-
         with conn:  # a TLS wrap owns the fd the core's socket gave up
+            if self._tls_ctx is not None and not self._tls_ok(conn):
+                return
             for data in self._chunks(conn):
                 for msg, _framing, err in parser.feed(data):
                     if err:
@@ -432,10 +414,30 @@ class SyslogTcpListener(_TcpListener):
                             with self._lock:
                                 self.framing_errors.append(zerr)
                     if msg:
-                        deliver(msg)
+                        spool.write(msg)
+                        self._count()
             tail = parser.flush()
             if tail is not None:
-                deliver(tail)
+                spool.write(tail)
+                self._count()
+
+    def _tls_ok(self, conn) -> bool:
+        """The handshake (polled: a silent client cannot hold
+        :meth:`close`), then the peer check; a failure lands in
+        ``auth_errors``."""
+        from rsyslog_spark.tls import check_peer
+
+        try:
+            self._polled(conn.do_handshake)
+            ok, detail = check_peer(conn.getpeercert(binary_form=True),
+                                    conn.getpeercert(), self.tls)
+            error = f"TLS session terminated: {detail}"
+        except OSError as e:  # ssl.SSLError is an OSError
+            ok, error = False, f"TLS handshake failed: {e}"
+        if not ok:
+            with self._lock:
+                self.auth_errors.append(error)
+        return ok
 
 
 class SyslogUdpListener(_SpooledSource):
@@ -576,6 +578,30 @@ def _recv_exact(sock, n: int) -> bytes:
     return bytes(buf)
 
 
+_DRAIN_S = 5.0  # how long a drained close waits for the peer to close
+
+
+def _close_drained(sock) -> None:
+    """Half-close ``sock``, read what the peer still sends until it
+    closes (at most ``_DRAIN_S``), then close. A close with replies
+    unread makes the kernel reset the connection, and the reset drops
+    what the peer has received but not yet read."""
+    import socket as socketlib
+    import time
+
+    try:
+        sock.shutdown(socketlib.SHUT_WR)
+        deadline = time.monotonic() + _DRAIN_S
+        while (left := deadline - time.monotonic()) > 0:
+            sock.settimeout(left)
+            if not sock.recv(65536):
+                break
+    except OSError:
+        pass  # timed out or reset: nothing left to wait for
+    finally:
+        sock.close()
+
+
 def omfwd_send(
     df: DataFrame,
     host: str,
@@ -634,7 +660,14 @@ def omfwd_send(
                 sock.sendto(_wire_bytes(v), (host, port))
         return (len(vals),)
 
-    return total_sent(send_partitions(df, open_conn, send, "n_sent long"))
+    def finish(sock) -> tuple[int]:
+        _close_drained(sock)  # the server's TLS 1.3 tickets sit unread
+        return (0,)
+
+    return total_sent(send_partitions(
+        df, open_conn, send, "n_sent long",
+        finish=None if tls is None else finish,
+    ))
 
 
 def omuxsock_send(

@@ -235,11 +235,6 @@ class RelpListener(_TcpListener):
 
     spool_prefix = "relp"
 
-    def __init__(self, spool_dir: str, host: str = "127.0.0.1",
-                 port: int = 0, rotate_every: int = 10_000) -> None:
-        self.n_received = 0
-        super().__init__(spool_dir, host, port, rotate_every)
-
     def _session(self, conn, peer, spool) -> None:
         parser = RelpParser()
         for data in self._chunks(conn):
@@ -257,8 +252,7 @@ class RelpListener(_TcpListener):
                 elif command == "syslog":
                     spool.write(payload)
                     spool.sync()  # durably spooled BEFORE the ack
-                    with self._lock:
-                        self.n_received += 1
+                    self._count()
                     conn.sendall(relp_frame(txnr, "rsp", b"200 OK"))
                 elif command == "close":
                     conn.sendall(relp_frame(txnr, "rsp", b"200 OK"))

@@ -91,6 +91,30 @@ def test_raw_profile_rejects_unknown_profile(tmp_path):
         lst.close()
 
 
+def test_sessions_ending_before_nul_are_counted(tmp_path):
+    """``n_incomplete`` counts a session that ends without NUL, so a
+    lost tail shows as a number; a full exchange does not count."""
+    lst = Im3195Listener(str(tmp_path / "s"))
+    try:
+        send_3195_raw("127.0.0.1", lst.port, [b"<13>complete"])
+        assert lst.n_messages == 1 and lst.n_incomplete == 0
+        start = (b"Content-Type: application/beep+xml\r\n\r\n"
+                 b'<start number="1"><profile uri="%s"/></start>'
+                 % RAW_PROFILE_URI.encode())
+        with socket.create_connection(("127.0.0.1", lst.port)) as s:
+            s.sendall(beep_frame("MSG", 0, 1, 0, start)
+                      + beep_frame("ANS", 1, 0, 0, b"<13>no nul", ansno=0))
+            deadline = time.time() + 5
+            while lst.n_messages < 2 and time.time() < deadline:
+                time.sleep(0.05)
+        deadline = time.time() + 5
+        while lst.n_incomplete < 1 and time.time() < deadline:
+            time.sleep(0.05)
+        assert lst.n_messages == 2 and lst.n_incomplete == 1
+    finally:
+        lst.close()
+
+
 def test_raw_sessions_lose_nothing_under_cpu_contention(tmp_path):
     """The sender half-closes after NUL and reads the collector's
     pending SEQ frames until EOF: closing with them unread makes the
