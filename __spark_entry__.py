@@ -28,6 +28,7 @@ from rsyslog_spark import corpus, flagship
 from rsyslog_spark import aggregates as agg
 from rsyslog_spark import mm
 from rsyslog_spark import functions as fn
+from rsyslog_spark.sources import read_parquet
 from rsyslog_spark.templates import compile_template
 
 O = corpus.ORACLE  # duckdb derivation fragments
@@ -46,15 +47,15 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _events(spark, sf):
-    return spark.read.parquet(f"{sf}/events.parquet")
+    return read_parquet(spark, f"{sf}/events.parquet")
 
 
 def _docs(spark, sf):
-    return spark.read.parquet(f"{sf}/documents.parquet")
+    return read_parquet(spark, f"{sf}/documents.parquet")
 
 
 def _emb(spark, sf):
-    return spark.read.parquet(f"{sf}/embeddings.parquet")
+    return read_parquet(spark, f"{sf}/embeddings.parquet")
 
 
 def q_parse_headers(spark, sf):

@@ -6,12 +6,14 @@ Usage:
     python bench_extra.py plans  [out_dir] [label] [names]  # explain("formatted")
     python bench_extra.py time   [names...]          # noop-sink timings, min of 3
     python bench_extra.py decode                     # decode backend microbench
+    python bench_extra.py jobs   [names]             # Spark jobs/tasks per entry
 
 Both default to ``bench.suite``, bench.py's table of timed queries;
 ``time`` also takes the ``decode_only`` and ``parse_only`` layer cuts.
 For ``plans``, ``names`` is a comma-separated list of ``__spark_entry__``
 registry entries (e.g. ``simsearch_topk,ivf_topk``), run over
-``SPARK_GRAFT_SF_DIR`` without building the token corpus. Expression
+``SPARK_GRAFT_SF_DIR`` without building the token corpus; ``jobs``
+takes the same list and defaults to every registry entry. Expression
 ids (``#123``), ``plan_id=`` tags, RDD ids (``MapPartitionsRDD[44]``,
 which count every RDD the session made before) and lambda-variable
 counters (``x_12``, numbered session-wide, so an earlier entry that
@@ -141,6 +143,41 @@ def cmd_decode() -> None:
     spark.stop()
 
 
+def cmd_jobs(names: list[str]) -> None:
+    """Spark jobs and tasks per registry entry, build included (the
+    entry call plus a noop write), read from ``statusTracker``: one JSON
+    line per entry, then the totals with host facts."""
+    import pyspark
+
+    import __spark_entry__ as entrymod
+    from rsyslog_spark.session import host_mem_mb, host_nproc
+
+    spark = _spark()
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    qs = entrymod.queries()
+    out = {}
+    for name in names or qs:
+        sc.setJobGroup(f"jobs:{name}", name)
+        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        jobs = st.getJobIdsForGroup(f"jobs:{name}")
+        stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+        tasks = sum(i.numCompletedTasks for i in map(st.getStageInfo, stages)
+                    if i is not None)
+        out[name] = {"jobs": len(jobs), "tasks": tasks}
+        print(json.dumps({name: out[name]}), flush=True)
+    host = {"nproc": host_nproc(), "mem_total_mb": host_mem_mb(),
+            "spark": pyspark.__version__, "master": sc.master,
+            "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+            "SPARK_GRAFT_DECODE": os.environ.get("SPARK_GRAFT_DECODE", "jvm")}
+    print(json.dumps({
+        "jobs": out, "sf": SF_DIR, "host": host,
+        "total_jobs": sum(v["jobs"] for v in out.values()),
+        "total_tasks": sum(v["tasks"] for v in out.values()),
+    }))
+    spark.stop()
+
+
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     if cmd == "plans":
@@ -150,5 +187,7 @@ if __name__ == "__main__":
         cmd_plans(out_dir, label, names)
     elif cmd == "decode":
         cmd_decode()
+    elif cmd == "jobs":
+        cmd_jobs(sys.argv[2].split(",") if len(sys.argv) > 2 else [])
     else:
         cmd_time(sys.argv[2:])

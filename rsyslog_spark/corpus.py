@@ -222,7 +222,9 @@ def logtokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Columns: doc_id string, tokens array<int>, n_tok int, source string.
     """
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
+    from rsyslog_spark.sources import read_parquet
+
+    events = read_parquet(spark, f"{sf_dir}/events.parquet")
     return encode_line(events_with_line(events)).select(
         "doc_id", "tokens", "n_tok", "source"
     )

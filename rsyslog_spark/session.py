@@ -34,6 +34,10 @@ SCALE_CONF: dict[str, str] = {
     # job on the first repeated key in map_from_arrays/_entries
     # (mmpstrucdata, mmnormalize).
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+    # Compiled whole-stage and projection classes, keyed by their
+    # source. At the default 100, perfbench curate's five entries can
+    # evict each other's classes, and then every repeat recompiles ~22.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -47,6 +51,23 @@ def host_mem_mb() -> int:
     return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
 
 
+def _python_daemon_conf(pythonpath: str | None) -> dict[str, str]:
+    """Start Python workers through :mod:`rsyslog_spark._pydaemon`, which
+    imports the installed pyspark instead of ``pyspark.zip``. Only when
+    this package is a plain directory, which then goes on the workers'
+    ``PYTHONPATH`` after ``pythonpath``; loaded from an archive
+    (``--py-files rsyslog_spark.zip``), the stock daemon stays."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.isdir(pkg):
+        return {}
+    return {
+        "spark.python.daemon.module": "rsyslog_spark._pydaemon",
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(
+            filter(None, [pythonpath, os.path.dirname(pkg)])
+        ),
+    }
+
+
 def get_spark(
     app_name: str = "rsyslog_spark",
     master: str | None = None,
@@ -57,8 +78,10 @@ def get_spark(
 
     Unset ``master`` means ``local[$SPARK_GRAFT_CPUS]``, else one slot
     per CPU of :func:`host_nproc`. The driver gets ``$SPARK_DRIVER_MEM``,
-    else half the host's memory, at most 24g.
+    else half the host's memory, at most 24g. Python workers import the
+    installed pyspark (:func:`_python_daemon_conf`).
     """
+    extra_conf = extra_conf or {}
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or host_nproc()
         master = f"local[{cpus}]"
@@ -73,7 +96,8 @@ def get_spark(
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM")
         or f"{min(24 * 1024, host_mem_mb() // 2)}m",
-        **(extra_conf or {}),
+        **extra_conf,
+        **_python_daemon_conf(extra_conf.get("spark.executorEnv.PYTHONPATH")),
     }
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in conf.items():

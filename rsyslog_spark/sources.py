@@ -8,6 +8,8 @@
 - :func:`incremental_batches` — batch checkpoint/resume without a
   table format: the Iceberg-snapshot analog over a plain directory —
   only files not yet in the state log are processed, then committed.
+- :func:`read_parquet` — ``spark.read.parquet`` that infers a local
+  path's schema once per version of its files.
 """
 
 from __future__ import annotations
@@ -17,8 +19,54 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from rsyslog_spark.corpus import encode_line
+
+# session settings that change what parquet schema inference returns
+_INFER_CONF = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# (abspath, inference settings) -> (file fingerprint, inferred schema)
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple:
+    """(relative path, size, mtime_ns) of every file at ``path``."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            st = os.stat(os.path.join(root, f))
+            rel = os.path.relpath(os.path.join(root, f), path)
+            out.append((rel, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local path's schema
+    once. Inference costs a one-task Spark job per read (it reads a
+    footer); a re-read of unchanged files passes the schema it kept.
+    The schema is keyed on the absolute path, the session's inference
+    settings and each file's (relative path, size, ``mtime_ns``), so any
+    change to the files infers afresh. A path that is not on the local
+    file system (a URI, say) goes straight to ``spark.read.parquet``."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path),
+           tuple(spark.conf.get(k, None) for k in _INFER_CONF))
+    files = _fingerprint(path)
+    kept = _SCHEMAS.get(key)
+    if kept is not None and kept[0] == files:
+        return spark.read.schema(kept[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (files, df.schema)
+    return df
 
 
 def read_raw_lines(

@@ -1,12 +1,16 @@
-"""Sessions and bench levels are sized from the host they run on.
+"""Sessions and bench levels are sized from the host they run on, and
+sessions pick their Python worker daemon by how the package is loaded.
 
 Spark-free: the session builder is stubbed, so no JVM starts.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
+import sys
+import zipfile
 from types import SimpleNamespace
 
 import pytest
@@ -74,6 +78,36 @@ def test_local_star_and_overrides(builder, monkeypatch):
     session.get_spark("t")
     assert builder.master_url == "local[3]"
     assert builder.conf["spark.driver.memory"] == "2g"
+
+
+def test_daemon_is_set_only_for_a_directory_import(builder, tmp_path):
+    """From a plain directory, workers start ``rsyslog_spark._pydaemon``
+    with that directory on their path. From ``--py-files
+    rsyslog_spark.zip``, an archive, they keep Spark's own daemon."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(session.__file__)))
+    session.get_spark("t")
+    assert builder.conf["spark.python.daemon.module"] == "rsyslog_spark._pydaemon"
+    assert builder.conf["spark.executorEnv.PYTHONPATH"] == repo
+    session.get_spark("t", extra_conf={"spark.executorEnv.PYTHONPATH": "/x"})
+    assert builder.conf["spark.executorEnv.PYTHONPATH"] == f"/x{os.pathsep}{repo}"
+
+    archive = tmp_path / "rsyslog_spark.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        for root, _dirs, files in os.walk(os.path.join(repo, "rsyslog_spark")):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    z.write(full, os.path.relpath(full, repo))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import json; from rsyslog_spark import session as s; "
+         "print(json.dumps([s.__file__, s._python_daemon_conf(None)]))"],
+        cwd=tmp_path, check=True, capture_output=True, text=True,
+        env={**os.environ, "PYTHONPATH": str(archive)},
+    ).stdout
+    loaded_from, conf = json.loads(out.splitlines()[-1])
+    assert loaded_from.startswith(str(archive))
+    assert conf == {}
 
 
 @pytest.mark.parametrize("nproc", [1, 2, 4, 6, 32])

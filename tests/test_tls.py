@@ -14,6 +14,7 @@ import socket
 import ssl
 import subprocess
 import time
+from pathlib import Path
 
 import pytest
 
@@ -105,7 +106,7 @@ def test_permitted_peer_wildcards():
 
 def test_fingerprint_format(certs):
     """net_ossl_genfingerprintstr format: prefix + ':%02X' per byte."""
-    der = ssl.PEM_cert_to_DER_cert(open(certs["client1"][0]).read())
+    der = ssl.PEM_cert_to_DER_cert(Path(certs["client1"][0]).read_text())
     sha1, sha256 = fingerprint_strs(der)
     assert sha1.startswith("SHA1:") and sha256.startswith("SHA256:")
     assert len(sha1) == 4 + 3 * 20 and len(sha256) == 6 + 3 * 32
@@ -216,7 +217,7 @@ def test_tls_listener_auth_modes(certs, tmp_path):
         lst.close()
 
     # --- x509/fingerprint ---
-    der1 = ssl.PEM_cert_to_DER_cert(open(certs["client1"][0]).read())
+    der1 = ssl.PEM_cert_to_DER_cert(Path(certs["client1"][0]).read_text())
     srv_fp = TlsConfig(*certs["server"], ca_file=ca,
                        auth_mode="x509/fingerprint",
                        permitted_peers=(fingerprint_strs(der1)[1],))
