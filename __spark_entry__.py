@@ -1194,8 +1194,8 @@ RULEBASE_V2_TEXT = (
     '{"type":"alpha","name":"stw"}]}%\n'
 )
 
-# r5: depth-2 composite — a repeat of repeats (arbitrary nesting landed
-# in NormalizeRule._compile_element; VERDICT r4 #7)
+# r5: depth-2 composite — a repeat of repeats (arbitrary nesting: one
+# compiler, mm._compile_parsers, compiles every level; VERDICT r4 #7)
 RULEBASE_V2_DEEP_TEXT = (
     "version=2\n"
     'rule=v2deep:grp %{"name":"g","type":"repeat","parser":['

@@ -11,6 +11,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rsyslog_spark.parsing.core import group_getter, rewrite_groups
+
 
 # --- mmjsonparse (plugins/mmjsonparse/mmjsonparse.c:64-136,210-317) ----------
 
@@ -228,6 +230,9 @@ def _noncapture(rx: str) -> str:
     return "".join(out)
 
 
+# a quoted string's body; a named v1 quoted-string captures only this
+_QUOTED = r'(?:[^"\\]|\\.)*'
+
 # Groupless token patterns per liblognorm field type
 # (liblognorm parser.c; the set mmnormalize rulebases actually use).
 _RAW_TYPES = {
@@ -249,13 +254,9 @@ _RAW_TYPES = {
     # nesting; a regex can't — fine for the one-object-per-line shape)
     "json": r"\{.*\}",
     "mac48": r"(?:[0-9A-Fa-f]{2}[:-]){5}[0-9A-Fa-f]{2}",
-    "quoted-string": r'"(?:[^"\\]|\\.)*"',
-    "op-quoted-string": r'(?:"(?:[^"\\]|\\.)*"|\S+)',
+    "quoted-string": f'"{_QUOTED}"',
+    "op-quoted-string": rf'(?:"{_QUOTED}"|\S+)',
     "whitespace": r"\s+",
-}
-# when capturing, these strip delimiters from the captured value
-_CAPTURE_OVERRIDE = {
-    "quoted-string": r'"((?:[^"\\]|\\.)*)"',
 }
 
 
@@ -379,49 +380,21 @@ def _v2_groupless(obj: dict) -> str:
     return _v2_atom_pattern(obj)
 
 
-class _FieldSpec:
-    """One output field of a compiled rule.
-
-    kind 'plain':  value = capture group `group` verbatim.
-    kind 'repeat': group captures the whole repeated span; the value is
-                   the JSON array of per-iteration elements (split on
-                   the `while` literal), each element re-parsed with
-                   `inner_rx` into an object when the inner parsers are
-                   named (liblognorm v2 emits an array of objects).
-    kind 'alt':    `alt_groups` are the branch captures (one per named
-                   alternative); the value is the first non-empty — the
-                   branch that participated in the match.
-
-    `inner_named` entries are the RECURSIVE spec nodes documented on
-    :meth:`NormalizeRule._compile_element` (r5: arbitrary nesting
-    depth), consumed by :func:`_v2_extract`. `optional` marks a spec
-    whose field is OMITTED when its span is empty (a repeat branch of
-    an alternative that did not participate).
-    """
-
-    __slots__ = ("name", "kind", "group", "alt_groups", "sep_rx",
-                 "inner_named", "inner_rx", "optional")
-
-    def __init__(self, name, kind, group=0, alt_groups=(), sep_rx=None,
-                 inner_named=(), inner_rx=None, optional=False):
-        self.name = name
-        self.kind = kind
-        self.group = group
-        self.alt_groups = list(alt_groups)
-        self.sep_rx = sep_rx
-        self.inner_named = list(inner_named)
-        self.inner_rx = inner_rx
-        self.optional = optional
-
-
-def _scan_pattern(pattern: str):
-    """Split a rule pattern into (literal, spec) segments, where spec
-    is ('v1', name, type) for %name:type% or ('v2', obj) for a v2
-    %{...json...}% parser block (braces balanced, strings respected);
-    the final segment is (trailing_literal, None)."""
+def _scan_pattern(pattern: str) -> list[dict]:
+    """Split a rule pattern into ONE v2 parser list, the shape of a
+    repeat's ``parser``: literal text → a ``literal`` object, a v2
+    %{...json...}% block (braces balanced, strings respected) → its
+    object, a v1 %name:type% placeholder → ``{"type", "name"}``. A
+    named v1 quoted-string captures between its quotes, so it becomes
+    literal '"', a named regex atom and literal '"'."""
     import json as _json
 
-    segs: list[tuple[str, tuple | None]] = []
+    parsers: list[dict] = []
+
+    def literal(text: str) -> None:
+        if text:
+            parsers.append({"type": "literal", "text": text})
+
     i, n = 0, len(pattern)
     lit_start = 0
     while i < n:
@@ -449,22 +422,117 @@ def _scan_pattern(pattern: str):
                     raise ValueError(
                         f"unterminated %{{...}}% parser block in {pattern!r}"
                     )
-                obj = _json.loads(pattern[i + 1 : j + 1])
-                segs.append((pattern[lit_start:i], ("v2", obj)))
+                literal(pattern[lit_start:i])
+                parsers.append(_json.loads(pattern[i + 1 : j + 1]))
                 i = j + 2
                 lit_start = i
                 continue
             m = re.match(r"%([^%:]+):([^%]+)%", pattern[i:])
             if m:
-                segs.append(
-                    (pattern[lit_start:i], ("v1", m.group(1), m.group(2)))
-                )
+                literal(pattern[lit_start:i])
+                name, ftype = m.groups()
+                _type_pattern(ftype)  # v1 types only: 'repeat' etc. raise
+                if ftype == "quoted-string" and name != "-":
+                    parsers += [
+                        {"type": "literal", "text": '"'},
+                        {"type": "regex", "regexp": _QUOTED, "name": name},
+                        {"type": "literal", "text": '"'},
+                    ]
+                else:
+                    parsers.append({"type": ftype, "name": name})
                 i += m.end()
                 lit_start = i
                 continue
         i += 1
-    segs.append((pattern[lit_start:], None))
-    return segs
+    literal(pattern[lit_start:])
+    return parsers
+
+
+def _compile_parsers(
+    parsers: list[dict], enclosing: tuple = ()
+) -> tuple[str, tuple, int]:
+    """Compile one parser list — a whole rule, or one element of a
+    repeat — into (regex body, specs, group count). Each level numbers
+    its own groups: a repeat's span is ONE group, and its element's
+    fields live in the element's own regex, read after the span is
+    split on the separator (so the recursion mirrors liblognorm's
+    parser tree at any depth).
+
+    Spec nodes (read by :func:`_field_value`):
+    * ``("plain", name, group)`` — the capture, "" when empty;
+    * ``("alt", name, groups)`` — the first non-empty branch, null
+      when none participated;
+    * ``("repeat", name, group, sep_rx, item, optional)`` — the span
+      split on ``sep_rx``; ``item`` is the element's (regex, specs,
+      group count) when its parsers name fields, else None; optional
+      (a branch of an alternative) → null when the span is empty.
+
+    A name captured twice keeps the later capture; same-name scalar
+    branches of one alternative merge. ``enclosing`` carries every
+    ancestor repeat's separator; a nested separator that could collide
+    with ANY of them is rejected (see :func:`_v2_sep_collision`)."""
+    specs: dict[str, tuple] = {}
+    n = 0
+
+    def add(into: dict, spec: tuple, in_alt: bool) -> None:
+        name, old = spec[1], into.get(spec[1])
+        if in_alt and old:
+            # a repeat branch and another branch of one name would
+            # emit two values for one key
+            if "repeat" in (old[0], spec[0]):
+                raise ValueError(
+                    "an alternative's repeat branch may not share its "
+                    f"name with another branch (conflict: [{name!r}])"
+                )
+            spec = ("alt", name, old[2] + spec[2])
+        into[name] = spec
+
+    def node(p: dict, into: dict, in_alt: bool) -> str:
+        nonlocal n
+        t, name = p.get("type"), p.get("name")
+        if t == "alternative":
+            branches: dict[str, tuple] = {}
+            frags = [
+                node(b, branches, True)
+                for b in _v2_parser_list(p, "alternative")
+            ]
+            for s in branches.values():
+                add(into, s, in_alt)
+            return "(?:" + "|".join(frags) + ")"
+        if t == "repeat":
+            elems = _v2_parser_list(p, "repeat")
+            sep = _v2_while(p)
+            for anc in enclosing:
+                why = _v2_sep_collision(anc, sep)
+                if why:
+                    raise ValueError(
+                        "nested repeat 'while' separator collides with "
+                        f"an enclosing one ({why})"
+                    )
+            body, item_specs, item_n = _compile_parsers(
+                elems, enclosing + (sep,)
+            )
+            item = (
+                ("^" + body + "$", item_specs, item_n) if item_specs else None
+            )
+            inner = "".join(f"(?:{_v2_groupless(e)})" for e in elems)
+            pat = f"(?:{inner})(?:{sep[1]}(?:{inner}))*"
+        else:
+            pat = _v2_atom_pattern(p)
+            if t == "literal":
+                return pat
+        if not name or name in ("-", "."):  # liblognorm: discard
+            return f"(?:{pat})"
+        n += 1
+        if t == "repeat":
+            add(into, ("repeat", name, n, sep[1], item, in_alt), in_alt)
+        else:
+            add(into, ("alt", name, (n,)) if in_alt else ("plain", name, n),
+                in_alt)
+        return f"({pat})"
+
+    body = "".join(node(p, specs, False) for p in parsers)
+    return body, tuple(specs.values()), n
 
 
 class NormalizeRule:
@@ -473,9 +541,12 @@ class NormalizeRule:
     included) and/or v2 %{...json...}% parser blocks (basic types plus
     the `repeat` and `alternative` shapes — the two that dominate real
     v2 rulebases; other v2 composites are rejected with a clear error).
-    Compiles to a single Java regex with one capture group per named
-    field; '%-:type%' matches without capturing (liblognorm dash =
-    discard). ``const_fields`` carries annotate= constants.
+    The pattern is scanned into one v2 parser list and compiled by
+    :func:`_compile_parsers`, the compiler every repeat element goes
+    through too: a single anchored Java regex with one capture group
+    per named field, plus the ``specs`` that read them back. '%-:type%'
+    and '%.:type%' match without capturing (liblognorm discard).
+    ``const_fields`` carries annotate= constants.
 
     v2 semantics in the map<string,string> output: a `repeat` field's
     value is the JSON array liblognorm would emit ("[\\"a\\",\\"b\\"]",
@@ -493,255 +564,13 @@ class NormalizeRule:
         self.pattern = pattern
         self.tags = tags or []
         self.const_fields = dict(const_fields or {})
-        self.fields: list[str] = []
-        self.specs: list[_FieldSpec] = []
-        out = []
-        grp = 0
-        for lit, spec in _scan_pattern(pattern):
-            out.append(re.escape(_unescape(lit)))
-            if spec is None:
-                continue
-            if spec[0] == "v1":
-                _, name, ftype = spec
-                if name == "-":
-                    out.append(f"(?:{_type_pattern(ftype)})")
-                elif ftype in _CAPTURE_OVERRIDE:
-                    grp += 1
-                    self.fields.append(name)
-                    self.specs.append(_FieldSpec(name, "plain", group=grp))
-                    out.append(_CAPTURE_OVERRIDE[ftype])
-                else:
-                    grp += 1
-                    self.fields.append(name)
-                    self.specs.append(_FieldSpec(name, "plain", group=grp))
-                    out.append(f"({_type_pattern(ftype)})")
-                continue
-            obj = spec[1]
-            t = obj.get("type")
-            name = obj.get("name")
-            if t == "repeat":
-                frag, grp = self._compile_repeat(obj, grp)
-                out.append(frag)
-            elif t == "alternative":
-                frag, grp = self._compile_alternative(obj, grp)
-                out.append(frag)
-            else:
-                pat = _v2_atom_pattern(obj)
-                if name and name not in ("-", "."):
-                    grp += 1
-                    self.fields.append(name)
-                    self.specs.append(_FieldSpec(name, "plain", group=grp))
-                    out.append(f"({pat})")
-                else:
-                    out.append(f"(?:{pat})")
-        self.n_groups = grp
-        self.regex = "^" + "".join(out) + "$"
+        body, self.specs, self.n_groups = _compile_parsers(
+            _scan_pattern(pattern)
+        )
+        self.regex = "^" + body + "$"
         # anchored: the whole string IS the match, so the regex doubles
         # as the single-pass group-rewrite pattern (see mmnormalize)
         self.rewrite = self.regex
-
-    @classmethod
-    def _compile_element(
-        cls, parsers: list[dict], enclosing: list[tuple]
-    ) -> tuple[str, list, int]:
-        """Recursively compile ONE repeated element's parser list into
-        (element regex with local capture groups, extraction specs,
-        group count). r5: arbitrary nesting depth — a nested repeat's
-        span is ONE local group here; its own fields live in a CHILD
-        element regex applied after splitting that span on the child's
-        separator (so group numbering stays flat per level and the
-        recursion mirrors liblognorm's parser tree exactly).
-
-        Spec nodes (consumed by :func:`_v2_extract`):
-        * ``("plain", name, (group,))`` — scalar, "" when empty;
-        * ``("alt", name, (groups...))`` — first non-empty branch, null
-          (field omitted) when none participated;
-        * ``("repeat", name, group, sep_rx, child_rx, child_specs,
-          optional)`` — span split + recursive extraction; optional
-          (an alternative's repeat branch) → null when the span is
-          empty.
-
-        ``enclosing`` carries every ancestor separator; a nested
-        separator that could collide with ANY of them is rejected (see
-        :func:`_v2_sep_collision`)."""
-        g_parts: list[str] = []
-        specs: list[list] = []
-        local_g = 0
-
-        def add_scalar(pname: str, group: int, kind: str) -> None:
-            # same-(name, kind) branches merge first-non-empty
-            for f in specs:
-                if f[0] == kind and f[1] == pname:
-                    f[2].append(group)
-                    return
-            specs.append([kind, pname, [group]])
-
-        def compile_repeat_local(p: dict, optional: bool) -> None:
-            nonlocal local_g
-            pname = p.get("name")
-            sep = _v2_while(p)
-            for anc in enclosing:
-                why = _v2_sep_collision(anc, sep)
-                if why:
-                    raise ValueError(
-                        "nested repeat 'while' separator collides with "
-                        f"an enclosing one ({why})"
-                    )
-            child_parsers = _v2_parser_list(p, "repeat")
-            child_body, child_specs, _ = cls._compile_element(
-                child_parsers, enclosing + [sep]
-            )
-            inner_nc = "".join(
-                f"(?:{_v2_groupless(ip)})" for ip in child_parsers
-            )
-            span = f"(?:{inner_nc})(?:{sep[1]}(?:{inner_nc}))*"
-            if pname and pname not in ("-", "."):
-                local_g += 1
-                specs.append([
-                    "repeat", pname, local_g, sep[1],
-                    "^" + child_body + "$", child_specs, optional,
-                ])
-                g_parts.append(f"({span})")
-            else:
-                g_parts.append(f"(?:{span})")
-
-        def walk_alt(branches: list[dict], frags: list[str]) -> None:
-            nonlocal local_g
-            for b in branches:
-                bt = b.get("type")
-                if bt == "alternative":
-                    sub: list[str] = []
-                    walk_alt(_v2_parser_list(b, "alternative"), sub)
-                    frags.append("(?:" + "|".join(sub) + ")")
-                    continue
-                if bt == "repeat":
-                    # a repeat branch of an alternative: participates
-                    # only when its span matched → optional
-                    mark = len(g_parts)
-                    compile_repeat_local(b, optional=True)
-                    frags.extend(g_parts[mark:])
-                    del g_parts[mark:]
-                    continue
-                pat = _v2_atom_pattern(b)
-                bname = b.get("name")
-                if bt != "literal" and bname and bname not in ("-", "."):
-                    local_g += 1
-                    add_scalar(bname, local_g, "alt")
-                    frags.append(f"({pat})")
-                else:
-                    frags.append(f"(?:{pat})")
-
-        for p in parsers:
-            t = p.get("type")
-            pname = p.get("name")
-            if t == "alternative":
-                branch_frags: list[str] = []
-                walk_alt(_v2_parser_list(p, "alternative"), branch_frags)
-                g_parts.append("(?:" + "|".join(branch_frags) + ")")
-            elif t == "repeat":
-                compile_repeat_local(p, optional=False)
-            else:
-                pat = _v2_atom_pattern(p)
-                if t != "literal" and pname and pname not in ("-", "."):
-                    local_g += 1
-                    add_scalar(pname, local_g, "plain")
-                    g_parts.append(f"({pat})")
-                else:
-                    g_parts.append(f"(?:{pat})")
-        frozen = [
-            tuple(f[:2]) + (tuple(f[2]),) if f[0] in ("plain", "alt")
-            else tuple(f)
-            for f in specs
-        ]
-        return "".join(g_parts), frozen, local_g
-
-    @classmethod
-    def _repeat_core(cls, obj: dict) -> tuple[str, str, list, str]:
-        """Compile a repeat body: (groupless span without the outer
-        capture parens, sep_rx, recursive extraction specs, element
-        regex)."""
-        parsers = _v2_parser_list(obj, "repeat")
-        sep = _v2_while(obj)
-        body, specs, _ = cls._compile_element(parsers, [sep])
-        inner_nc = "".join(f"(?:{_v2_groupless(p)})" for p in parsers)
-        span = f"(?:{inner_nc})(?:{sep[1]}(?:{inner_nc}))*"
-        return span, sep[1], specs, "^" + body + "$"
-
-    def _compile_repeat(
-        self, obj: dict, grp: int, optional: bool = False
-    ) -> tuple[str, int]:
-        """v2 repeat: `parser` (object or array) matched repeatedly,
-        iterations separated by the `while` parser (literal subset).
-        The big regex captures the whole span in ONE group; per-element
-        extraction re-parses each split item with inner_rx locally, so
-        inner groups never shift the global numbering."""
-        name = obj.get("name")
-        span, sep_rx, inner, inner_rx = self._repeat_core(obj)
-        if not name or name == "-":
-            return f"(?:{span})", grp  # discard: no capture
-        grp += 1
-        self.fields.append(name)
-        self.specs.append(
-            _FieldSpec(
-                name, "repeat", group=grp, sep_rx=sep_rx,
-                inner_named=inner, inner_rx=inner_rx, optional=optional,
-            )
-        )
-        return f"({span})", grp
-
-    def _compile_alternative(self, obj: dict, grp: int) -> tuple[str, int]:
-        """v2 alternative: each branch is one parser object; named
-        branches capture, the first non-empty capture is the value.
-        Branches sharing a name merge into one output field. r4
-        nesting: an ``alternative`` branch flattens into its parent; a
-        ``repeat`` branch compiles as an optional repeat field (emitted
-        only when that branch participated)."""
-        parsers = _v2_parser_list(obj, "alternative")
-        frags = []
-        named: dict[str, list[int]] = {}
-        repeat_names: list[str] = []
-
-        def walk(branches) -> None:
-            nonlocal grp
-            for p in branches:
-                t = p.get("type")
-                if t == "alternative":
-                    walk(_v2_parser_list(p, "alternative"))
-                    continue
-                if t == "repeat":
-                    rname = p.get("name")
-                    if rname and rname not in ("-", "."):
-                        repeat_names.append(rname)
-                    frag, grp = self._compile_repeat(p, grp, optional=True)
-                    frags.append(frag)
-                    continue
-                pat = _v2_atom_pattern(p)
-                pname = p.get("name")
-                if t != "literal" and pname and pname not in ("-", "."):
-                    grp += 1
-                    named.setdefault(pname, []).append(grp)
-                    frags.append(f"({pat})")
-                else:
-                    frags.append(f"(?:{pat})")
-
-        walk(parsers)
-        # a repeat branch and a scalar branch sharing one name would
-        # emit two map entries for one key — LAST_WIN dedup then keeps
-        # the non-participating "" and the filter drops the field
-        # entirely (code-review r4 #3). Reject loudly instead.
-        dup = {n for n in repeat_names if repeat_names.count(n) > 1}
-        clash = (set(repeat_names) & set(named)) | dup
-        if clash:
-            raise ValueError(
-                "an alternative's repeat branch may not share its name "
-                f"with another branch (conflict: {sorted(clash)})"
-            )
-        for pname, groups in named.items():
-            self.fields.append(pname)
-            self.specs.append(
-                _FieldSpec(pname, "alt", alt_groups=groups)
-            )
-        return "(?:" + "|".join(frags) + ")", grp
 
 
 def load_rulebase(text: str) -> list[NormalizeRule]:
@@ -787,47 +616,29 @@ def load_rulebase(text: str) -> list[NormalizeRule]:
     return rules
 
 
-# group-separator for single-pass extraction: a control char that can
-# never appear in SanitizeMsg-sanitized input (parser.c:330-535 escapes
-# all control chars) — same trick as the header parser (parsing/core.py)
-_SEP = "\x01"
-
-
-def _v2_elem_fn(rx: str, specs: tuple):
-    """Factory for the per-element struct builder of a repeat's value
-    (factory fn, not inline lambda: the loop-variable capture pitfall,
-    and F.transform 2-arg lambdas receive (element, index)). Recursive
-    with :func:`_v2_extract` — arbitrary nesting depth (r5)."""
-
-    def per_item(x: Column) -> Column:
-        return F.struct(
-            *[_v2_extract(x, rx, sp).alias(sp[1]) for sp in specs]
-        )
-
-    return per_item
-
-
-def _v2_extract(x: Column, rx: str, sp: tuple) -> Column:
-    """One field of one repeated element (see _compile_element's spec
-    nodes). null (→ to_json omits the field, like liblognorm) for
-    non-participating alternative branches and optional repeats."""
-    kind = sp[0]
+def _field_value(g, spec: tuple) -> Column:
+    """One field of a compiled level (see :func:`_compile_parsers`),
+    read through the level's group getter ``g``: null (→ the map
+    filter or to_json drops the field, like liblognorm) for an
+    alternative that did not participate and for an optional repeat
+    whose span is empty. A repeat element's getter is regexp_extract
+    on the element — "" for a miss or a non-participating group, as
+    the whole rule's rewrite getter reads them."""
+    kind, _name, grp = spec[:3]
     if kind == "plain":
-        return F.regexp_extract(x, rx, sp[2][0])
+        return g(grp)
     if kind == "alt":
-        return F.coalesce(
-            *[F.nullif(F.regexp_extract(x, rx, g), F.lit("")) for g in sp[2]]
-        )
-    _, _name, grp, sep_rx, child_rx, child_specs, optional = sp
-    span = F.regexp_extract(x, rx, grp)
-    items = F.split(span, sep_rx, -1)
-    if child_specs:
-        arr = F.transform(items, _v2_elem_fn(child_rx, tuple(child_specs)))
-    else:
-        arr = items
-    if optional:
-        return F.when(span != "", arr)
-    return arr
+        return F.coalesce(*[F.nullif(g(x), F.lit("")) for x in grp])
+    _, _, _, sep_rx, item, optional = spec
+    span = g(grp)
+    arr = F.split(span, sep_rx, -1)
+    if item is not None:
+        rx, specs, _ = item
+        arr = F.transform(arr, lambda x: F.struct(*[
+            _field_value(lambda i: F.regexp_extract(x, rx, i), s).alias(s[1])
+            for s in specs
+        ]))
+    return F.when(span != "", arr) if optional else arr
 
 
 def mmnormalize(
@@ -837,16 +648,20 @@ def mmnormalize(
     """First matching rule wins (parser-chain order, mmnormalize.c:146-172);
     extracted fields land in a map column ``norm`` plus ``norm_rule``
     (index of the winning rule, -1 = unparsed — the reference tags such
-    messages 'unparsed-data').
+    messages 'unparsed-data'). ``rules`` are NormalizeRules or
+    GrokRules: both carry ``regex``, ``rewrite``, ``specs``,
+    ``n_groups`` and ``const_fields``.
 
-    Perf: each rule costs ONE regex pass per row — regexp_replace
-    rewrites all capture groups into a \\x01-separated string whose
-    leading \\x01 sentinel doubles as the match flag (regexp_replace
-    returns its input unchanged on no-match, and \\x01 cannot occur in
+    Perf: each rule costs ONE regex pass per row (a repeat element
+    adds one regexp_extract per named field of the element: the rules
+    in use name one) — regexp_replace rewrites all capture groups into
+    a \\x01-separated string whose leading \\x01 sentinel doubles as
+    the match flag (parsing.core.rewrite_groups; regexp_replace returns
+    its input unchanged on no-match, and \\x01 cannot occur in
     sanitized input). The naive alternative — one rlike plus one
     regexp_extract per field — re-executes the full regex R×(G+1)
     times; the header parser measured the rewrite trick ~2.5× faster
-    (parsing/core.py:110-167). Fields that didn't participate in the
+    (parsing/core.py parse_sql). Fields that didn't participate in the
     match land as "" exactly like regexp_extract would.
 
     Structure matters for codegen: the hit flag + split array are
@@ -859,12 +674,10 @@ def mmnormalize(
     msg = F.col(msg_col)
     tmp: dict[str, Column] = {}
     for i, r in enumerate(rules):
-        if r.fields:
-            n_groups = getattr(r, "n_groups", len(r.fields))
-            repl = _SEP + _SEP.join(f"${g}" for g in range(1, n_groups + 1))
-            rew = F.regexp_replace(msg, getattr(r, "rewrite", r.regex), repl)
-            tmp[f"_mmn_hit_{i}"] = rew.startswith(_SEP)
-            tmp[f"_mmn_arr_{i}"] = F.split(rew, _SEP, -1)
+        if r.specs:
+            tmp[f"_mmn_hit_{i}"], tmp[f"_mmn_arr_{i}"] = rewrite_groups(
+                msg, r.rewrite, r.n_groups
+            )
         else:
             tmp[f"_mmn_hit_{i}"] = msg.rlike(r.regex)  # match test only
     low = df.withColumns(tmp)
@@ -875,64 +688,20 @@ def mmnormalize(
     for i in range(len(rules) - 1, -1, -1):
         r = rules[i]
         hit = F.col(f"_mmn_hit_{i}")
+        g = group_getter(F.col(f"_mmn_arr_{i}"))
         entries = []
-        alt_names: list[str] = []
-        if r.fields:
-            arr = F.col(f"_mmn_arr_{i}")
-
-            def g(idx: int) -> Column:
-                # element 1 of the split is the "" before the sentinel
-                return F.coalesce(
-                    F.try_element_at(arr, F.lit(idx + 1)), F.lit("")
-                )
-
-            specs = getattr(r, "specs", None) or [
-                _FieldSpec(nm, "plain", group=gi)
-                for gi, nm in enumerate(r.fields, start=1)
-            ]
-            for s in specs:
-                if s.kind == "plain":
-                    val = g(s.group)
-                elif s.kind == "repeat":
-                    items = F.split(g(s.group), s.sep_rx, -1)
-                    if s.inner_named:
-                        val = F.to_json(
-                            F.transform(
-                                items,
-                                _v2_elem_fn(s.inner_rx, tuple(s.inner_named)),
-                            )
-                        )
-                    else:
-                        val = F.to_json(items)
-                    if s.optional:
-                        # a repeat BRANCH of an alternative: field
-                        # omitted when the branch did not participate
-                        alt_names.append(s.name)
-                        val = F.when(g(s.group) != "", val).otherwise(
-                            F.lit("")
-                        )
-                else:  # alt: the branch that participated (non-empty)
-                    alt_names.append(s.name)
-                    val = F.coalesce(
-                        *[F.nullif(g(gr), F.lit("")) for gr in s.alt_groups],
-                        F.lit(""),
-                    )
-                entries.append(
-                    F.struct(F.lit(s.name).alias("key"), val.alias("value"))
-                )
-        entries += [
-            F.struct(F.lit(k).alias("key"), F.lit(v).alias("value"))
-            for k, v in getattr(r, "const_fields", {}).items()
-        ]
-        m = F.map_from_entries(F.array(*entries)) if entries else F.create_map()
-        if alt_names:
+        for s in r.specs:
+            v = _field_value(g, s)
+            # a repeat's value in the map is its JSON array text
+            entries.append((s[1], F.to_json(v) if s[0] == "repeat" else v))
+        entries += [(k, F.lit(v)) for k, v in r.const_fields.items()]
+        m = F.map_from_entries(F.array(*[
+            F.struct(F.lit(k).alias("key"), v.alias("value"))
+            for k, v in entries
+        ])) if entries else F.create_map()
+        if any(s[0] == "alt" or (s[0] == "repeat" and s[5]) for s in r.specs):
             # an alternative emits only the branch that matched
-            names_arr = F.array(*[F.lit(n) for n in alt_names])
-
-            def keep(k: Column, v: Column) -> Column:
-                return ~(F.array_contains(names_arr, k) & (v == ""))
-
-            m = F.map_filter(m, keep)
+            m = F.map_filter(m, lambda k, v: v.isNotNull())
         result = F.when(hit, m).otherwise(result)
         rule_idx = F.when(hit, F.lit(i)).otherwise(rule_idx)
     return (
@@ -1003,8 +772,9 @@ def load_grok_patterns(text: str) -> dict[str, str]:
 
 class GrokRule:
     """A grok match string (%{SYNTAX:name} refs) compiled to one regex
-    + ordered field names — mmgrok's grok_compile/grok_exec analog
-    (contrib/mmgrok/mmgrok.c:226-272; named captures walk to JSON).
+    + one plain spec per named capture — mmgrok's grok_compile/grok_exec
+    analog (contrib/mmgrok/mmgrok.c:226-272; named captures walk to
+    JSON), read by mmnormalize like a NormalizeRule with plain fields.
     Unlike NormalizeRule the regex is UNANCHORED (grok_exec searches).
     A three-part %{SYNTAX:name:type} keeps the name, drops the type
     (all values land as strings — mmgrok.c stores strings too).
@@ -1022,7 +792,7 @@ class GrokRule:
         lib.update(extra_patterns or {})
         self.pattern = match
         self.const_fields: dict[str, str] = {}
-        self.fields: list[str] = []
+        names: list[str] = []
 
         def expand(rx: str, depth: int = 0) -> str:
             if depth > 20:
@@ -1040,13 +810,18 @@ class GrokRule:
                     # append BEFORE expanding the body: the opening
                     # paren of this group precedes any nested group,
                     # so field order must match group-number order
-                    self.fields.append(field.split(":")[0])
+                    names.append(field.split(":")[0])
                     return f"({expand(body, depth + 1)})"
                 return f"(?:{expand(body, depth + 1)})"
 
             return _GROK_REF.sub(sub, rx)
 
         self.regex = expand(match)
+        self.n_groups = len(names)
+        # one spec per name; a name captured twice keeps the later one
+        self.specs = tuple(
+            {nm: ("plain", nm, g) for g, nm in enumerate(names, 1)}.values()
+        )
         # grok_exec SEARCHES: wrap for whole-string rewrite so the
         # single-pass extraction (see mmnormalize) applies. The DOTALL
         # flag is scoped to the wrapper's .* only — user patterns keep

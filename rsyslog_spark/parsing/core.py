@@ -170,6 +170,38 @@ _REPL_3164 = _SEP.join(f"${i}" for i in range(1, 5))
 _REPL_5424 = _SEP.join(f"${i}" for i in range(1, 8))
 
 
+def rewrite_groups(
+    src: Column, rx: str, n_groups: int
+) -> tuple[Column, Column]:
+    """ONE regex pass for every capture group of the whole-string
+    anchored ``rx``: regexp_replace rewrites the groups into a
+    _SEP-joined string behind a leading _SEP sentinel. regexp_replace
+    returns its input unchanged on no match and _SEP cannot occur in
+    sanitized input, so the sentinel IS the match flag. Returns (hit,
+    split); read the split with :func:`group_getter`. Per-group
+    regexp_extract would re-run the whole regex once per group."""
+    repl = _SEP + _SEP.join(f"${g}" for g in range(1, n_groups + 1))
+    rew = F.regexp_replace(src, rx, repl)
+    return rew.startswith(_SEP), F.split(rew, _SEP, -1)
+
+
+def split_hit(parts: Column) -> Column:
+    """:func:`rewrite_groups`' hit flag read off its split alone, for a
+    caller that binds only the split: the rewrite starts with the _SEP
+    sentinel exactly when its split has 2+ elements and the first is
+    "" (a miss that holds _SEP elsewhere splits too, but not so)."""
+    return (F.size(parts) > 1) & (F.element_at(parts, 1) == "")
+
+
+def group_getter(parts: Column):
+    """``g(i)`` → group i of a :func:`rewrite_groups` split, "" when
+    absent (element 1 is the "" before the sentinel; a miss has one
+    element, so every group reads "" like regexp_extract's)."""
+    return lambda i: F.coalesce(
+        F.try_element_at(parts, F.lit(i + 1)), F.lit("")
+    )
+
+
 def parse_sql(
     df: DataFrame, tokens_col: str = "tokens", decode_backend: str = "jvm"
 ) -> DataFrame:

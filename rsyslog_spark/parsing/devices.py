@@ -15,10 +15,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# group-separator for single-pass extraction — cannot appear in
-# SanitizeMsg-sanitized input (same trick as mm.mmnormalize and the
-# header parser, parsing/core.py)
-_SEP = "\x01"
+from rsyslog_spark.functions import _bind
+from rsyslog_spark.parsing.core import (
+    group_getter,
+    rewrite_groups,
+    split_hit,
+)
 
 
 def _strip_pri(raw_col: str) -> Column:
@@ -34,31 +36,16 @@ def _nullif(c: Column) -> Column:
 
 def _rewrite_groups(df: DataFrame, src: Column, rx: str, n_groups: int,
                     prefix: str):
-    """ONE regexp_replace per dialect per row: all capture groups are
-    rewritten into a \\x01-joined string whose leading sentinel is the
-    match flag, computed UNCONDITIONALLY in a lower projection (codegen
-    CSE dedupes unconditional occurrences; per-group regexp_extract
-    would re-execute the full regex once per group — the cost the
-    mmnormalize single-pass rewrite exists to avoid). `rx` must be
-    whole-string anchored. Returns (df, hit, group-getter); caller
-    drops `<prefix>_hit`/`<prefix>_arr` when done."""
-    repl = _SEP + _SEP.join(f"${g}" for g in range(1, n_groups + 1))
-    rew = F.regexp_replace(src, rx, repl)
-    df = df.withColumns(
-        {
-            f"{prefix}_hit": rew.startswith(_SEP),
-            f"{prefix}_arr": F.split(rew, _SEP, -1),
-        }
-    )
-
-    def g(i: int) -> Column:
-        # element 1 of the split is the "" before the sentinel
-        return F.coalesce(
-            F.try_element_at(F.col(f"{prefix}_arr"), F.lit(i + 1)),
-            F.lit(""),
-        )
-
-    return df, F.col(f"{prefix}_hit"), g
+    """ONE regexp_replace per dialect per row (core.rewrite_groups),
+    its hit flag and split computed UNCONDITIONALLY in a lower
+    projection (codegen CSE dedupes unconditional occurrences; copies
+    inside the fixup's CASE WHENs would re-run the regex per column).
+    `rx` must be whole-string anchored. Returns (df, hit,
+    group-getter); caller drops `<prefix>_hit`/`<prefix>_arr` when
+    done."""
+    hit, parts = rewrite_groups(src, rx, n_groups)
+    df = df.withColumns({f"{prefix}_hit": hit, f"{prefix}_arr": parts})
+    return df, F.col(f"{prefix}_hit"), group_getter(F.col(f"{prefix}_arr"))
 
 
 def _header_fixup(df: DataFrame, hit: Column, fields: dict[str, Column],
@@ -607,9 +594,9 @@ def snare_description_fields(
     segments that follow accumulate comma-joined onto that key, the
     reference's privilege-name collection. One split + one aggregate
     fold, ONE regex execution per segment (the key/value are
-    group-rewritten into a \\x01-joined string bound once per element
-    — lambda-variable references are O(1), inline copies inside the
-    fold would re-run the regex per field).
+    group-rewritten by core.rewrite_groups, whose split is bound once
+    per element — lambda-variable references are O(1), inline copies
+    inside the fold would re-run the regex per field).
 
     ``inline_sections`` (default :data:`_SNARE_INLINE_SECTIONS`) maps
     labels that are sections-with-inline-values — 'Remote Credential
@@ -628,12 +615,11 @@ def snare_description_fields(
     inline_map = _litmap(inline_sections) if inline_sections else None
 
     def step(acc: Column, s: Column) -> Column:
-        rew = F.regexp_replace(s, seg_rx, "\x01$1\x01$2")
+        _, parts = rewrite_groups(s, seg_rx, 2)
 
-        def with_parts(r: Column) -> Column:
-            parts = F.split(r, "\x01", -1)
-            k = F.try_element_at(parts, F.lit(2))
-            v = F.try_element_at(parts, F.lit(3))
+        def with_parts(p: Column) -> Column:
+            g = group_getter(p)
+            k, v = g(1), g(2)
             full = F.when(acc["section"] == "", k).otherwise(
                 F.concat(acc["section"], F.lit(sep), k)
             )
@@ -679,7 +665,7 @@ def snare_description_fields(
                 if lk_names is not None
                 else F.lit("")
             )
-            out = F.when(~r.startswith("\x01"), prose)
+            out = F.when(~split_hit(p), prose)
             if inline_map is not None:
                 ik = F.try_element_at(inline_map, k)
                 # inline-value / semicolon section: store the whole
@@ -705,10 +691,8 @@ def snare_description_fields(
                 )
             )
 
-        # bind the rewrite once (transform's array arg evaluates once)
-        return F.try_element_at(
-            F.transform(F.array(rew), with_parts), F.lit(1)
-        )
+        # bind the split once, so the regex runs once per segment
+        return _bind(parts, with_parts)
 
     init = F.struct(
         F.lit("").alias("section"),

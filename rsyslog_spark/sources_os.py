@@ -80,20 +80,18 @@ def kmsg_parse(df: DataFrame, rec_col: str = "record") -> DataFrame:
     )
 
     pri = F.when(valid, pri_s.cast("long"))
-    return (
-        df.withColumn("kmsg_valid", valid)
-        .withColumn("pri", pri)
-        .withColumn("facility", F.floor(pri / 8))
-        .withColumn("severity", pri % 8)
-        .withColumn("sequnum", F.when(valid, seq_s.cast("long")))
-        .withColumn(
-            "usec_since_boot",
-            F.when(valid & (ts_digits != ""), ts_digits.cast("long"))
-            .when(valid, F.lit(0)),
-        )
-        .withColumn("msg", F.when(valid, msg))
-        .withColumn("props", F.when(valid, props))
-    )
+    return df.withColumns({
+        "kmsg_valid": valid,
+        "pri": pri,
+        "facility": F.floor(pri / 8),
+        "severity": pri % 8,
+        "sequnum": F.when(valid, seq_s.cast("long")),
+        "usec_since_boot": F.when(
+            valid & (ts_digits != ""), ts_digits.cast("long")
+        ).when(valid, F.lit(0)),
+        "msg": F.when(valid, msg),
+        "props": F.when(valid, props),
+    })
 
 
 def kmsg_timestamp(
@@ -193,21 +191,20 @@ def journal_entry_parse(
     ).otherwise(F.concat(iden, F.lit(":")))
 
     ts_usec = j("__REALTIME_TIMESTAMP").try_cast("long")
-    return (
-        df.withColumn("journal_valid", valid)
-        .withColumn("msg", F.when(valid, msg))
-        .withColumn("severity", F.when(valid, severity))
-        .withColumn("facility", F.when(valid, facility))
-        .withColumn("pri", F.when(valid, facility * 8 + severity))
-        .withColumn("syslogtag", F.when(valid, tag))
-        .withColumn("programname", F.when(valid, iden))
-        .withColumn("procid", F.when(valid, pid))
-        .withColumn("hostname", F.when(valid, F.lit(local_hostname)))
-        .withColumn("ts_usec", F.when(valid, ts_usec))
-        .withColumn(
-            "ts", F.when(valid, F.timestamp_micros(ts_usec))
-        )
-    )
+    # `journal` stays its own lower projection: every field reads it
+    return df.withColumns({
+        "journal_valid": valid,
+        "msg": F.when(valid, msg),
+        "severity": F.when(valid, severity),
+        "facility": F.when(valid, facility),
+        "pri": F.when(valid, facility * 8 + severity),
+        "syslogtag": F.when(valid, tag),
+        "programname": F.when(valid, iden),
+        "procid": F.when(valid, pid),
+        "hostname": F.when(valid, F.lit(local_hostname)),
+        "ts_usec": F.when(valid, ts_usec),
+        "ts": F.when(valid, F.timestamp_micros(ts_usec)),
+    })
 
 
 def read_journal_export(path: str) -> list[str]:
@@ -322,22 +319,18 @@ def ulog_parse(
         F.lpad(minute.cast("string"), 2, "0"), F.lit(":"),
         F.lpad(sec.cast("string"), 2, "0"), F.lit("."), frac,
     )
-    return (
-        df.withColumn("ulog_valid", valid)
-        .withColumn("hostname", F.when(valid, host))
-        .withColumn("procid", F.when(valid & (procid != ""), procid))
-        .withColumn("timereported_str", F.when(valid, ts))
-        .withColumn(
-            "secfrac_precision", F.when(valid, F.length(frac))
-        )
-        .withColumn("structured_data", F.when(valid, sd))
-        .withColumn("msg", F.when(valid, msg))
-        .withColumn("syslogtag", F.when(valid, F.lit(tag)))
-        .withColumn("programname", F.when(valid, F.lit(tag)))
-        .withColumn(
-            "pri", F.when(valid, F.lit(facility * 8 + severity))
-        )
-    )
+    return df.withColumns({
+        "ulog_valid": valid,
+        "hostname": F.when(valid, host),
+        "procid": F.when(valid & (procid != ""), procid),
+        "timereported_str": F.when(valid, ts),
+        "secfrac_precision": F.when(valid, F.length(frac)),
+        "structured_data": F.when(valid, sd),
+        "msg": F.when(valid, msg),
+        "syslogtag": F.when(valid, F.lit(tag)),
+        "programname": F.when(valid, F.lit(tag)),
+        "pri": F.when(valid, F.lit(facility * 8 + severity)),
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -400,36 +393,25 @@ def batch_report_transform(
         too_large, F.concat(F.lit(_TOO_LARGE), F.col(path_col))
     ).otherwise(body)
 
-    out = (
-        df.withColumn("structured_data", F.coalesce(sd, F.lit("-")))
-        .withColumn("msg", msg)
-        .withColumn("too_large", too_large)
-        .withColumn(
-            "filename", F.substring_index(F.col(path_col), "/", -1)
-        )
-    )
+    cols = {
+        "structured_data": F.coalesce(sd, F.lit("-")),
+        "msg": msg,
+        "too_large": too_large,
+        "filename": F.substring_index(F.col(path_col), "/", -1),
+    }
     if ts_key is not None:
-        out = out.withColumn(
-            "ts_epoch",
+        cols["ts_epoch"] = F.regexp_extract(
+            F.coalesce(sd, F.lit("")), re.escape(ts_key) + r"(\d+)", 1,
+        ).try_cast("long")
+    if prog_key is not None:
+        cols["programname"] = F.when(
+            F.coalesce(sd, F.lit("")).rlike(re.escape(prog_key) + r'[^"]*"'),
             F.regexp_extract(
                 F.coalesce(sd, F.lit("")),
-                re.escape(ts_key) + r"(\d+)", 1,
-            ).try_cast("long"),
-        )
-    if prog_key is not None:
-        out = out.withColumn(
-            "programname",
-            F.when(
-                F.coalesce(sd, F.lit("")).rlike(
-                    re.escape(prog_key) + r'[^"]*"'
-                ),
-                F.regexp_extract(
-                    F.coalesce(sd, F.lit("")),
-                    re.escape(prog_key) + r'([^"]*)"', 1,
-                ),
+                re.escape(prog_key) + r'([^"]*)"', 1,
             ),
         )
-    return out
+    return df.withColumns(cols)
 
 
 def batch_reports(

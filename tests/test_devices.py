@@ -700,3 +700,17 @@ def test_snare_sections_gated(spark):
     assert rows[4624].win_laps is None
     assert rows[5157].win_tls is None
     assert rows[6281].win_wdac is None
+
+
+def test_snare_description_prose_holding_separator(spark):
+    """A prose segment that holds \\x01 but matches no 'Key:' shape
+    stays prose: it neither opens a section nor lands as a field."""
+    from pyspark.sql import functions as F
+
+    from rsyslog_spark.parsing.devices import snare_description_fields
+
+    df = spark.createDataFrame(
+        [("Subject:   foo\x01bar   Account Name:  x",)], "d string",
+    )
+    rows = df.select(snare_description_fields(F.col("d")).alias("f")).collect()
+    assert rows[0].f == {"Subject.Account Name": "x"}

@@ -183,6 +183,16 @@ def test_load_rulebase_rejects_unsupported_v2_shapes():
             '"while":{"type":"literal","text":","}},'
             '{"name":"x","type":"alpha"}]}%'
         )
+    # ...at every level: the same clash inside a repeat element
+    with pytest.raises(ValueError, match="share its name"):
+        mm.load_rulebase(
+            'rule=:%{"name":"o","type":"repeat","parser":'
+            '{"type":"alternative","parser":['
+            '{"name":"x","type":"repeat","parser":{"type":"number"},'
+            '"while":{"type":"literal","text":","}},'
+            '{"name":"x","type":"alpha"}]},'
+            '"while":{"type":"literal","text":";"}}%'
+        )
     # while must be a parser OBJECT
     with pytest.raises(ValueError, match="while"):
         mm.load_rulebase(
@@ -326,6 +336,44 @@ rule=:mix %{"name":"ys","type":"repeat","parser":[{"type":"alternative","parser"
     assert rows[4].norm == {
         "ys": '[{"num":"1"},{"word":"a"},{"num":"22"}]'
     }
+
+
+def test_name_captured_twice_keeps_later_capture(spark):
+    """A name captured twice in one parser list yields ONE key holding
+    the later capture — in a whole rule and in a repeat element alike
+    (never a duplicate JSON key)."""
+    rules = [
+        mm.NormalizeRule("top %x:word% %x:number%"),
+        mm.NormalizeRule(
+            'kv %{"name":"kv","type":"repeat","parser":['
+            '{"type":"word","name":"x"},{"type":"literal","text":"="},'
+            '{"type":"number","name":"x"}],'
+            '"while":{"type":"literal","text":";"}}%'
+        ),
+    ]
+    df = spark.createDataFrame([("top a 1",), ("kv p=1;q=2",)], "msg string")
+    rows = mm.mmnormalize(df, rules).collect()
+    assert rows[0].norm == {"x": "1"}
+    assert rows[1].norm == {"kv": '[{"x":"1"},{"x":"2"}]'}
+
+
+def test_quoted_string_capture(spark):
+    """A named v1 quoted-string captures BETWEEN its quotes; a
+    discarded one still requires them; v2 quoted-string keeps them."""
+    r = mm.NormalizeRule(
+        'a %q:quoted-string% b %-:quoted-string% '
+        'c %{"type":"quoted-string","name":"v"}%'
+    )
+    assert r.regex == (
+        r'^a\ "((?:[^"\\]|\\.)*)"\ b\ (?:"(?:[^"\\]|\\.)*")'
+        r'\ c\ ("(?:[^"\\]|\\.)*")$'
+    )
+    df = spark.createDataFrame(
+        [('a "x \\" y" b "z" c "w"',), ('a "x" b z c "w"',)], "msg string"
+    )
+    rows = mm.mmnormalize(df, [r]).collect()
+    assert rows[0].norm == {"q": 'x \\" y', "v": '"w"'}
+    assert rows[1].norm_rule == -1
 
 
 def test_lognorm_extended_types(spark):

@@ -242,6 +242,27 @@ def test_mmnormalize_single_regex_pass_per_rule(spark):
     )
     assert "RegExpExtract" not in code and "regexp_extract" not in code
 
+    # a repeat element reads each named field with one regexp_extract
+    # on the element; the rule itself keeps its one regexp_replace
+    def passes(parser: str) -> tuple[int, int]:
+        rule = mm.load_rulebase(
+            f'rule=:kv %{{"name":"r","type":"repeat","parser":{parser},'
+            '"while":{"type":"literal","text":";"}}%'
+        )
+        plan = mm.mmnormalize(df, rule)._jdf.queryExecution()
+        text = plan.optimizedPlan().toString()
+        return text.count("regexp_replace("), text.count("regexp_extract(")
+
+    item = ('[{"type":"word","name":"k"},{"type":"literal","text":"="},'
+            '{"type":"number","name":"v"}]')
+    nested = ('{"name":"in","type":"repeat","parser":' + item
+              + ',"while":{"type":"literal","text":","}}')
+    rewrites, extracts = passes('{"type":"number"}')
+    assert extracts == 0
+    assert passes('{"type":"number","name":"n"}') == (rewrites, 1)
+    assert passes(item) == (rewrites, 2)
+    assert passes(nested) == (rewrites, 3)
+
 
 def test_mmgrok_single_regex_pass(spark):
     from rsyslog_spark import mm
