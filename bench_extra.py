@@ -5,7 +5,7 @@ plans).
 Usage:
     python bench_extra.py plans  [out_dir] [label] [names]  # explain("formatted")
     python bench_extra.py time   [names...]          # noop-sink timings, min of 3
-    python bench_extra.py decode                     # decode backend microbench
+    python bench_extra.py decode                     # decode/parse per backend
     python bench_extra.py jobs   [names]             # Spark jobs/tasks per entry
 
 Both default to ``bench.suite``, bench.py's table of timed queries;
@@ -115,31 +115,41 @@ def cmd_time(names: list[str]) -> None:
 
 
 def cmd_decode() -> None:
-    """Compare decode backends over the bench tokens corpus."""
+    """Compare decode backends over the bench tokens corpus: the decode
+    alone (``decode_<backend>``) and decode + header parse with every
+    parse column written to the noop sink (``parse_<backend>``)."""
     from pyspark.sql import functions as F
 
-    from rsyslog_spark.parsing.core import decode_tokens
+    from rsyslog_spark.parsing import decode_tokens, parse
 
     spark = _spark()
     tokens_path = bench._materialize_tokens(spark, MULT)
     lt = spark.read.parquet(tokens_path)
-    for backend in ("jvm", "arrow"):
-        # rebuild the DataFrame per attempt: AQE reuses a finalized
-        # plan's materialized shuffle stages on re-collect of the SAME
-        # DataFrame object, which would time a cache hit
-        def mk():
-            return lt.select(
-                F.length(decode_tokens("tokens", backend=backend)).alias("n")
-            ).agg(F.sum("n"))
 
-        spark.sparkContext.setJobDescription(f"decode:{backend}")
-        mk().collect()
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            mk().collect()
-            best = min(best, time.time() - t0)
-        print(json.dumps({f"decode_{backend}": round(best, 3)}), flush=True)
+    def decode(backend):
+        lt.select(
+            F.length(decode_tokens("tokens", backend=backend)).alias("n")
+        ).agg(F.sum("n")).collect()
+
+    def parse_all(backend):
+        parse(lt, decode_backend=backend).drop(*lt.columns).write.format(
+            "noop"
+        ).mode("overwrite").save()
+
+    for layer, run in (("decode", decode), ("parse", parse_all)):
+        for backend in ("jvm", "arrow"):
+            # each run builds a new DataFrame: AQE reuses a finalized
+            # plan's materialized shuffle stages on re-collect of the
+            # SAME DataFrame object, which would time a cache hit
+            spark.sparkContext.setJobDescription(f"{layer}:{backend}")
+            run(backend)  # warm-up
+            best = float("inf")
+            for _ in range(3):
+                t0 = time.time()
+                run(backend)
+                best = min(best, time.time() - t0)
+            print(json.dumps({f"{layer}_{backend}": round(best, 3)}),
+                  flush=True)
     spark.stop()
 
 

@@ -29,7 +29,6 @@ def main(argv: list[str] | None = None) -> int:
         help="RainerScript routing program file (default: flagship script)",
     )
     ap.add_argument("--master", default=None)
-    ap.add_argument("--parse-mode", default="sql", choices=["sql", "full"])
     ap.add_argument("--repartition", type=int, default=None)
     args = ap.parse_args(argv)
 
@@ -50,7 +49,7 @@ def main(argv: list[str] | None = None) -> int:
     else:
         router = flagship.make_router()
     parsed = flagship.build_parsed(
-        spark, args.sf_dir, mode=args.parse_mode, repartition=args.repartition
+        spark, args.sf_dir, repartition=args.repartition
     )
     snap = run_with_lineage(router, parsed, args.out)
     print(json.dumps({k: str(v) for k, v in snap.items()}))

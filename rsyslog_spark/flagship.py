@@ -51,8 +51,7 @@ def make_env() -> Env:
 
 
 def build_parsed(
-    spark: SparkSession, sf_dir: str, mode: str = "sql",
-    repartition: int | None = None,
+    spark: SparkSession, sf_dir: str, repartition: int | None = None,
 ) -> DataFrame:
     """events → logtokens → decode+parse. ``repartition`` hashes on
     doc_id before the parse projection (north_star: balanced batches;
@@ -60,7 +59,7 @@ def build_parsed(
     lt = corpus.logtokens(spark, sf_dir)
     if repartition:
         lt = lt.repartition(repartition, "doc_id")
-    return parse(lt, mode=mode)
+    return parse(lt)
 
 
 def make_router(env: Env | None = None) -> Router:

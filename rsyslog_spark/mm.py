@@ -176,12 +176,16 @@ def mmtaghostname(df: DataFrame) -> DataFrame:
 
 # --- mmnormalize (plugins/mmnormalize, liblognorm rulebases) ------------------
 
-_HEXESC = re.compile(r"\\x([0-9a-fA-F]{2})")
+# an escaped backslash is consumed as one pair, so the "x41" in "\\x41"
+# stays literal
+_HEXESC = re.compile(r"\\(?:x([0-9a-fA-F]{2})|\\)")
 
 
 def _unescape(s: str) -> str:
     """liblognorm \\xNN escapes (rulebase char-to:\\x3a etc.)."""
-    return _HEXESC.sub(lambda m: chr(int(m.group(1), 16)), s)
+    return _HEXESC.sub(
+        lambda m: chr(int(m.group(1), 16)) if m.group(1) else m.group(0), s
+    )
 
 
 def _noncapture(rx: str) -> str:
@@ -661,7 +665,7 @@ def mmnormalize(
     sanitized input). The naive alternative — one rlike plus one
     regexp_extract per field — re-executes the full regex R×(G+1)
     times; the header parser measured the rewrite trick ~2.5× faster
-    (parsing/core.py parse_sql). Fields that didn't participate in the
+    (parsing/core.py parse). Fields that didn't participate in the
     match land as "" exactly like regexp_extract would.
 
     Structure matters for codegen: the hit flag + split array are

@@ -1,24 +1,31 @@
 """JVM-side (whole-stage-codegen) decode + syslog header parse.
 
+One parser, :func:`parse`, built from Column expressions; its output
+equals the executable spec ``parsing.full.parse_line`` field for field.
 Semantics mirrored from the reference (cited per step):
 
+- Sanitize: strip trailing NUL/LF/CR, escape the other control chars
+  (TAB excepted) as ``#ooo`` octal (runtime/parser.c:330-535)
 - PRI parse: ``<0..191>`` → facility = pri>>3, severity = pri&7;
   missing PRI → default 13; malformed → invalid.
   (runtime/parser.c:543-605)
-- RFC3164 heuristic header: TIMESTAMP SP HOSTNAME SP TAG MSG, where TAG
-  runs until ':' (kept in tag) or SP (left in msg).
-  (tools/pmrfc3164.c:295-516)
-- RFC5424: ``<PRI>1 TS HOST APP PROCID MSGID SD MSG``.
-  (tools/pmrfc5424.c:75-185)
+- RFC3164 heuristics: HP-ProCurve leading space, RFC3339 timestamp in
+  the legacy frame, optional year after the timestamp, hostname
+  charset validation, headerless lines; TAG runs until ':' (kept) or
+  SP (left in msg), at most 32 chars. (tools/pmrfc3164.c:295-516)
+- RFC5424: ``<PRI>1 TS HOST APP PROCID MSGID SD MSG`` with ``\\]``
+  escapes inside SD blocks. (tools/pmrfc5424.c:75-185)
 - PROGNAME = TAG up to first ':' / '[' / SP
   (runtime/msg.c getProgramName, msg.h:279)
 
-The decode fast path (``char()`` join) is exact for token values
+The default decode (``decode_backend="jvm"``) is exact for token values
 < 128 (ASCII); the corpus generator guarantees this. Non-ASCII code
-points require ``parse(df, mode="full")``.
+points need ``parse(df, decode_backend="arrow")``.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,25 +41,6 @@ FACILITY_TEXT = [
 SEVERITY_TEXT = [
     "emerg", "alert", "crit", "err", "warning", "notice", "info", "debug",
 ]
-
-_MONTHS = "Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec"
-# 'MMM dd' with space- or zero-padded day, then HH:MM:SS
-TS3164_RE = rf"(?:{_MONTHS}) (?: \d|\d\d) \d{{2}}:\d{{2}}:\d{{2}}"
-# RFC3339/5424 timestamp (with optional frac + zone)
-TS3339_RE = (
-    r"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(?:\.\d+)?(?:Z|[+-]\d{2}:\d{2})?"
-)
-
-# full-line regexes; group numbers documented inline. (?s) = DOTALL so
-# multiline MSG bodies (imfile startmsg.regex assembly) stay one match.
-_RE_PRI = r"^<(\d{1,3})>"
-# after-PRI RFC3164:  (ts) SP (host) SP (tag[':' kept]) (msg)
-# the reference tolerates ONE stray space between '>' and the 3164
-# timestamp (tests/parsertest-parse-3164-buggyday.sh sends "<38> Mar  7")
-_RE_3164 = rf"(?s)^ ?({TS3164_RE}) (\S+) ([^: ]*:?)(.*)$"
-# after-PRI RFC5424: 1 SP ts SP host SP app SP procid SP msgid SP sd SP msg
-_RE_5424 = r"(?s)^1 (\S+) (\S+) (\S+) (\S+) (\S+) (-|\[.*\])(?: (.*))?$"
-
 
 _ASCII_LUT = None
 
@@ -166,8 +154,6 @@ def severity_text(sev: Column) -> Column:
 # never appear in a sanitized syslog line (SanitizeMsg escapes all
 # control chars, parser.c:330-535)
 _SEP = "\x01"
-_REPL_3164 = _SEP.join(f"${i}" for i in range(1, 5))
-_REPL_5424 = _SEP.join(f"${i}" for i in range(1, 8))
 
 
 def rewrite_groups(
@@ -202,78 +188,161 @@ def group_getter(parts: Column):
     )
 
 
-def parse_sql(
-    df: DataFrame, tokens_col: str = "tokens", decode_backend: str = "jvm"
+_MONTHS = "Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec"
+_P3339 = r"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(?:\.\d+)?(?:Z|[+-]\d{2}:\d{2})?"
+_P3164 = rf"(?:{_MONTHS}) (?: \d|\d\d) \d\d:\d\d:\d\d"
+# 1970..2099 spelled as a pattern so the year-range check needs no
+# second pass (parse_line's `1970 <= int(yr) <= 2099`)
+_PYEAR = r"(?: (?:19[7-9]\d|20\d{2})(?=[ :]))?"
+_HOSTCH = r"[A-Za-z0-9._\-\[\]@/]+"
+# SD blocks honoring \] escapes. java.util.regex recurses once per
+# iteration of a backtracking group loop, so (?:[^\]\\]|\\.)* overflows
+# the thread stack on an SD region with thousands of escapes or blocks;
+# possessive loops iterate instead. Nothing is lost: a block ends at its
+# first unescaped ']' and the (.*) after the blocks always matches, so
+# the match never backtracks into them.
+_SDBLK = r"(?:\[[^\]\\]*+(?:\\.[^\]\\]*+)*+\])++"
+
+#: the PRI digits, read off the line's first five chars, so a query
+#: that needs only pri/facility/severity runs no header regex
+_PRI_RE = r"^<(\d{1,3})>"
+
+#: ONE regex holding every other parse_line heuristic (it skips the PRI)
+#: as ordered alternations/optional groups — one match per row. Greedy `?` groups
+#: encode parse_line's if-chains: the engine tries the consuming path
+#: first and only falls through when it cannot match, which is exactly
+#: the imperative precedence. The pattern matches EVERY sanitized line
+#: (all branches optional / catch-all). Branch outcomes ride on groups
+#: whose pattern cannot match "" (the '1 ' marker, '-', sd blocks,
+#: timestamps, hostnames), so an absent group's "" is decidable.
+#: ``(?d)`` makes LF the only line terminator, as in Python's ``re``;
+#: sanitized text holds none, so ``.*`` runs to the end.
+#: Group map:
+#:  1 RFC5424 marker ('1 ') | RFC5424: 2 ts 3 host 4 app 5 procid
+#:  6 msgid 7 sd ('-' or blocks) 8 sd-space 9 msg
+#:  | RFC3164: 10 ts(+year), 11 host-after-ts, 12 host-no-ts,
+#:  13 tag 14 msg
+_HEADER_RE = (
+    r"(?d)^(?:<\d{1,3}>)?"
+    r"(?:(1 )"
+    r"([^ ]*)"
+    r"(?: ([^ ]*)"
+    r"(?: ([^ ]*)"
+    r"(?: ([^ ]*)"
+    r"(?: ([^ ]*)"
+    f"(?: (?:(-|{_SDBLK})( ?))?(.*))?"
+    r")?)?)?)?"
+    r"|"
+    f"(?: (?=(?:{_P3339}|{_P3164})))?"
+    r"(?:"
+    f"((?:{_P3339}|{_P3164}{_PYEAR}))"
+    f"(?: (?:({_HOSTCH})(?: |$))?)?"
+    r"|"
+    f"(?:({_HOSTCH})(?: |$))?"
+    r")"
+    r"([^: ]{0,32}:?)(.*)"
+    r")$"
+)
+#: the rewrite's fields, read as g(1)..g(9): groups of branches that
+#: exclude each other share one field (a 5424 or a 3164 timestamp), so
+#: 14 groups split into 9 fields
+_HEADER_FIELDS = (
+    "$1", "$2$10", "$3$11$12", "$4$13", "$5", "$6", "$7", "$8", "$9$14",
+)
+
+
+def _sanitized(raw: Column) -> Column:
+    """SanitizeMsg (parser.c:330-535): strip trailing NUL/LF/CR, escape
+    every other control char but TAB as ``#ooo``, char by char.
+    ``transform`` runs interpreted (a ``CodegenFallback``), so this is
+    one call in the generated code, which only flagged rows reach. The
+    same escape as 31 nested ``replace`` calls put the parse stage's
+    ``processNext`` over the 8,000 bytecode bytes HotSpot compiles, and
+    the whole stage ran interpreted (tests/test_plans.py pins the
+    limit)."""
+    return F.array_join(F.transform(
+        F.split(F.rtrim(raw, F.lit("\x00\n\r")), ""),
+        lambda c: F.when(
+            c.between("\x00", "\x1f") & (c != "\t"),
+            F.concat(F.lit("#"), F.lpad(F.conv(F.ascii(c), 10, 8), 3, "0")),
+        ).otherwise(c),
+    ), "")
+
+
+def parse(
+    df: DataFrame, tokens_col: str = "tokens",
+    decode_backend: str | None = None,
 ) -> DataFrame:
-    """Append parsed header columns using built-in expressions.
+    """Decode + parse: append the header columns
 
-    One narrow projection stage: no shuffle, fully whole-stage-
-    codegen'd (decode optionally via the Arrow backend); Catalyst
-    prunes unused columns.
+        rawmsg, pri, facility, severity, protocol_version,
+        timereported_str, hostname, syslogtag, procid, msgid,
+        structured_data, msg, parse_success, programname
 
-    Perf: each row costs ONE regex pass — the pattern of its header
-    variant (RFC 5424 when the text after PRI starts with ``1 ``,
-    else RFC 3164) rewrites all groups into a control-char-separated
-    string (regexp_replace), kept as its own column so the match test
-    and the split both read it (generated code: one regexp_replace
-    eval site per variant). The naive per-field regexp_extract
-    alternative costs one full regex match per field (13×); measured
-    ~2.5× slower at 20M rows. PRI is plain string arithmetic, no
-    regex.
+    to ``df``; the input columns (tokens too) pass through untouched.
+    ``decode_backend`` in {"jvm", "arrow"} (default: $SPARK_GRAFT_DECODE
+    or "jvm").
+
+    One narrow projection stage: no shuffle, whole-stage codegen'd
+    (decode optionally via the Arrow backend); Catalyst prunes unused
+    columns. Each row costs ONE regex pass over the line,
+    :data:`_HEADER_RE`'s rewrite of its groups into a _SEP-joined
+    string of :data:`_HEADER_FIELDS`, plus :data:`_PRI_RE` over its first
+    five chars. The sanitized text, the PRI digits and the split are
+    stacked layers of their own: CollapseProject keeps a non-cheap
+    expression that is read more than once in its own projection, so
+    neither the decode nor a regex is re-run per read (an inlined PRI
+    regex, read by pri, facility and severity, measured 4x the cost of
+    the bound one).
     """
-    raw = decode_tokens(tokens_col, backend=decode_backend)
-    df = df.withColumn("rawmsg", raw)
-
-    # --- PRI: '<ddd>' prefix via instr/substring (parser.c:543-605) ---
-    gt = F.instr("rawmsg", ">")
-    pri_str = F.col("rawmsg").substr(F.lit(2), gt - 2)
-    has_pri = (
-        F.col("rawmsg").startswith("<")
-        & gt.between(3, 5)
-        & pri_str.try_cast("int").isNotNull()
+    if decode_backend is None:
+        decode_backend = os.environ.get("SPARK_GRAFT_DECODE", "jvm")
+    df = df.withColumn(
+        "rawmsg", decode_tokens(tokens_col, backend=decode_backend)
     )
-    pri_num = F.when(has_pri, pri_str.try_cast("int")).otherwise(F.lit(13))
-    pri_valid = pri_num <= 191
-    after_pri = F.when(
-        has_pri, F.col("rawmsg").substr(gt + 1, F.length("rawmsg"))
-    ).otherwise(F.col("rawmsg"))
-
-    # one withColumns per projection the optimizer keeps: each layer
-    # reads only columns the layers below it made
-    df = df.withColumns(
-        {"pri": F.when(pri_valid, pri_num), "_after_pri": after_pri}
-    )
-
-    is5424 = F.col("_after_pri").startswith("1 ")
-    # one regex pass per row: the variant's rewrite (groups → _SEP-
-    # joined string) is its own column, so the match test and the split
-    # below read it instead of re-running the regex
+    # only rows with a code point below 32 can need sanitizing (TAB rows
+    # pass through it unchanged): a guard over the int array is cheaper
+    # than any pass over the text
+    df = df.withColumn("rawmsg", F.when(
+        F.array_min(tokens_col) < 32, _sanitized(F.col("rawmsg"))
+    ).otherwise(F.col("rawmsg")))
     df = df.withColumns({
-        "facility": (F.col("pri") / 8).cast("int"),
-        "severity": F.col("pri") % 8,
-        "protocol_version": F.when(is5424, F.lit(1)).otherwise(F.lit(0)),
-        "_rew": F.when(
-            is5424, F.regexp_replace("_after_pri", _RE_5424, _REPL_5424)
-        ).otherwise(F.regexp_replace("_after_pri", _RE_3164, _REPL_3164)),
+        "_pri": F.regexp_extract(F.col("rawmsg").substr(1, 5), _PRI_RE, 1),
+        "_g": F.split(F.regexp_replace(
+            "rawmsg", _HEADER_RE, _SEP + _SEP.join(_HEADER_FIELDS)
+        ), _SEP, -1),
     })
-    # regexp_replace returns the input unchanged on no-match; _SEP can't
-    # occur in sanitized input, so its presence IS the match flag
-    rew = F.col("_rew")
-    df = df.withColumn("_g", F.when(rew.contains(_SEP), F.split(rew, _SEP, -1)))
 
-    g = lambda i: F.try_element_at("_g", F.lit(i))  # noqa: E731
-    dash_null = lambda c: F.when(c != "-", c)  # noqa: E731
-
+    g = group_getter(F.col("_g"))
+    some = lambda c: F.when(c != "", c)  # noqa: E731
+    nil = lambda c: F.when(c != "-", c)  # noqa: E731 (5424 NILVALUE)
+    is5424 = g(1) != ""
+    head = lambda c: F.when(is5424, nil(c)).otherwise(some(c))  # noqa: E731
+    pri_s = F.col("_pri")
+    pri_num = pri_s.try_cast("int")
+    pri_ok = (pri_s == "") | (pri_num <= 191)  # no PRI reads as 13
+    pri = F.when(pri_s == "", F.lit(13)).when(pri_ok, pri_num)
+    sd, msg = g(7), g(9)
+    # SD is '-' or a block list that ends at SP or at the end of line
+    sd_ok = (sd == "-") | (
+        (sd != "") & ((g(8) != "") | ~msg.startswith("["))
+    )
     df = df.withColumns({
-        "timereported_str": g(1),
-        "hostname": g(2),
-        "syslogtag": g(3),
-        "procid": F.when(is5424, dash_null(g(4))),
-        "msgid": F.when(is5424, dash_null(g(5))),
-        "structured_data": F.when(is5424, g(6)),
-        "msg": F.when(is5424, F.coalesce(g(7), F.lit(""))).otherwise(g(4)),
-        "parse_success": F.col("_g").isNotNull() & pri_valid,
+        "pri": pri,
+        "facility": (pri / 8).cast("int"),
+        "severity": pri % 8,
+        "protocol_version": is5424.cast("int"),
+        "timereported_str": head(g(2)),
+        "hostname": head(g(3)),
+        "syslogtag": head(g(4)),
+        "procid": F.when(is5424, nil(g(5))),
+        "msgid": F.when(is5424, nil(g(6))),
+        "structured_data": F.when(is5424, some(sd)),
+        "msg": msg,
+        "parse_success": F.col("_g").isNotNull() & pri_ok & (
+            ~is5424 | sd_ok
+        ),
     })
     return df.withColumn(
         "programname", F.regexp_extract("syslogtag", r"^([^:\[ ]*)", 1)
-    ).drop("_after_pri", "_rew", "_g")
+    ).drop("_pri", "_g")

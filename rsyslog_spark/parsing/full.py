@@ -1,6 +1,8 @@
-"""Full-fidelity Arrow-vectorized parser (the reference's heuristics).
+"""Executable spec of the syslog header parse (the reference's heuristics).
 
-Covers the corner cases the SQL fast path does not attempt:
+:func:`parse_line` parses one line in plain Python; the Spark parser
+``parsing.core.parse`` must equal it field for field (golden and fuzz
+differential tests, tests/test_parser_goldens.py). It covers:
 
 - message sanitization: strip trailing NUL/LF/CR, escape control chars
   as ``#ooo`` octal (runtime/parser.c:330-535)
@@ -12,58 +14,27 @@ Covers the corner cases the SQL fast path does not attempt:
   headerless messages (no timestamp → no hostname, TAG from start)
 - RFC5424 structured data with ``\\]`` escapes
   (tools/pmrfc5424.c:75-185)
-- non-ASCII token code points (decode happens in Python here)
 
-This is an Arrow-batched pandas UDF (no per-row Python at the Spark
-API layer; the per-element work happens inside each Arrow batch).
+Digits are ASCII (``re.ASCII``): the reference parses bytes, so a
+multi-byte code point is never a digit.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import arrow_udf
-from pyspark.sql.types import (
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-PARSE_SCHEMA = StructType(
-    [
-        StructField("rawmsg", StringType()),
-        StructField("pri", IntegerType()),
-        StructField("protocol_version", IntegerType()),
-        StructField("timereported_str", StringType()),
-        StructField("hostname", StringType()),
-        StructField("syslogtag", StringType()),
-        StructField("procid", StringType()),
-        StructField("msgid", StringType()),
-        StructField("structured_data", StringType()),
-        StructField("msg", StringType()),
-        StructField("parse_success", BooleanType()),
-    ]
-)
-
-_MONTHS = {
-    "Jan": 1, "Feb": 2, "Mar": 3, "Apr": 4, "May": 5, "Jun": 6,
-    "Jul": 7, "Aug": 8, "Sep": 9, "Oct": 10, "Nov": 11, "Dec": 12,
-}
 _TS3164 = re.compile(
     r"^(Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec) "
-    r"( \d|\d\d) (\d\d:\d\d:\d\d)"
+    r"( \d|\d\d) (\d\d:\d\d:\d\d)",
+    re.ASCII,
 )
 _TS3339 = re.compile(
-    r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(?:\.\d+)?(?:Z|[+-]\d{2}:\d{2})?"
+    r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(?:\.\d+)?(?:Z|[+-]\d{2}:\d{2})?",
+    re.ASCII,
 )
-_YEAR_AFTER = re.compile(r"^ (\d{4})(?=[ :])")
+_YEAR_AFTER = re.compile(r"^ (\d{4})(?=[ :])", re.ASCII)
 _HOSTNAME_OK = re.compile(r"^[A-Za-z0-9._\-\[\]@/]+$")
-_PRI = re.compile(r"^<(\d{1,3})>")
+_PRI = re.compile(r"^<(\d{1,3})>", re.ASCII)
 _SD_BLOCKS = re.compile(r"\[(?:[^\]\\]|\\.)*\]")
 
 
@@ -200,213 +171,3 @@ def _parse_5424(rest: str, out: dict) -> dict:
         out["parse_success"] = False
     out["msg"] = rest
     return out
-
-
-# --- vectorized batch parser (r5) -------------------------------------------
-# pattern strings (no anchors/captures) for composition; the compiled
-# regexes above stay as parse_line's (and the differential test's) twin
-_P3339 = (
-    r"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(?:\.\d+)?(?:Z|[+-]\d{2}:\d{2})?"
-)
-_P3164 = (
-    r"(?:Jan|Feb|Mar|Apr|May|Jun|Jul|Aug|Sep|Oct|Nov|Dec) "
-    r"(?: \d|\d\d) \d\d:\d\d:\d\d"
-)
-# 1970..2099 spelled as a pattern so the year-range check needs no
-# second pass (parse_line's `1970 <= int(yr) <= 2099`)
-_PYEAR = r"(?: (?:19[7-9]\d|20\d{2})(?=[ :]))?"
-# every control char except TAB (\x09) — interior LF/CR included, the
-# trailing ones are already stripped (sanitize: ord(c)<32 and c != '\t')
-_CTRL = re.compile(r"[\x00-\x08\x0a-\x1f]")
-_HOSTCH = r"[A-Za-z0-9._\-\[\]@/]+"
-_SDBLK = r"(?:\[(?:[^\]\\]|\\.)*\])+"
-
-#: ONE compiled regex holding every parse_line heuristic as ordered
-#: alternations/optional groups — a single C-level match per row
-#: replaces ~6 Python-level regex calls + branch logic (VERDICT r4 #8).
-#: Greedy `?` groups encode parse_line's if-chains: the engine tries
-#: the consuming path first and only falls through when it cannot
-#: match, which is exactly the imperative precedence. The pattern
-#: matches EVERY sanitized line (all branches optional / catch-all).
-#: Branch outcomes ride on groups whose pattern cannot match "" (the
-#: '1 ' marker, '-', sd blocks, timestamps, hostnames), so unmatched
-#: groups normalize to "" and participation stays decidable.
-#: Group map:
-#:  1 pri, 2 RFC5424 marker ('1 ') | RFC5424: 3 ts 4 host 5 app
-#:  6 procid 7 msgid, SD region: 8 dash 9 dash-space 10 dash-msg,
-#:  11 sd-blocks 12 blocks-space 13 blocks-msg, 14 fail-msg
-#:  RFC3164: 15 ts(+year), 16 host-after-ts, 17 host-no-ts,
-#:           18 tag 19 tag-colon 20 msg
-_N_GROUPS = 20
-_MEGA = re.compile(
-    r"^(?:<(\d{1,3})>)?"
-    r"(?:(1 )"
-    r"([^ ]*)"
-    r"(?: ([^ ]*)"
-    r"(?: ([^ ]*)"
-    r"(?: ([^ ]*)"
-    r"(?: ([^ ]*)"
-    r"(?: (?:"
-    r"(-)( ?)(.*)"
-    f"|({_SDBLK})( ?)(.*)"
-    r"|(.*)"
-    r"))?"
-    r")?)?)?)?"
-    r"|"
-    f"(?: (?=(?:{_P3339}|{_P3164})))?"
-    r"(?:"
-    f"((?:{_P3339}|{_P3164}{_PYEAR}))"
-    f"(?: (?:({_HOSTCH})(?: |$))?)?"
-    r"|"
-    f"(?:({_HOSTCH})(?: |$))?"
-    r")"
-    r"([^: ]{0,32})(:?)(.*)"
-    r")$",
-    re.MULTILINE,
-)
-
-
-# \d{1,3} domain including zero-padded forms ('013' parses as 13)
-_PRI_CACHE = {
-    f: float(i)
-    for i in range(1000)
-    for f in (str(i), "%02d" % i, "%03d" % i)
-    if len(f) <= 3
-}
-_NAN = float("nan")
-
-
-def _parse_frame(raw: pd.Series) -> pd.DataFrame:
-    """Vectorized twin of :func:`parse_line` over a whole Arrow batch
-    (VERDICT r4 #8: the per-row Python interpreter loop was the cost
-    ceiling of mode='full'). Per row there is exactly ONE regex match
-    (``_MEGA``) and one tuple build; all branch logic runs columnar on
-    the group arrays. Equivalence with parse_line is enforced by the
-    golden + fuzz differential tests (tests/test_parser_goldens.py)."""
-    import numpy as np
-
-    idx = raw.index
-    n = len(raw)
-    lines = raw.tolist()
-    m = _MEGA.match
-    # one control-char search over the concatenated batch decides
-    # whether ANY row needs sanitize (trailing NUL/LF/CR are control
-    # chars, so sanitize-needing rows are exactly the hits) — the
-    # common clean batch skips the per-row search entirely. Join with
-    # "" — a "\n" separator would itself be a _CTRL hit on every
-    # multi-row batch (code-review r5)
-    if n and _CTRL.search("".join(lines)) is not None:
-        search = _CTRL.search
-        for j in range(n):
-            x = lines[j]
-            if search(x) is not None:
-                lines[j] = sanitize(x)
-        s = pd.Series(lines, index=idx, dtype=object)
-    else:
-        s = raw
-    if n:
-        A = np.array([m(x).groups() for x in lines], dtype=object)
-        # unmatched groups → "" (uniform with take_word's empties)
-        A[A == np.array(None, dtype=object)] = ""
-    else:
-        A = np.full((0, _N_GROUPS), "", dtype=object)
-    none = np.array(None, dtype=object)
-    c = lambda i: A[:, i - 1]  # noqa: E731
-
-    pri_s = c(1)
-    has_pri = pri_s != ""  # \d{1,3} cannot match empty
-    # PRI is 1-3 digits: a 1000-entry dict beats to_numeric's parser
-    getpri = _PRI_CACHE.get
-    pri_num = pd.Series(
-        np.fromiter(
-            (getpri(x, _NAN) for x in pri_s), dtype=np.float64, count=n
-        ),
-        index=idx,
-    )
-    invalid_pri = has_pri & (pri_num > 191).to_numpy()
-    pri = pri_num.where(pd.Series(has_pri, index=idx), 13.0).where(
-        ~pd.Series(invalid_pri, index=idx)
-    )
-
-    m5 = c(2) != ""  # the '1 ' marker participated
-
-    # '-' → null; absent words already render as take_word's ""
-    word5 = lambda col: np.where(col == "-", none, col)  # noqa: E731
-
-    host3 = np.where(c(16) != "", c(16), np.where(c(17) != "", c(17), none))
-    tag3 = c(18) + c(19)
-    tag3 = np.where(tag3 == "", none, tag3)
-
-    dash = c(8) == "-"
-    blocks = c(11)
-    has_blocks = blocks != ""
-    # the fail probe only touches the (rare) block rows
-    b13 = c(13)
-    fail_blocks = has_blocks & (c(12) == "") & np.array(
-        [bool(x) and x[0] == "[" for x in b13], dtype=bool
-    )
-    sd_c = np.where(dash, "-", np.where(has_blocks, blocks, none))
-    msg5 = np.where(dash, c(10), np.where(has_blocks, b13, c(14)))
-
-    ok = ~invalid_pri & (~m5 | dash | (has_blocks & ~fail_blocks))
-    ts3 = np.where(c(15) != "", c(15), none)
-    pick = lambda five, three: pd.Series(  # noqa: E731
-        np.where(m5, five, three), index=idx, dtype=object
-    )
-
-    return pd.DataFrame(
-        {
-            "rawmsg": s,
-            "pri": pri.astype("Int32"),
-            "protocol_version": pd.Series(
-                m5.astype("int32"), index=idx
-            ),
-            "timereported_str": pick(word5(c(3)), ts3),
-            "hostname": pick(word5(c(4)), host3),
-            "syslogtag": pick(word5(c(5)), tag3),
-            "procid": pick(word5(c(6)), none),
-            "msgid": pick(word5(c(7)), none),
-            "structured_data": pick(sd_c, none),
-            "msg": pick(msg5, c(20)),
-            "parse_success": pd.Series(ok, index=idx, dtype=bool),
-        }
-    )
-
-
-@arrow_udf(PARSE_SCHEMA)
-def _parse_tokens_udf(tokens):
-    """Decode through the same Arrow buffer-reuse codec as the
-    Column decode backend, parse the batch with :func:`_parse_frame`."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from rsyslog_spark.parsing.core import _decode_arrow_impl
-
-    frame = _parse_frame(_decode_arrow_impl(tokens).to_pandas())
-    return pa.RecordBatch.from_pandas(
-        frame, schema=to_arrow_schema(PARSE_SCHEMA), preserve_index=False
-    ).to_struct_array()
-
-
-def parse_full(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """Append parsed columns via the full-fidelity Arrow UDF.
-
-    r5 (VERDICT r4 #8): the UDF body is vectorized end to end — the
-    Arrow buffer-reuse token decode that ``decode_tokens(...,
-    backend="arrow")`` also uses, and a single mega-regex match per
-    row with columnar group post-processing. Measured 3.6× over the
-    previous per-row decode+parse_line body at 200k rows/batch (old
-    ~31µs/row → new ~9µs/row steady-state); the remaining floor is
-    CPython's regex engine itself (~2µs/row — pyarrow's RE2
-    extract_regex was measured SLOWER at 19 capture groups,
-    12µs/row). parse_line remains the executable spec, enforced equal
-    by the fuzz differential test."""
-    parsed = df.withColumn("_p", _parse_tokens_udf(F.col(tokens_col)))
-    parsed = parsed.withColumns(
-        {f.name: F.col(f"_p.{f.name}") for f in PARSE_SCHEMA.fields}
-    ).drop("_p")
-    return parsed.withColumns({
-        "facility": (F.col("pri") / 8).cast("int"),
-        "severity": F.col("pri") % 8,
-        "programname": F.regexp_extract("syslogtag", r"^([^:\[ ]*)", 1),
-    })

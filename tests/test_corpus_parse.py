@@ -1,6 +1,7 @@
 """End-to-end: synthesize logtokens from events, parse back, compare
 against the structured events columns (self-oracle, no parsing on the
-expected side). Also checks the per-row token pass-through invariant."""
+expected side) and against the executable spec parse_line. Also checks
+the per-row token pass-through invariant."""
 
 from __future__ import annotations
 
@@ -45,7 +46,7 @@ def _expected(spark, sf_dir):
 
 def test_parse_sql_matches_events(spark, sf_dir):
     lt = corpus.logtokens(spark, sf_dir)
-    parsed = parse(lt, mode="sql")
+    parsed = parse(lt)
     exp = _expected(spark, sf_dir)
     j = parsed.join(exp, "doc_id", "full_outer")
     bad = j.filter(
@@ -65,23 +66,24 @@ def test_parse_sql_matches_events(spark, sf_dir):
     assert not rows, f"mismatches: {rows}"
 
 
-def test_parse_full_matches_sql(spark, sf_dir):
+def test_parse_matches_spec_on_corpus(spark, sf_dir):
+    """300 corpus rows through parse() equal the executable spec
+    parse_line on every field."""
+    from rsyslog_spark.parsing.full import parse_line
+
     lt = corpus.logtokens(spark, sf_dir).limit(300)
-    cols = [
-        "doc_id", "pri", "facility", "severity", "hostname", "syslogtag",
-        "programname", "procid", "msgid", "msg", "timereported_str",
-        "protocol_version",
-    ]
-    a = parse(lt, mode="sql").select(cols)
-    b = parse(lt, mode="full").select(cols)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
+    rows = parse(lt).collect()
+    assert len(rows) == 300
+    for r in rows:
+        exp = parse_line("".join(map(chr, r.tokens)))
+        for col, v in exp.items():
+            assert getattr(r, col) == v, (col, r.doc_id)
 
 
 def test_token_passthrough_invariant(spark, sf_dir):
     """tokens survive the full parse stage byte-identical."""
     lt = corpus.logtokens(spark, sf_dir)
-    parsed = parse(lt, mode="sql")
+    parsed = parse(lt)
     orig = lt.select("doc_id", F.col("tokens").alias("t0"))
     j = parsed.join(orig, "doc_id")
     assert j.filter(F.col("tokens") != F.col("t0")).count() == 0

@@ -376,6 +376,20 @@ def test_quoted_string_capture(spark):
     assert rows[1].norm_rule == -1
 
 
+def test_escaped_backslash_keeps_hex_literal(spark):
+    r"""An escaped backslash is one escape pair: the x41 in ``\\x41``
+    stays literal text, while a bare ``\x3a`` still decodes to ':'."""
+    r = mm.NormalizeRule(r"p %x:regex:\\x41%")
+    c = mm.NormalizeRule(r"k %v:char-to:\x3a%:")
+    df = spark.createDataFrame(
+        [("p \\x41",), ("p A",), ("k ab:",)], "msg string"
+    )
+    rows = mm.mmnormalize(df, [r, c]).collect()
+    assert rows[0].norm == {"x": "\\x41"}
+    assert rows[1].norm_rule == -1
+    assert rows[2].norm == {"v": "ab"}
+
+
 def test_lognorm_extended_types(spark):
     rules = [
         mm.NormalizeRule("v6 %addr:ipv6% end"),

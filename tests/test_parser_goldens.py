@@ -3,7 +3,8 @@ suite (tests/parsertest-parse1.sh golden CSV pattern — our own
 equivalent lines covering the same edge-case classes, original text).
 
 Each vector: raw line → expected (pri, ts, hostname, tag, progname,
-msg) through the full-fidelity parser."""
+msg), through the executable spec ``parse_line`` and through the Spark
+parser ``parse()``."""
 
 from __future__ import annotations
 
@@ -112,7 +113,43 @@ V = [
         "<14>Jan  1 00:00:00 h " + "a" * 40 + ": longtag",
         dict(pri=14, syslogtag="a" * 32),
     ),
+    # RFC5424 MSG holding ']': SD ends at the first block list's end
+    (
+        '<13>1 2024-01-01T00:00:00Z h a - - [a b="1"] user [x] logged in',
+        dict(pri=13, structured_data='[a b="1"]', msg="user [x] logged in"),
+    ),
+    # control char inside MSG is escaped as #ooo, not a field separator
+    (
+        "<14>Jan  1 00:00:00 h t: a\x01b",
+        dict(pri=14, hostname="h", syslogtag="t:", msg=" a#001b"),
+    ),
+    # Arabic-Indic digits are no PRI: the reference parses bytes, and a
+    # multi-byte code point is never a digit
+    (
+        "<\u0661\u0663>Jan  1 00:00:00 h t: x",
+        dict(pri=13, timereported_str=None, hostname=None,
+             syslogtag="<\u0661\u0663>Jan", msg="  1 00:00:00 h t: x"),
+    ),
 ]
+
+
+def _parse_lines(spark, lines):
+    """``parse()`` over raw lines, in input order. ASCII lines take the
+    default JVM decode, the others ``decode_backend="arrow"`` (the JVM
+    decode is exact for ASCII only)."""
+    from pyspark.sql import functions as F
+
+    from rsyslog_spark.parsing import parse
+
+    df = spark.createDataFrame(
+        [(i, [ord(c) for c in l]) for i, l in enumerate(lines)],
+        "i int, tokens array<int>",
+    )
+    wide = F.exists("tokens", lambda t: t > 127)
+    rows = parse(df.filter(~wide)).collect() + parse(
+        df.filter(wide), decode_backend="arrow"
+    ).collect()
+    return sorted(rows, key=lambda r: r.i)
 
 
 @pytest.mark.parametrize("line,expected", V, ids=[v[0][:28] for v in V])
@@ -132,18 +169,11 @@ def test_sanitize_goldens():
     assert sanitize("a\tb") == "a\tb"
 
 
-def test_goldens_through_spark_udf(spark):
-    """The same vectors, end-to-end through the Arrow UDF parser."""
-    from rsyslog_spark.parsing import parse
-
-    rows = [(v[0], [ord(c) for c in v[0]]) for v in V]
-    df = spark.createDataFrame(rows, "line string, tokens array<int>")
-    got = {r.line: r for r in parse(df, mode="full").collect()}
-    for line, expected in V:
-        row = got[line]
+def test_goldens_through_spark(spark):
+    """The same vectors, end-to-end through the Spark parser."""
+    rows = _parse_lines(spark, [v[0] for v in V])
+    for row, (line, expected) in zip(rows, V):
         for k, v in expected.items():
-            if k == "pri" and v is not None:
-                continue  # facility/severity derived; pri checked in unit
             assert getattr(row, k) == v, f"{k} for {line!r}"
 
 
@@ -151,8 +181,6 @@ def test_reference_testbench_vectors(spark):
     """Golden vectors lifted from the reference testbench scripts
     (tests/parsertest-parse-nodate.sh, parsertest-parse-3164-buggyday.sh,
     hostname-with-slash-pmrfc3164.sh)."""
-    from rsyslog_spark.parsing import parse
-
     lines = [
         # headerless with tag (nodate.sh vector 1): tag parsed, no date
         "<27>xapi: [error|xen3] Connection to master died.",
@@ -161,22 +189,12 @@ def test_reference_testbench_vectors(spark):
         # slashes permitted in hostname (hostname-with-slash.sh)
         "<167>Mar  6 16:57:54 hostname1/hostname2 test: msgnum:0",
     ]
-    df = spark.createDataFrame(
-        [(l, [ord(c) for c in l], f"d{i}", "s") for i, l in enumerate(lines)],
-        "line string, tokens array<int>, doc_id string, source string",
-    )
-    rows = parse(df, mode="full").collect()
-    r0, r1, r2 = rows
+    r0, r1, r2 = _parse_lines(spark, lines)
     assert (r0.pri, r0.programname, r0.syslogtag) == (27, "xapi", "xapi:")
     assert r0.msg == " [error|xen3] Connection to master died."
     assert (r1.pri, r1.hostname, r1.syslogtag) == (38, "example", "tag:")
     assert r1.timereported_str == "Mar  7 19:06:53"
     assert r2.hostname == "hostname1/hostname2" and r2.programname == "test"
-    # the SQL fast path must agree on the space-after-PRI form
-    sql_rows = parse(df).collect()
-    assert sql_rows[1].hostname == "example"
-    assert sql_rows[1].timereported_str == "Mar  7 19:06:53"
-    assert sql_rows[2].hostname == "hostname1/hostname2"
 
 
 def test_buggyday_template_option(spark):
@@ -203,13 +221,13 @@ def test_headerless_hostname_steal_and_repair(spark):
         [(line, [ord(c) for c in line], "d0", "s")],
         "line string, tokens array<int>, doc_id string, source string",
     )
-    r = parse(df, mode="full").first()
+    r = parse(df).first()
     assert (r.pri, r.hostname, r.programname) == (13, "This", "is")
     assert r.msg == " a message!"
     # mmtaghostname: hostname was stolen from a headerless message →
     # restore it as the tag (the reference repair module's purpose)
     fixed = mm.mmtaghostname(
-        parse(df, mode="full").withColumn(
+        parse(df).withColumn(
             "syslogtag", __import__("pyspark.sql.functions",
                                     fromlist=["lit"]).lit(None)
         )
@@ -217,18 +235,13 @@ def test_headerless_hostname_steal_and_repair(spark):
     assert fixed.syslogtag == "This" and fixed.hostname is None
 
 
-def test_parse_frame_differential_fuzz():
-    """r5: the vectorized batch parser (_MEGA one-match-per-row +
-    columnar ops) must agree with parse_line on EVERY field for
-    adversarial and random inputs — parse_line is the executable spec,
-    _parse_frame the fast twin the UDF actually runs."""
+def test_parse_differential_fuzz(spark):
+    """The Spark parser (one header regex per row + Column
+    post-processing) must agree with parse_line on EVERY field for
+    adversarial and random inputs — parse_line is the executable spec."""
     import random
 
-    import pandas as pd
-
-    from rsyslog_spark.parsing.full import PARSE_SCHEMA, _parse_frame
-
-    cols = [f.name for f in PARSE_SCHEMA.fields]
+    cols = list(parse_line("").keys())
     fixed = [
         "<34>Oct 11 22:14:15 mymachine su: 'su root' failed",
         "<013>Oct 11 22:14:15 padded pri: x",
@@ -252,6 +265,7 @@ def test_parse_frame_differential_fuzz():
         "Oct 11 22:14:15 hostonly",
         "<13>1 2024-01-01T00:00:00Z h app - - -",
         "<13>1 2024-01-01T00:00:00Z h app - - -x",
+        "<13>\x01not a header",
     ]
     random.seed(43)
     frag = [
@@ -270,35 +284,20 @@ def test_parse_frame_differential_fuzz():
         )
         for _ in range(2500)
     ]
-    # both code paths: mixed batch (ctrl rows → per-row sanitize) and
-    # a clean batch (joined-search shortcut)
-    for batch in (
-        cases,
-        [c for c in cases
-         if not any(ord(ch) < 32 and ch != "\t" for ch in c)],
-    ):
-        exp = pd.DataFrame([parse_line(x) for x in batch], columns=cols)
-        got = _parse_frame(pd.Series(batch))
+    rows = _parse_lines(spark, cases)
+    for line, row in zip(cases, rows):
+        exp = parse_line(line)
         for col in cols:
-            for i in range(len(batch)):
-                e, g = exp[col][i], got[col][i]
-                if pd.isna(e):
-                    e = None
-                if pd.isna(g):
-                    g = None
-                if (isinstance(g, (int, float)) and g is not None
-                        and e is not None):
-                    e, g = float(e), float(g)
-                assert e == g, (
-                    f"{col}: {e!r} != {g!r} for {batch[i]!r}"
-                )
+            assert getattr(row, col) == exp[col], (
+                f"{col}: {getattr(row, col)!r} != {exp[col]!r} for {line!r}"
+            )
 
 
 def test_decode_arrow_buffer_reuse_paths():
-    """r6 buffer-reuse decode (the entry of the Column backend's
-    arrow_udf and of parse_full): ASCII zero-copy path, latin-1 and
-    wide-codepoint fallback, nulls, empty rows, sliced arrays, empty
-    batches — all must equal the chr-join spec."""
+    """r6 buffer-reuse decode (the body of the Column backend's
+    arrow_udf): ASCII zero-copy path, latin-1 and wide-codepoint
+    fallback, nulls, empty rows, sliced arrays, empty batches — all
+    must equal the chr-join spec."""
     import pyarrow as pa
 
     from rsyslog_spark.parsing.core import _decode_arrow_impl

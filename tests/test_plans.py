@@ -348,15 +348,37 @@ def test_device_parsers_single_regex_pass(spark):
 
 
 def test_parse_sql_single_regex_pass(spark):
-    """The header parse runs one regexp_replace per row: the chosen
-    variant's rewrite is a column read by both the match test and the
-    split, so the generated code has one eval site per variant
-    (RFC 3164, RFC 5424), not one for each of the two reads."""
-    from rsyslog_spark.parsing.core import parse_sql
-
+    """The header parse runs one regexp_replace per row: the one header
+    regex's rewrite feeds a split bound as its own column, which every
+    field reads, so the generated code has one eval site for it."""
     df = spark.createDataFrame([([60, 49, 51, 62, 120],)], "tokens array<int>")
-    code = codegen_of(flagship.make_router().apply(parse_sql(df)))
-    assert code.count("invalidRegexpReplaceError") == 2
+    code = codegen_of(flagship.make_router().apply(parse(df)))
+    assert code.count("invalidRegexpReplaceError") == 1
+
+
+def test_routed_parse_stage_stays_jit_compilable(spark):
+    """HotSpot leaves a method over 8,000 bytecode bytes to the
+    interpreter (-XX:+DontCompileHugeMethods, the default), so a
+    whole-stage method past that size runs its stage interpreted. The
+    widest parse stage, every parse column routed and observed as
+    run_with_lineage persists it, keeps every generated method under
+    the limit (the sanitize escape written as 31 nested replace calls
+    reached 8,017 bytes and cost route_write about a fifth of its
+    CPU)."""
+    from rsyslog_spark.lineage import LineageTracker
+
+    df = spark.createDataFrame(
+        [], "doc_id string, tokens array<int>, n_tok int, source string"
+    )
+    router = flagship.make_router()
+    routed = LineageTracker([a.sink for a in router.actions]).instrument(
+        router.apply(parse(df))
+    )
+    sizes = [
+        int(n)
+        for n in re.findall(r"maxMethodCodeSize:(\d+)", codegen_of(routed))
+    ]
+    assert sizes and max(sizes) < 8000, sizes
 
 
 def test_c4_line_filter_pure_codegen(spark, sf_dir):

@@ -37,7 +37,9 @@ def test_read_raw_lines_multiline(spark, tmp_path):
     )
     rows = parse(lt).orderBy("doc_id").collect()
     assert len(rows) == 2
-    assert rows[0].msg == " error happened\n  at frame one\n  at frame two"
+    # the parser's SanitizeMsg escapes the joined LFs, as the
+    # reference's imfile (escapeLF, on by default) shows them
+    assert rows[0].msg == " error happened#012  at frame one#012  at frame two"
     assert rows[1].msg == " next message"
 
 
