@@ -1025,7 +1025,7 @@ action(name="all")
 def q_foreach_fold(spark, sf):
     """`set` of outer locals inside foreach — the accumulator fold
     (ruleset.c:310-401 shared mutable vars, compiled to aggregate();
-    rules/router._compile_foreach_fold): per message, count the
+    rules/router._compile_foreach): per message, count the
     ':'-fields and those containing '7', then route on the POST-LOOP
     values. The oracle derives both counts per event arithmetically
     and aggregates — it never runs a fold."""

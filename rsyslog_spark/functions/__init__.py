@@ -455,14 +455,16 @@ def unflatten_json(s, sep: str = ".", deep_fallback: bool = False) -> Column:
     # copy of the previous); deeper literals can't be captured by a
     # regex — the validity guard below turns them into null / the UDF
     # fallback rather than silently truncated JSON (code-review r4 #5).
-    _str = r'"(?:[^"\\]|\\.)*"'
-    _obj = r"\{(?:[^{}\"]|" + _str + r")*\}"
-    _arr = r"\[(?:[^\[\]\"]|" + _str + r")*\]"
+    # Every loop is possessive (mm._QUOTED says why): its alternatives
+    # start with disjoint characters, so no match is lost.
+    _str = r'"(?:[^"\\]|\\.)*+"'
+    _obj = r"\{(?:[^{}\"]|" + _str + r")*+\}"
+    _arr = r"\[(?:[^\[\]\"]|" + _str + r")*+\]"
     for _ in range(7):
-        _obj = r"\{(?:[^{}\"]|" + _str + r"|" + _obj + r")*\}"
-        _arr = r"\[(?:[^\[\]\"]|" + _str + r"|" + _arr + r")*\]"
+        _obj = r"\{(?:[^{}\"]|" + _str + r"|" + _obj + r")*+\}"
+        _arr = r"\[(?:[^\[\]\"]|" + _str + r"|" + _arr + r")*+\]"
     val_tok = _str + r"|" + _arr + r"|" + _obj + r"|[^,}\s][^,}]*"
-    pat = r'"((?:[^"\\]|\\.)*)"\s*:\s*(' + val_tok + r")"
+    pat = r'"((?:[^"\\]|\\.)*+)"\s*:\s*(' + val_tok + r")"
     keys = F.regexp_extract_all(col, F.lit(pat), F.lit(1))
     vals = F.regexp_extract_all(col, F.lit(pat), F.lit(2))
     entries = F.array_sort(

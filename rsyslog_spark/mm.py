@@ -59,7 +59,9 @@ def mmfields(
 
 # --- mmpstrucdata (plugins/mmpstrucdata) -------------------------------------
 
-_SD_PARAM_RE = r'(\w[\w.@-]*)="((?:[^"\\]|\\.)*)"'
+# possessive escape loop: structured data comes from untrusted lines
+# (see _QUOTED below)
+_SD_PARAM_RE = r'(\w[\w.@-]*)="((?:[^"\\]|\\.)*+)"'
 
 
 def mmpstrucdata(
@@ -234,8 +236,13 @@ def _noncapture(rx: str) -> str:
     return "".join(out)
 
 
-# a quoted string's body; a named v1 quoted-string captures only this
-_QUOTED = r'(?:[^"\\]|\\.)*'
+# a quoted string's body; a named v1 quoted-string captures only this.
+# Escape loops that run on the JVM are possessive: java.util.regex
+# recurses once per iteration of a backtracking group loop and
+# overflows the thread stack on thousands of escapes. The two
+# alternatives start with disjoint characters, so backtracking into
+# the loop never finds another match and the matched set is the same.
+_QUOTED = r'(?:[^"\\]|\\.)*+'
 
 # Groupless token patterns per liblognorm field type
 # (liblognorm parser.c; the set mmnormalize rulebases actually use).
@@ -733,7 +740,7 @@ GROK_PATTERNS: dict[str, str] = {
     "SPACE": r"\s*",
     "DATA": r".*?",
     "GREEDYDATA": r".*",
-    "QUOTEDSTRING": r'"(?:[^"\\]|\\.)*"',
+    "QUOTEDSTRING": r'"(?:[^"\\]|\\.)*+"',
     "UUID": r"[A-Fa-f0-9]{8}-(?:[A-Fa-f0-9]{4}-){3}[A-Fa-f0-9]{12}",
     "IPV4": r"(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)(?:\.(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)){3}",
     "IPV6": r"(?:[0-9A-Fa-f]{0,4}:){2,7}[0-9A-Fa-f]{0,4}(?:%{IPV4})?",

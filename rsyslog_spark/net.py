@@ -859,7 +859,7 @@ def parse_trusted_props(msg: Column) -> Column:
         return F.when(has & (v != ""), v)
 
     quoted = F.regexp_extract(
-        block, r'_CMDLINE="((?:[^"\\]|\\.)*)"', 1
+        block, r'_CMDLINE="((?:[^"\\]|\\.)*+)"', 1
     )
     cmdline = F.when(
         has & (quoted != ""),

@@ -11,7 +11,10 @@ dataflow by symbolic execution over Column expressions:
   under condition C removes C-rows from every later statement
 - ``set $.x`` becomes SSA-style conditional rebinding:
   ``x' = when(pc & live, expr).otherwise(x)`` — exactly the hard part
-  called out in SURVEY.md §7
+  called out in SURVEY.md §7; a set that changes x's type meets the
+  old value as a string
+- ``foreach`` re-enters the same walker for its body, with the loop
+  variable bound to a lambda variable (``_compile_foreach``)
 - ``call ruleset`` inlines the callee (depth-capped like
   RULESET_CALL_DEPTH_MAX=1024, ruleset.c:64)
 - ``action(...)`` records (sink, pc & live, params); omdiscard is
@@ -30,7 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rsyslog_spark.rules.compiler import Env, _compile, _scalarize
+from rsyslog_spark.rules.compiler import Env, _compile, _scalarize, _to_str
 from rsyslog_spark.rules.globals import _contains_global
 from rsyslog_spark.rules.rscript import parse_script
 
@@ -67,6 +70,15 @@ class _State:
         # then only flips program-point flags
         self.collect = False
 
+    def child(self) -> _State:
+        """State for one walk of a ``foreach`` body: the same env and
+        ruleset registry, its own liveness and actions, and anonymous
+        action numbering that continues from here."""
+        c = _State(self.env)
+        c.rulesets = self.rulesets
+        c.n_anon = self.n_anon
+        return c
+
 
 def _sanitize_sink(name: str) -> str:
     """Sink names become `route_<sink>` columns — strip chars that
@@ -97,120 +109,8 @@ def _walk(stmts: list, pc: Column, state: _State, depth: int = 0) -> None:
             _walk(st[2], pc & cond, state, depth)
             if st[3]:
                 _walk(st[3], pc & ~cond, state, depth)
-        elif kind == "set":
-            var = st[1]
-            if var.startswith("$/"):
-                # global store → window aggregates (rules/globals.py)
-                gname = var[2:]
-                if not state.collect:
-                    state.env.global_set_passed[gname] = (
-                        state.env.global_set_passed.get(gname, 0) + 1
-                    )
-                    continue
-                if state.env.global_placeholder_read:
-                    raise ValueError(
-                        "a $/ read is compiled before the first $/ "
-                        "write; write-then-read order is required "
-                        "(rules/globals.py)"
-                    )
-                if state.env.globals_order_col is None:
-                    raise ValueError(
-                        "script writes $/ globals: compile with "
-                        "globals_order=<column> (and optionally "
-                        "globals_worker=) — rules/globals.py"
-                    )
-                from rsyslog_spark.rules.globals import (
-                    collect_global_stmt,
-                )
-
-                collect_global_stmt(
-                    state.env, gname, "set", st[2], pc & state.live
-                )
-                continue
-            if var.startswith("$!"):
-                # r5: writes into the message tree (msgAddJSON) — the
-                # flat map gets key 'a!b'; reads resolve it first
-                from rsyslog_spark.rules.compiler import _to_str
-
-                key = var[2:].strip("!")
-                if not key:
-                    raise ValueError("cannot set the whole $! tree")
-                new, tag = _compile(_scalarize(st[2]), state.env)
-                eff = pc & state.live
-                tree = (
-                    state.env.cee
-                    if state.env.cee is not None else F.col("cee")
-                )
-                state.env.cee = F.when(
-                    eff,
-                    F.map_concat(  # LAST_WIN dedup = upsert
-                        F.coalesce(
-                            tree,
-                            F.create_map().cast("map<string,string>"),
-                        ),
-                        F.create_map(F.lit(key), _to_str(new, tag)),
-                    ),
-                ).otherwise(tree)
-                state.env.tree_written = True
-                continue
-            if not var.startswith("$."):
-                raise ValueError(
-                    f"can only set $. locals or $! tree keys, got {var}"
-                )
-            name = var[2:]
-            new, tag = _compile(_scalarize(st[2]), state.env)
-            old = state.env.locals.get(name)
-            eff = pc & state.live
-            if old is None:
-                col = F.when(eff, new)
-            else:
-                col = F.when(eff, new).otherwise(old[0])
-            state.env.locals[name] = (col, tag)
-        elif kind == "unset":
-            var = st[1]
-            if var.startswith("$/"):
-                # unset of a global: a clearing marker at this program
-                # point (rules/globals.py segmented model)
-                gname = var[2:]
-                if not state.collect:
-                    state.env.global_set_passed[gname] = (
-                        state.env.global_set_passed.get(gname, 0) + 1
-                    )
-                    continue
-                if state.env.globals_order_col is None:
-                    raise ValueError(
-                        "script writes $/ globals: compile with "
-                        "globals_order=<column> — rules/globals.py"
-                    )
-                from rsyslog_spark.rules.globals import (
-                    collect_global_stmt,
-                )
-
-                collect_global_stmt(
-                    state.env, gname, "unset", None, pc & state.live
-                )
-                continue
-            if var.startswith("$!"):
-                key = var[2:].strip("!")
-                eff = pc & state.live
-                tree = (
-                    state.env.cee
-                    if state.env.cee is not None else F.col("cee")
-                )
-                state.env.cee = F.when(
-                    eff,
-                    F.map_filter(tree, lambda k, _v: k != F.lit(key)),
-                ).otherwise(tree)
-                state.env.tree_written = True
-                continue
-            name = var[2:]
-            old = state.env.locals.get(name)
-            if old is not None:
-                eff = pc & state.live
-                state.env.locals[name] = (
-                    F.when(~eff, old[0]),
-                    old[1],
-                )
+        elif kind in ("set", "unset"):
+            _assign(st, pc & state.live, state)
         elif kind == "stop":
             state.live = state.live & ~pc
         elif kind == "action":
@@ -242,8 +142,6 @@ def _walk(stmts: list, pc: Column, state: _State, depth: int = 0) -> None:
             # inlined under pc & (expr == name), the compile-time
             # image of rulesetGetRuleset: rows whose name matches no
             # registered ruleset fall through every gate (NOP).
-            from rsyslog_spark.rules.compiler import _to_str
-
             if st[1][0] == "str":
                 callee = state.rulesets.get(st[1][1])
                 if callee is None:
@@ -303,6 +201,85 @@ def _walk(stmts: list, pc: Column, state: _State, depth: int = 0) -> None:
             raise ValueError(f"unsupported statement {kind}")
 
 
+def _assign(st, eff: Column, state: _State) -> None:
+    """``set VAR = EXPR`` / ``unset VAR`` on rows where ``eff`` (path
+    condition & liveness) holds."""
+    kind, var = st[0], st[1]
+    rhs = st[2] if kind == "set" else None
+    env = state.env
+    if var.startswith("$/"):
+        # global store → window aggregates (rules/globals.py): the
+        # collect pass records the statement with its condition, the
+        # real pass only counts program points
+        gname = var[2:]
+        if not state.collect:
+            env.global_set_passed[gname] = (
+                env.global_set_passed.get(gname, 0) + 1
+            )
+            return
+        if rhs is not None and env.global_placeholder_read:
+            raise ValueError(
+                "a $/ read is compiled before the first $/ "
+                "write; write-then-read order is required "
+                "(rules/globals.py)"
+            )
+        if env.globals_order_col is None:
+            raise ValueError(
+                "script writes $/ globals: compile with "
+                "globals_order=<column> (and optionally "
+                "globals_worker=) — rules/globals.py"
+            )
+        from rsyslog_spark.rules.globals import collect_global_stmt
+
+        collect_global_stmt(env, gname, kind, rhs, eff)
+        return
+    if var.startswith("$!"):
+        # r5: writes into the message tree (msgAddJSON) — the flat map
+        # gets key 'a!b'; reads resolve it first
+        key = var[2:].strip("!")
+        tree = env.cee if env.cee is not None else F.col("cee")
+        if rhs is None:
+            written = F.map_filter(tree, lambda k, _v: k != F.lit(key))
+        elif not key:
+            raise ValueError("cannot set the whole $! tree")
+        else:
+            new, tag = _compile(_scalarize(rhs), env)
+            written = F.map_concat(  # LAST_WIN dedup = upsert
+                F.coalesce(tree, F.create_map().cast("map<string,string>")),
+                F.create_map(F.lit(key), _to_str(new, tag)),
+            )
+        env.cee = F.when(eff, written).otherwise(tree)
+        env.tree_written = True
+        return
+    if not var.startswith("$."):
+        raise ValueError(
+            f"can only {kind} $. locals or $! tree keys, got {var}"
+        )
+    if rhs is None:
+        old = env.locals.get(var[2:])
+        if old is not None:
+            env.locals[var[2:]] = (F.when(~eff, old[0]), old[1])
+        return
+    _rebind(env, var[2:], *_compile(_scalarize(rhs), env), eff)
+
+
+def _rebind(env: Env, name: str, new: Column, tag: str, eff: Column) -> None:
+    """SSA rebinding of local ``name`` to ``new`` on ``eff`` rows; the
+    other rows keep the old value. RainerScript variables are untyped,
+    so when the type tag changes both sides meet as strings (the
+    var2String round-trip) instead of Spark coercing the old value to
+    the new type — a string that is no number would fail the query."""
+    old = env.locals.get(name)
+    if old is None:
+        env.locals[name] = (F.when(eff, new), tag)
+    elif old[1] == tag:
+        env.locals[name] = (F.when(eff, new).otherwise(old[0]), tag)
+    else:
+        env.locals[name] = (
+            F.when(eff, _to_str(new, tag)).otherwise(_to_str(*old)), "S"
+        )
+
+
 def _leaf_stmts(stmts):
     """Yield non-`if` statements of a foreach body, recursing through
     if/else arms."""
@@ -315,133 +292,74 @@ def _leaf_stmts(stmts):
             yield s
 
 
-def _compile_foreach_fold(
-    vname: str, coll_tag: str, arr_col: Column, body, pc: Column,
-    state: _State,
-) -> None:
-    """`set` of outer `$.` locals inside foreach — the reference's
-    accumulator pattern (scriptExec re-runs the body per element with
-    shared mutable vars, ruleset.c:310-401):
-
-        foreach ($.x in $!items) do { set $.sum = $.sum + $.x; }
-
-    Compiled as ONE aggregate() fold over the collection: the
-    accumulator struct carries every mutated local (stringly, tag
-    'S' — RainerScript locals round-trip through var2String/var2Number
-    exactly like a chain of top-level sets, and numbers are int64 so
-    the round-trip is lossless), and the body is symbolically executed
-    inside the merge lambda with the loop var + accumulators bound.
-    `if` arms become per-element path conditions; sequential sets in
-    one iteration see earlier sets' values (cur updates in place).
-    After the loop each mutated local rebinds SSA-style under
-    pc & live, so rows the foreach didn't reach keep their old value —
-    and a NULL/non-array collection folds zero elements (coalesce to
-    the init struct), matching the reference's silent no-op.
-
-    Bodies mixing `set` with actions raise (see _compile_foreach):
-    mid-iteration accumulator observation needs a prefix scan, which
-    is O(L^2) as a Column expression. Each mutated local extracts one
-    field from the fold; the fold expression is copied per local
-    inside its CASE rebinding (codegen CSE does not dedupe CASE-branch
-    copies), so keep the accumulator set small — in practice 1-3."""
-    from rsyslog_spark.rules.compiler import _to_str
-
+def _foreach_accumulators(body: list, vname: str) -> list[str]:
+    """Check a foreach body against the accepted subset and return the
+    outer ``$.`` locals it sets (empty for an action body)."""
     names: list[str] = []
+    has_action = False
     for s in _leaf_stmts(body):
         if s[0] == "nop":
             continue
-        v = s[1]
-        if not v.startswith("$."):
+        if s[0] == "action":
+            if str(s[1].get("type", "")).lower() == "omdiscard":
+                raise ValueError(
+                    "omdiscard inside foreach: a discard stops the "
+                    "message, which no per-element predicate expresses"
+                )
+            has_action = True
+        elif s[0] == "set":
+            if not s[1].startswith("$."):
+                raise ValueError(
+                    f"only $. locals may be set inside foreach, got {s[1]}"
+                )
+            n = s[1][2:]
+            if n == vname or n.startswith(vname + "!"):
+                raise ValueError(f"cannot set the loop variable {s[1]}")
+            if n not in names:
+                names.append(n)
+        else:
             raise ValueError(
-                f"only $. locals may be set inside foreach, got {v}"
+                f"unsupported statement {s[0]!r} inside foreach"
             )
-        n = v[2:]
-        if n == vname or n.startswith(vname + "!"):
-            raise ValueError(f"cannot set the loop variable {v}")
-        if n not in names:
-            names.append(n)
-
-    env = state.env
-    init = F.struct(*[
-        (
-            _to_str(*env.locals[n]) if n in env.locals
-            else F.lit(None).cast("string")
-        ).alias(n)
-        for n in names
-    ])
-
-    def bind_loop_var(elem) -> dict:
-        if coll_tag == "M":
-            return {
-                vname: (F.to_json(elem), "S"),
-                vname + "!key": (elem["key"], "S"),
-                vname + "!value": (elem["value"], "S"),
-            }
-        return {vname: (elem, "S")}
-
-    def merge(acc, elem):
-        cur = {n: acc[n] for n in names}
-        binds = bind_loop_var(elem)
-        saved = {
-            k: env.locals.get(k) for k in set(binds) | set(names)
-        }
-
-        def rebind():
-            env.locals.update(binds)
-            for n in names:
-                env.locals[n] = (cur[n], "S")
-
-        def run(stmts, epc):
-            for s in stmts:
-                if s[0] == "nop":
-                    continue
-                if s[0] == "if":
-                    rebind()
-                    cond, _ = _compile(_scalarize(s[1]), env)
-                    cond = F.coalesce(
-                        cond.cast("boolean"), F.lit(False)
-                    )
-                    run(s[2], epc & cond)
-                    if s[3]:
-                        run(s[3], epc & ~cond)
-                else:  # set
-                    n = s[1][2:]
-                    rebind()
-                    new, tag = _compile(_scalarize(s[2]), env)
-                    cur[n] = F.when(
-                        epc, _to_str(new, tag)
-                    ).otherwise(cur[n])
-
-        try:
-            run(body, F.lit(True))
-        finally:
-            for k, old in saved.items():
-                if old is None:
-                    env.locals.pop(k, None)
-                else:
-                    env.locals[k] = old
-        return F.struct(*[cur[n].alias(n) for n in names])
-
-    folded = F.coalesce(F.aggregate(arr_col, init, merge), init)
-    eff = pc & state.live
-    for n in names:
-        old = env.locals.get(n)
-        col = F.when(eff, folded[n])
-        if old is not None:
-            col = col.otherwise(_to_str(*old))
-        env.locals[n] = (col, "S")
+    if names and has_action:
+        raise ValueError(
+            "foreach bodies may contain either actions or `set` "
+            "statements, not both: a body action observes the "
+            "accumulator mid-iteration, which a single fold "
+            "cannot express (split the script: fold first, then "
+            "a second foreach over the same collection)"
+        )
+    return names
 
 
 def _compile_foreach(st, pc: Column, state: _State) -> None:
-    """foreach ($.x in expr) do BODY — body actions fire per element.
+    """foreach ($.x in expr) do BODY — scriptExec re-runs the body per
+    element (ruleset.c:310-401); here :func:`_walk` runs it on a child
+    state with the loop variable bound to a lambda variable, so the
+    element predicates and values are Column functions of the element.
 
-    The loop variable is bound lazily: each body action's element
-    predicate is a *function* of the lambda variable, evaluated inside
-    size(filter(arr, ...)) (counting) or on the exploded element
-    (writing). Body subset: if / action / nop — or if / set / nop,
-    which compiles to an aggregate() fold instead (the reference's
-    shared-mutable-accumulator pattern; see _compile_foreach_fold).
-    Bodies mixing actions with sets raise.
+    Body subset: if / action / nop, or if / set / nop of outer ``$.``
+    locals. Anything else raises, mixing actions with sets too (a body
+    action would observe the accumulator mid-iteration — a prefix scan,
+    O(L^2) as a Column expression), and so does omdiscard, a stop that
+    no per-element predicate expresses.
+
+    - Actions fire once per matching ELEMENT. A probe walk names the
+      body's actions (so anonymous ones are numbered once); each
+      action's ``elem_pred`` re-walks the body for the element it is
+      given, and counting uses ``size(filter(arr, elem_pred))`` while
+      writing explodes.
+    - Sets are the reference's shared-mutable-accumulator pattern
+      (``foreach ($.x in $!items) do { set $.sum = $.sum + $.x; }``)
+      and compile to ONE ``aggregate()`` fold: the struct carries each
+      set local as a string (tag 'S', the var2String round-trip a chain
+      of top-level sets makes too; numbers are int64, so lossless),
+      bound while the body is walked inside the merge lambda, so later
+      sets in one iteration see earlier ones. After the loop each local
+      rebinds under pc & live like a top-level set; a NULL collection
+      folds zero elements. Each local reads one field of the fold, whose
+      expression is copied into every local's CASE (codegen CSE does
+      not dedupe CASE-branch copies): keep accumulators few, 1-3.
 
     OBJECT iteration (callForeachObject, ruleset.c:334-372): when the
     collection compiles map-typed (tag 'M' — the whole ``$!`` tree,
@@ -454,90 +372,77 @@ def _compile_foreach(st, pc: Column, state: _State) -> None:
     expression is statically typed, so here the collection's compiled
     type decides — same dispatch, resolved at compile time."""
     _, var, arr_ast, body = st
-    arr_col, coll_tag = _compile(_scalarize(arr_ast), state.env)
+    env = state.env
+    arr_col, coll_tag = _compile(_scalarize(arr_ast), env)
     vname = var[2:]
     if coll_tag == "M":
         arr_col = F.map_entries(arr_col)
+    names = _foreach_accumulators(body, vname)
 
-    kinds = {s[0] for s in _leaf_stmts(body)}
-    if "set" in kinds:
-        if not kinds <= {"set", "nop"}:
-            raise ValueError(
-                "foreach bodies may contain either actions or `set` "
-                "statements, not both: a body action observes the "
-                "accumulator mid-iteration, which a single fold "
-                "cannot express (split the script: fold first, then "
-                "a second foreach over the same collection)"
-            )
-        _compile_foreach_fold(
-            vname, coll_tag, arr_col, body, pc, state
-        )
-        return
-
-    if coll_tag == "M":
-
-        def bind(elem) -> dict:
-            return {
+    def walk(elem: Column, acc: Column | None = None):
+        """Walk the body once with the loop variable bound to ``elem``
+        (and each accumulator to its ``acc`` field); return the child
+        state and the accumulators' values after the body. Every bound
+        name and ``last_action_pred`` are restored afterwards, so no
+        lambda variable leaks into the outer program."""
+        if coll_tag == "M":
+            binds = {
                 vname: (F.to_json(elem), "S"),
                 vname + "!key": (elem["key"], "S"),
                 vname + "!value": (elem["value"], "S"),
             }
-    else:
-
-        def bind(elem) -> dict:
-            return {vname: (elem, "S")}
-
-    def walk_body(stmts, elem, epc):
-        """Walk body with $.var (and, for objects, $.var!key /
-        $.var!value) bound to `elem`; returns list of
-        (sink, elem_predicate, params)."""
-        found = []
-        binds = bind(elem)
-        saved = {k: state.env.locals.get(k) for k in binds}
-        state.env.locals.update(binds)
+        else:
+            binds = {vname: (elem, "S")}
+        if acc is not None:
+            binds.update({n: (acc[n], "S") for n in names})
+        saved = {k: env.locals.get(k) for k in binds}
+        saved_pred = env.last_action_pred
+        child = state.child()
+        env.locals.update(binds)
         try:
-            for s in stmts:
-                if s[0] == "nop":
-                    continue
-                if s[0] == "if":
-                    cond, _ = _compile(_scalarize(s[1]), state.env)
-                    cond = F.coalesce(cond.cast("boolean"), F.lit(False))
-                    found += walk_body(s[2], elem, epc & cond)
-                    if s[3]:
-                        found += walk_body(s[3], elem, epc & ~cond)
-                elif s[0] == "action":
-                    found.append((_sink_name(s[1], state), epc, s[1]))
-                else:
-                    raise ValueError(
-                        f"unsupported statement {s[0]!r} inside foreach"
-                    )
+            _walk(body, F.lit(True), child)
+            return child, [env.locals[n][0].alias(n) for n in names]
         finally:
+            env.last_action_pred = saved_pred
             for k, old in saved.items():
                 if old is None:
-                    state.env.locals.pop(k, None)
+                    env.locals.pop(k, None)
                 else:
-                    state.env.locals[k] = old
-        return found
+                    env.locals[k] = old
 
-    # discover actions once to fix sink names, then rebind per call
-    probe = walk_body(body, F.lit(None), F.lit(True))
-    for idx, (sink, _p, params) in enumerate(probe):
-        def make_pred(i=idx):
-            def elem_pred(elem: Column) -> Column:
-                got = walk_body(body, elem, F.lit(True))
-                return got[i][1]
+    eff = pc & state.live
+    if names:
+        init = F.struct(*[
+            (
+                _to_str(*env.locals[n]) if n in env.locals
+                else F.lit(None).cast("string")
+            ).alias(n)
+            for n in names
+        ])
+        folded = F.coalesce(
+            F.aggregate(
+                arr_col, init, lambda acc, e: F.struct(*walk(e, acc)[1])
+            ),
+            init,
+        )
+        for n in names:
+            _rebind(env, n, folded[n], "S", eff)
+        return
 
-            return elem_pred
+    probe, _ = walk(F.lit(None))
+    state.n_anon = probe.n_anon
+    for i, a in enumerate(probe.actions):
+        def elem_pred(elem: Column, i: int = i) -> Column:
+            return walk(elem)[0].actions[i].predicate
 
-        ep = make_pred()
-        any_match = F.size(F.filter(arr_col, lambda e: ep(e))) > 0
+        any_match = F.size(F.filter(arr_col, lambda e: elem_pred(e))) > 0
         state.actions.append(
             Action(
-                sink,
-                pc & state.live & F.coalesce(any_match, F.lit(False)),
-                params,
+                a.sink,
+                eff & F.coalesce(any_match, F.lit(False)),
+                a.params,
                 foreach_arr=arr_col,
-                elem_pred=ep,
+                elem_pred=elem_pred,
             )
         )
 

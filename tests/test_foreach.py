@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from rsyslog_spark.rules import Router
 
@@ -206,4 +207,53 @@ foreach ($.w in split($msg, " ")) do {
 }
 """
     with pytest.raises(ValueError, match="actions or `set`"):
+        Router(script)
+
+
+def test_foreach_set_changing_type_meets_as_string(spark):
+    """The fold rebinds under the same rule as a top-level `set`: a
+    type change inside the body keeps the other rows' string."""
+    script = """
+set $.x = "abc";
+foreach ($.w in split($msg, " ")) do {
+    if $.w == "7" then { set $.x = 1; }
+}
+if $.x == "abc" then { action(name="keep") }
+action(name="all")
+"""
+    df = spark.createDataFrame([("a 7",), ("b",)], "msg string")
+    counts = dict(Router(script).route_counts(df).collect())
+    assert counts == {"keep": 1, "all": 2}
+
+
+def test_foreach_names_anonymous_actions_once(spark):
+    """Anonymous body actions are numbered once, in program order,
+    however often the body is walked for element predicates."""
+    r = Router(
+        'foreach ($.x in $!items) do { action(type="omfile") }\n'
+        'action(type="omfwd")'
+    )
+    assert r.sinks == ["action1", "action2"]
+    r = Router(
+        'foreach ($.x in $!items) do {\n'
+        '    action(type="omfile") action(type="omfile")\n'
+        '}\naction(type="omfwd")'
+    )
+    assert r.sinks == ["action1", "action2", "action3"]
+
+
+@pytest.mark.parametrize(
+    "stmt", ['action(type="omdiscard")', "stop"]
+)
+def test_foreach_body_outside_subset_raises(spark, stmt):
+    """A discard or stop halts the whole message, which no
+    per-element predicate expresses; the body subset is if / action /
+    nop or if / set / nop."""
+    script = (
+        'foreach ($.w in split($msg, " ")) do {\n'
+        f'    if $.w == "x" then {{ {stmt} }}\n'
+        '    action(name="each")\n'
+        "}"
+    )
+    with pytest.raises(ValueError, match="inside foreach"):
         Router(script)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from rsyslog_spark import mm
 from rsyslog_spark.datapipe import (
@@ -20,6 +21,8 @@ from rsyslog_spark.datapipe import (
     token_count,
 )
 from rsyslog_spark.datapipe.multimodal import synth_media
+from rsyslog_spark.functions import unflatten_json
+from rsyslog_spark.net import parse_trusted_props
 
 
 # ---------------- mm* ----------------
@@ -49,6 +52,56 @@ def test_mmpstrucdata(spark):
     assert rows[0].sd_params == {"k": "87", "src": "0"}
     assert rows[0].sd_id == "ex@32473"
     assert rows[1].sd_params is None and rows[2].sd_params is None
+
+
+# 20,000 escape pairs in one quoted value: java.util.regex recurses once
+# per iteration of a backtracking group loop, so a non-possessive escape
+# loop overflowed the thread stack here (StackOverflowError, which takes
+# a local-mode driver JVM down)
+_ESC = '\\"' * 20000
+_ESC_CASES = {
+    "mmpstrucdata": (
+        '[x@1 k="' + _ESC + '"]',
+        lambda c: mm.mmpstrucdata(
+            c.select(c.line.alias("structured_data"))
+        ).first().sd_params,
+        {"k": _ESC},
+    ),
+    "unflatten_json": (
+        '{"a.b":"' + _ESC + '"}',
+        lambda c: c.select(
+            unflatten_json(F.col("line")).alias("j")
+        ).first().j,
+        '{"a":{"b":"' + _ESC + '"}}',
+    ),
+    "quoted-string": (
+        'a "' + "\\x" * 20000 + '" b',
+        lambda c: mm.mmnormalize(
+            c, [mm.NormalizeRule("a %q:quoted-string% b")], msg_col="line"
+        ).first().norm,
+        {"q": "\\x" * 20000},
+    ),
+    "grok QUOTEDSTRING": (
+        'say "' + _ESC + '"',
+        lambda c: mm.mmgrok(
+            c, "say %{QUOTEDSTRING:q}", source="line"
+        ).first().grok,
+        {"q": '"' + _ESC + '"'},
+    ),
+    "_CMDLINE": (
+        'm @[_PID=1 _UID=0 _GID=0 _COMM=c _EXE=/x _CMDLINE="' + _ESC + '"]',
+        lambda c: c.select(
+            parse_trusted_props(F.col("line"))["cmdline"].alias("v")
+        ).first().v,
+        '"' * 20000,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_ESC_CASES))
+def test_escape_loops_take_20000_escapes(spark, case):
+    line, run, want = _ESC_CASES[case]
+    assert run(spark.createDataFrame([(line,)], "line string")) == want
 
 
 def test_mmanon(spark):
@@ -365,8 +418,8 @@ def test_quoted_string_capture(spark):
         'c %{"type":"quoted-string","name":"v"}%'
     )
     assert r.regex == (
-        r'^a\ "((?:[^"\\]|\\.)*)"\ b\ (?:"(?:[^"\\]|\\.)*")'
-        r'\ c\ ("(?:[^"\\]|\\.)*")$'
+        r'^a\ "((?:[^"\\]|\\.)*+)"\ b\ (?:"(?:[^"\\]|\\.)*+")'
+        r'\ c\ ("(?:[^"\\]|\\.)*+")$'
     )
     df = spark.createDataFrame(
         [('a "x \\" y" b "z" c "w"',), ('a "x" b z c "w"',)], "msg string"

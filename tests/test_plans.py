@@ -478,3 +478,34 @@ def test_quantized_topk_no_corpus_shuffle(spark, sf_dir):
     above = "\n".join(lines[max(0, first_exchange - 3): first_exchange])
     assert "ObjectHashAggregate" in above or "HashAggregate" in above, p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+
+
+def test_conditional_set_rebinding_casts_only_to_string(spark):
+    """`set $.x` under a condition keeps the old value on the other
+    rows. With the same type tag the old value is taken as is; when the
+    tag changes both sides become strings — the old value is never cast
+    to the new type (a non-numeric string would fail the query)."""
+    from rsyslog_spark.rules import Router
+
+    df = spark.createDataFrame([("a 7", "h")], "msg string, hostname string")
+
+    def local_x(first: str, second: str) -> str:
+        q = Router(
+            f"set $.x = {first};\n"
+            f'if $msg contains "7" then {{ set $.x = {second}; }}'
+        ).apply(df, keep_locals=True)
+        out = [l for l in plan_of(q).splitlines() if "AS local_x" in l][0]
+        return re.sub(r"#\d+L?", "", out.split("CASE WHEN", 1)[1])
+
+    assert local_x("$msg", "$hostname").endswith(
+        "THEN hostname ELSE msg END AS local_x]"
+    )
+    assert local_x("strlen($msg)", "strlen($hostname)").endswith(
+        "THEN length(hostname) ELSE length(msg) END AS local_x]"
+    )
+    assert local_x("$msg", "strlen($hostname)").endswith(
+        "THEN cast(length(hostname) as string) ELSE msg END AS local_x]"
+    )
+    assert local_x("strlen($msg)", "$hostname").endswith(
+        "THEN hostname ELSE cast(length(msg) as string) END AS local_x]"
+    )

@@ -216,6 +216,27 @@ action(name="keep")
     assert counts["keep"] == 1
 
 
+
+def test_conditional_set_changing_type_meets_as_string(spark):
+    """RainerScript variables are untyped: a conditional `set` that
+    changes a local's type keeps the old value on the other rows as
+    the string it was, instead of casting it to the new type (which
+    fails the query with CAST_INVALID_INPUT under ANSI)."""
+    script = """
+set $.x = "abc";
+if $msg contains "7" then { set $.x = 1; }
+if $.x == "abc" then { action(name="keep") }
+action(name="all")
+"""
+    df = spark.createDataFrame([("a 7",), ("b",)], "msg string")
+    r = Router(script)
+    routed = r.apply(df, keep_locals=True)
+    assert {x.msg: x.local_x for x in routed.collect()} == {
+        "a 7": "1", "b": "abc"
+    }
+    counts = dict(r.route_counts(df).collect())
+    assert counts == {"keep": 1, "all": 2}
+
 def test_template_object_statements(spark):
     """template(name=.. type=string|list|subtree) config objects parse
     and register; exec_template + set render them (template.c:2149)."""
